@@ -54,17 +54,12 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.state import LineageManager, truncate_lineage
 
 # full closeness/betweenness are all-pairs; refuse silent O(V^2)/driver blowup
 CLOSENESS_ALL_NODES_LIMIT = 100_000
 BETWEENNESS_MAX_EDGES = 50_000_000
-
-# Above this vertex count the fixed-superstep katz loop stops broadcasting
-# the |V|-row state into the gather join (guide §3.1 sizing: ~16 B/row plus
-# framing — ~0.5 GB at the cap, built once per superstep) and falls back to
-# the shuffled superstep plan. Scale-adaptive, not core-count-dependent.
-KATZ_BROADCAST_MAX_VERTICES = 16_000_000
 
 
 def _weighted_edges(graph: Graph) -> DataFrame:
@@ -82,7 +77,6 @@ def katz_centrality(
     tolerance: float = 1e-05,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
 ) -> DataFrame:
     """Returns ``(id, katz)``. One Spark job per superstep: the gather join
@@ -92,63 +86,35 @@ def katz_centrality(
     ``fixed_iterations`` runs exactly k supersteps with no convergence test
     (oracle parity — the DuckDB side unrolls the same k updates).
 
-    ``strategy``: ``"auto"`` (default — kernel when the vertex count fits
-    or a spill dir is given, join otherwise), ``"join"`` (iterative
-    DataFrame joins — scales to any V), or ``"kernel"`` (weighted
-    CSR/Arrow blocks, zero-shuffle supersteps — see
-    ``operators/kernel_algos.py:katz_kernel``; dense driver vector capped
-    at ``pagerank.KERNEL_MAX_VERTICES`` unless ``kernel_spill_dir`` routes
-    to the file-backed slice-store loop whose vectors never touch the
-    driver). Identical update rule, asserted by shared tests."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown katz strategy {strategy!r}")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    ``strategy``: ``"auto"`` (default — the route :func:`routing.plan`
+    picks: the weighted CSR kernel on the driver below the driver caps,
+    its file-backed slice-store loop above them, the join plan past the
+    auto edge cap), ``"join"`` (iterative DataFrame joins — scales to any
+    V), or ``"kernel"`` (``operators/kernel_algos.py:katz_kernel`` at any
+    size; ``kernel_spill_dir`` lays its blocks out as files there).
+    Identical update rule, asserted by shared tests."""
+    route, _ = routing.plan(
+        "katz", graph, strategy, spill_dir=kernel_spill_dir
+    )
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel_algos import katz_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return katz_kernel(
+            graph,
+            attenuation_factor=attenuation_factor,
+            immediate_neighbor_weight=immediate_neighbor_weight,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            fixed_iterations=fixed_iterations,
+            spill_dir=kernel_spill_dir,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-            )
-        ):
-            from metagraph_spark.operators.kernel import build_edge_blocks
-            from metagraph_spark.operators.kernel_algos import katz_kernel
-
-            target, built = graph, None
-            if kernel_spill_dir is not None:
-                built = build_edge_blocks(
-                    graph, spill_dir=kernel_spill_dir,
-                    with_weights=graph.is_weighted,
-                )
-                target = built
-            try:
-                return katz_kernel(
-                    target,
-                    attenuation_factor=attenuation_factor,
-                    immediate_neighbor_weight=immediate_neighbor_weight,
-                    maxiter=maxiter,
-                    tolerance=tolerance,
-                    fixed_iterations=fixed_iterations,
-                )
-            finally:
-                if built is not None:
-                    built.unpersist()
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_nodes()
     nodes = graph.node_ids()
     alpha, beta = attenuation_factor, immediate_neighbor_weight
     lineage = LineageManager()
-    if fixed_iterations is not None and n <= KATZ_BROADCAST_MAX_VERTICES:
+    if fixed_iterations is not None and routing.fits_broadcast(n):
         # Fixed-superstep fast path (guide §2.4/§3.1): the edge cache is
         # keyed by DST and the |V|-row state BROADCAST into the gather
         # join, so the per-superstep aggregation is partition-local and
@@ -159,7 +125,8 @@ def katz_centrality(
         # α·coalesce(g,0)+β for covered rows, β ≡ α·0+β for the rest —
         # bit-identical to the merge-join form the oracle unrolls).
         # Broadcasting V rows per superstep stops being reasonable past
-        # the vertex cap; larger graphs take the shuffle loop below.
+        # routing.fits_broadcast; larger graphs take the shuffle loop
+        # below.
         edges = _weighted_edges(graph).repartition(n_part, DST).persist()
         edges.count()  # materialize so round plans see the DST layout
         nodes_m = truncate_lineage(nodes)
@@ -287,7 +254,6 @@ def eigenvector_centrality(
     tolerance: float = 1e-05,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
 ) -> DataFrame:
     """Returns ``(id, eigenvector)``.
 
@@ -299,33 +265,17 @@ def eigenvector_centrality(
 
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block kernel
     (``kernel_algos.py:eigenvector_kernel``, same superstep schedule;
-    ``"auto"`` capped at ``pagerank.KERNEL_MAX_VERTICES``)."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown eigenvector strategy {strategy!r}")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    ``"auto"`` capped by :func:`routing.plan`)."""
+    route, _ = routing.plan("eigenvector", graph, strategy)
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel_algos import eigenvector_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return eigenvector_kernel(
+            graph,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            fixed_iterations=fixed_iterations,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if strategy == "kernel" or (
-            graph.num_nodes() <= cap
-            and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-        ):
-            from metagraph_spark.operators.kernel_algos import (
-                eigenvector_kernel,
-            )
-
-            return eigenvector_kernel(
-                graph,
-                maxiter=maxiter,
-                tolerance=tolerance,
-                fixed_iterations=fixed_iterations,
-            )
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _weighted_edges(graph).repartition(n_part, SRC).persist()
@@ -418,7 +368,6 @@ def hits_centrality(
     normalize: bool = True,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns ``(hubs, authorities)`` NodeMaps ``(id, hubs)/(id, authority)``.
 
@@ -429,35 +378,21 @@ def hits_centrality(
     column (both sides' norms known by then — no separate stats jobs).
 
     ``strategy="kernel"``/``"auto"`` routes to the two-layout CSR kernel
-    (``kernel_algos.py:hits_kernel``; ``"auto"`` capped at
-    ``pagerank.KERNEL_MAX_VERTICES``)."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown hits strategy {strategy!r}")
+    (``kernel_algos.py:hits_kernel``; ``"auto"`` capped by
+    :func:`routing.plan`)."""
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    route, _ = routing.plan("hits", graph, strategy)
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel_algos import hits_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return hits_kernel(
+            graph,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            normalize=normalize,
+            fixed_iterations=fixed_iterations,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if strategy == "kernel" or (
-            graph.num_nodes() <= cap
-            and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-        ):
-            from metagraph_spark.operators.kernel_algos import hits_kernel
-
-            return hits_kernel(
-                graph,
-                maxiter=maxiter,
-                tolerance=tolerance,
-                normalize=normalize,
-                fixed_iterations=fixed_iterations,
-            )
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _weighted_edges(graph).repartition(n_part, SRC).persist()

@@ -36,15 +36,8 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.state import CheckpointManager, truncate_lineage
-
-# Converged-join-path routing threshold: below this edge count the
-# hash-min + pointer-jump loop (ONE |E|-row join + groupBy per round) beats
-# two-phase large-star/small-star, whose ~4 shuffles + 2 distincts per
-# round only pay off once the shrinking edge set dominates (measured:
-# two-phase cost transcript_cc 4.1->7.3s / copurchase_cc 3.4->5.5s at
-# sub-1M edges while winning 4x at 100M edges — BENCH r3 vs r4).
-TWO_PHASE_MIN_EDGES = 5_000_000
 
 
 def _min_label_fixpoint(
@@ -279,7 +272,6 @@ def connected_components(
     fixed_rounds: int | None = None,
     checkpointer: CheckpointManager | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
 ) -> DataFrame:
     """Return NodeMap ``(id: long, label: long)``; label = min node id in the
@@ -287,62 +279,34 @@ def connected_components(
     (matches nx ``connected_components`` requiring undirected,
     ``plugins/networkx/algorithms.py:61-67``).
 
-    Physical strategy: the converged join path is SIZE-ROUTED — above
-    ``TWO_PHASE_MIN_EDGES`` it runs alternating large-star / small-star
-    rounds (:func:`_two_phase_cc` — O(log V) rounds on a SHRINKING edge
-    set); below it the hash-min + pointer-jump loop wins (one |E|-row
-    join per round vs two-phase's ~4 shuffles + 2 distincts).
-    ``fixed_rounds`` (the unrolled-SQL oracle contract) and checkpointed
-    runs always keep the hash-min label exchange, whose per-round vertex
-    state is what the resume protocol snapshots.
+    Routes (picked by :func:`routing.plan`): ``kernel-driver`` and
+    ``kernel-distributed`` run the CSR-block hash-min kernel
+    (``operators/kernel_algos.py:cc_kernel`` — segmented-min gather,
+    pointer-jumped positional labels; EXACTLY the same labels) on the
+    driver below the driver caps and as the file-backed slice-store loop
+    above them. The join plan is ``two-phase`` for converged runs on
+    large graphs (alternating large-star / small-star rounds,
+    :func:`_two_phase_cc` — O(log V) rounds on a SHRINKING edge set) and
+    ``hash-min`` otherwise (one |E|-row join per round). ``fixed_rounds``
+    (the unrolled-SQL oracle contract) and checkpointed runs keep the
+    hash-min label exchange, whose per-round vertex state is what the
+    resume protocol snapshots. The kernels keep no durable per-round
+    state, so explicit ``"kernel"`` + checkpointer raises."""
+    route, _ = routing.plan(
+        "cc", graph, strategy, checkpointer, kernel_spill_dir,
+        fixed=fixed_rounds is not None,
+    )
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel_algos import cc_kernel
 
-    ``strategy="kernel"``/``"auto"`` routes to the CSR-block hash-min
-    kernel (``operators/kernel_algos.py:cc_kernel`` — segmented-min
-    gather, pointer-jumped dense labels; EXACTLY the same labels, capped
-    at ``pagerank.KERNEL_MAX_VERTICES`` for ``"auto"``). The kernel keeps
-    no durable per-round state, so it is never combined with a
-    checkpointer (explicit ``"kernel"`` + checkpointer raises)."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown connected_components strategy {strategy!r}")
-    if strategy == "kernel" and checkpointer is not None:
-        raise ValueError(
-            "strategy='kernel' keeps no durable per-round state and cannot "
-            "honor a checkpointer; use strategy='join' or 'auto'"
+        return cc_kernel(
+            graph,
+            max_rounds=max_rounds,
+            fixed_rounds=fixed_rounds,
+            spill_dir=kernel_spill_dir,
         )
-    if strategy != "join" and checkpointer is None:
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
-
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
-        )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-            )
-        ):
-            from metagraph_spark.operators.kernel_algos import cc_kernel
-
-            return cc_kernel(
-                graph,
-                max_rounds=max_rounds,
-                fixed_rounds=fixed_rounds,
-                spill_dir=kernel_spill_dir,
-            )
     spark = graph.edges.sparkSession
-    if (
-        fixed_rounds is None
-        and checkpointer is None
-        and graph.num_edges() >= TWO_PHASE_MIN_EDGES
-    ):
-        # size-routed: two-phase only where its shrinking edge set wins;
-        # smaller converged graphs fall through to hash-min + pointer jump
+    if route == "two-phase":
         return _two_phase_cc(
             spark,
             graph.edges.select(SRC, DST),

@@ -44,24 +44,11 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.subgraph import _P31, mix31
 from metagraph_spark.state import truncate_lineage
 
 _TWO_PI = 2.0 * math.pi
-
-# |V|·r values above which the superstep state is no longer broadcast
-# into the series joins (~8 B/value plus framing → ~200 MB at the cap)
-HOPE_BROADCAST_MAX_VALUES = 25_000_000
-
-# Below this edge count (and within the |V|·r broadcast budget above) the
-# whole randomized-SVD pipeline runs on the DRIVER over once-collected
-# Arrow arrays: the (2*power_iters+2)*k_terms superstep chain is
-# job-floor-bound at small scale (each superstep a near-empty single-stage
-# job), so two collects + numpy segmented sums replace ~40 Spark jobs.
-# Same guarded-driver-kernel envelope as operators/kernel.py
-# KERNEL_DRIVER_LOOP_MAX_EDGES; the distributed path is untouched above
-# the caps.
-HOPE_DRIVER_MAX_EDGES = 5_000_000
 
 
 def _gauss_expr(id_col, col_idx: int, seed: int):
@@ -171,13 +158,13 @@ def _hope_driver(
     the numpy mix31 twin (hash arithmetic exact; the Box–Muller log/cos
     may differ from the JVM's by an ulp — orders of magnitude inside the
     1e-8 numpy-twin tolerance, and hope_katz has no driver oracle row).
-    The mat-vec supersteps become deterministic segmented sums
-    (``np.add.reduceat`` over edge lists sorted by the group endpoint),
-    and every dense step (Gram, Cholesky, eigh, column combos) is the
-    exact driver arithmetic the distributed path already runs on its
-    aggregated r x r matrices. Float sums reorder vs the distributed
-    partial aggs within the numpy-twin test tolerance — the same caveat
-    the round-6 union-sum series merge documented."""
+    The mat-vec supersteps become deterministic weighted ``np.bincount``
+    sums over the edge list sorted by its group endpoint (one bincount
+    per state column), and every dense step (Gram, Cholesky, eigh,
+    column combos) is the exact driver arithmetic the distributed path
+    already runs on its aggregated r x r matrices. Float sums reorder vs
+    the distributed partial aggs within the numpy-twin test tolerance —
+    the same caveat the round-6 union-sum series merge documented."""
     import pandas as pd
 
     epdf = edges.toPandas()
@@ -298,7 +285,6 @@ def hope_katz_train(
     power_iters: int = 2,
     oversample: int = 4,
     seed: int = 42,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Train HOPE-katz embeddings; returns ``(id, emb array<double>)`` with
     ``len(emb) == 2 * (embedding_size // 2)`` — source half then target
@@ -326,18 +312,14 @@ def hope_katz_train(
         edges = edges.select(SRC, DST, WEIGHT)
     else:
         edges = edges.select(SRC, DST, F.lit(1.0).alias(WEIGHT))
-    # size-routed driver kernel (round 6): below the edge cap (and within
-    # the |V|·r broadcast budget) the superstep chain is job-floor-bound,
-    # not compute-bound — run the identical pipeline on the driver over
-    # two Arrow collects instead of ~(2q+2)*k_terms Spark jobs. The
-    # ``driver_max_edges`` override (0 disables) exists for tests and for
-    # callers that want the distributed plan regardless.
-    cap = HOPE_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    if (
-        cap
-        and graph.num_edges() <= cap
-        and graph.num_nodes() * r <= HOPE_BROADCAST_MAX_VALUES
-    ):
+    # size-routed driver kernel: within the driver caps (counted on the
+    # edges the driver collects — both directions of an undirected graph)
+    # and the |V|·r broadcast budget, the superstep chain is
+    # job-floor-bound, not compute-bound — run the identical pipeline on
+    # the driver over two Arrow collects instead of ~(2q+2)*k_terms Spark
+    # jobs
+    route, _ = routing.plan("hope", graph, width=r)
+    if route == "kernel-driver":
         return _hope_driver(
             spark, edges, graph.nodes, half, r, beta, k_terms,
             power_iters, seed,
@@ -351,8 +333,7 @@ def hope_katz_train(
     edges_by_dst = edges.repartition(n_part, DST).persist()
     edges_by_src = edges.repartition(n_part, SRC).persist()
     nodes = truncate_lineage(graph.node_ids()).persist()
-    # ~8 B per value plus framing: cap the broadcast at ~200 MB
-    bcast = graph.num_nodes() * r <= HOPE_BROADCAST_MAX_VALUES
+    bcast = routing.fits_broadcast_values(graph.num_nodes() * r)
     s_edges = edges_by_src if bcast else edges_by_dst
     st_edges = edges_by_dst if bcast else edges_by_src
     if bcast:

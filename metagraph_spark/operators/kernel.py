@@ -1,28 +1,31 @@
 """CSR/Arrow superstep kernel — the vectorized physical strategy.
 
-North-star physical design ("partition edges into per-partition CSR blocks
-held in Arrow; vectorized pandas/Arrow UDFs do the gather-scatter"):
-
 - ``build_edge_blocks``: one-time layout. Node ids → dense positions
   (sorted-id order); edges → P blocks CONTIGUOUS IN dst (range-partitioned
-  by destination), each block ONE DataFrame row carrying ``srcs``/``dsts``
-  positional int arrays (Arrow list columns — compact, zero per-edge row
-  overhead). Blocks are cached; the plan over them is constant, so no
-  lineage growth and no per-superstep checkpointing is needed.
-- per superstep: broadcast the dense rank vector (numpy, V doubles), run
-  ``mapInPandas`` over the cached blocks — each task computes its dst-range
-  slice of the gather via ``np.bincount(dsts_local, weights=contrib[srcs])``
-  (streaming C loop, cache-friendly, no hash tables) — and the driver
-  assembles slices and applies the rank update in numpy. ONE Spark job,
-  ZERO shuffles per superstep.
+  by destination), each block's ``srcs``/``dsts`` positional int arrays
+  sorted by local dst. In memory (no ``spill_dir``) each block is one
+  cached DataFrame row of Arrow list columns; file-backed (``spill_dir``)
+  each block is a raw ``.npy`` pair that tasks mmap, and the sorted ids and
+  degrees are files too.
+- ``pagerank_kernel`` runs one of two superstep loops over the blocks,
+  both with the same per-block update (``np.bincount(dsts,
+  weights=contrib[srcs])`` into the block's dst slice):
 
-Applicability: the vertex vector must fit on the driver/executors
-(8 bytes × V — fine to ~10^8 vertices; ``pagerank(strategy="auto")`` in
-operators/pagerank.py picks this kernel below ``KERNEL_MAX_VERTICES`` and
-the join-based path above it). This mirrors the reference's
-physical split: scipy CSR kernels for in-memory speed
-(``plugins/scipy/types.py:191-225``), chunked loaders for bigger-than-memory
-(``core/dask/loader.py:15-74``).
+  * the driver loop — the whole loop in numpy on the driver over
+    once-collected block arrays, no Spark job per superstep; taken when
+    the layout fits ``routing.fits_driver``;
+  * the slice-store loop (``_distributed_superstep_loop``) — for
+    file-backed blocks above the driver caps or with a ``slice_store``:
+    each task reads the previous rank vector from the slice store, writes
+    its new dst slice and returns two scalars, so the rank vector never
+    crosses the driver. ONE Spark job, ZERO shuffles per superstep.
+
+  A Graph argument is laid out in memory when it fits the driver loop,
+  and file-backed otherwise (under ``spill_dir``, or a temp dir removed
+  after the call). Which operator call reaches which loop is decided by
+  ``operators/routing.py``. This mirrors the reference's physical split:
+  scipy CSR kernels for in-memory speed (``plugins/scipy/types.py:191-225``),
+  chunked loaders for bigger-than-memory (``core/dask/loader.py:15-74``).
 
 Semantics are EXACTLY operators/pagerank.py (networkx dangling handling,
 N-scaled L1 convergence, ConvergenceError) — asserted by shared golden
@@ -40,52 +43,21 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.operators import routing
 
 BLOCK_SCHEMA = "block int, dst_lo long, srcs array<int>, dsts array<int>"
 BLOCK_SCHEMA_W = BLOCK_SCHEMA + ", ws array<double>"
 
-# Block arrays are raw .npy files opened with mmap in every task: the OS
-# page cache holds ONE copy of each block for the whole host, shared by all
-# python workers — per-worker in-memory caches (round-1 design) multiply
-# resident block data by the worker count and thrash once blocks exceed
-# memory/worker. Reference ancestry: metagraph's shared-memory chunk
-# registry (core/dask/loader.py:153-240) — same idea, page cache instead of
-# a scheduler plugin. Legacy .npz dirs (pre-round-2 layout) are still
-# readable via the decompress-and-cache fallback below.
-_BLOCK_CACHE: dict = {}
 # per-worker cache of the static inv-degree vector, keyed by run_dir
 _VEC_CACHE: dict = {}
 
-# File-backed layouts below this vertex count run the broadcast/collect
-# superstep loop even though the slice-store loop is available: the
-# distributed loop's per-superstep fixed cost (slice-file create/write/
-# fsync + manifest job scheduling + distributed result assembly) measured
-# ~25 ms/superstep MORE than broadcast at 280k edges (bench
-# transcript_pagerank_kernel_1e6: 4.1 s distributed vs ~3.0 s broadcast,
-# ~40 supersteps), while the driver-resident vectors it avoids are only
-# n*8 B — 16 MB at this cap, harmless on any driver. Above the cap the
-# O(V)-per-superstep driver collect + broadcast IS the bottleneck and the
-# slice-store loop wins (131M edges/s/superstep at 192M edges). An
-# explicitly injected slice_store always takes the distributed loop
-# (callers on clusters without a shared FS know their topology better
-# than this heuristic). Same size-route pattern as connected_components'
-# two-phase threshold and the betweenness entrypoint.
-KERNEL_DISTRIBUTED_MIN_VERTICES = 2_000_000
-
 
 def _open_block(path: str):
-    """(srcs, dsts) positional arrays for one block — mmap for .npy pairs,
-    per-worker decompressed cache for legacy .npz files."""
-    if path.endswith(".npz"):
-        cached = _BLOCK_CACHE.get(path)
-        if cached is None:
-            with np.load(path) as z:
-                cached = (
-                    z["srcs"].astype(np.int64),
-                    z["dsts"].astype(np.int64),
-                )
-            _BLOCK_CACHE[path] = cached
-        return cached
+    """(srcs, dsts) positional arrays for one file-backed block, opened
+    with mmap: the OS page cache holds ONE copy of each block for the
+    whole host, shared by all python workers (metagraph's shared-memory
+    chunk registry, ``core/dask/loader.py:153-240``, with the page cache in
+    place of a scheduler plugin)."""
     return (
         np.load(path + ".srcs.npy", mmap_mode="r"),
         np.load(path + ".dsts.npy", mmap_mode="r"),
@@ -97,35 +69,13 @@ def _open_block_weights(path: str):
     return np.load(path + ".ws.npy", mmap_mode="r")
 
 
-# Below this TOTAL edge count a kernel superstep loop runs its gathers on
-# the DRIVER over the (mmap'd or once-collected) block arrays instead of
-# scheduling one Spark job per superstep: at bench scale the per-superstep
-# job floor (~0.2-0.3 s: task scheduling + Arrow result assembly, measured
-# on the 100-superstep katz kernel row) dwarfs the actual gather (~10 ms at
-# 1.2M edges), so a 100-superstep run spends >90% of its wall in fixed
-# costs. The guarded driver loop is the same size-route pattern as the
-# dfs/astar/flow driver kernels: O(E) driver memory (~16 B/edge, 80 MB at
-# the cap), identical per-block update arithmetic (bit-exact results), and
-# the distributed loops remain the route above the cap (and whenever a
-# slice_store / resume contract is in play).
-KERNEL_DRIVER_LOOP_MAX_EDGES = 5_000_000
-
-# ... and the dense driver vectors the loop iterates must stay reasonable
-# for sparse many-vertex layouts too (8 B x V per vector).
-KERNEL_DRIVER_LOOP_MAX_VERTICES = 20_000_000
-
-
-def driver_block_arrays(eb, max_edges: int | None = None):
+def driver_block_arrays(eb):
     """``[(dst_lo, srcs, dsts, ws|None)]`` sorted by ``dst_lo``, or ``None``
-    when the layout exceeds ``max_edges`` (checked from .npy headers /
-    one tiny aggregate before any bulk load) or is not driver-readable.
-    ``max_edges`` defaults to the module's ``KERNEL_DRIVER_LOOP_MAX_EDGES``
-    read at call time (monkeypatchable in tests)."""
-    import os
-
-    if max_edges is None:
-        max_edges = KERNEL_DRIVER_LOOP_MAX_EDGES
-
+    when the layout does not fit ``routing.fits_driver`` (checked from
+    .npy headers / one tiny aggregate before any bulk load) or is not
+    driver-readable."""
+    if not routing.fits_driver(0, eb.n):
+        return None
     if eb.manifest is not None:
         if not eb.spill_dir:
             return None
@@ -134,13 +84,11 @@ def driver_block_arrays(eb, max_edges: int | None = None):
         )
         total = 0
         for _, path in rows:
-            if path.endswith(".npz"):
-                return None
             try:
                 total += np.load(path + ".dsts.npy", mmap_mode="r").shape[0]
             except FileNotFoundError:
                 return None
-            if total > max_edges:
+            if not routing.fits_driver(total):
                 return None
         out = []
         for lo, path in rows:
@@ -151,12 +99,10 @@ def driver_block_arrays(eb, max_edges: int | None = None):
                  np.asarray(dsts, dtype=np.int64), ws)
             )
         return out
-    if eb.blocks is None:
-        return None
     total = eb.blocks.agg(
         F.sum(F.size("srcs")).alias("e")
     ).collect()[0]["e"]
-    if total is None or total > max_edges:
+    if not routing.fits_driver(total or 0):
         return None
     out = []
     for r in sorted(eb.blocks.collect(), key=lambda r: int(r["dst_lo"])):
@@ -171,6 +117,78 @@ def driver_block_arrays(eb, max_edges: int | None = None):
             )
         )
     return out
+
+
+def _driver_blocks(eb, slice_store=None, resume: bool = False):
+    """The block arrays for the driver loop, or ``None`` when the call
+    takes the slice-store loop: file-backed blocks above the driver caps,
+    or any call with a ``slice_store``/``resume`` contract. In-memory
+    blocks have no slice-store loop, so those cases raise."""
+    if resume and slice_store is None:
+        raise ValueError(
+            "resume=True requires an injected slice_store (the default "
+            "store lives under a fresh uuid dir per call and can never "
+            "hold a prior run's vectors)"
+        )
+    if slice_store is not None:
+        if eb.manifest is None:
+            # never silently drop an explicitly requested store
+            raise ValueError(
+                "slice_store requires file-backed blocks "
+                "(build_edge_blocks(..., spill_dir=...)); in-memory blocks "
+                "run the driver loop, which keeps no slice vectors"
+            )
+        return None
+    blks = driver_block_arrays(eb)
+    if blks is None and eb.manifest is None:
+        raise ValueError(
+            f"in-memory EdgeBlocks ({eb.n} vertices) exceed the driver-loop "
+            "caps; rebuild with spill_dir for the slice-store loop"
+        )
+    return blks
+
+
+def with_blocks(graph_or_blocks, build, run, spill_dir=None,
+                in_memory: bool = False):
+    """``run(eb)`` over prebuilt EdgeBlocks, or over the blocks
+    ``build(graph, spill_dir)`` lays out for a Graph: in memory when
+    ``in_memory``, else file-backed under ``spill_dir`` — a temp dir
+    removed after the call when none is given. Blocks built here are
+    unpersisted after ``run``; results are materialized before that
+    (driver DataFrames, or ``truncate_lineage`` in the slice-store loops)."""
+    import shutil
+    import tempfile
+
+    if isinstance(graph_or_blocks, EdgeBlocks):
+        return run(graph_or_blocks)
+    tmp = None
+    if in_memory:
+        spill_dir = None
+    elif spill_dir is None:
+        tmp = spill_dir = tempfile.mkdtemp(prefix="mgspark_blocks_")
+    try:
+        eb = build(graph_or_blocks, spill_dir)
+        try:
+            return run(eb)
+        finally:
+            eb.unpersist()
+    finally:
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def fits_driver_graph(op: str, graph_or_blocks, spill_dir=None,
+                      durable: bool = False) -> bool:
+    """True when a Graph argument should be laid out in memory for the
+    driver loop: it fits the driver caps and the call asks for no spill
+    dir or durable slice store."""
+    g = graph_or_blocks
+    return (
+        isinstance(g, Graph)
+        and spill_dir is None
+        and not durable
+        and routing.fits_driver(routing.layout_edges(op, g), g.num_nodes())
+    )
 
 
 class EdgeBlocks:
@@ -188,8 +206,7 @@ class EdgeBlocks:
                  out_deg: np.ndarray | None = None,
                  manifest: DataFrame | None = None,
                  spill_dir: str | None = None, n: int | None = None,
-                 n_dangling: int | None = None, has_weights: bool = False,
-                 self_votes_baked: bool = False):
+                 n_dangling: int | None = None, has_weights: bool = False):
         self.blocks = blocks_df
         self._node_ids = node_ids     # sorted original ids, position = index
         self._out_deg = out_deg       # out-degree per position
@@ -198,10 +215,11 @@ class EdgeBlocks:
         self.spill_dir = spill_dir    # set when file-backed
         self.n_dangling = n_dangling  # zero-out-degree count (file layout)
         self.has_weights = has_weights  # blocks carry a per-edge ws array
-        # True when the edge arrays already contain one self-loop row per
-        # node (legacy lpa_vote_blocks layouts): the LPA kernels then skip
-        # their synthetic per-block self-vote suffix to avoid double votes
-        self.self_votes_baked = self_votes_baked
+
+    @property
+    def spark(self):
+        df = self.blocks if self.blocks is not None else self.manifest
+        return df.sparkSession
 
     @property
     def node_ids(self) -> np.ndarray:
@@ -223,9 +241,9 @@ class EdgeBlocks:
                 if self.spill_dir is not None
                 else None
             )
-            # file-backed degree-free layouts (cc_blocks/lpa_vote_blocks/
-            # label_blocks) must raise the same actionable message as
-            # in-memory ones, not a bare FileNotFoundError on the .npy
+            # file-backed degree-free layouts (cc_blocks/label_blocks)
+            # must raise the same actionable message as in-memory ones,
+            # not a bare FileNotFoundError on the .npy
             if deg_path is None or not os.path.exists(deg_path):
                 raise RuntimeError(
                     "EdgeBlocks built with_degrees=False carry no degree "
@@ -404,7 +422,6 @@ def build_edge_blocks(
     edges: DataFrame | None = None,
     with_weights: bool = False,
     with_degrees: bool = True,
-    self_votes_baked: bool = False,
 ) -> EdgeBlocks:
     """One-time layout step (a few shuffles total, then cached).
 
@@ -415,12 +432,12 @@ def build_edge_blocks(
     driver (VERDICT r3 #5): the positional searchsorted runs against the
     mmap'd id file in each task, and driver-resident state is the
     O(num_blocks) manifest plus scalars. Without ``spill_dir``: in-memory
-    Arrow blocks with driver-broadcast id/degree arrays (the small-graph
-    fast path; capped by ``KERNEL_MAX_VERTICES``).
+    Arrow blocks with driver-resident id/degree arrays, read by the driver
+    loops (the small-graph layout; sized by ``routing.fits_driver``).
 
     ``edges`` overrides the edge set (must already carry the directions the
-    algorithm gathers over — e.g. LPA's canonical-symmetrized set plus
-    self-loop votes); node positions still come from ``graph.node_ids()``.
+    algorithm gathers over — e.g. LPA's canonical-symmetrized set); node
+    positions still come from ``graph.node_ids()``.
     ``with_weights=True`` additionally packs a per-edge ``ws`` double array
     per block (absent weight column → 1.0), enabling the weighted kernels
     (katz). Block edge arrays are sorted by local dst so segmented kernels
@@ -494,7 +511,7 @@ def build_edge_blocks(
         def pack_to_file(key, pdf: pd.DataFrame) -> pd.DataFrame:
             blk = int(key[0])
             lo = _blk_lo(blk, n, nb)
-            # raw .npy pair (NOT .npz): tasks mmap these, so the page cache
+            # raw uncompressed .npy pair: tasks mmap these, so the page cache
             # keeps one host-wide copy instead of one per python worker
             path = os.path.join(spill_dir, f"block_{blk:05d}")
             dsts_local = (pdf["dst_pos"].to_numpy() - lo).astype(np.int32)
@@ -516,8 +533,7 @@ def build_edge_blocks(
         # dst ranges with no incoming edges produce no group: materialize
         # an EMPTY block for each so coverage is always full — the
         # distributed loop must still WRITE those slices every superstep
-        # (teleport + dangling mass), and partial coverage would demote the
-        # whole run to the driver-vector legacy loop
+        # (teleport + dangling mass), and refuses a partial manifest
         present = {int(r["dst_lo"]) for r in manifest.collect()}  # O(nb)
         missing = [
             k for k in range(nb) if _blk_lo(k, n, nb) not in present
@@ -550,7 +566,6 @@ def build_edge_blocks(
             n=n,
             n_dangling=n_dangling,
             has_weights=with_weights,
-            self_votes_baked=self_votes_baked,
         )
         _save_metadata(eb, spill_dir)
         return eb
@@ -615,8 +630,7 @@ def build_edge_blocks(
     # unpersist (not destroy): the cached blocks' lineage references the
     # broadcast; a cache-miss recomputation must be able to re-fetch it
     bc_ids.unpersist()
-    return EdgeBlocks(blocks, node_ids, out_deg, has_weights=with_weights,
-                      self_votes_baked=self_votes_baked)
+    return EdgeBlocks(blocks, node_ids, out_deg, has_weights=with_weights)
 
 
 def _save_metadata(eb: EdgeBlocks, spill_dir: str) -> None:
@@ -632,7 +646,6 @@ def _save_metadata(eb: EdgeBlocks, spill_dir: str) -> None:
                 "n": eb.n,
                 "n_dangling": eb.n_dangling,
                 "has_weights": eb.has_weights,
-                "self_votes_baked": eb.self_votes_baked,
             },
             f,
         )
@@ -650,27 +663,15 @@ def load_edge_blocks(spark, spill_dir: str) -> EdgeBlocks:
 
     with open(os.path.join(spill_dir, "manifest.json")) as f:
         rows = json.load(f)
-    meta_path = os.path.join(spill_dir, "meta.json")
-    has_weights = False
-    self_votes_baked = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        n, n_dangling = int(meta["n"]), meta["n_dangling"]
-        has_weights = bool(meta.get("has_weights", False))
-        self_votes_baked = bool(meta.get("self_votes_baked", False))
-    else:  # pre-round-4 layout dirs
-        n = int(
-            np.load(os.path.join(spill_dir, "node_ids.npy"), mmap_mode="r").shape[0]
-        )
-        n_dangling = None
+    with open(os.path.join(spill_dir, "meta.json")) as f:
+        meta = json.load(f)
     manifest = spark.createDataFrame(rows, "path string, dst_lo long").repartition(
         max(1, len(rows))
     ).persist()
     manifest.count()
-    return EdgeBlocks(None, manifest=manifest, spill_dir=spill_dir, n=n,
-                      n_dangling=n_dangling, has_weights=has_weights,
-                      self_votes_baked=self_votes_baked)
+    return EdgeBlocks(None, manifest=manifest, spill_dir=spill_dir,
+                      n=int(meta["n"]), n_dangling=meta["n_dangling"],
+                      has_weights=bool(meta.get("has_weights", False)))
 
 
 class LocalSliceStore:
@@ -847,10 +848,25 @@ class LocalSliceStore:
         return best
 
 
+def slice_ranges(eb: EdgeBlocks) -> dict:
+    """``{dst_lo: dst_hi}`` for every block of a file-backed layout — the
+    static, evenly spaced dst ranges the slice-store loops write. Raises
+    when the manifest misses a range (``build_edge_blocks`` always writes
+    an empty block for a range without edges)."""
+    n = eb.n
+    los = sorted(int(r["dst_lo"]) for r in eb.manifest.collect())
+    nb = len(los)
+    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
+        raise ValueError(
+            f"block manifest under {eb.spill_dir!r} does not cover every "
+            "dst range; rebuild it with build_edge_blocks(..., spill_dir=...)"
+        )
+    return {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
+
+
 def _distributed_superstep_loop(
     spark,
     eb: EdgeBlocks,
-    inv_deg: np.ndarray | None,
     damping: float,
     total: int,
     tolerance: float,
@@ -874,73 +890,40 @@ def _distributed_superstep_loop(
     resume (north rule: supersteps survive executor/driver loss).
 
     Each task gathers its dst-slice (bincount over its CSR block, weights
-    read from the previous iteration's slice files via a per-worker
-    assembled cache), applies the rank update with the two driver scalars
-    (dangling mass, base) folded in as constants, WRITES its new slice, and
-    returns only (err, dangling-mass) partial scalars. The driver per
-    superstep does: schedule one job + sum ~num_blocks scalar rows — no
-    O(V) serialization, no per-worker broadcast fetch. This removes the
-    measured ~1 s/superstep serial driver fraction that capped thread
-    scaling (on a cluster the slice files live on a shared store / shuffle
-    service; the broadcast path below remains the no-shared-fs fallback).
+    read from the previous iteration's vector), applies the rank update
+    with the two driver scalars (dangling mass, base) folded in as
+    constants, WRITES its new slice, and returns only (err, dangling-mass)
+    partial scalars. The driver per superstep schedules one job and sums
+    ~num_blocks scalar rows — no O(V) serialization, no per-worker
+    broadcast fetch.
 
-    Returns the final ``(id, rank)`` DataFrame (assembled DISTRIBUTEDLY —
-    each task emits its dst-range slice from the mmap'd id + rank files, so
-    neither vector ever crosses the driver), or None if coverage is partial
-    (caller falls back to the legacy loop). All vector I/O goes through the
-    slice store (default :class:`LocalSliceStore` under the blocks'
-    spill_dir). ``inv_deg`` may be None when the layout wrote
-    ``inv_deg.npy`` (the scale path) — the file is linked into the run as
-    the aux vector and the dangling count comes from the layout metadata,
-    keeping driver state O(num_blocks) end to end."""
+    Returns the final ``(id, rank)`` DataFrame, assembled DISTRIBUTEDLY
+    (each task emits its dst-range slice from the mmap'd id + rank files,
+    so neither vector ever crosses the driver). All vector I/O goes
+    through the slice store (default :class:`LocalSliceStore` under the
+    blocks' spill_dir). The inverse-degree vector is the layout's
+    ``inv_deg.npy``, linked into the run as the aux vector, and the
+    dangling count comes from the layout metadata, keeping driver state
+    O(num_blocks) end to end."""
     import os
     import uuid
 
-    import pandas as pd
-
     n = eb.n
-    rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
-    nb = len(rows)
-    los = sorted(lo for _, lo in rows)
-    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
-        return None  # empty ranges -> legacy loop handles them
-    hi_of = {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
+    hi_of = slice_ranges(eb)
+    inv_path = os.path.join(eb.spill_dir, "inv_deg.npy")
+    if not os.path.exists(inv_path):
+        eb.out_deg  # raises the degree-free layout's actionable error
     store = slice_store
     if store is None:
         store = LocalSliceStore(
             os.path.join(eb.spill_dir, f"run_{uuid.uuid4().hex[:12]}")
         )
     store.init_run()
-    if inv_deg is not None:
-        store.put_aux("invdeg", inv_deg)
-        n_dangling = int((inv_deg == 0.0).sum())
-    else:
-        inv_path = os.path.join(eb.spill_dir, "inv_deg.npy")
-        if not os.path.exists(inv_path):
-            # pre-round-4 layout dir (only out_deg.npy): derive the inverse
-            # file once, streamed chunk-wise through mmaps
-            deg = np.load(os.path.join(eb.spill_dir, "out_deg.npy"), mmap_mode="r")
-            mi = np.lib.format.open_memmap(
-                inv_path, mode="w+", dtype=np.float64, shape=(n,)
-            )
-            step_sz = 1 << 24
-            for lo in range(0, n, step_sz):
-                d = np.asarray(deg[lo : lo + step_sz])
-                mi[lo : lo + step_sz] = np.where(
-                    d == 0.0, 0.0, 1.0 / np.maximum(d, 1.0)
-                )
-            mi.flush()
-        if hasattr(store, "put_aux_file"):
-            store.put_aux_file("invdeg", inv_path)
-        else:  # custom store: stream the file through, never resident
-            store.put_aux("invdeg", np.load(inv_path, mmap_mode="r"))
-        if eb.n_dangling is not None:
-            n_dangling = int(eb.n_dangling)
-        else:  # pre-round-4 layout dir: stream-count from the mmap
-            n_dangling = int(
-                (np.asarray(np.load(inv_path, mmap_mode="r")) == 0.0).sum()
-            )
-    slice_meta = sorted((lo, hi_of[lo]) for _, lo in rows)
+    if hasattr(store, "put_aux_file"):
+        store.put_aux_file("invdeg", inv_path)
+    else:  # custom store: stream the file through, never resident
+        store.put_aux("invdeg", np.load(inv_path, mmap_mode="r"))
+    n_dangling = int(eb.n_dangling)
     danglesum = float(n_dangling) / n  # of the uniform r0
     base = (1.0 - damping) / n
     err = None
@@ -1023,7 +1006,7 @@ def _distributed_superstep_loop(
         out = eb.manifest.mapInPandas(
             step, schema="dst_lo long, err double, dangle double"
         ).toPandas()
-        if set(out["dst_lo"]) != {lo for lo, _ in slice_meta}:
+        if set(out["dst_lo"]) != set(hi_of):
             store.cleanup()
             raise RuntimeError("distributed superstep lost a slice")
         err = float(out["err"].sum())
@@ -1084,215 +1067,76 @@ def pagerank_kernel(
     metrics_sink: list | None = None,
     slice_store=None,
     resume: bool = False,
+    spill_dir: str | None = None,
 ) -> DataFrame:
     """PageRank via the CSR/Arrow kernel. Returns ``(id, rank)``.
 
-    ``resume=True`` restarts a crashed run from its newest committed
-    iteration vector in ``slice_store`` (which is therefore required —
-    the default store lives under a fresh uuid dir per call and can never
-    hold prior state); see ``_distributed_superstep_loop``.
-
-    Accepts a Graph (builds blocks internally) or a prebuilt EdgeBlocks
-    (amortize the layout across runs). File-backed blocks with full range
-    coverage run the fully distributed superstep loop (rank vector never
-    crosses the driver, see ``_distributed_superstep_loop``) when the
-    vertex count reaches ``KERNEL_DISTRIBUTED_MIN_VERTICES`` or a
-    ``slice_store`` is injected; below that the broadcast/collect loop is
-    faster (size route, VERDICT r4 #3) and runs instead — reading the
-    same mmap'd block files. ``slice_store`` injects the
-    iteration-vector storage for the distributed loop (default
+    Accepts a Graph or a prebuilt EdgeBlocks (amortize the layout across
+    runs). A Graph is laid out in memory when it fits the driver caps and
+    file-backed otherwise (under ``spill_dir``, or a temp dir removed
+    after the call). Blocks that fit ``routing.fits_driver`` run the
+    driver loop; file-backed blocks above the caps, or any call with a
+    ``slice_store``, run the slice-store loop
+    (``_distributed_superstep_loop``; the rank vector never crosses the
+    driver). ``slice_store`` injects its iteration-vector storage (default
     :class:`LocalSliceStore` under the blocks' spill_dir — shared-FS
     semantics; supply an object-store-backed implementation on clusters
-    without one)."""
-    if isinstance(graph_or_blocks, EdgeBlocks):
-        eb = graph_or_blocks
-        owned = False
-        spark = (eb.blocks if eb.blocks is not None else eb.manifest).sparkSession
-    else:
-        eb = build_edge_blocks(graph_or_blocks)
-        owned = True
-        spark = graph_or_blocks.edges.sparkSession
-    n = eb.n
-    if n == 0:
-        return spark.createDataFrame([], "id long, rank double")
-    sc = spark.sparkContext
+    without one). ``resume=True`` restarts a crashed run from its newest
+    committed iteration vector in ``slice_store`` (which is therefore
+    required — the default store lives under a fresh uuid dir per call and
+    can never hold prior state)."""
+    durable = slice_store is not None or resume
 
-    total = fixed_iterations if fixed_iterations is not None else maxiter
-    err = None
-
-    file_backed = eb.manifest is not None
-    source_df = eb.manifest if file_backed else eb.blocks
-    if slice_store is not None and not file_backed:
-        # same contract as pagerank(strategy="kernel", checkpointer=...):
-        # never silently drop an explicitly requested store
-        raise ValueError(
-            "slice_store requires file-backed blocks "
-            "(build_edge_blocks(..., spill_dir=...)); in-memory blocks run "
-            "the broadcast/collect loop, which keeps no slice vectors"
-        )
-    if resume and slice_store is None:
-        raise ValueError(
-            "resume=True requires an injected slice_store (the default "
-            "store lives under a fresh uuid dir per call and can never "
-            "hold a prior run's vectors)"
-        )
-
-    # size route (round 6): small layouts run the whole superstep loop on
-    # the driver over the block arrays — no Spark job per superstep at all
-    # (see KERNEL_DRIVER_LOOP_MAX_EDGES). Never when a durable slice-store
-    # contract is in play.
-    if slice_store is None and not resume and n <= KERNEL_DRIVER_LOOP_MAX_VERTICES:
-        blks = driver_block_arrays(eb)
-        if blks is not None:
-            out_deg_l = np.asarray(eb.out_deg)
-            dangling_l = out_deg_l == 0
-            inv_l = np.where(dangling_l, 0.0, 1.0 / np.maximum(out_deg_l, 1.0))
-            r = np.full(n, 1.0 / n)
-            base = (1.0 - damping) / n
-            for it in range(total):
-                contrib = r * inv_l
-                g_vec = np.zeros(n)
-                for lo, srcs, dsts, _ws in blks:
-                    if len(srcs) == 0:
-                        continue
-                    g = np.bincount(dsts, weights=contrib[srcs])
-                    g_vec[lo : lo + len(g)] += g
-                danglesum = r[dangling_l].sum()
-                new_r = damping * g_vec + damping * danglesum / n + base
-                err = np.abs(new_r - r).sum()
-                if metrics_sink is not None:
-                    metrics_sink.append(
-                        {"iteration": it, "l1_error": float(err)}
-                    )
-                r = new_r
-                if fixed_iterations is None and err < n * tolerance:
-                    break
-            else:
-                if fixed_iterations is None:
-                    if owned:
-                        eb.unpersist()
-                    raise ConvergenceError(
-                        f"pagerank_kernel failed to converge in {maxiter} "
-                        f"iterations (err={err!r})"
-                    )
-            result = spark.createDataFrame(
-                pd.DataFrame({"id": np.asarray(eb.node_ids), "rank": r}),
-                schema="id long, rank double",
+    def run(eb: EdgeBlocks) -> DataFrame:
+        spark, n = eb.spark, eb.n
+        if n == 0:
+            return spark.createDataFrame([], "id long, rank double")
+        total = fixed_iterations if fixed_iterations is not None else maxiter
+        blks = _driver_blocks(eb, slice_store, resume)
+        if blks is None:
+            return _distributed_superstep_loop(
+                spark, eb, damping, total, tolerance, fixed_iterations,
+                metrics_sink, slice_store=slice_store, resume=resume,
             )
-            if owned:
-                eb.unpersist()
-            return result
-
-    # size route (VERDICT r4 #3): tiny file-backed layouts pay more in
-    # distributed-loop fixed costs than the driver vectors they avoid —
-    # see KERNEL_DISTRIBUTED_MIN_VERTICES. An injected store always wins.
-    run_distributed = file_backed and (
-        slice_store is not None
-        or (eb.spill_dir is not None and n >= KERNEL_DISTRIBUTED_MIN_VERTICES)
-    )
-    if run_distributed:
-        import os
-
-        # scale layout: the inverse-degree vector is already a file — pass
-        # None so the loop links it, keeping the driver free of O(V) arrays
-        has_deg_file = eb.spill_dir is not None and (
-            os.path.exists(os.path.join(eb.spill_dir, "inv_deg.npy"))
-            or os.path.exists(os.path.join(eb.spill_dir, "out_deg.npy"))
-        )
-        inv_arg = None
-        if not has_deg_file:
-            od = np.asarray(eb.out_deg)
-            inv_arg = np.where(od == 0.0, 0.0, 1.0 / np.maximum(od, 1.0))
-        r_df = _distributed_superstep_loop(
-            spark, eb, inv_arg, damping, total, tolerance,
-            fixed_iterations, metrics_sink, slice_store=slice_store,
-            resume=resume,
-        )
-        if r_df is not None:
-            if owned:
-                eb.unpersist()
-            return r_df
-
-    # legacy broadcast/collect loop: driver holds the dense vectors (the
-    # in-memory small-graph path; capped by KERNEL_MAX_VERTICES)
-    out_deg = np.asarray(eb.out_deg)
-    dangling_mask = out_deg == 0
-    inv_deg = np.where(dangling_mask, 0.0, 1.0 / np.maximum(out_deg, 1.0))
-    r = np.full(n, 1.0 / n)
-    base = (1.0 - damping) / n
-
-    vec_dir = None  # legacy loop: broadcast distribution
-
-    for it in range(total):
-        contrib = r * inv_deg
-        if vec_dir is not None:
-            import os
-            import uuid
-
-            vec_path = os.path.join(
-                vec_dir, f"contrib_{uuid.uuid4().hex[:12]}.npy"
-            )
-            np.save(vec_path, contrib)
-            bc = None
+        out_deg = np.asarray(eb.out_deg)
+        dangling = out_deg == 0
+        inv = np.where(dangling, 0.0, 1.0 / np.maximum(out_deg, 1.0))
+        r = np.full(n, 1.0 / n)
+        base = (1.0 - damping) / n
+        err = None
+        for it in range(total):
+            contrib = r * inv
+            g_vec = np.zeros(n)
+            for lo, srcs, dsts, _ws in blks:
+                if len(srcs) == 0:
+                    continue
+                g = np.bincount(dsts, weights=contrib[srcs])
+                g_vec[lo : lo + len(g)] += g
+            danglesum = r[dangling].sum()
+            new_r = damping * g_vec + damping * danglesum / n + base
+            err = np.abs(new_r - r).sum()
+            if metrics_sink is not None:
+                metrics_sink.append({"iteration": it, "l1_error": float(err)})
+            r = new_r
+            if fixed_iterations is None and err < n * tolerance:
+                break
         else:
-            vec_path = None
-            bc = sc.broadcast(contrib)
+            if fixed_iterations is None:
+                raise ConvergenceError(
+                    f"pagerank_kernel failed to converge in {maxiter} "
+                    f"iterations (err={err!r})"
+                )
+        return spark.createDataFrame(
+            pd.DataFrame({"id": np.asarray(eb.node_ids), "rank": r}),
+            schema="id long, rank double",
+        )
 
-        def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            c = (
-                np.load(vec_path, mmap_mode="r")
-                if vec_path is not None
-                else bc.value
-            )
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    if file_backed:
-                        srcs, dsts = _open_block(row["path"])
-                    else:
-                        srcs = np.asarray(row["srcs"], dtype=np.int64)
-                        dsts = np.asarray(row["dsts"], dtype=np.int64)
-                    g = np.bincount(dsts, weights=np.asarray(c)[srcs])
-                    # one array row per block (dense dst-range slice):
-                    # minimal Arrow row overhead on the collect path
-                    yield pd.DataFrame(
-                        {"dst_lo": [np.int64(row["dst_lo"])], "g": [g]}
-                    )
-
-        out = source_df.mapInPandas(
-            gather, schema="dst_lo long, g array<double>"
-        ).toPandas()
-        if bc is not None:
-            bc.unpersist()
-        if vec_path is not None:
-            import os
-
-            os.unlink(vec_path)
-        # each edge contributes to exactly one block, but a block's bincount
-        # slice may carry leading zeros below its true min position — so
-        # accumulate (+=), never assign, to avoid clobbering a neighbor's
-        # boundary entry
-        g_vec = np.zeros(n)
-        for lo, g in zip(out["dst_lo"], out["g"]):
-            g_vec[lo : lo + len(g)] += g
-        danglesum = r[dangling_mask].sum()
-        new_r = damping * g_vec + damping * danglesum / n + base
-        err = np.abs(new_r - r).sum()
-        if metrics_sink is not None:
-            metrics_sink.append({"iteration": it, "l1_error": float(err)})
-        r = new_r
-        if fixed_iterations is None and err < n * tolerance:
-            break
-    else:
-        if fixed_iterations is None:
-            if owned:
-                eb.unpersist()
-            raise ConvergenceError(
-                f"pagerank_kernel failed to converge in {maxiter} iterations "
-                f"(err={err!r})"
-            )
-    result = spark.createDataFrame(
-        pd.DataFrame({"id": eb.node_ids, "rank": r}), schema="id long, rank double"
+    return with_blocks(
+        graph_or_blocks,
+        lambda g, d: build_edge_blocks(g, spill_dir=d),
+        run,
+        spill_dir,
+        in_memory=fits_driver_graph(
+            "pagerank", graph_or_blocks, spill_dir, durable
+        ),
     )
-    if owned:
-        eb.unpersist()
-    return result

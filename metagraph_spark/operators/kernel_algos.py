@@ -1,42 +1,50 @@
 """CSR/Arrow kernels for katz / connected components / LPA supersteps.
 
 Same physical strategy as ``operators/kernel.py``'s PageRank kernel (the
-north-star design: per-partition CSR blocks held in Arrow, vectorized
-numpy gather-scatter inside ``mapInPandas``, ZERO shuffles per superstep)
-applied to the other iterative operators:
+north-star design: per-partition CSR blocks, vectorized numpy
+gather-scatter, ZERO shuffles per superstep) applied to the other
+iterative operators. Each of ``katz_kernel``, ``cc_kernel`` and
+``lpa_kernel`` has exactly two superstep loops with the same per-block
+arithmetic, so their results are bit-identical:
 
-- ``katz_kernel`` — ``x' = α·Aᵀx + β`` over weighted blocks
-  (``build_edge_blocks(..., with_weights=True)``); per superstep each task
-  bincounts its dst-range slice with ``weights = x[srcs]·ws`` and the
-  driver applies the affine update. Semantics are EXACTLY
+- the driver loop (``_driver_cc_loop``/``_driver_lpa_loop``, katz
+  inline) — the whole loop in numpy on the driver, no Spark job per
+  superstep; taken when the graph or layout fits ``routing.fits_driver``.
+  CC and LPA on a Graph skip the block layout entirely: one Arrow collect
+  of the edge pairs (``_driver_graph_arrays``);
+- the slice-store loop (``_distributed_*_loop``) — file-backed blocks
+  above the driver caps, or any call with a ``slice_store``: tasks read
+  the previous vector from the slice store and write their dst slice, so
+  the vector never crosses the driver (driver state O(num_blocks), no
+  vertex cap below int32 positions). A Graph above the caps is laid out
+  file-backed under ``spill_dir``, or a temp dir removed after the call.
+
+The update rules:
+
+- ``katz_kernel`` — ``x' = α·Aᵀx + β`` over weighted blocks; per block a
+  bincount of ``x[srcs]·ws`` into the dst slice. Semantics are EXACTLY
   ``operators/centrality.py:katz_centrality`` (reference contract
   ``plugins/core/algorithms/centrality.py:16-23``, nx impl
   ``plugins/networkx/algorithms.py:30-46``): L1 convergence ``Σ|x'-x| <
   N·tol``, final L2 normalization, ConvergenceError past maxiter.
 - ``cc_kernel`` — hash-min label exchange on positional labels: blocks are
   dst-sorted at pack time, so each round's per-dst neighbor minimum is one
-  ``np.minimum.reduceat`` (C-speed segmented min, no hash tables); the
-  driver applies ``label = min(label, gathered)`` and — on the converged
-  path only — pointer-jumps the dense label array to full compression
-  (``lab = lab[lab]``), giving the O(log V) round bound. ``fixed_rounds``
-  stays PURE hash-min (the unrolled-SQL oracle contract, exactly
-  ``operators/components.py:_min_label_fixpoint``). Labels are positions
-  during iteration; positions are order-isomorphic to sorted ids, so
-  ``node_ids[lab]`` equals the join path's min-id labels at EVERY round,
-  not just at convergence.
+  ``np.minimum.reduceat``; converged runs then pointer-jump the labels to
+  full compression (``lab = lab[lab]``), giving the O(log V) round bound.
+  ``fixed_rounds`` stays PURE hash-min (the unrolled-SQL oracle contract,
+  exactly ``operators/components.py:_min_label_fixpoint``). Positions are
+  order-isomorphic to sorted ids, so ``node_ids[lab]`` equals the join
+  path's min-id labels at EVERY round.
 - ``lpa_kernel`` — deterministic synchronous LPA, exactly
   ``operators/lpa.py`` semantics (most frequent neighbor label + one
-  self-vote, ties to the smallest label): per round each task lexsorts its
-  block's (dst, neighbor-label) pairs, run-length-counts votes, and picks
-  each dst's winner via segmented ``maximum.reduceat`` /
-  ``minimum.reduceat`` — all C loops, no per-row python.
+  self-vote, ties to the smallest label), via run-length vote counting
+  and segmented ``reduceat`` winners (``_mode_votes``).
 
-All three accept a prebuilt :class:`EdgeBlocks` (amortize the layout) or a
+All accept a prebuilt :class:`EdgeBlocks` (amortize the layout) or a
 Graph. Integer-label kernels (cc, lpa) are EXACTLY equal to the join path
 (asserted in tests/test_kernel_algos.py); katz agrees to float rounding.
-Applicability: the dense driver vector caps at
-``pagerank.KERNEL_MAX_VERTICES`` — the join paths remain the uncapped
-scale route, selected by ``strategy="auto"`` in the operator wrappers.
+``eigenvector_kernel`` and ``hits_kernel`` broadcast a dense vector per
+superstep (``_gather_once``) over in-memory blocks.
 """
 
 from __future__ import annotations
@@ -51,13 +59,17 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
     LocalSliceStore,
-    _blk_lo,
+    _driver_blocks,
     _open_block,
     _open_block_weights,
     build_edge_blocks,
+    fits_driver_graph,
+    slice_ranges,
+    with_blocks,
 )
 
 _IMAX = np.iinfo(np.int64).max
@@ -71,26 +83,17 @@ def _distributed_katz_loop(
     tolerance: float,
     fixed_iterations: int | None,
     metrics_sink: list | None,
-) -> DataFrame | None:
-    """Fully distributed katz supersteps for file-backed blocks with full
-    dst-range coverage — the vector never crosses the driver (same
-    slice-store protocol as ``kernel._distributed_superstep_loop``; this is
-    what removes the ~0.2-0.4 s/superstep broadcast+collect floor the
-    in-memory loop pays). Each task writes its dst slice ``α·gather + β``
-    and returns (err, Σnew²) partials; the L2 norm for the final
-    normalization is the last superstep's Σnew² — no extra pass. Returns
-    None when coverage is partial (caller falls back to the broadcast
-    loop)."""
+) -> DataFrame:
+    """Fully distributed katz supersteps for file-backed blocks — the
+    vector never crosses the driver (same slice-store protocol as
+    ``kernel._distributed_superstep_loop``). Each task writes its dst slice
+    ``α·gather + β`` and returns (err, Σnew²) partials; the L2 norm for the
+    final normalization is the last superstep's Σnew² — no extra pass."""
     import os
     import uuid
 
     n = eb.n
-    rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
-    nb = len(rows)
-    los = sorted(lo for _, lo in rows)
-    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
-        return None
-    hi_of = {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
+    hi_of = slice_ranges(eb)
     weighted = eb.has_weights
     store = LocalSliceStore(
         os.path.join(eb.spill_dir, f"katz_{uuid.uuid4().hex[:12]}")
@@ -181,20 +184,6 @@ def _distributed_katz_loop(
     return result
 
 
-def _resolve_blocks(graph_or_blocks, *, edges=None, with_weights=False,
-                    spill_dir=None):
-    """(EdgeBlocks, owned, spark) — builds blocks when given a Graph."""
-    if isinstance(graph_or_blocks, EdgeBlocks):
-        eb = graph_or_blocks
-        src_df = eb.blocks if eb.blocks is not None else eb.manifest
-        return eb, False, src_df.sparkSession
-    eb = build_edge_blocks(
-        graph_or_blocks, edges=edges, with_weights=with_weights,
-        spill_dir=spill_dir, with_degrees=False,
-    )
-    return eb, True, graph_or_blocks.edges.sparkSession
-
-
 def _block_arrays(row, file_backed: bool, weighted: bool):
     """(srcs, dsts_local, ws|None) for one manifest/blocks row."""
     if file_backed:
@@ -207,6 +196,16 @@ def _block_arrays(row, file_backed: bool, weighted: bool):
     return srcs, dsts, ws
 
 
+def _weighted_build(graph_or_blocks):
+    """Degree-free layout builder carrying the graph's weights."""
+    weighted = (
+        isinstance(graph_or_blocks, Graph) and graph_or_blocks.is_weighted
+    )
+    return lambda g, d: build_edge_blocks(
+        g, spill_dir=d, with_weights=weighted, with_degrees=False
+    )
+
+
 def katz_kernel(
     graph_or_blocks,
     attenuation_factor: float = 0.01,
@@ -215,109 +214,41 @@ def katz_kernel(
     tolerance: float = 1e-05,
     fixed_iterations: int | None = None,
     metrics_sink: list | None = None,
+    spill_dir: str | None = None,
 ) -> DataFrame:
     """Katz centrality via CSR blocks. Returns ``(id, katz)``.
 
-    A Graph argument builds weighted blocks internally; a prebuilt
-    EdgeBlocks must have been built ``with_weights=True`` if the graph is
-    weighted (unweighted blocks run with implicit weight 1.0)."""
-    if isinstance(graph_or_blocks, Graph):
-        eb, owned, spark = _resolve_blocks(
-            graph_or_blocks, with_weights=graph_or_blocks.is_weighted
-        )
-    else:
-        eb, owned, spark = _resolve_blocks(graph_or_blocks)
-    try:
-        n = eb.n
+    A Graph argument builds weighted blocks internally — in memory for the
+    driver loop when it fits, file-backed (``spill_dir`` or a temp dir)
+    for the slice-store loop otherwise; a prebuilt EdgeBlocks must have
+    been built ``with_weights=True`` if the graph is weighted (unweighted
+    blocks run with implicit weight 1.0)."""
+    alpha, beta = attenuation_factor, immediate_neighbor_weight
+    total = fixed_iterations if fixed_iterations is not None else maxiter
+
+    def run(eb: EdgeBlocks) -> DataFrame:
+        spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, katz double")
-        sc = spark.sparkContext
-        file_backed = eb.manifest is not None
-        source_df = eb.manifest if file_backed else eb.blocks
-        weighted = eb.has_weights
-        alpha, beta = attenuation_factor, immediate_neighbor_weight
-        total_d = fixed_iterations if fixed_iterations is not None else maxiter
-        # round-6 size route: small layouts run every superstep on the
-        # driver over the block arrays (no Spark job per superstep — see
-        # kernel.KERNEL_DRIVER_LOOP_MAX_EDGES); per-block bincount + slice
-        # accumulation is the identical arithmetic, so values are
-        # bit-exact with both distributed loops.
-        from metagraph_spark.operators.kernel import (
-            KERNEL_DRIVER_LOOP_MAX_VERTICES,
-            driver_block_arrays,
-        )
-
-        blks = (
-            driver_block_arrays(eb)
-            if n <= KERNEL_DRIVER_LOOP_MAX_VERTICES
-            else None
-        )
-        if blks is not None:
-            x = np.zeros(n)
-            err = None
-            for it in range(total_d):
-                g_vec = np.zeros(n)
-                for lo, srcs, dsts, ws in blks:
-                    if len(srcs) == 0:
-                        continue
-                    w = x[srcs]
-                    if ws is not None:
-                        w = w * ws
-                    g = np.bincount(dsts, weights=w)
-                    g_vec[lo : lo + len(g)] += g
-                new_x = alpha * g_vec + beta
-                err = float(np.abs(new_x - x).sum())
-                if metrics_sink is not None:
-                    metrics_sink.append({"iteration": it, "l1_error": err})
-                x = new_x
-                if fixed_iterations is None and err < n * tolerance:
-                    break
-            else:
-                if fixed_iterations is None:
-                    raise ConvergenceError(
-                        f"katz failed to converge in {maxiter} iterations "
-                        f"(err={err!r})"
-                    )
-            sumsq = float((x * x).sum())
-            norm = 1.0 / math.sqrt(sumsq) if sumsq > 0 else 1.0
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {"id": np.asarray(eb.node_ids), "katz": x * norm}
-                ),
-                schema="id long, katz double",
-            )
-        if file_backed and eb.spill_dir:
-            r_df = _distributed_katz_loop(
-                eb, alpha, beta, total_d, tolerance, fixed_iterations,
+        blks = _driver_blocks(eb)
+        if blks is None:
+            return _distributed_katz_loop(
+                eb, alpha, beta, total, tolerance, fixed_iterations,
                 metrics_sink,
             )
-            if r_df is not None:
-                return r_df
+        # per-block bincount + slice accumulation: the slice-store loop's
+        # arithmetic, so values are bit-exact with it
         x = np.zeros(n)
-        total = fixed_iterations if fixed_iterations is not None else maxiter
         err = None
         for it in range(total):
-            bc = sc.broadcast(x)
-
-            def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                c = np.asarray(bc.value)
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        srcs, dsts, ws = _block_arrays(row, file_backed, weighted)
-                        w = c[srcs]
-                        if ws is not None:
-                            w = w * ws
-                        g = np.bincount(dsts, weights=w)
-                        yield pd.DataFrame(
-                            {"dst_lo": [np.int64(row["dst_lo"])], "g": [g]}
-                        )
-
-            out = source_df.mapInPandas(
-                gather, schema="dst_lo long, g array<double>"
-            ).toPandas()
-            bc.unpersist()
             g_vec = np.zeros(n)
-            for lo, g in zip(out["dst_lo"], out["g"]):
+            for lo, srcs, dsts, ws in blks:
+                if len(srcs) == 0:
+                    continue
+                w = x[srcs]
+                if ws is not None:
+                    w = w * ws
+                g = np.bincount(dsts, weights=w)
                 g_vec[lo : lo + len(g)] += g
             new_x = alpha * g_vec + beta
             err = float(np.abs(new_x - x).sum())
@@ -338,9 +269,11 @@ def katz_kernel(
             pd.DataFrame({"id": np.asarray(eb.node_ids), "katz": x * norm}),
             schema="id long, katz double",
         )
-    finally:
-        if owned:
-            eb.unpersist()
+
+    return with_blocks(
+        graph_or_blocks, _weighted_build(graph_or_blocks), run, spill_dir,
+        in_memory=fits_driver_graph("katz", graph_or_blocks, spill_dir),
+    )
 
 
 def _gather_once(source_df, file_backed, weighted, vec, n):
@@ -385,14 +318,9 @@ def eigenvector_kernel(
     L2-normalize every iteration; same lagged convergence schedule as the
     join path (error checked from iteration 1 over ``maxiter+1`` total),
     so converged runs take identical superstep counts."""
-    if isinstance(graph_or_blocks, Graph):
-        eb, owned, spark = _resolve_blocks(
-            graph_or_blocks, with_weights=graph_or_blocks.is_weighted
-        )
-    else:
-        eb, owned, spark = _resolve_blocks(graph_or_blocks)
-    try:
-        n = eb.n
+
+    def run(eb: EdgeBlocks) -> DataFrame:
+        spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, eigenvector double")
         file_backed = eb.manifest is not None
@@ -422,9 +350,11 @@ def eigenvector_kernel(
             pd.DataFrame({"id": np.asarray(eb.node_ids), "eigenvector": xn}),
             schema="id long, eigenvector double",
         )
-    finally:
-        if owned:
-            eb.unpersist()
+
+    return with_blocks(
+        graph_or_blocks, _weighted_build(graph_or_blocks), run,
+        in_memory=True,
+    )
 
 
 def hits_kernel(
@@ -541,50 +471,6 @@ def _segmented_min(dsts: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return m
 
 
-def _vector_feed(spark, eb):
-    """Per-round distribution of the driver's dense vector to workers.
-
-    File-backed blocks (shared filesystem): write one ``.npy`` per round
-    and let every task mmap it — the OS page cache keeps ONE host-wide
-    copy, where ``sc.broadcast`` deserializes a private copy into every
-    python worker each round. In-memory blocks: broadcast (no shared-fs
-    assumption). Returns (publish(arr) -> opener, release(opener))."""
-    import os
-    import uuid
-
-    sc = spark.sparkContext
-    if eb.spill_dir:
-        feed_dir = os.path.join(eb.spill_dir, f"feed_{uuid.uuid4().hex[:8]}")
-        os.makedirs(feed_dir, exist_ok=True)
-
-        def publish(arr):
-            path = os.path.join(feed_dir, f"v_{uuid.uuid4().hex[:8]}.npy")
-            np.save(path, arr)
-            return ("file", path)
-
-        def release(handle):
-            try:
-                os.unlink(handle[1])
-            except FileNotFoundError:
-                pass
-
-        return publish, release
-
-    def publish(arr):
-        return ("bc", sc.broadcast(arr))
-
-    def release(handle):
-        handle[1].unpersist()
-
-    return publish, release
-
-
-def _feed_value(handle):
-    if handle[0] == "file":
-        return np.load(handle[1], mmap_mode="r")
-    return np.asarray(handle[1].value)
-
-
 def cc_blocks(graph: Graph, spill_dir: str | None = None,
               num_blocks: int | None = None) -> EdgeBlocks:
     """Prebuild :func:`cc_kernel` blocks (RAW both-directions union,
@@ -605,11 +491,10 @@ def label_blocks(graph: Graph, spill_dir: str | None = None,
     self-loops), degree-free. CC is invariant to the dedup (min over a
     multiset ignores multiplicity); LPA REQUIRES it (vote counts are
     multiplicities) plus exactly one self-vote per node, which the LPA
-    kernels synthesize per block at read time (``self_votes_baked=False``)
-    instead of materializing V extra edge rows in a second full layout —
-    at 100M edges the separate vote layout cost ~190 s on top of the CC
-    layout for nearly the same symmetrized edge set (VERDICT r4 #5).
-    Build once, feed both kernels."""
+    loops apply algebraically (``_mode_votes``) instead of materializing V
+    extra edge rows in a second full layout — at 100M edges a separate
+    vote layout cost ~190 s on top of the CC layout for nearly the same
+    symmetrized edge set (VERDICT r4 #5). Build once, feed both kernels."""
     sym = Graph(
         edges=graph.canonical_undirected_edges().select(SRC, DST),
         is_directed=False,
@@ -620,50 +505,23 @@ def label_blocks(graph: Graph, spill_dir: str | None = None,
     )
 
 
-def lpa_vote_blocks(graph: Graph, spill_dir: str | None = None,
-                    num_blocks: int | None = None) -> EdgeBlocks:
-    """Legacy LPA layout: canonical undirected edges both directions PLUS
-    one baked self-loop row per node (the self-vote), degree-free. The LPA
-    kernels detect ``self_votes_baked=True`` and skip their synthetic
-    self-vote suffix. Prefer :func:`label_blocks` (shared with CC, no
-    second layout pass) for new callers."""
-    sym = Graph(
-        edges=graph.canonical_undirected_edges().select(SRC, DST),
-        is_directed=False,
-    ).symmetrized()
-    votes_edges = sym.unionAll(
-        graph.node_ids().select(F.col(ID).alias(SRC), F.col(ID).alias(DST))
-    )
-    return build_edge_blocks(
-        graph, num_blocks=num_blocks, spill_dir=spill_dir,
-        edges=votes_edges, with_degrees=False, self_votes_baked=True,
-    )
-
-
 def _distributed_cc_loop(
     eb: EdgeBlocks, max_rounds: int, fixed_rounds: int | None,
     slice_store=None, resume: bool = False,
-) -> DataFrame | None:
+) -> DataFrame:
     """Hash-min label exchange where the label vector NEVER crosses the
     driver: int64 label vectors live in the slice store (same protocol as
     the pagerank/katz distributed loops), each gather task writes its
     dst-slice minimum and returns a changed-count partial, and converged
     rounds append ONE pointer-doubling job (``J[lo:hi] = L[L[lo:hi]]`` over
     the mmap'd global vector) — O(log V) rounds, driver state
-    O(num_blocks). This removes :func:`cc_kernel`'s dense driver label
-    array, so the FAST cc path is capped only by int32 positions, like the
-    file-backed pagerank route. Returns None when block coverage is
-    partial (caller falls back to the feed loop)."""
+    O(num_blocks). No dense driver label array, so the cc kernel is
+    capped only by int32 positions, like the file-backed pagerank route."""
     import os
     import uuid
 
     n = eb.n
-    rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
-    nb = len(rows)
-    los = sorted(lo for _, lo in rows)
-    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
-        return None
-    hi_of = {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
+    hi_of = slice_ranges(eb)
     store = slice_store
     if store is None:
         store = LocalSliceStore(
@@ -848,139 +706,50 @@ def cc_kernel(
     """Connected components via CSR blocks. Returns ``(id, label)``,
     label = min node id in the component (exactly the join path's labels).
 
-    A Graph argument builds blocks from the RAW both-directions union
+    A Graph argument that fits the driver caps runs :func:`_driver_cc_loop`
+    over one Arrow collect of the edge pairs (no block layout). Otherwise
+    it builds :func:`cc_blocks` from the RAW both-directions union
     (matching ``operators/components.py``'s symmetrization — duplicate
-    edges are harmless under min); ``spill_dir`` builds them FILE-BACKED,
-    which is the scale layout: per-round gathers mmap the block files
-    directly, instead of re-converting Spark-cached array rows to Arrow
-    every round (measured 2-3x the whole runtime at 100M edges), and the
-    label vector reaches workers through one page-cache-shared file per
-    round rather than a per-worker broadcast copy. Converged runs
-    pointer-jump the dense positional label array to full compression
-    after every round; the ``fixed_rounds`` oracle path is pure
-    hash-min.
+    edges are harmless under min) FILE-BACKED under ``spill_dir`` (or a
+    temp dir removed after the call): per-round gathers mmap the block
+    files and the labels live in the slice store
+    (:func:`_distributed_cc_loop`, driver state O(num_blocks)). Prebuilt
+    blocks run the driver loop when they fit, the slice-store loop
+    otherwise. Converged runs pointer-jump the positional labels to full
+    compression after every round; the ``fixed_rounds`` oracle path is
+    pure hash-min."""
 
-    File-backed blocks run :func:`_distributed_cc_loop` — labels live in
-    the slice store and the driver holds O(num_blocks) state only, so the
-    kernel route has no vertex cap below int32 positions (measured at
-    parity with the driver-assembled feed loop at 100M edges / 2M nodes:
-    15.6 s vs 15.2 s); the feed loop below remains the in-memory-blocks
-    path."""
-    if resume and slice_store is None:
-        raise ValueError(
-            "resume=True requires an injected slice_store (the default "
-            "store lives under a fresh uuid dir per call and can never "
-            "hold a prior run's vectors)"
-        )
-    if isinstance(graph_or_blocks, Graph):
-        spark = graph_or_blocks.edges.sparkSession
-        if slice_store is None and not resume and spill_dir is None:
-            # round-6 small-graph route: skip the block-layout Spark jobs
-            # entirely — one Arrow collect of the edge pairs, then the
-            # whole loop on the driver (identical labels; see
-            # _driver_graph_arrays / _driver_cc_loop)
-            arrs = _driver_graph_arrays(graph_or_blocks, "raw_sym")
-            if arrs is not None:
-                ids, srcs, dsts = arrs
-                if len(ids) == 0:
-                    return spark.createDataFrame([], "id long, label long")
-                return _driver_cc_loop(
-                    spark, len(ids), [(0, srcs, dsts, None)], ids,
-                    max_rounds, fixed_rounds,
-                )
-        eb = cc_blocks(graph_or_blocks, spill_dir=spill_dir)
-        owned = True
-    else:
-        eb, owned, spark = _resolve_blocks(graph_or_blocks)
-    try:
-        n = eb.n
+    def run(eb: EdgeBlocks) -> DataFrame:
+        spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, label long")
-        file_backed = eb.manifest is not None
-        source_df = eb.manifest if file_backed else eb.blocks
-        # round-6 size route: small layouts run the whole hash-min loop on
-        # the driver over the block arrays (no per-round Spark job); the
-        # per-block segmented-min + slice-minimum is the identical integer
-        # arithmetic, so labels are exactly the distributed loops'. Never
-        # when a durable slice-store contract is in play.
-        if slice_store is None and not resume:
-            from metagraph_spark.operators.kernel import (
-                KERNEL_DRIVER_LOOP_MAX_VERTICES,
-                driver_block_arrays,
-            )
-
-            blks = (
-                driver_block_arrays(eb)
-                if n <= KERNEL_DRIVER_LOOP_MAX_VERTICES
-                else None
-            )
-            if blks is not None:
-                return _driver_cc_loop(
-                    spark, n, blks, eb.node_ids, max_rounds, fixed_rounds
-                )
-        if file_backed and (eb.spill_dir or slice_store is not None):
-            r_df = _distributed_cc_loop(
+        blks = _driver_blocks(eb, slice_store, resume)
+        if blks is None:
+            return _distributed_cc_loop(
                 eb, max_rounds, fixed_rounds, slice_store=slice_store,
                 resume=resume,
             )
-            if r_df is not None:
-                return r_df
-        publish, release = _vector_feed(spark, eb)
-        lab = np.arange(n, dtype=np.int64)
-        total = fixed_rounds if fixed_rounds is not None else max_rounds
-        rnd = 0
-        while rnd < total:
-            handle = publish(lab)
-
-            def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cur = _feed_value(handle)
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        srcs, dsts, _ = _block_arrays(row, file_backed, False)
-                        m = _segmented_min(np.asarray(dsts), cur[srcs])
-                        yield pd.DataFrame(
-                            {"dst_lo": [np.int64(row["dst_lo"])], "m": [m]}
-                        )
-
-            out = source_df.mapInPandas(
-                gather, schema="dst_lo long, m array<long>"
-            ).toPandas()
-            release(handle)
-            m_vec = np.full(n, _IMAX, dtype=np.int64)
-            for lo, m in zip(out["dst_lo"], out["m"]):
-                seg = m_vec[lo : lo + len(m)]
-                np.minimum(seg, np.asarray(m, dtype=np.int64), out=seg)
-            new_lab = np.minimum(lab, np.where(m_vec == _IMAX, lab, m_vec))
-            changed = int((new_lab != lab).sum())
-            rnd += 1
-            if fixed_rounds is None:
-                # pointer jumping to full compression: lab[v] <- lab[lab[v]]
-                # until stable. Positional labels make this a pure vector
-                # gather; preserves the min-position fixpoint exactly (same
-                # argument as components.py:96-118), and a hash-min round
-                # with zero changes is still a true fixpoint.
-                while True:
-                    nl = new_lab[new_lab]
-                    if np.array_equal(nl, new_lab):
-                        break
-                    new_lab = nl
-            lab = new_lab
-            if fixed_rounds is None and changed == 0:
-                break
-        else:
-            if fixed_rounds is None:
-                raise ConvergenceError(
-                    f"connected_components kernel did not stabilize in "
-                    f"{max_rounds} rounds"
-                )
-        ids = np.asarray(eb.node_ids)
-        return spark.createDataFrame(
-            pd.DataFrame({"id": ids, "label": ids[lab]}),
-            schema="id long, label long",
+        return _driver_cc_loop(
+            spark, n, blks, eb.node_ids, max_rounds, fixed_rounds
         )
-    finally:
-        if owned:
-            eb.unpersist()
+
+    g = graph_or_blocks
+    if isinstance(g, Graph) and (
+        slice_store is None and not resume and spill_dir is None
+    ):
+        arrs = _driver_graph_arrays(g, "raw_sym")
+        if arrs is not None:
+            ids, srcs, dsts = arrs
+            if len(ids) == 0:
+                return g.edges.sparkSession.createDataFrame(
+                    [], "id long, label long"
+                )
+            return _driver_cc_loop(
+                g.edges.sparkSession, len(ids), [(0, srcs, dsts, None)], ids,
+                max_rounds, fixed_rounds,
+            )
+    return with_blocks(g, lambda g_, d: cc_blocks(g_, spill_dir=d), run,
+                       spill_dir)
 
 
 def _segmented_mode(dsts: np.ndarray, labs: np.ndarray):
@@ -1039,14 +808,8 @@ def _driver_graph_arrays(graph: Graph, edge_mode: str):
     edge endpoints ∪ explicit graph.nodes, exactly ``node_ids()``. Output
     is dst-position sorted like packed blocks, so the driver loops and
     their segmented kernels apply unchanged (identical label results)."""
-    from metagraph_spark.operators.kernel import (
-        KERNEL_DRIVER_LOOP_MAX_EDGES,
-        KERNEL_DRIVER_LOOP_MAX_VERTICES,
-    )
-
-    if KERNEL_DRIVER_LOOP_MAX_EDGES < 0:
-        return None
-    if graph.num_edges() > KERNEL_DRIVER_LOOP_MAX_EDGES:
+    m = graph.num_edges()
+    if not routing.fits_driver(m):
         return None
     pdf = graph.edges.select(SRC, DST).toPandas()
     s = pdf[SRC].to_numpy(dtype=np.int64)
@@ -1058,7 +821,7 @@ def _driver_graph_arrays(graph: Graph, edge_mode: str):
         )
     ids = np.unique(np.concatenate(endpoints))
     n = len(ids)
-    if n > KERNEL_DRIVER_LOOP_MAX_VERTICES:
+    if not routing.fits_driver(m, n):
         return None
     sp = np.searchsorted(ids, s)
     dp = np.searchsorted(ids, d)
@@ -1080,10 +843,9 @@ def _driver_graph_arrays(graph: Graph, edge_mode: str):
 
 def _driver_cc_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
     """Hash-min loop over driver-resident block arrays (see
-    ``kernel.KERNEL_DRIVER_LOOP_MAX_EDGES``): per-block segmented-min +
+    ``routing.fits_driver``): per-block segmented-min +
     slice-minimum, pointer jumping on the converged path — the identical
-    integer arithmetic as the feed/distributed loops, no per-round Spark
-    job."""
+    integer arithmetic as the slice-store loop, no per-round Spark job."""
     lab = np.arange(n, dtype=np.int64)
     total = fixed_rounds if fixed_rounds is not None else max_rounds
     rnd = 0
@@ -1120,9 +882,9 @@ def _driver_cc_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
     )
 
 
-def _driver_lpa_loop(spark, n, blks, ids, baked, max_rounds, fixed_rounds):
+def _driver_lpa_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
     """Synchronous-LPA loop over driver-resident block arrays — identical
-    votes/winners as the feed/distributed loops, no per-round Spark job."""
+    votes/winners as the slice-store loop, no per-round Spark job."""
     lab = np.arange(n, dtype=np.int64)
     total = fixed_rounds if fixed_rounds is not None else max_rounds
     for _ in range(total):
@@ -1130,7 +892,7 @@ def _driver_lpa_loop(spark, n, blks, ids, baked, max_rounds, fixed_rounds):
         for lo, srcs, dsts, _ws in blks:
             if len(srcs) == 0:
                 continue
-            uniq, win = _mode_votes(dsts, lab[srcs], lab[lo:], not baked)
+            uniq, win = _mode_votes(dsts, lab[srcs], lab[lo:])
             new_lab[lo + uniq] = win
         changed = int((new_lab != lab).sum())
         lab = new_lab
@@ -1148,13 +910,13 @@ def _driver_lpa_loop(spark, n, blks, ids, baked, max_rounds, fixed_rounds):
 _BIG_SEG = 4096
 
 
-def _mode_votes(dsts, labs, prev_tail, include_self_votes: bool):
+def _mode_votes(dsts, labs, prev_tail):
     """Per-local-dst modal label (ties to the smallest label) over
     dst-sorted neighbor votes, with the one-self-vote rule applied
-    ALGEBRAICALLY when ``include_self_votes`` (+1 to the dst's own
-    previous label — exactly the synthetic self-vote row's effect; a lone
-    self-vote on an unvoted position is a no-op either way, so only voted
-    dsts need it). Returns ``(uniq_local_dsts, winners)``.
+    ALGEBRAICALLY (+1 to the dst's own previous label — exactly a
+    self-loop vote row's effect; a lone self-vote on an unvoted position
+    is a no-op either way, so only voted dsts need it). Returns
+    ``(uniq_local_dsts, winners)``.
 
     Skew guard (guide §2.5, round 6): hub-degree segments (>= _BIG_SEG
     rows) are counted with a dense ``np.bincount`` + ``argmax`` — O(rows)
@@ -1181,13 +943,12 @@ def _mode_votes(dsts, labs, prev_tail, include_self_votes: bool):
         seg = labs[s : s + int(lens[i])]
         cnt = np.bincount(seg)
         d_loc = int(seg_d[i])
-        if include_self_votes:
-            own = int(prev_tail[d_loc])
-            if own >= len(cnt):
-                cnt = np.concatenate(
-                    [cnt, np.zeros(own - len(cnt) + 1, dtype=cnt.dtype)]
-                )
-            cnt[own] += 1
+        own = int(prev_tail[d_loc])
+        if own >= len(cnt):
+            cnt = np.concatenate(
+                [cnt, np.zeros(own - len(cnt) + 1, dtype=cnt.dtype)]
+            )
+        cnt[own] += 1
         big_d.append(d_loc)
         big_w.append(int(np.argmax(cnt)))
     if big.all():
@@ -1198,12 +959,9 @@ def _mode_votes(dsts, labs, prev_tail, include_self_votes: bool):
     row_small = np.repeat(~big, lens)
     d_small = dsts[row_small]
     l_small = labs[row_small]
-    if include_self_votes:
-        sd = seg_d[~big]
-        d_small = np.concatenate([d_small, sd])
-        l_small = np.concatenate(
-            [l_small, np.asarray(prev_tail)[sd]]
-        )
+    sd = seg_d[~big]
+    d_small = np.concatenate([d_small, sd])
+    l_small = np.concatenate([l_small, np.asarray(prev_tail)[sd]])
     uniq, win = _segmented_mode(d_small, l_small)
     if big_d:
         uniq = np.concatenate([uniq, np.asarray(big_d, dtype=np.int64)])
@@ -1214,23 +972,17 @@ def _mode_votes(dsts, labs, prev_tail, include_self_votes: bool):
 def _distributed_lpa_loop(
     eb: EdgeBlocks, max_rounds: int, fixed_rounds: int | None,
     slice_store=None, resume: bool = False,
-) -> DataFrame | None:
+) -> DataFrame:
     """LPA rounds with the label vector in the slice store (never on the
     driver): each task computes its dst-range's modal votes and writes the
-    slice directly — positions without a vote keep their previous label
-    (isolated nodes; with the self-loop vote edges every node in a block's
-    range normally votes). One job per round, driver state O(num_blocks).
-    Returns None when block coverage is partial."""
+    slice directly — positions without a neighbor vote (isolated nodes)
+    keep their previous label. One job per round, driver state
+    O(num_blocks)."""
     import os
     import uuid
 
     n = eb.n
-    rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
-    nb = len(rows)
-    los = sorted(lo for _, lo in rows)
-    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
-        return None
-    hi_of = {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
+    hi_of = slice_ranges(eb)
     store = slice_store
     if store is None:
         store = LocalSliceStore(
@@ -1270,8 +1022,6 @@ def _distributed_lpa_loop(
         prev_idx, out_idx = cur, cur + 1
         store.create_vector(out_idx, n, dtype=np.int64)
 
-        baked = eb.self_votes_baked
-
         def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             prev = store.open_read(prev_idx)
             out_vec = store.open_write(out_idx)
@@ -1283,14 +1033,8 @@ def _distributed_lpa_loop(
                     prev_slice = np.asarray(prev[lo:hi])
                     new_slice = prev_slice.copy()
                     if len(srcs):
-                        # self-votes applied algebraically inside
-                        # _mode_votes (one per voted dst — identical
-                        # winners to the synthetic suffix rows; unvoted
-                        # positions keep prev either way)
                         labs = np.asarray(prev)[srcs]
-                        uniq, win = _mode_votes(
-                            dsts, labs, prev_slice, not baked
-                        )
+                        uniq, win = _mode_votes(dsts, labs, prev_slice)
                         new_slice[uniq] = win
                     changed = int(
                         (new_slice != prev_slice).sum()
@@ -1354,131 +1098,46 @@ def lpa_kernel(
     canonical undirected edges both directions + one self-vote; winner =
     max count then min label; stop on no change or ``max_rounds``; the
     capped loop returns the last state rather than raising, matching the
-    reference's no-convergence-contract for community detection). A Graph
-    argument builds the SHARED :func:`label_blocks` layout (also valid
-    for :func:`cc_kernel`); the self-votes are synthesized per block at
-    read time, so no second layout pass. Prebuilt blocks may be either
-    :func:`label_blocks` or legacy :func:`lpa_vote_blocks`
-    (``self_votes_baked`` disambiguates). ``spill_dir`` builds the blocks
-    file-backed — the scale layout. File-
-    backed blocks run :func:`_distributed_lpa_loop` (labels in the slice
-    store, driver O(num_blocks) — no vertex cap below int32 positions, and
-    measured 2.4x FASTER than the driver-assembled feed loop at 100M
-    edges: 41.7 s vs 102.2 s for 3 rounds — tasks write slices and return
-    one scalar instead of shipping per-block winner arrays through Arrow
-    every round); the feed loop remains the in-memory-blocks path."""
-    if resume and slice_store is None:
-        raise ValueError(
-            "resume=True requires an injected slice_store (the default "
-            "store lives under a fresh uuid dir per call and can never "
-            "hold a prior run's vectors)"
-        )
-    if isinstance(graph_or_blocks, Graph):
-        spark = graph_or_blocks.edges.sparkSession
-        if slice_store is None and not resume and spill_dir is None:
-            # round-6 small-graph route: skip the block-layout Spark jobs
-            # entirely — one Arrow collect of the edge pairs, then the
-            # whole vote loop on the driver (identical labels; see
-            # _driver_graph_arrays / _driver_lpa_loop)
-            arrs = _driver_graph_arrays(graph_or_blocks, "canonical_sym")
-            if arrs is not None:
-                ids, srcs, dsts = arrs
-                if len(ids) == 0:
-                    return spark.createDataFrame([], "id long, label long")
-                return _driver_lpa_loop(
-                    spark, len(ids), [(0, srcs, dsts, None)], ids, False,
-                    max_rounds, fixed_rounds,
-                )
-        eb = label_blocks(graph_or_blocks, spill_dir=spill_dir)
-        owned = True
-    else:
-        eb, owned, spark = _resolve_blocks(graph_or_blocks)
-    try:
-        n = eb.n
+    reference's no-convergence-contract for community detection).
+
+    A Graph argument that fits the driver caps runs :func:`_driver_lpa_loop`
+    over one Arrow collect of the edge pairs. Otherwise it builds the
+    SHARED :func:`label_blocks` layout (also valid for :func:`cc_kernel`)
+    file-backed under ``spill_dir`` (or a temp dir removed after the
+    call), and :func:`_distributed_lpa_loop` keeps the labels in the slice
+    store (driver O(num_blocks) — no vertex cap below int32 positions;
+    measured 2.4x faster than a driver-assembled broadcast loop at 100M
+    edges: 41.7 s vs 102.2 s for 3 rounds). Prebuilt :func:`label_blocks`
+    run the driver loop when they fit, the slice-store loop otherwise."""
+
+    def run(eb: EdgeBlocks) -> DataFrame:
+        spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, label long")
-        file_backed = eb.manifest is not None
-        source_df = eb.manifest if file_backed else eb.blocks
-        # round-6 size route: small layouts run the whole vote loop on the
-        # driver over the block arrays (no per-round Spark job); per-block
-        # segmented mode + synthetic self-vote suffix is the identical
-        # integer arithmetic, so labels are exactly the distributed
-        # loops'. Never when a durable slice-store contract is in play.
-        if slice_store is None and not resume:
-            from metagraph_spark.operators.kernel import (
-                KERNEL_DRIVER_LOOP_MAX_VERTICES,
-                driver_block_arrays,
-            )
-
-            blks = (
-                driver_block_arrays(eb)
-                if n <= KERNEL_DRIVER_LOOP_MAX_VERTICES
-                else None
-            )
-            if blks is not None:
-                return _driver_lpa_loop(
-                    spark, n, blks, eb.node_ids, eb.self_votes_baked,
-                    max_rounds, fixed_rounds,
-                )
-        if file_backed and (eb.spill_dir or slice_store is not None):
-            r_df = _distributed_lpa_loop(
+        blks = _driver_blocks(eb, slice_store, resume)
+        if blks is None:
+            return _distributed_lpa_loop(
                 eb, max_rounds, fixed_rounds, slice_store=slice_store,
                 resume=resume,
             )
-            if r_df is not None:
-                return r_df
-        publish, release = _vector_feed(spark, eb)
-        # labels are POSITIONS: positions are order-isomorphic to sorted
-        # ids, so min-label tie-breaks agree with the join path's id-space
-        # tie-breaks at every round, and vote counts are label-agnostic
-        lab = np.arange(n, dtype=np.int64)
-        total = fixed_rounds if fixed_rounds is not None else max_rounds
-        for _ in range(total):
-            handle = publish(lab)
-
-            baked = eb.self_votes_baked
-
-            def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cur = _feed_value(handle)
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        srcs, dsts, _ = _block_arrays(row, file_backed, False)
-                        if len(srcs) == 0:
-                            continue
-                        lo = int(row["dst_lo"])
-                        labs = np.asarray(cur)[srcs]
-                        # self-votes applied algebraically inside
-                        # _mode_votes (identical winners to the old
-                        # synthetic suffix rows)
-                        uniq, win = _mode_votes(
-                            dsts, labs, np.asarray(cur)[lo:], not baked
-                        )
-                        yield pd.DataFrame(
-                            {
-                                "dst_lo": [np.int64(row["dst_lo"])],
-                                "uniq": [uniq],
-                                "win": [win],
-                            }
-                        )
-
-            out = source_df.mapInPandas(
-                gather, schema="dst_lo long, uniq array<long>, win array<long>"
-            ).toPandas()
-            release(handle)
-            new_lab = lab.copy()
-            for lo, uniq, win in zip(out["dst_lo"], out["uniq"], out["win"]):
-                new_lab[lo + np.asarray(uniq, dtype=np.int64)] = np.asarray(
-                    win, dtype=np.int64
-                )
-            changed = int((new_lab != lab).sum())
-            lab = new_lab
-            if fixed_rounds is None and changed == 0:
-                break
-        ids = np.asarray(eb.node_ids)
-        return spark.createDataFrame(
-            pd.DataFrame({"id": ids, "label": ids[lab]}),
-            schema="id long, label long",
+        return _driver_lpa_loop(
+            spark, n, blks, eb.node_ids, max_rounds, fixed_rounds
         )
-    finally:
-        if owned:
-            eb.unpersist()
+
+    g = graph_or_blocks
+    if isinstance(g, Graph) and (
+        slice_store is None and not resume and spill_dir is None
+    ):
+        arrs = _driver_graph_arrays(g, "canonical_sym")
+        if arrs is not None:
+            ids, srcs, dsts = arrs
+            if len(ids) == 0:
+                return g.edges.sparkSession.createDataFrame(
+                    [], "id long, label long"
+                )
+            return _driver_lpa_loop(
+                g.edges.sparkSession, len(ids), [(0, srcs, dsts, None)], ids,
+                max_rounds, fixed_rounds,
+            )
+    return with_blocks(g, lambda g_, d: label_blocks(g_, spill_dir=d), run,
+                       spill_dir)

@@ -32,14 +32,8 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from metagraph_spark.graph import DST, ID, SRC, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.state import CheckpointManager, truncate_lineage
-
-# Above this vertex count the per-round label broadcast (16 B/row plus
-# framing — ~0.5 GB at the cap, held once per executor) stops being
-# reasonable and the vote join falls back to the shuffle plan. Same
-# size-routing philosophy as the broadcast-join threshold (guide §3.1);
-# scale-adaptive, not core-count-dependent.
-LPA_BROADCAST_MAX_VERTICES = 16_000_000
 
 
 def label_propagation_community(
@@ -48,9 +42,7 @@ def label_propagation_community(
     fixed_rounds: int | None = None,
     checkpointer: CheckpointManager | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
-    broadcast_max_vertices: int | None = None,
 ) -> DataFrame:
     """Return NodeMap ``(id: long, label: long)``.
 
@@ -59,52 +51,28 @@ def label_propagation_community(
     — equivalently ``min(struct(neg_count, label))`` — so each round is one
     aggregation, no window sort.
 
-    ``strategy="kernel"``/``"auto"`` (default) routes to the CSR-block vote kernel
-    (``operators/kernel_algos.py:lpa_kernel`` — lexsorted run-length vote
-    counting, segmented argmax; EXACTLY the same labels, capped at
-    ``pagerank.KERNEL_MAX_VERTICES`` for ``"auto"``). The kernel keeps no
-    durable per-round state (explicit ``"kernel"`` + checkpointer raises).
+    ``strategy="kernel"``/``"auto"`` (default) routes to the CSR-block vote
+    kernel (``operators/kernel_algos.py:lpa_kernel`` — run-length vote
+    counting, segmented argmax; EXACTLY the same labels) where
+    :func:`routing.plan` picks ``kernel-driver`` or ``kernel-distributed``;
+    ``kernel_spill_dir`` lays its blocks out as files there. The kernel
+    keeps no durable per-round state (explicit ``"kernel"`` + checkpointer
+    raises).
     """
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown lpa strategy {strategy!r}")
-    if strategy == "kernel" and checkpointer is not None:
-        raise ValueError(
-            "strategy='kernel' keeps no durable per-round state and cannot "
-            "honor a checkpointer; use strategy='join' or 'auto'"
+    route, _ = routing.plan(
+        "lpa", graph, strategy, checkpointer, kernel_spill_dir
+    )
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel_algos import lpa_kernel
+
+        return lpa_kernel(
+            graph,
+            max_rounds=max_rounds,
+            fixed_rounds=fixed_rounds,
+            spill_dir=kernel_spill_dir,
         )
-    if strategy != "join" and checkpointer is None:
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
-
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
-        )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-            )
-        ):
-            from metagraph_spark.operators.kernel_algos import lpa_kernel
-
-            return lpa_kernel(
-                graph,
-                max_rounds=max_rounds,
-                fixed_rounds=fixed_rounds,
-                spill_dir=kernel_spill_dir,
-            )
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cap_b = (
-        broadcast_max_vertices
-        if broadcast_max_vertices is not None
-        else LPA_BROADCAST_MAX_VERTICES
-    )
 
     # Narrower types (guide §2.3): when every node id fits int32 (checked
     # exactly — one scan-aggregate over the edge cache and the explicit
@@ -160,7 +128,8 @@ def label_propagation_community(
     # once and BROADCAST the |V|-row label state into the vote joins, and
     # BOTH aggregations run partition-local: a round has ZERO data-sized
     # exchanges (plan-asserted in tests). Broadcasting V rows stops being
-    # reasonable past ``LPA_BROADCAST_MAX_VERTICES``; the fallback keys
+    # reasonable past ``routing.fits_broadcast`` (~0.5 GB of labels per
+    # executor at its cap); the fallback keys
     # the edge cache by SRC (the label join side) and pays ONE |E|-row
     # exchange re-keying the joined votes to DST — still one fewer
     # full-edge shuffle than aggregating by (dst,label) then by dst.
@@ -183,7 +152,7 @@ def label_propagation_community(
         extra = extra.select(F.col(ID).cast("int").alias(ID))
     extra = truncate_lineage(extra.distinct())
     nodes = truncate_lineage(endpoints.unionAll(extra).distinct())
-    use_bcast = nodes.count() <= cap_b
+    use_bcast = routing.fits_broadcast(nodes.count())
     if not use_bcast:
         old = sym
         sym = _build_sym(SRC)

@@ -15,7 +15,13 @@ Semantics pinned by the reference implementations:
 - convergence: L1 error ``Σ|r'-r| < N·tolerance``
   (``plugins/graphblas/algorithms.py:66-67``; networkx uses the same rule).
 
-Physical design (what survives 1000 executors / 10^12 edges):
+Routes (picked per call by ``operators/routing.py``): ``kernel-driver``
+and ``kernel-distributed`` run ``operators/kernel.py:pagerank_kernel``
+(numpy on the driver below the driver caps; the file-backed slice-store
+loop above them); ``join`` is the plan below — warm starts, checkpointed
+runs and graphs past the kernel caps.
+
+Join-plan physical design (what survives 1000 executors / 10^12 edges):
 
 - edges are hash-partitioned by ``src`` ONCE and persisted; the vertex state
   ``(id, outdeg, dangling, rank, prev)`` is hash-partitioned by ``id``. The
@@ -43,6 +49,7 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.state import (
     CheckpointManager,
     LineageManager,
@@ -51,36 +58,6 @@ from metagraph_spark.state import (
 )
 
 _STATE_COLS = ("id", "outdeg", "dangling", "rank", "prev")
-
-
-# above this vertex count the IN-MEMORY kernel's dense driver-side rank
-# vector (8 B×V plus working copies) stops being reasonable; the join path
-# has no such cap, and neither does the FILE-BACKED kernel
-# (``kernel_spill_dir``), whose layout/loop/result all stay distributed
-# (driver O(num_blocks); measured at 10^8 vertices / 2·10^8 edges:
-# driver max-RSS 0.14 GB, rank mass 1.0 — see BENCH/BASELINE.md). The
-# file-backed route's hard cap is int32 positions (V < 2^31).
-KERNEL_MAX_VERTICES = 50_000_000
-
-# "auto" additionally caps the EDGE count: the kernel pays a one-time
-# layout (full |E| shuffle + per-block pack — measured 131.9 s at 100M
-# edges, BENCH_r04 extras.big_cc_kernel_layout_sec) that a single
-# converged run cannot amortize at large |E|, while the join path starts
-# iterating immediately on the src-partitioned edge cache. Callers who DO
-# amortize the layout across runs prebuild blocks (build_edge_blocks /
-# cc_blocks + the kernel entrypoints) or pass kernel_spill_dir, both of
-# which bypass this cap.
-KERNEL_AUTO_MAX_EDGES = 20_000_000
-
-# Below these caps the join-strategy superstep re-keys the edge cache by
-# DST once and BROADCASTS the per-superstep contribution vector into the
-# gather join (guide §2.4/§3.1): the groupBy(dst) and the merge-back join
-# against the hash-stamped vertex state then run partition-local, making
-# a superstep ONE shuffle-free stage instead of two data exchanges + an
-# AQE stage chain. Same size-routing as the LPA/katz broadcast plans;
-# above the caps the shuffled superstep keeps AQE's skew/coalesce
-# freedoms (measured faster at 100M edges).
-PAGERANK_BROADCAST_MAX_VERTICES = 16_000_000
 
 
 def pagerank(
@@ -92,9 +69,7 @@ def pagerank(
     checkpointer: CheckpointManager | None = None,
     metrics_sink: list | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int = KERNEL_MAX_VERTICES,
     kernel_spill_dir: str | None = None,
-    copartition_state: bool = False,
     warm_start: DataFrame | None = None,
 ) -> DataFrame:
     """Return NodeMap DataFrame ``(id: long, rank: double)``.
@@ -118,76 +93,33 @@ def pagerank(
     re-run resumes from the newest complete iteration. ``metrics_sink``
     (optional list) receives one dict per superstep.
 
-    ``copartition_state=True`` materializes the vertex state with
-    hash-partitioning metadata preserved (``truncate_lineage_partitioned``)
-    so a superstep plan has ZERO state-side Exchanges (plan-asserted in
-    tests). It is OFF by default on measurement: eliminating the |V|-row
-    exchange also removes the shuffle boundary AQE uses for skew-splitting,
-    partition coalescing, and local reads, and that freedom measured
-    FASTER on one host at 100M-edge scale (Zipf interleaved best 24.3s vs
-    37.6s; uniform V=E/2 best 24.2s vs 34.3s). Turn it on where the
-    exchange itself dominates (cross-rack shuffle fabric, very wide vertex
-    state).
+    ``strategy``: ``"auto"`` (default — the route
+    :func:`routing.plan` picks: the driver kernel below the driver caps,
+    the file-backed slice-store kernel above them, the join plan past the
+    auto edge cap or with a checkpointer / warm start), ``"join"``
+    (iterative DataFrame joins — scales to any V, the only checkpointable
+    strategy), or ``"kernel"`` (the CSR kernel at any size: file-backed
+    above the driver caps, under ``kernel_spill_dir`` or a temp dir on a
+    filesystem shared with the executors). ``kernel_spill_dir`` lays the
+    kernel's blocks out as files there. Both strategies implement the
+    identical update rule and are asserted equal by shared golden
+    tests."""
+    route, _ = routing.plan(
+        "pagerank", graph, strategy, checkpointer, kernel_spill_dir,
+        warm_start,
+    )
+    if route.startswith("kernel"):
+        from metagraph_spark.operators.kernel import pagerank_kernel
 
-    ``strategy``: ``"auto"`` (default — kernel when the vertex count fits
-    or a spill dir is given and no checkpointer is requested, join
-    otherwise; the kernels measure 2.6-7x faster and parity is asserted
-    across fixed/converged/file-backed modes), ``"join"`` (iterative
-    DataFrame joins — scales to any V, the only checkpointable strategy),
-    or ``"kernel"`` (CSR/Arrow zero-shuffle supersteps; dense driver rank
-    vector capped at ``kernel_max_vertices`` UNLESS ``kernel_spill_dir``
-    is given, which switches to the file-backed layout whose vectors live
-    on the shared filesystem and never touch the driver — V capped only
-    by int32 positions). Both strategies implement the identical update
-    rule and are asserted equal by shared golden tests."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown pagerank strategy {strategy!r}")
-    if strategy == "kernel" and checkpointer is not None:
-        # the kernel keeps no durable per-superstep state — silently
-        # dropping an explicitly requested checkpointer would lose
-        # resume-ability without warning
-        raise ValueError(
-            "strategy='kernel' keeps no durable per-superstep state and "
-            "cannot honor a checkpointer; use strategy='join' or 'auto'"
+        return pagerank_kernel(
+            graph,
+            damping=damping,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            fixed_iterations=fixed_iterations,
+            metrics_sink=metrics_sink,
+            spill_dir=kernel_spill_dir,
         )
-    if warm_start is not None and strategy == "kernel":
-        raise ValueError(
-            "strategy='kernel' cannot seed from warm_start (the kernel "
-            "layouts start uniform); use strategy='join' or 'auto'"
-        )
-    if strategy != "join" and warm_start is None:
-        use_kernel = strategy == "kernel" or (
-            checkpointer is None
-            and (
-                kernel_spill_dir is not None
-                or (
-                    graph.num_nodes() <= kernel_max_vertices
-                    and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-                )
-            )
-        )
-        if use_kernel:
-            from metagraph_spark.operators.kernel import (
-                build_edge_blocks,
-                pagerank_kernel,
-            )
-
-            target, built = graph, None
-            if kernel_spill_dir is not None:
-                built = build_edge_blocks(graph, spill_dir=kernel_spill_dir)
-                target = built
-            try:
-                return pagerank_kernel(
-                    target,
-                    damping=damping,
-                    maxiter=maxiter,
-                    tolerance=tolerance,
-                    fixed_iterations=fixed_iterations,
-                    metrics_sink=metrics_sink,
-                )
-            finally:
-                if built is not None:
-                    built.unpersist()  # manifest cache; files stay reusable
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if graph.is_directed and graph.metadata.get("partitioned_by_src") == n_part:
@@ -247,24 +179,23 @@ def pagerank(
             )
             .repartition(n_part, ID)
         )
-        state = (
-            truncate_lineage_partitioned(state, [ID], n_part)
-            if copartition_state
-            else truncate_lineage(state)
-        )
+        state = truncate_lineage(state)
 
     base = (1.0 - damping) / n
     total_iters = fixed_iterations if fixed_iterations is not None else maxiter
     err = None
-    # single-stage broadcast supersteps for small graphs (see
-    # PAGERANK_BROADCAST_MAX_VERTICES): dst-keyed edge cache + broadcast
-    # contribs + hash-stamped state. Checkpointed and warm-started runs
-    # keep the established plan (their state/resume contracts are pinned
-    # by tests and the streaming-maintenance path).
-    small = (
-        checkpointer is None
-        and n <= PAGERANK_BROADCAST_MAX_VERTICES
-        and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
+    # single-stage broadcast supersteps for small graphs (guide §2.4/§3.1):
+    # the edge cache is re-keyed by DST once and the per-superstep
+    # contributions are BROADCAST into the gather join, so the
+    # groupBy(dst) and the merge-back join against the hash-stamped state
+    # run partition-local — ONE shuffle-free stage per superstep instead
+    # of two exchanges + an AQE stage chain. Above routing.fits_broadcast
+    # the shuffled superstep keeps AQE's skew/coalesce freedoms (measured
+    # faster at 100M edges). Checkpointed and warm-started runs keep the
+    # established plan (their state/resume contracts are pinned by tests
+    # and the streaming-maintenance path).
+    small = checkpointer is None and routing.fits_broadcast(
+        n, graph.num_edges()
     )
     # ONLY fixed-superstep runs take the broadcast plan. CONVERGED runs
     # keep the established superstep plan UNCHANGED: any plan change
@@ -274,7 +205,6 @@ def pagerank(
     # count — fixed-iteration results are count-pinned and therefore
     # robust to ulp-level reordering under the 6-decimal rounding.
     use_bcast = small and warm_start is None and fixed_iterations is not None
-    use_copart = copartition_state
     edges_b = None
     if use_bcast:
         edges_b = edges.repartition(n_part, DST).persist()
@@ -284,13 +214,13 @@ def pagerank(
         def _release() -> None:  # noqa: F811 — now owns the dst cache
             edges_b.unpersist()
 
-    if use_bcast or (use_copart and not copartition_state):
+    if use_bcast:
         state = truncate_lineage_partitioned(
             state.repartition(n_part, ID), [ID], n_part
         )
     lineage = (
         LineageManager(partition_cols=[ID], n_part=n_part)
-        if (use_copart or use_bcast)
+        if use_bcast
         else LineageManager()
     )
     # dangling mass of the CURRENT state (scan-aggregate, no joins)

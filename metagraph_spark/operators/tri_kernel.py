@@ -47,20 +47,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from metagraph_spark.graph import DST, SRC, Graph
-
-# rank-space keys are ra*n + rb in int64: requires n < 2^31 (the same
-# positional cap as the other CSR kernels; ra*n then fits 2^62)
-TRI_KERNEL_MAX_NODES = 2**31 - 1
-
-# Below this edge count the degree-rank relabel + key-file build runs on
-# the driver (one Arrow collect + numpy sort) instead of the distributed
-# rank-sort/key-sort pipeline — the Spark jobs of that pipeline dominate
-# the whole query at bench scale (same guarded size route as the other
-# round-6 driver kernels). The triangle COUNT stays a distributed job
-# either way; the count is invariant to rank assignment, and the local
-# (degree, id) lexsort is the same total order the distributed rank sort
-# uses.
-TRI_DRIVER_LAYOUT_MAX_EDGES = 5_000_000
+from metagraph_spark.operators import routing
 
 
 def _write_sorted_keys(spark, keys_df, path: str) -> int:
@@ -219,7 +206,9 @@ def triangle_count_kernel(
     n = graph.num_nodes()
     if n == 0:
         return 0
-    if n > TRI_KERNEL_MAX_NODES:
+    # rank-space keys are ra*n + rb in int64: requires n < 2^31 (the same
+    # positional cap as the other CSR kernels; ra*n then fits 2^62)
+    if not routing.fits_positions(n):
         raise ValueError(
             f"triangle kernel rank keys need n < 2^31 (got {n}); use "
             f"triangle_count(strategy='join')"
@@ -229,7 +218,14 @@ def triangle_count_kernel(
         if num_blocks is not None
         else spark.conf.get("spark.sql.shuffle.partitions")
     )
-    if graph.num_edges() <= TRI_DRIVER_LAYOUT_MAX_EDGES:
+    # Within the driver caps the degree-rank relabel + key-file build runs
+    # on the driver (one Arrow collect + numpy sort) instead of the
+    # distributed rank-sort/key-sort pipeline, whose Spark jobs dominate
+    # the whole query at bench scale. The triangle COUNT stays a
+    # distributed job either way; the count is invariant to rank
+    # assignment, and the local (degree, id) lexsort is the same total
+    # order the distributed rank sort uses.
+    if routing.fits_driver(graph.num_edges()):
         import shutil as _sh
 
         pdf = graph.canonical_undirected_edges().select(SRC, DST).toPandas()

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from metagraph_spark.graph import DST, SRC, Graph
+from metagraph_spark.operators import routing
 
 
 def _oriented_edges(graph: Graph):
@@ -62,31 +63,20 @@ def triangle_count(graph: Graph, strategy: str = "auto",
                    kernel_spill_dir: str | None = None) -> int:
     """Exact global triangle count (weights ignored).
 
-    ``strategy``: ``"auto"`` (default — the sorted-key CSR kernel,
-    ``operators/tri_kernel.py``, when rank keys fit int64 AND the
-    executors share a filesystem with the driver; join plan otherwise),
+    ``strategy``: ``"auto"`` (default — the route :func:`routing.plan`
+    picks: the sorted-key CSR kernel, ``operators/tri_kernel.py``, when
+    rank keys fit int64 AND the executors share the temp dir with the
+    driver; join plan otherwise),
     ``"kernel"`` (force the kernel), or ``"join"`` (the three-way
     self-join plan — the no-shared-fs scale fallback). Both count the
     same triangles (parity-asserted in tests)."""
-    if strategy not in ("join", "kernel", "auto"):
-        raise ValueError(f"unknown triangle_count strategy {strategy!r}")
-    if strategy != "join":
-        from metagraph_spark.operators.kernel import shared_fs_available
-        from metagraph_spark.operators.tri_kernel import (
-            TRI_KERNEL_MAX_NODES,
-            triangle_count_kernel,
-        )
+    route, _ = routing.plan(
+        "triangles", graph, strategy, spill_dir=kernel_spill_dir
+    )
+    if route == "tri_kernel":
+        from metagraph_spark.operators.tri_kernel import triangle_count_kernel
 
-        import tempfile
-
-        probe_dir = kernel_spill_dir or tempfile.gettempdir()
-        if strategy == "kernel" or (
-            graph.num_nodes() <= TRI_KERNEL_MAX_NODES
-            and shared_fs_available(graph.edges.sparkSession, probe_dir)
-        ):
-            return triangle_count_kernel(
-                graph, spill_dir=kernel_spill_dir
-            )
+        return triangle_count_kernel(graph, spill_dir=kernel_spill_dir)
     o = _oriented_edges(graph).persist()
     e1, e2, e3 = o.alias("e1"), o.alias("e2"), o.alias("e3")
     n = (

@@ -27,3 +27,19 @@ def df_from_edges(spark, edges, weighted=True):
         return spark.createDataFrame(rows, "src long, dst long, weight double")
     rows = [(int(s), int(d)) for s, d in edges]
     return spark.createDataFrame(rows, "src long, dst long")
+
+
+def spy_calls(monkeypatch, module, name):
+    """Wrap ``module.<name>`` for the test; returns the list of its
+    non-None results, so a test can assert which loop actually ran."""
+    orig = getattr(module, name)
+    results = []
+
+    def wrapper(*a, **kw):
+        out = orig(*a, **kw)
+        if out is not None:
+            results.append(out)
+        return out
+
+    monkeypatch.setattr(module, name, wrapper)
+    return results

@@ -11,6 +11,7 @@ import pytest
 
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import build
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.embedding import hope_katz_train
 from tests.conftest import df_from_edges
 
@@ -98,16 +99,21 @@ def _numpy_hope(edges, n, d, beta, k_terms, power_iters, oversample, seed):
 
 
 @pytest.mark.parametrize("driver_cap", [None, 0])
-def test_hope_katz_matches_numpy_twin(spark, driver_cap):
-    # driver_cap None routes the small fixture to the round-6 driver
-    # kernel; 0 forces the distributed superstep path — both must match
-    # the same dense-algebra twin
+def test_hope_katz_matches_numpy_twin(spark, monkeypatch, driver_cap):
+    # driver_cap None routes the small fixture to the driver kernel; 0
+    # (the planner's driver cap below the fixture's edge count) forces the
+    # distributed superstep path — both must match the same dense-algebra
+    # twin
     edges = _fixture_edges()
     n, d = 20, 8
     g = build(df_from_edges(spark, [(s, t, 1.0) for s, t in edges]), is_directed=True)
+    if driver_cap is not None:
+        monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", driver_cap)
+    want = "kernel-driver" if driver_cap is None else "join"
+    assert routing.plan("hope", g, width=d // 2 + 2)[0] == want
     out = hope_katz_train(
         g, embedding_size=d, beta=0.05, k_terms=5, power_iters=1, oversample=2,
-        seed=7, driver_max_edges=driver_cap,
+        seed=7,
     )
     got = {r["id"]: np.array(r["emb"]) for r in out.collect()}
     expected, _ = _numpy_hope(edges, n, d, 0.05, 5, 1, 2, 7)
@@ -155,7 +161,31 @@ def test_hope_katz_spectral_quality(spark):
     assert err <= 1.05 * best + 1e-12, (err, best)
 
 
-def test_hope_katz_driver_matches_distributed(spark):
+def test_hope_driver_cap_counts_symmetrized_edges(spark, monkeypatch):
+    """The driver route of an undirected graph collects both directions of
+    every edge, so the cap is compared against 2m: a cap between m and 2m
+    sends HOPE to the distributed path."""
+    from metagraph_spark.operators import embedding
+
+    edges = _fixture_edges()
+    g = build(df_from_edges(spark, [(s, t, 1.0) for s, t in edges]),
+              is_directed=False)
+    m, r = g.num_edges(), 8 // 2 + 2
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2 * m)
+    assert routing.plan("hope", g, width=r)[0] == "kernel-driver"
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2 * m - 1)
+    assert routing.plan("hope", g, width=r)[0] == "join"
+
+    def boom(*a, **kw):  # pragma: no cover - failure path
+        raise AssertionError("driver route taken past the symmetrized cap")
+
+    monkeypatch.setattr(embedding, "_hope_driver", boom)
+    out = hope_katz_train(g, embedding_size=8, beta=0.05, k_terms=2,
+                          power_iters=1, oversample=2, seed=7)
+    assert out.count() == len({v for e in edges for v in e})
+
+
+def test_hope_katz_driver_matches_distributed(spark, monkeypatch):
     """Round-6 driver kernel vs the distributed superstep path on a
     weighted fixture with self-loops and an isolate-support node set:
     same embeddings up to per-column sign (summation-order flips), checked
@@ -174,8 +204,9 @@ def test_hope_katz_driver_matches_distributed(spark):
               oversample=2, seed=13)
     drv = {r["id"]: np.array(r["emb"])
            for r in hope_katz_train(g, **kw).collect()}
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 0)
     dst = {r["id"]: np.array(r["emb"])
-           for r in hope_katz_train(g, driver_max_edges=0, **kw).collect()}
+           for r in hope_katz_train(g, **kw).collect()}
     assert set(drv) == set(dst)
     ids = sorted(drv)
     D = np.array([drv[i] for i in ids])

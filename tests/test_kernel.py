@@ -6,9 +6,11 @@ import math
 import pytest
 
 from metagraph_spark.graph import build
+from metagraph_spark.operators import kernel as K
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.kernel import build_edge_blocks, pagerank_kernel
 from metagraph_spark.operators.pagerank import pagerank
-from tests.conftest import df_from_edges
+from tests.conftest import df_from_edges, spy_calls
 
 GOLDEN_EDGES = [(0, 1), (0, 2), (2, 0), (1, 2), (3, 2)]
 GOLDEN_EXPECTED = {
@@ -42,17 +44,20 @@ def test_kernel_matches_join_based(spark):
 
 
 @pytest.mark.slow
-def test_pagerank_auto_strategy_threshold(spark):
-    """strategy='auto' picks the kernel below the vertex threshold and the
-    join path above it; both sides of the switch produce golden values."""
+def test_pagerank_auto_strategy_threshold(spark, monkeypatch):
+    """strategy='auto' picks the kernel below the planner's caps and the
+    join path above them; both sides of the switch produce golden values."""
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
     via_kernel = {r["id"]: r["rank"] for r in
                   pagerank(g, maxiter=50, tolerance=1e-7,
-                           strategy="auto", kernel_max_vertices=100).collect()}
-    # threshold below |V| -> join path
+                           strategy="auto").collect()}
+    # caps below |E| -> join path
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(routing, "KERNEL_AUTO_MAX_EDGES", -1)
+    assert routing.plan("pagerank", g)[0] == "join"
     via_join = {r["id"]: r["rank"] for r in
                 pagerank(g, maxiter=50, tolerance=1e-7,
-                         strategy="auto", kernel_max_vertices=1).collect()}
+                         strategy="auto").collect()}
     for node, expected in GOLDEN_EXPECTED.items():
         assert math.isclose(via_kernel[node], expected, rel_tol=1e-5)
         assert math.isclose(via_join[node], expected, rel_tol=1e-5)
@@ -60,25 +65,25 @@ def test_pagerank_auto_strategy_threshold(spark):
 
 @pytest.mark.slow
 def test_kernel_file_backed_distributed_golden(spark, tmp_path, monkeypatch):
-    """File-backed blocks take the fully distributed superstep loop (rank
-    vector never on the driver) — must still produce the golden values and
-    agree with the in-memory path. The size route would send a 4-node
-    graph to the broadcast loop, so pin the threshold to 0 here."""
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
+    """File-backed blocks above the driver caps take the slice-store loop
+    (rank vector never on the driver) — must still produce the golden
+    values and agree with the in-memory driver loop. A 4-node graph fits
+    the driver loop, so the cap is lowered below its edge count."""
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
+    # fixed-iteration reference from the in-memory driver loop
+    mem = build_edge_blocks(g, num_blocks=2)
+    b = {r["id"]: r["rank"] for r in
+         pagerank_kernel(mem, fixed_iterations=7).collect()}
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ran = spy_calls(monkeypatch, K, "_distributed_superstep_loop")
     got = {r["id"]: r["rank"] for r in
            pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
     for node, expected in GOLDEN_EXPECTED.items():
         assert math.isclose(got[node], expected, rel_tol=1e-5), (node, got[node])
-    # fixed-iteration parity with the in-memory (broadcast/collect) path
-    mem = build_edge_blocks(g, num_blocks=2)
     a = {r["id"]: r["rank"] for r in
          pagerank_kernel(eb, fixed_iterations=7).collect()}
-    b = {r["id"]: r["rank"] for r in
-         pagerank_kernel(mem, fixed_iterations=7).collect()}
+    assert len(ran) == 2
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
     eb.unpersist()
@@ -97,12 +102,11 @@ def test_kernel_blocks_reuse(spark):
     eb.unpersist()
 
 
-def test_kernel_broadcast_fallback_decision(spark, monkeypatch):
-    """Without a spill_dir (and without an injected slice store) the kernel
-    must take the broadcast/collect loop — the distributed superstep loop
-    assumes a shared slice store and must not be entered."""
-    from metagraph_spark.operators import kernel as K
-
+def test_in_memory_blocks_never_enter_slice_store_loop(spark, monkeypatch):
+    """In-memory blocks (no spill_dir, no injected slice store) run the
+    driver loop — the slice-store loop assumes a shared slice store and
+    must not be entered; above the driver caps they refuse with an
+    actionable error instead."""
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("distributed loop entered without a slice store")
 
@@ -113,33 +117,35 @@ def test_kernel_broadcast_fallback_decision(spark, monkeypatch):
            pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
     for node, expected in GOLDEN_EXPECTED.items():
         assert math.isclose(got[node], expected, rel_tol=1e-5)
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2)
+    with pytest.raises(ValueError, match="rebuild with spill_dir"):
+        pagerank_kernel(eb, fixed_iterations=2)
     eb.unpersist()
 
 
 def test_kernel_size_route_small_file_backed(spark, tmp_path, monkeypatch):
-    """A file-backed layout BELOW KERNEL_DISTRIBUTED_MIN_VERTICES takes the
-    broadcast/collect loop (distributed-loop fixed costs dominate at toy
-    scale — VERDICT r4 #3); goldens must still hold reading the mmap'd
-    block files."""
-    from metagraph_spark.operators import kernel as K
-
+    """A file-backed layout within the driver caps takes the driver loop
+    over the mmap'd block files (slice-store fixed costs dominate at toy
+    scale); goldens must still hold."""
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("distributed loop entered below the size route")
 
     monkeypatch.setattr(K, "_distributed_superstep_loop", boom)
+    loaded = spy_calls(monkeypatch, K, "driver_block_arrays")
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
     got = {r["id"]: r["rank"] for r in
            pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
     for node, expected in GOLDEN_EXPECTED.items():
         assert math.isclose(got[node], expected, rel_tol=1e-5)
+    assert len(loaded) == 1  # the driver loop read the block files
     eb.unpersist()
 
 
 @pytest.mark.slow
 def test_kernel_injected_slice_store_parity(spark, tmp_path):
     """A slice store supplied by the caller drives the distributed loop and
-    matches the broadcast path bit-for-bit at fixed iterations."""
+    matches the in-memory driver loop bit-for-bit at fixed iterations."""
     from metagraph_spark.operators.kernel import LocalSliceStore
 
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
@@ -209,13 +215,10 @@ def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
 
     import numpy as np
 
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
-    # ... and force past the round-6 small-graph driver loop, which holds
-    # dense driver vectors BY DESIGN below its edge cap — this test pins
-    # the DISTRIBUTED mode's O(num_blocks) driver-state property
-    monkeypatch.setattr(K, "KERNEL_DRIVER_LOOP_MAX_EDGES", -1)
+    # force past the small-graph driver loop, which holds dense driver
+    # vectors BY DESIGN below its edge cap — this test pins the
+    # slice-store mode's O(num_blocks) driver-state property
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
 
     # golden graph + an isolated node (exercises the no-edges degree range)
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
@@ -245,24 +248,24 @@ def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
 def test_scale_layout_dangling_and_isolates(spark, tmp_path, monkeypatch):
     """Dangling vertices (no out-edges) and ranges with no sources must
     land as zero degree / zero inverse in the task-written files, and the
-    metadata dangling count must drive the same teleport mass as the
-    in-memory path."""
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
+    metadata dangling count must drive the slice-store loop to the same
+    teleport mass as the in-memory driver loop."""
     edges = [(0, 1), (1, 2), (3, 2)]  # 2 is dangling; node 4 isolated
     nodes = spark.createDataFrame([(i,) for i in range(5)], "id long")
     from metagraph_spark.graph import build as gbuild
 
     g = gbuild(df_from_edges(spark, edges, weighted=False), nodes=nodes)
-    sd = str(tmp_path / "blocks2")
-    eb = build_edge_blocks(g, num_blocks=3, spill_dir=sd)
-    assert eb.n == 5 and eb.n_dangling == 2  # nodes 2 and 4
-    a = {r["id"]: r["rank"] for r in
-         pagerank_kernel(eb, fixed_iterations=6).collect()}
     mem = build_edge_blocks(g, num_blocks=3)
     b = {r["id"]: r["rank"] for r in
          pagerank_kernel(mem, fixed_iterations=6).collect()}
+    sd = str(tmp_path / "blocks2")
+    eb = build_edge_blocks(g, num_blocks=3, spill_dir=sd)
+    assert eb.n == 5 and eb.n_dangling == 2  # nodes 2 and 4
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ran = spy_calls(monkeypatch, K, "_distributed_superstep_loop")
+    a = {r["id"]: r["rank"] for r in
+         pagerank_kernel(eb, fixed_iterations=6).collect()}
+    assert len(ran) == 1
     assert set(a) == set(b) == set(range(5))
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15), (k, a[k], b[k])
@@ -275,7 +278,6 @@ def test_kernel_slice_store_resume(spark, tmp_path, monkeypatch):
     resume from the newest COMMITTED iteration (half-written vectors are
     never resumed from — only the driver's post-validation marker counts)
     and finish bit-identical to an uninterrupted run."""
-    from metagraph_spark.operators import kernel as K
     from metagraph_spark.operators.kernel import LocalSliceStore
 
     # keep every run's files: cleanup() only ever runs on the driver, so

@@ -16,8 +16,10 @@ from metagraph_spark.operators.kernel_algos import (
     katz_kernel,
     lpa_kernel,
 )
+from metagraph_spark.operators import kernel_algos as KA
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.lpa import label_propagation_community
-from tests.conftest import df_from_edges
+from tests.conftest import df_from_edges, spy_calls
 
 KATZ_GOLDEN_EDGES = [
     (0, 1, 1), (0, 2, 1), (2, 0, 1), (1, 2, 1),
@@ -45,6 +47,12 @@ def _map(df, col):
     return {r["id"]: r[col] for r in df.collect()}
 
 
+def _force_join(monkeypatch):
+    """Caps below every graph here: "auto" plans the join route."""
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(routing, "KERNEL_AUTO_MAX_EDGES", -1)
+
+
 def test_katz_kernel_golden(spark):
     g = build(df_from_edges(spark, KATZ_GOLDEN_EDGES), is_directed=True)
     got = _map(katz_kernel(g, tolerance=1e-7), "katz")
@@ -57,7 +65,8 @@ def test_katz_kernel_matches_join_weighted(spark):
     edges = _random_edges(40, 200, seed=7)
     g = build(df_from_edges(spark, edges), is_directed=False)
     join = _map(
-        katz_centrality(g, attenuation_factor=0.005, fixed_iterations=6),
+        katz_centrality(g, attenuation_factor=0.005, fixed_iterations=6,
+                        strategy="join"),
         "katz",
     )
     kern = _map(
@@ -104,19 +113,15 @@ def test_katz_kernel_spill_dir_converged_golden(spark, tmp_path):
         assert math.isclose(got[k], v, rel_tol=1e-5), (k, got[k])
 
 
-def test_katz_auto_strategy_threshold(spark):
+def test_katz_auto_strategy_threshold(spark, monkeypatch):
     g = build(df_from_edges(spark, KATZ_GOLDEN_EDGES), is_directed=True)
     via_kernel = _map(
-        katz_centrality(
-            g, tolerance=1e-7, strategy="auto", kernel_max_vertices=100
-        ),
-        "katz",
+        katz_centrality(g, tolerance=1e-7, strategy="auto"), "katz"
     )
+    _force_join(monkeypatch)
+    assert routing.plan("katz", g)[0] == "join"
     via_join = _map(
-        katz_centrality(
-            g, tolerance=1e-7, strategy="auto", kernel_max_vertices=1
-        ),
-        "katz",
+        katz_centrality(g, tolerance=1e-7, strategy="auto"), "katz"
     )
     for k, v in KATZ_GOLDEN.items():
         assert math.isclose(via_kernel[k], v, rel_tol=1e-5)
@@ -129,13 +134,15 @@ def test_eigenvector_kernel_matches_join(spark):
 
     edges = _random_edges(30, 140, seed=5)
     g = build(df_from_edges(spark, edges), is_directed=False)
-    join = _map(eigenvector_centrality(g, tolerance=1e-7), "eigenvector")
+    join = _map(eigenvector_centrality(g, tolerance=1e-7, strategy="join"),
+                "eigenvector")
     kern = _map(eigenvector_kernel(g, tolerance=1e-7), "eigenvector")
     assert set(join) == set(kern)
     for k in join:
         assert math.isclose(join[k], kern[k], rel_tol=1e-6, abs_tol=1e-9), k
     # fixed-iteration parity (exact superstep schedule)
-    jf = _map(eigenvector_centrality(g, fixed_iterations=4), "eigenvector")
+    jf = _map(eigenvector_centrality(g, fixed_iterations=4, strategy="join"),
+              "eigenvector")
     kf = _map(eigenvector_kernel(g, fixed_iterations=4), "eigenvector")
     for k in jf:
         assert math.isclose(jf[k], kf[k], rel_tol=1e-9, abs_tol=1e-12), k
@@ -147,7 +154,7 @@ def test_hits_kernel_matches_join(spark):
 
     edges = _random_edges(25, 100, seed=9)
     g = build(df_from_edges(spark, edges), is_directed=True)
-    jh, ja = hits_centrality(g, tolerance=1e-7)
+    jh, ja = hits_centrality(g, tolerance=1e-7, strategy="join")
     kh, ka = hits_kernel(g, tolerance=1e-7)
     for jd, kd, col in ((jh, kh, "hubs"), (ja, ka, "authority")):
         jm, km = _map(jd, col), _map(kd, col)
@@ -157,9 +164,8 @@ def test_hits_kernel_matches_join(spark):
                 col, k,
             )
     # strategy routing smoke: auto below cap = kernel result
-    vh, _va = hits_centrality(
-        g, tolerance=1e-7, strategy="auto", kernel_max_vertices=100
-    )
+    assert routing.plan("hits", g)[0] == "kernel-broadcast"
+    vh, _va = hits_centrality(g, tolerance=1e-7, strategy="auto")
     vm = _map(vh, "hubs")
     km = _map(kh, "hubs")
     for k in km:
@@ -170,7 +176,7 @@ def test_cc_kernel_matches_join_converged(spark):
     # three components incl a self-loop node and a 2-cycle
     edges = [(0, 1), (1, 2), (2, 0), (3, 4), (5, 5), (6, 7), (7, 6), (8, 1)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
-    join = _map(connected_components(g), "label")
+    join = _map(connected_components(g, strategy="join"), "label")
     kern = _map(cc_kernel(g), "label")
     assert join == kern
 
@@ -189,22 +195,21 @@ def test_cc_kernel_fixed_rounds_pure_hashmin_parity(spark):
     edges = _random_edges(50, 120, seed=3, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
     for k in (1, 2, 4):
-        join = _map(connected_components(g, fixed_rounds=k), "label")
+        join = _map(
+            connected_components(g, fixed_rounds=k, strategy="join"), "label"
+        )
         kern = _map(cc_kernel(g, fixed_rounds=k), "label")
         assert join == kern, f"fixed_rounds={k}"
 
 
-def test_cc_strategy_routing(spark):
+def test_cc_strategy_routing(spark, monkeypatch):
     edges = [(0, 1), (2, 3)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    via_kernel = _map(
-        connected_components(g, strategy="auto", kernel_max_vertices=100),
-        "label",
-    )
-    via_join = _map(
-        connected_components(g, strategy="auto", kernel_max_vertices=1),
-        "label",
-    )
+    via_kernel = _map(connected_components(g, strategy="auto"), "label")
+    with monkeypatch.context() as mp:
+        _force_join(mp)
+        assert routing.plan("cc", g)[0] == "hash-min"
+        via_join = _map(connected_components(g, strategy="auto"), "label")
     assert via_kernel == via_join == {0: 0, 1: 0, 2: 2, 3: 2}
     from metagraph_spark.state import CheckpointManager
 
@@ -217,13 +222,21 @@ def test_cc_strategy_routing(spark):
 
 
 @pytest.mark.slow
-def test_cc_distributed_loop_parity(spark, tmp_path):
-    """File-backed blocks route to the slice-store CC loop (labels never
-    on the driver, one pointer-doubling job per round) — exact labels on a
-    multi-component graph, a long chain, and the fixed-round oracle path."""
+def test_cc_distributed_loop_parity(spark, tmp_path, monkeypatch):
+    """File-backed blocks above the driver caps route to the slice-store
+    CC loop (labels never on the driver, one pointer-doubling job per
+    round) — exact labels on a multi-component graph, a long chain, and
+    the fixed-round oracle path."""
     edges = _random_edges(60, 150, seed=29, weighted=False) + [(70, 71)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
-    want = _map(connected_components(g), "label")
+    want = _map(connected_components(g, strategy="join"), "label")
+    want_fixed = {
+        k: _map(connected_components(g, fixed_rounds=k, strategy="join"),
+                "label")
+        for k in (1, 3)
+    }
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ran = spy_calls(monkeypatch, KA, "_distributed_cc_loop")
     got = _map(
         cc_kernel(
             g, spill_dir=str(tmp_path / "dcc")
@@ -241,8 +254,7 @@ def test_cc_distributed_loop_parity(spark, tmp_path):
         "label",
     )
     assert set(got_c.values()) == {0}
-    for k in (1, 3):
-        want_f = _map(connected_components(g, fixed_rounds=k), "label")
+    for k, want_f in want_fixed.items():
         got_f = _map(
             cc_kernel(
                 g, spill_dir=str(tmp_path / f"dfix{k}"),
@@ -251,14 +263,24 @@ def test_cc_distributed_loop_parity(spark, tmp_path):
             "label",
         )
         assert want_f == got_f, f"fixed_rounds={k}"
+    assert len(ran) == 4
 
 
-def test_lpa_distributed_loop_parity(spark, tmp_path):
-    """File-backed blocks route to the slice-store LPA loop — exact labels
-    vs the join path on converged and fixed-round runs."""
+def test_lpa_distributed_loop_parity(spark, tmp_path, monkeypatch):
+    """File-backed blocks above the driver caps route to the slice-store
+    LPA loop — exact labels vs the join path on converged and fixed-round
+    runs."""
     edges = _random_edges(40, 110, seed=31, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    want = _map(label_propagation_community(g, max_rounds=30), "label")
+    want = _map(
+        label_propagation_community(g, max_rounds=30, strategy="join"), "label"
+    )
+    want_f = _map(
+        label_propagation_community(g, fixed_rounds=2, strategy="join"),
+        "label",
+    )
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ran = spy_calls(monkeypatch, KA, "_distributed_lpa_loop")
     got = _map(
         lpa_kernel(
             g, max_rounds=30, spill_dir=str(tmp_path / "dlpa"),
@@ -266,7 +288,6 @@ def test_lpa_distributed_loop_parity(spark, tmp_path):
         "label",
     )
     assert want == got
-    want_f = _map(label_propagation_community(g, fixed_rounds=2), "label")
     got_f = _map(
         lpa_kernel(
             g, fixed_rounds=2, spill_dir=str(tmp_path / "dlpaf"),
@@ -274,11 +295,12 @@ def test_lpa_distributed_loop_parity(spark, tmp_path):
         "label",
     )
     assert want_f == got_f
+    assert len(ran) == 2
 
 
 def test_cc_lpa_kernel_file_backed_parity(spark, tmp_path):
-    """spill_dir (file-backed blocks + mmap label feed) produces exactly
-    the in-memory kernel's labels for both CC and LPA."""
+    """spill_dir (file-backed blocks read back by the driver loop)
+    produces exactly the in-memory kernel's labels for both CC and LPA."""
     edges = _random_edges(40, 120, seed=17, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
     cc_mem = _map(cc_kernel(g), "label")
@@ -295,7 +317,9 @@ def test_cc_lpa_kernel_file_backed_parity(spark, tmp_path):
 def test_lpa_kernel_matches_join(spark):
     edges = _random_edges(40, 150, seed=13, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    join = _map(label_propagation_community(g, max_rounds=30), "label")
+    join = _map(
+        label_propagation_community(g, max_rounds=30, strategy="join"), "label"
+    )
     kern = _map(lpa_kernel(g, max_rounds=30), "label")
     assert join == kern
 
@@ -305,7 +329,10 @@ def test_lpa_kernel_fixed_rounds_parity(spark):
     edges = _random_edges(30, 90, seed=21, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
     for k in (1, 3):
-        join = _map(label_propagation_community(g, fixed_rounds=k), "label")
+        join = _map(
+            label_propagation_community(g, fixed_rounds=k, strategy="join"),
+            "label",
+        )
         kern = _map(lpa_kernel(g, fixed_rounds=k), "label")
         assert join == kern, f"fixed_rounds={k}"
 
@@ -399,15 +426,10 @@ def test_object_slice_store_runs_all_distributed_loops(spark, tmp_path):
 
 
 def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
-    """ONE label_blocks layout (canonical symmetrized, no baked
-    self-votes) feeds both cc_kernel and lpa_kernel with exact join-path
-    parity — file-backed and in-memory — and the legacy baked
-    lpa_vote_blocks layout still agrees (self_votes_baked gates the
-    synthetic suffix, so votes are never doubled)."""
-    from metagraph_spark.operators.kernel_algos import (
-        label_blocks,
-        lpa_vote_blocks,
-    )
+    """ONE label_blocks layout (canonical symmetrized, self-votes applied
+    by the LPA loops) feeds both cc_kernel and lpa_kernel with exact
+    join-path parity — file-backed and in-memory."""
+    from metagraph_spark.operators.kernel_algos import label_blocks
 
     # include duplicate input edges: CC ignores multiplicity, LPA must
     # (the canonical layout dedups them)
@@ -423,38 +445,26 @@ def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
         ("mem", label_blocks(g)),
         ("file", label_blocks(g, spill_dir=str(tmp_path / "shared"))),
     ):
-        assert shared.self_votes_baked is False
         got_cc = _map(cc_kernel(shared), "label")
         got_lpa = _map(lpa_kernel(shared, fixed_rounds=3), "label")
         assert want_cc == got_cc, name
         assert want_lpa == got_lpa, name
         shared.unpersist()
-    baked = lpa_vote_blocks(g, spill_dir=str(tmp_path / "baked"))
-    assert baked.self_votes_baked is True
-    assert want_lpa == _map(lpa_kernel(baked, fixed_rounds=3), "label")
-    baked.unpersist()
-    # baked flag round-trips through the on-disk metadata
+    # a reopened file-backed layout feeds the kernels the same way
     from metagraph_spark.operators.kernel import load_edge_blocks
 
-    reopened = load_edge_blocks(spark, str(tmp_path / "baked"))
-    assert reopened.self_votes_baked is True
+    reopened = load_edge_blocks(spark, str(tmp_path / "shared"))
     assert want_lpa == _map(lpa_kernel(reopened, fixed_rounds=3), "label")
     reopened.unpersist()
 
 
-def test_lpa_strategy_routing(spark):
+def test_lpa_strategy_routing(spark, monkeypatch):
     edges = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    via_kernel = _map(
-        label_propagation_community(
-            g, strategy="auto", kernel_max_vertices=100
-        ),
-        "label",
-    )
-    via_join = _map(
-        label_propagation_community(g, strategy="auto", kernel_max_vertices=1),
-        "label",
-    )
+    via_kernel = _map(label_propagation_community(g, strategy="auto"), "label")
+    _force_join(monkeypatch)
+    assert routing.plan("lpa", g)[0] == "join"
+    via_join = _map(label_propagation_community(g, strategy="auto"), "label")
     assert via_kernel == via_join
 
 

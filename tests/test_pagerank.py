@@ -129,7 +129,7 @@ def test_pagerank_fixed_iterations_fast(spark):
         assert math.isclose(got[i], r[i], rel_tol=1e-9), (i, got[i], r[i])
 
 
-def test_pagerank_kernel_spill_dir_route(spark, tmp_path):
+def test_pagerank_kernel_spill_dir_route(spark, tmp_path, monkeypatch):
     """`kernel_spill_dir` routes auto/kernel through the file-backed layout
     (no driver-vector cap) and must match the join path exactly."""
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False))
@@ -139,11 +139,18 @@ def test_pagerank_kernel_spill_dir_route(spark, tmp_path):
     b = {r["id"]: r["rank"] for r in pagerank(g, fixed_iterations=5).collect()}
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
-    # auto + spill dir must take the kernel even past a tiny vertex cap
+    # auto + spill dir must take the file-backed kernel even past the
+    # planner's driver and auto caps
+    from metagraph_spark.operators import routing
+
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(routing, "KERNEL_AUTO_MAX_EDGES", -1)
+    kb2 = str(tmp_path / "kb2")
+    assert routing.plan("pagerank", g, spill_dir=kb2)[0] == "kernel-distributed"
     c = {r["id"]: r["rank"] for r in pagerank(
-        g, fixed_iterations=5, strategy="auto", kernel_max_vertices=1,
-        kernel_spill_dir=str(tmp_path / "kb2")).collect()}
-    assert c == a
+        g, fixed_iterations=5, strategy="auto", kernel_spill_dir=kb2).collect()}
+    for k in a:
+        assert math.isclose(c[k], a[k], rel_tol=1e-12, abs_tol=1e-15)
 
 
 def test_superstep_no_state_side_exchange(spark):
@@ -203,17 +210,6 @@ def test_superstep_no_state_side_exchange(spark):
         assert "SortMergeJoin" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
-def test_pagerank_copartition_state_parity(spark):
-    """copartition_state=True (no state-side Exchange) must produce exactly
-    the default path's values."""
-    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False))
-    a = {r["id"]: r["rank"] for r in
-         pagerank(g, fixed_iterations=6, copartition_state=True).collect()}
-    b = {r["id"]: r["rank"] for r in pagerank(g, fixed_iterations=6).collect()}
-    for k in a:
-        assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
 
 
 def test_incremental_pagerank_warm_start_fewer_supersteps(spark):

@@ -86,7 +86,7 @@ def test_triangles_match_bruteforce(spark, edges):
 def test_pagerank_strategies_agree_and_sum_to_one(spark, edges):
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
     jb = {r["id"]: r["rank"] for r in
-          pagerank(g, maxiter=200, tolerance=1e-9).collect()}
+          pagerank(g, maxiter=200, tolerance=1e-9, strategy="join").collect()}
     kb = {r["id"]: r["rank"] for r in
           pagerank_kernel(g, maxiter=200, tolerance=1e-9).collect()}
     assert set(jb) == set(kb)
