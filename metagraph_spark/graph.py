@@ -20,18 +20,77 @@ Spark-first design notes:
   algorithms that need both directions call ``symmetrized()``
   (reference analog: scipy translator symmetrization,
   ``plugins/scipy/translators.py:120-126``).
+- small graphs (within ``routing.fits_driver``) reach the driver routes
+  as a positional layout, :meth:`Graph.driver_layout`: the stored edge
+  rows as int32 positions into the sorted ids, from one Arrow collect per
+  driver-route call (reference analog: the translation of an edge table
+  to a scipy CSR graph).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import NamedTuple, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SRC, DST, WEIGHT = "src", "dst", "weight"
 ID, VALUE = "id", "value"
+
+class DriverLayout(NamedTuple):
+    """The stored edge rows of one Graph, on the driver, in positions.
+
+    ``ids`` are the sorted node ids (edge endpoints ∪ ``graph.nodes``);
+    ``src``/``dst`` are int32 positions into ``ids``, one per stored edge
+    row in collect order; ``weights`` is the float64 weight column or
+    ``None``. Each driver route derives its own edge view (directed,
+    symmetrized, canonical) from these base arrays."""
+
+    ids: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    weights: Optional[np.ndarray]
+
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
+    def canonical_pairs(self) -> tuple[np.ndarray, np.ndarray]:
+        """Sorted unique int64 position pairs ``(lo, hi)``, ``lo < hi``:
+        :meth:`Graph.canonical_undirected_edges` in positions (orientation
+        dropped, self-loops and duplicates removed)."""
+        keep = self.src != self.dst
+        lo = np.minimum(self.src[keep], self.dst[keep]).astype(np.int64)
+        hi = np.maximum(self.src[keep], self.dst[keep]).astype(np.int64)
+        key = np.unique(lo * np.int64(self.n) + hi)
+        lo = key // self.n
+        return lo, key - lo * self.n
+
+
+def collect_driver_layout(graph: "Graph") -> DriverLayout:
+    """One Arrow ``toPandas`` of the edges (plus one of ``nodes`` when
+    set), relabelled to positions in numpy."""
+    cols = [SRC, DST] + ([WEIGHT] if graph.is_weighted else [])
+    pdf = graph.edges.select(*cols).toPandas()
+    s = pdf[SRC].to_numpy(dtype=np.int64)
+    d = pdf[DST].to_numpy(dtype=np.int64)
+    endpoints = [s, d]
+    if graph.nodes is not None:
+        endpoints.append(
+            graph.nodes.select(ID).toPandas()[ID].to_numpy(dtype=np.int64)
+        )
+    ids = np.unique(np.concatenate(endpoints))
+    weights = (
+        pdf[WEIGHT].to_numpy(dtype=np.float64) if graph.is_weighted else None
+    )
+    return DriverLayout(
+        ids,
+        np.searchsorted(ids, s).astype(np.int32),
+        np.searchsorted(ids, d).astype(np.int32),
+        weights,
+    )
 
 
 @dataclass
@@ -83,6 +142,19 @@ class Graph:
             n = self.edges.count()
             self.metadata["num_edges"] = n
         return n
+
+    def driver_layout(self) -> Optional[DriverLayout]:
+        """The :class:`DriverLayout` of the stored edge rows, collected by
+        this call (:func:`collect_driver_layout`); ``None`` above the
+        driver caps. Nothing is cached: a driver route calls this once and
+        derives its edge view from the result."""
+        from metagraph_spark.operators import routing
+
+        m = self.num_edges()
+        if not routing.fits_driver(m, self.metadata.get("num_nodes", 0)):
+            return None
+        lay = collect_driver_layout(self)
+        return lay if routing.fits_driver(m, lay.n) else None
 
     def has_negative_weights(self) -> bool:
         """Computed once and cached on the handle (reference computes

@@ -20,12 +20,15 @@
     its new dst slice and returns two scalars, so the rank vector never
     crosses the driver. ONE Spark job, ZERO shuffles per superstep.
 
-  A Graph argument is laid out in memory when it fits the driver loop,
-  and file-backed otherwise (under ``spill_dir``, or a temp dir removed
-  after the call). Which operator call reaches which loop is decided by
-  ``operators/routing.py``. This mirrors the reference's physical split:
-  scipy CSR kernels for in-memory speed (``plugins/scipy/types.py:191-225``),
-  chunked loaders for bigger-than-memory (``core/dask/loader.py:15-74``).
+  A Graph within the driver caps builds no blocks: the driver loop runs
+  over one dst-sorted block derived from one collect of the stored edge
+  rows, :meth:`Graph.driver_layout` (``driver_block_arrays``). A Graph
+  above the caps is laid out file-backed (under ``spill_dir``, or a temp
+  dir removed after the call). Which operator call reaches which loop is
+  decided by ``operators/routing.py``. This mirrors the reference's
+  physical split: scipy CSR kernels for in-memory speed
+  (``plugins/scipy/types.py:191-225``), chunked loaders for
+  bigger-than-memory (``core/dask/loader.py:15-74``).
 
 Semantics are EXACTLY operators/pagerank.py (networkx dangling handling,
 N-scaled L1 convergence, ConvergenceError) — asserted by shared golden
@@ -69,11 +72,38 @@ def _open_block_weights(path: str):
     return np.load(path + ".ws.npy", mmap_mode="r")
 
 
+def _graph_block(graph: Graph):
+    """``(ids, [(0, srcs, dsts, ws|None)])``, the one-block driver view of
+    a Graph for pagerank and katz: the edges of ``graph.symmetrized()``
+    (its stored rows, plus the reverse of every non-self-loop row when
+    undirected) as positions from :meth:`Graph.driver_layout`, stably
+    sorted by dst so each dst's contributions sum in row order, as in a
+    packed block."""
+    m = routing.layout_edges("pagerank", graph)
+    if not routing.fits_driver(m):
+        return None
+    lay = graph.driver_layout()
+    if lay is None or not routing.fits_driver(m, lay.n):
+        return None
+    s, d, w = lay.src, lay.dst, lay.weights
+    if not graph.is_directed:
+        keep = s != d
+        s, d = np.concatenate([s, d[keep]]), np.concatenate([d, s[keep]])
+        if w is not None:
+            w = np.concatenate([w, w[keep]])
+    order = np.argsort(d, kind="stable")
+    return lay.ids, [(0, s[order], d[order], None if w is None else w[order])]
+
+
 def driver_block_arrays(eb):
-    """``[(dst_lo, srcs, dsts, ws|None)]`` sorted by ``dst_lo``, or ``None``
-    when the layout does not fit ``routing.fits_driver`` (checked from
-    .npy headers / one tiny aggregate before any bulk load) or is not
-    driver-readable."""
+    """The driver loop's inputs ``(ids, [(dst_lo, srcs, dsts, ws|None)])``,
+    blocks sorted by ``dst_lo``, or ``None`` when the layout does not fit
+    ``routing.fits_driver`` (checked from .npy headers / one tiny
+    aggregate before any bulk load) or is not driver-readable. A Graph
+    gives one block, :func:`_graph_block`, with ``ws`` its weights
+    (``None`` when unweighted)."""
+    if isinstance(eb, Graph):
+        return _graph_block(eb)
     if not routing.fits_driver(0, eb.n):
         return None
     if eb.manifest is not None:
@@ -98,7 +128,7 @@ def driver_block_arrays(eb):
                 (lo, np.asarray(srcs, dtype=np.int64),
                  np.asarray(dsts, dtype=np.int64), ws)
             )
-        return out
+        return eb.node_ids, out
     total = eb.blocks.agg(
         F.sum(F.size("srcs")).alias("e")
     ).collect()[0]["e"]
@@ -116,14 +146,14 @@ def driver_block_arrays(eb):
                 else None,
             )
         )
-    return out
+    return eb.node_ids, out
 
 
 def _driver_blocks(eb, slice_store=None, resume: bool = False):
-    """The block arrays for the driver loop, or ``None`` when the call
-    takes the slice-store loop: file-backed blocks above the driver caps,
-    or any call with a ``slice_store``/``resume`` contract. In-memory
-    blocks have no slice-store loop, so those cases raise."""
+    """:func:`driver_block_arrays` for the driver loop, or ``None`` when
+    the call takes the slice-store loop: file-backed blocks above the
+    driver caps, or any call with a ``slice_store``/``resume`` contract.
+    In-memory blocks have no slice-store loop, so those cases raise."""
     if resume and slice_store is None:
         raise ValueError(
             "resume=True requires an injected slice_store (the default "
@@ -139,23 +169,24 @@ def _driver_blocks(eb, slice_store=None, resume: bool = False):
                 "run the driver loop, which keeps no slice vectors"
             )
         return None
-    blks = driver_block_arrays(eb)
-    if blks is None and eb.manifest is None:
+    drv = driver_block_arrays(eb)
+    if drv is None and eb.manifest is None:
         raise ValueError(
             f"in-memory EdgeBlocks ({eb.n} vertices) exceed the driver-loop "
             "caps; rebuild with spill_dir for the slice-store loop"
         )
-    return blks
+    return drv
 
 
 def with_blocks(graph_or_blocks, build, run, spill_dir=None,
                 in_memory: bool = False):
     """``run(eb)`` over prebuilt EdgeBlocks, or over the blocks
     ``build(graph, spill_dir)`` lays out for a Graph: in memory when
-    ``in_memory``, else file-backed under ``spill_dir`` — a temp dir
-    removed after the call when none is given. Blocks built here are
-    unpersisted after ``run``; results are materialized before that
-    (driver DataFrames, or ``truncate_lineage`` in the slice-store loops)."""
+    ``in_memory`` (eigenvector's broadcast gathers), else file-backed under
+    ``spill_dir`` — a temp dir removed after the call when none is given.
+    Blocks built here are unpersisted after ``run``; results are
+    materialized before that (driver DataFrames, or ``truncate_lineage``
+    in the slice-store loops)."""
     import shutil
     import tempfile
 
@@ -175,20 +206,6 @@ def with_blocks(graph_or_blocks, build, run, spill_dir=None,
     finally:
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
-
-
-def fits_driver_graph(op: str, graph_or_blocks, spill_dir=None,
-                      durable: bool = False) -> bool:
-    """True when a Graph argument should be laid out in memory for the
-    driver loop: it fits the driver caps and the call asks for no spill
-    dir or durable slice store."""
-    g = graph_or_blocks
-    return (
-        isinstance(g, Graph)
-        and spill_dir is None
-        and not durable
-        and routing.fits_driver(routing.layout_edges(op, g), g.num_nodes())
-    )
 
 
 class EdgeBlocks:
@@ -1058,6 +1075,47 @@ def _distributed_superstep_loop(
     return result
 
 
+def _driver_pagerank_loop(spark, ids, blks, out_deg, damping, total,
+                          tolerance, fixed_iterations, metrics_sink, maxiter):
+    """The driver superstep loop over driver-resident block arrays: per
+    block ``np.bincount(dsts, weights=contrib[srcs])`` into its dst slice,
+    no Spark job per superstep."""
+    n = len(out_deg)
+    if n == 0:
+        return spark.createDataFrame([], "id long, rank double")
+    dangling = out_deg == 0
+    inv = np.where(dangling, 0.0, 1.0 / np.maximum(out_deg, 1.0))
+    r = np.full(n, 1.0 / n)
+    base = (1.0 - damping) / n
+    err = None
+    for it in range(total):
+        contrib = r * inv
+        g_vec = np.zeros(n)
+        for lo, srcs, dsts, _ws in blks:
+            if len(srcs) == 0:
+                continue
+            g = np.bincount(dsts, weights=contrib[srcs])
+            g_vec[lo : lo + len(g)] += g
+        danglesum = r[dangling].sum()
+        new_r = damping * g_vec + damping * danglesum / n + base
+        err = np.abs(new_r - r).sum()
+        if metrics_sink is not None:
+            metrics_sink.append({"iteration": it, "l1_error": float(err)})
+        r = new_r
+        if fixed_iterations is None and err < n * tolerance:
+            break
+    else:
+        if fixed_iterations is None:
+            raise ConvergenceError(
+                f"pagerank_kernel failed to converge in {maxiter} "
+                f"iterations (err={err!r})"
+            )
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.asarray(ids), "rank": r}),
+        schema="id long, rank double",
+    )
+
+
 def pagerank_kernel(
     graph_or_blocks,
     damping: float = 0.85,
@@ -1072,10 +1130,12 @@ def pagerank_kernel(
     """PageRank via the CSR/Arrow kernel. Returns ``(id, rank)``.
 
     Accepts a Graph or a prebuilt EdgeBlocks (amortize the layout across
-    runs). A Graph is laid out in memory when it fits the driver caps and
-    file-backed otherwise (under ``spill_dir``, or a temp dir removed
-    after the call). Blocks that fit ``routing.fits_driver`` run the
-    driver loop; file-backed blocks above the caps, or any call with a
+    runs). A Graph within the driver caps runs the driver loop over one
+    block derived from one collect, :meth:`Graph.driver_layout`
+    (:func:`driver_block_arrays`); above the caps it is laid out
+    file-backed (under ``spill_dir``, or a temp dir removed after the
+    call). Blocks that fit ``routing.fits_driver`` run the driver loop;
+    file-backed blocks above the caps, or any call with a
     ``slice_store``, run the slice-store loop
     (``_distributed_superstep_loop``; the rank vector never crosses the
     driver). ``slice_store`` injects its iteration-vector storage (default
@@ -1085,58 +1145,35 @@ def pagerank_kernel(
     committed iteration vector in ``slice_store`` (which is therefore
     required — the default store lives under a fresh uuid dir per call and
     can never hold prior state)."""
+    total = fixed_iterations if fixed_iterations is not None else maxiter
     durable = slice_store is not None or resume
+    g = graph_or_blocks
+    drv = (driver_block_arrays(g) if isinstance(g, Graph) and spill_dir is None
+           and not durable else None)
+    if drv is not None:
+        ids, blks = drv
+        out_deg = np.bincount(blks[0][1], minlength=len(ids)).astype(float)
+        return _driver_pagerank_loop(
+            g.edges.sparkSession, ids, blks, out_deg, damping, total,
+            tolerance, fixed_iterations, metrics_sink, maxiter,
+        )
 
     def run(eb: EdgeBlocks) -> DataFrame:
         spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, rank double")
-        total = fixed_iterations if fixed_iterations is not None else maxiter
-        blks = _driver_blocks(eb, slice_store, resume)
-        if blks is None:
+        drv = _driver_blocks(eb, slice_store, resume)
+        if drv is None:
             return _distributed_superstep_loop(
                 spark, eb, damping, total, tolerance, fixed_iterations,
                 metrics_sink, slice_store=slice_store, resume=resume,
             )
-        out_deg = np.asarray(eb.out_deg)
-        dangling = out_deg == 0
-        inv = np.where(dangling, 0.0, 1.0 / np.maximum(out_deg, 1.0))
-        r = np.full(n, 1.0 / n)
-        base = (1.0 - damping) / n
-        err = None
-        for it in range(total):
-            contrib = r * inv
-            g_vec = np.zeros(n)
-            for lo, srcs, dsts, _ws in blks:
-                if len(srcs) == 0:
-                    continue
-                g = np.bincount(dsts, weights=contrib[srcs])
-                g_vec[lo : lo + len(g)] += g
-            danglesum = r[dangling].sum()
-            new_r = damping * g_vec + damping * danglesum / n + base
-            err = np.abs(new_r - r).sum()
-            if metrics_sink is not None:
-                metrics_sink.append({"iteration": it, "l1_error": float(err)})
-            r = new_r
-            if fixed_iterations is None and err < n * tolerance:
-                break
-        else:
-            if fixed_iterations is None:
-                raise ConvergenceError(
-                    f"pagerank_kernel failed to converge in {maxiter} "
-                    f"iterations (err={err!r})"
-                )
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.asarray(eb.node_ids), "rank": r}),
-            schema="id long, rank double",
+        return _driver_pagerank_loop(
+            spark, *drv, np.asarray(eb.out_deg), damping, total,
+            tolerance, fixed_iterations, metrics_sink, maxiter,
         )
 
     return with_blocks(
-        graph_or_blocks,
-        lambda g, d: build_edge_blocks(g, spill_dir=d),
-        run,
+        graph_or_blocks, lambda g, d: build_edge_blocks(g, spill_dir=d), run,
         spill_dir,
-        in_memory=fits_driver_graph(
-            "pagerank", graph_or_blocks, spill_dir, durable
-        ),
     )

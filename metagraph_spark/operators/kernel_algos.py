@@ -7,11 +7,14 @@ iterative operators. Each of ``katz_kernel``, ``cc_kernel`` and
 ``lpa_kernel`` has exactly two superstep loops with the same per-block
 arithmetic, so their results are bit-identical:
 
-- the driver loop (``_driver_cc_loop``/``_driver_lpa_loop``, katz
-  inline) — the whole loop in numpy on the driver, no Spark job per
-  superstep; taken when the graph or layout fits ``routing.fits_driver``.
-  CC and LPA on a Graph skip the block layout entirely: one Arrow collect
-  of the edge pairs (``_driver_graph_arrays``);
+- the driver loop (``_driver_katz_loop``/``_driver_cc_loop``/
+  ``_driver_lpa_loop``) — the whole loop in numpy on the driver, no Spark
+  job per superstep; taken when the graph or layout fits
+  ``routing.fits_driver``. A Graph builds no block layout for them: each
+  call collects its stored edge rows once, :meth:`Graph.driver_layout`,
+  and derives its one dst-sorted block in numpy (katz through
+  ``kernel.driver_block_arrays``, CC and LPA through
+  ``_driver_graph_arrays``);
 - the slice-store loop (``_distributed_*_loop``) — file-backed blocks
   above the driver caps, or any call with a ``slice_store``: tasks read
   the previous vector from the slice store and write their dst slice, so
@@ -58,8 +61,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, ID, SRC, Graph
-from metagraph_spark.operators import routing
+from metagraph_spark.graph import DST, SRC, Graph
+from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
     LocalSliceStore,
@@ -67,7 +70,6 @@ from metagraph_spark.operators.kernel import (
     _open_block,
     _open_block_weights,
     build_edge_blocks,
-    fits_driver_graph,
     slice_ranges,
     with_blocks,
 )
@@ -206,6 +208,47 @@ def _weighted_build(graph_or_blocks):
     )
 
 
+def _driver_katz_loop(spark, ids, blks, alpha, beta, total, tolerance,
+                      fixed_iterations, metrics_sink, maxiter):
+    """Katz supersteps over driver-resident block arrays: per-block
+    bincount + slice accumulation, the slice-store loop's arithmetic, so
+    values are bit-exact with it."""
+    n = len(ids)
+    if n == 0:
+        return spark.createDataFrame([], "id long, katz double")
+    x = np.zeros(n)
+    err = None
+    for it in range(total):
+        g_vec = np.zeros(n)
+        for lo, srcs, dsts, ws in blks:
+            if len(srcs) == 0:
+                continue
+            w = x[srcs]
+            if ws is not None:
+                w = w * ws
+            g = np.bincount(dsts, weights=w)
+            g_vec[lo : lo + len(g)] += g
+        new_x = alpha * g_vec + beta
+        err = float(np.abs(new_x - x).sum())
+        if metrics_sink is not None:
+            metrics_sink.append({"iteration": it, "l1_error": err})
+        x = new_x
+        if fixed_iterations is None and err < n * tolerance:
+            break
+    else:
+        if fixed_iterations is None:
+            raise ConvergenceError(
+                f"katz failed to converge in {maxiter} iterations "
+                f"(err={err!r})"
+            )
+    sumsq = float((x * x).sum())
+    norm = 1.0 / math.sqrt(sumsq) if sumsq > 0 else 1.0
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.asarray(ids), "katz": x * norm}),
+        schema="id long, katz double",
+    )
+
+
 def katz_kernel(
     graph_or_blocks,
     attenuation_factor: float = 0.01,
@@ -218,61 +261,36 @@ def katz_kernel(
 ) -> DataFrame:
     """Katz centrality via CSR blocks. Returns ``(id, katz)``.
 
-    A Graph argument builds weighted blocks internally — in memory for the
-    driver loop when it fits, file-backed (``spill_dir`` or a temp dir)
-    for the slice-store loop otherwise; a prebuilt EdgeBlocks must have
-    been built ``with_weights=True`` if the graph is weighted (unweighted
-    blocks run with implicit weight 1.0)."""
+    A Graph argument within the driver caps runs the driver loop over the
+    weighted block :func:`kernel.driver_block_arrays` derives from one
+    collect of its edges; above them it builds weighted blocks file-backed
+    (``spill_dir`` or a temp dir) for the slice-store loop. A prebuilt
+    EdgeBlocks must have been built ``with_weights=True`` if the graph is
+    weighted (unweighted blocks run with implicit weight 1.0)."""
     alpha, beta = attenuation_factor, immediate_neighbor_weight
     total = fixed_iterations if fixed_iterations is not None else maxiter
+    args = (alpha, beta, total, tolerance, fixed_iterations, metrics_sink,
+            maxiter)
+    g = graph_or_blocks
+    drv = (kernel.driver_block_arrays(g)
+           if isinstance(g, Graph) and spill_dir is None else None)
+    if drv is not None:
+        return _driver_katz_loop(g.edges.sparkSession, *drv, *args)
 
     def run(eb: EdgeBlocks) -> DataFrame:
         spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, katz double")
-        blks = _driver_blocks(eb)
-        if blks is None:
+        drv = _driver_blocks(eb)
+        if drv is None:
             return _distributed_katz_loop(
                 eb, alpha, beta, total, tolerance, fixed_iterations,
                 metrics_sink,
             )
-        # per-block bincount + slice accumulation: the slice-store loop's
-        # arithmetic, so values are bit-exact with it
-        x = np.zeros(n)
-        err = None
-        for it in range(total):
-            g_vec = np.zeros(n)
-            for lo, srcs, dsts, ws in blks:
-                if len(srcs) == 0:
-                    continue
-                w = x[srcs]
-                if ws is not None:
-                    w = w * ws
-                g = np.bincount(dsts, weights=w)
-                g_vec[lo : lo + len(g)] += g
-            new_x = alpha * g_vec + beta
-            err = float(np.abs(new_x - x).sum())
-            if metrics_sink is not None:
-                metrics_sink.append({"iteration": it, "l1_error": err})
-            x = new_x
-            if fixed_iterations is None and err < n * tolerance:
-                break
-        else:
-            if fixed_iterations is None:
-                raise ConvergenceError(
-                    f"katz failed to converge in {maxiter} iterations "
-                    f"(err={err!r})"
-                )
-        sumsq = float((x * x).sum())
-        norm = 1.0 / math.sqrt(sumsq) if sumsq > 0 else 1.0
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.asarray(eb.node_ids), "katz": x * norm}),
-            schema="id long, katz double",
-        )
+        return _driver_katz_loop(spark, *drv, *args)
 
     return with_blocks(
         graph_or_blocks, _weighted_build(graph_or_blocks), run, spill_dir,
-        in_memory=fits_driver_graph("katz", graph_or_blocks, spill_dir),
     )
 
 
@@ -707,7 +725,8 @@ def cc_kernel(
     label = min node id in the component (exactly the join path's labels).
 
     A Graph argument that fits the driver caps runs :func:`_driver_cc_loop`
-    over one Arrow collect of the edge pairs (no block layout). Otherwise
+    over the edge view :func:`_driver_graph_arrays` derives from one
+    collect of its edges (no block layout). Otherwise
     it builds :func:`cc_blocks` from the RAW both-directions union
     (matching ``operators/components.py``'s symmetrization — duplicate
     edges are harmless under min) FILE-BACKED under ``spill_dir`` (or a
@@ -723,15 +742,14 @@ def cc_kernel(
         spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, label long")
-        blks = _driver_blocks(eb, slice_store, resume)
-        if blks is None:
+        drv = _driver_blocks(eb, slice_store, resume)
+        if drv is None:
             return _distributed_cc_loop(
                 eb, max_rounds, fixed_rounds, slice_store=slice_store,
                 resume=resume,
             )
-        return _driver_cc_loop(
-            spark, n, blks, eb.node_ids, max_rounds, fixed_rounds
-        )
+        ids, blks = drv
+        return _driver_cc_loop(spark, n, blks, ids, max_rounds, fixed_rounds)
 
     g = graph_or_blocks
     if isinstance(g, Graph) and (
@@ -799,46 +817,28 @@ def _segmented_mode(dsts: np.ndarray, labs: np.ndarray):
 
 
 def _driver_graph_arrays(graph: Graph, edge_mode: str):
-    """(sorted_ids, src_pos, dst_pos) for a SMALL graph, built entirely on
-    the driver (one Arrow ``toPandas`` of the edge pairs — no block-layout
-    Spark jobs), or ``None`` past the driver-loop caps. ``edge_mode``:
+    """(sorted_ids, src_pos, dst_pos) for a SMALL graph, derived in numpy
+    from one collect of its edges, :meth:`Graph.driver_layout`, or
+    ``None`` past the driver-loop caps. ``edge_mode``:
     ``"raw_sym"`` (both directions of the raw rows — cc_blocks' edge set)
     or ``"canonical_sym"`` (deduplicated canonical pairs, self-loops
     dropped, both directions — label_blocks' edge set). Node universe =
     edge endpoints ∪ explicit graph.nodes, exactly ``node_ids()``. Output
     is dst-position sorted like packed blocks, so the driver loops and
     their segmented kernels apply unchanged (identical label results)."""
-    m = graph.num_edges()
-    if not routing.fits_driver(m):
+    lay = graph.driver_layout()
+    if lay is None:
         return None
-    pdf = graph.edges.select(SRC, DST).toPandas()
-    s = pdf[SRC].to_numpy(dtype=np.int64)
-    d = pdf[DST].to_numpy(dtype=np.int64)
-    endpoints = [s, d]
-    if graph.nodes is not None:
-        endpoints.append(
-            graph.nodes.select(ID).toPandas()[ID].to_numpy(dtype=np.int64)
-        )
-    ids = np.unique(np.concatenate(endpoints))
-    n = len(ids)
-    if not routing.fits_driver(m, n):
-        return None
-    sp = np.searchsorted(ids, s)
-    dp = np.searchsorted(ids, d)
+    sp, dp = lay.src, lay.dst
     if edge_mode == "canonical_sym":
-        keep = sp != dp
-        lo = np.minimum(sp[keep], dp[keep])
-        hi = np.maximum(sp[keep], dp[keep])
-        uniq = np.unique(lo * np.int64(n) + hi)
-        lo = uniq // n
-        hi = uniq - lo * n
+        lo, hi = lay.canonical_pairs()
         src_pos = np.concatenate([lo, hi])
         dst_pos = np.concatenate([hi, lo])
     else:
         src_pos = np.concatenate([sp, dp])
         dst_pos = np.concatenate([dp, sp])
     order = np.argsort(dst_pos, kind="stable")
-    return ids, src_pos[order], dst_pos[order]
+    return lay.ids, src_pos[order], dst_pos[order]
 
 
 def _driver_cc_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
@@ -1101,7 +1101,8 @@ def lpa_kernel(
     reference's no-convergence-contract for community detection).
 
     A Graph argument that fits the driver caps runs :func:`_driver_lpa_loop`
-    over one Arrow collect of the edge pairs. Otherwise it builds the
+    over the canonical edge view :func:`_driver_graph_arrays` derives from
+    one collect of its edges. Otherwise it builds the
     SHARED :func:`label_blocks` layout (also valid for :func:`cc_kernel`)
     file-backed under ``spill_dir`` (or a temp dir removed after the
     call), and :func:`_distributed_lpa_loop` keeps the labels in the slice
@@ -1114,15 +1115,14 @@ def lpa_kernel(
         spark, n = eb.spark, eb.n
         if n == 0:
             return spark.createDataFrame([], "id long, label long")
-        blks = _driver_blocks(eb, slice_store, resume)
-        if blks is None:
+        drv = _driver_blocks(eb, slice_store, resume)
+        if drv is None:
             return _distributed_lpa_loop(
                 eb, max_rounds, fixed_rounds, slice_store=slice_store,
                 resume=resume,
             )
-        return _driver_lpa_loop(
-            spark, n, blks, eb.node_ids, max_rounds, fixed_rounds
-        )
+        ids, blks = drv
+        return _driver_lpa_loop(spark, n, blks, ids, max_rounds, fixed_rounds)
 
     g = graph_or_blocks
     if isinstance(g, Graph) and (

@@ -32,10 +32,18 @@ Physical design (why this beats the three-way self-join at bench scale):
    SHUFFLED through the wedge join there — never materializes outside a
    task's chunk buffer.
 
-Shared-filesystem contract: like :class:`kernel.LocalSliceStore`, the key
-file is written/read via one path visible to driver and executors (local
-mode, NFS/Lustre). The ``triangle_count(strategy="join")`` plan remains
-the no-shared-fs fallback.
+Within the driver caps (``routing.fits_driver``) steps 1-2 run in the
+driver process instead, over one collect of the edges
+(:meth:`Graph.driver_layout`), and the key array stays in memory: up to
+``routing.DRIVER_MAX_WEDGES`` wedges one :func:`_count_span` call counts
+every rank range there (no file, no Spark job); above it step 3 runs as
+usual, with the array broadcast to the tasks instead of a file.
+
+Shared-filesystem contract (above the driver caps): like
+:class:`kernel.LocalSliceStore`, the key file is written/read via one path
+visible to driver and executors (local mode, NFS/Lustre). The
+``triangle_count(strategy="join")`` plan remains the no-shared-fs
+fallback.
 """
 
 from __future__ import annotations
@@ -99,12 +107,12 @@ def _write_sorted_keys(spark, keys_df, path: str) -> int:
     return m
 
 
-def _count_span(keys_path: str, n: int, lo: int, hi: int,
+def _count_span(keys: np.ndarray, n: int, lo: int, hi: int,
                 chunk_pairs: int) -> int:
     """Triangles whose apex (lowest-rank vertex) lies in rank range
     [lo, hi): enumerate the range's wedges vectorized in memory-bounded
-    chunks and binary-search the closing keys against the full file."""
-    keys = np.load(keys_path, mmap_mode="r")
+    chunks and binary-search the closing keys against the full sorted key
+    array (in memory, or the mmap'd key file)."""
     m = keys.shape[0]
     s = int(np.searchsorted(keys, lo * n))
     e = int(np.searchsorted(keys, hi * n))
@@ -148,12 +156,15 @@ def _count_span(keys_path: str, n: int, lo: int, hi: int,
     return tri
 
 
-def _count_ranges(spark, keys_path: str, n: int, m: int, nb: int,
+def _count_ranges(spark, keys, n: int, m: int, nb: int,
                   chunk_pairs: int) -> int:
     """Distributed count over edge-balanced rank ranges: O(nb) probes of
-    the mmap'd key file pick the split points, each task counts its span
-    (:func:`_count_span`) and returns one scalar."""
-    probe = np.load(keys_path, mmap_mode="r")
+    the sorted keys pick the split points, each task counts its span
+    (:func:`_count_span`) and returns one scalar. ``keys`` is the key
+    file's path (tasks mmap it) or the in-memory key array (shipped to
+    the tasks once, as a broadcast)."""
+    keys_path = keys if isinstance(keys, str) else None
+    probe = np.load(keys_path, mmap_mode="r") if keys_path else keys
     cuts = sorted(
         {int(probe[min(j * m // nb, m - 1)] // n) for j in range(1, nb)}
     )
@@ -166,23 +177,51 @@ def _count_ranges(spark, keys_path: str, n: int, m: int, nb: int,
     range_df = spark.createDataFrame(
         ranges, "lo long, hi long"
     ).repartition(len(ranges))
+    shipped = None if keys_path else spark.sparkContext.broadcast(keys)
 
     def count(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        arr = (np.load(keys_path, mmap_mode="r") if keys_path
+               else shipped.value)
         for pdf in batches:
             for _, row in pdf.iterrows():
                 yield pd.DataFrame(
                     {
                         "tri": [
                             _count_span(
-                                keys_path, n, int(row["lo"]),
-                                int(row["hi"]), chunk_pairs,
+                                arr, n, int(row["lo"]), int(row["hi"]),
+                                chunk_pairs,
                             )
                         ]
                     }
                 )
 
-    out = range_df.mapInPandas(count, schema="tri long").collect()
+    try:
+        out = range_df.mapInPandas(count, schema="tri long").collect()
+    finally:
+        if shipped is not None:
+            shipped.destroy()
     return int(sum(r["tri"] for r in out))
+
+
+def _rank_keys(lay) -> np.ndarray:
+    """Sorted degree-rank edge keys ``ra·n + rb`` (``ra < rb``) of a
+    :class:`DriverLayout`'s canonical undirected edges."""
+    n = lay.n
+    lo, hi = lay.canonical_pairs()
+    deg = np.bincount(lo, minlength=n) + np.bincount(hi, minlength=n)
+    rank = np.empty(n, dtype=np.int64)
+    rank[np.argsort(deg, kind="stable")] = np.arange(n)
+    ra, rb = rank[lo], rank[hi]
+    return np.sort(np.minimum(ra, rb) * np.int64(n) + np.maximum(ra, rb))
+
+
+def _wedges(keys: np.ndarray, n: int) -> int:
+    """The wedges :func:`_count_span` enumerates over all of ``keys``:
+    ``L(L-1)/2`` summed over the runs of ``L`` keys sharing a low rank."""
+    a = keys // n
+    starts = np.flatnonzero(np.r_[True, a[1:] != a[:-1]])
+    runs = np.diff(np.r_[starts, len(keys)])
+    return int((runs * (runs - 1) // 2).sum())
 
 
 def triangle_count_kernel(
@@ -195,14 +234,36 @@ def triangle_count_kernel(
     kernel. Semantics identical to ``operators/triangles.py:triangle_count``
     (parity-asserted in tests); returns the scalar count.
 
-    ``spill_dir``: directory for the key file (default: a fresh temp dir,
-    removed afterwards). ``chunk_pairs`` bounds any task's in-flight wedge
-    buffer (arrays of ~5x chunk_pairs int64)."""
+    Within the driver caps the keys are built in this process from one
+    collect of the edges (:meth:`Graph.driver_layout`): degree-rank keys
+    of its canonical pairs, with no key file. Up to
+    ``routing.DRIVER_MAX_WEDGES`` wedges the same :func:`_count_span` the
+    distributed tasks run counts them here, with no Spark job; more wedges
+    go to :func:`_count_ranges` with the key array in memory. The count is
+    invariant to rank assignment, and the (degree, position) order is the
+    distributed route's (degree, id) order, as positions follow sorted
+    ids.
+
+    ``spill_dir``: directory for the key file above the driver caps
+    (default: a fresh temp dir, removed afterwards). ``chunk_pairs``
+    bounds the in-flight wedge buffer of the count (arrays of ~5x
+    chunk_pairs int64)."""
     import os
     import shutil
     import tempfile
 
     spark = graph.edges.sparkSession
+    nb = int(
+        num_blocks
+        if num_blocks is not None
+        else spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    lay = graph.driver_layout()
+    if lay is not None:
+        keys = _rank_keys(lay)
+        if _wedges(keys, lay.n) <= routing.DRIVER_MAX_WEDGES:
+            return _count_span(keys, lay.n, 0, lay.n, chunk_pairs)
+        return _count_ranges(spark, keys, lay.n, len(keys), nb, chunk_pairs)
     n = graph.num_nodes()
     if n == 0:
         return 0
@@ -213,59 +274,6 @@ def triangle_count_kernel(
             f"triangle kernel rank keys need n < 2^31 (got {n}); use "
             f"triangle_count(strategy='join')"
         )
-    nb = int(
-        num_blocks
-        if num_blocks is not None
-        else spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    # Within the driver caps the degree-rank relabel + key-file build runs
-    # on the driver (one Arrow collect + numpy sort) instead of the
-    # distributed rank-sort/key-sort pipeline, whose Spark jobs dominate
-    # the whole query at bench scale. The triangle COUNT stays a
-    # distributed job either way; the count is invariant to rank
-    # assignment, and the local (degree, id) lexsort is the same total
-    # order the distributed rank sort uses.
-    if routing.fits_driver(graph.num_edges()):
-        import shutil as _sh
-
-        pdf = graph.canonical_undirected_edges().select(SRC, DST).toPandas()
-        owned_dir = spill_dir is None
-        if owned_dir:
-            spill_dir = tempfile.mkdtemp(prefix="mgspark_trik_")
-        os.makedirs(spill_dir, exist_ok=True)
-        keys_path = os.path.join(spill_dir, "tri_keys.npy")
-        try:
-            if len(pdf) == 0:
-                return 0
-            s = pdf[SRC].to_numpy(dtype=np.int64)
-            d = pdf[DST].to_numpy(dtype=np.int64)
-            nodes, inv = np.unique(
-                np.concatenate([s, d]), return_inverse=True
-            )
-            si, di = inv[: len(s)], inv[len(s):]
-            degc = np.bincount(si, minlength=len(nodes)) + np.bincount(
-                di, minlength=len(nodes)
-            )
-            order = np.lexsort((nodes, degc))
-            rank = np.empty(len(nodes), dtype=np.int64)
-            rank[order] = np.arange(len(nodes))
-            ra, rb = rank[si], rank[di]
-            keys = np.sort(
-                np.minimum(ra, rb) * np.int64(n) + np.maximum(ra, rb)
-            )
-            np.save(keys_path, keys)
-            m = len(keys)
-            return _count_ranges(
-                spark, keys_path, n, m, nb, chunk_pairs
-            )
-        finally:
-            if owned_dir:
-                _sh.rmtree(spill_dir, ignore_errors=True)
-            else:
-                try:
-                    os.unlink(keys_path)
-                except FileNotFoundError:
-                    pass
     # canon feeds BOTH the degree table and the rank join — persist once
     canon = graph.canonical_undirected_edges().select(SRC, DST).persist()
     deg = (

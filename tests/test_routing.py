@@ -1,6 +1,8 @@
 """The route planner (``operators/routing.py``): every remaining route of
-each iterative operator agrees on one adversarial graph, and the
-benchmark's layer hooks still resolve."""
+each iterative operator agrees on one adversarial graph (weighted katz and
+the warm starts included), the driver routes read the edges they are
+given through ``Graph.driver_layout``, and the benchmark's layer hooks
+still resolve."""
 
 import glob
 import importlib
@@ -10,6 +12,7 @@ import tempfile
 
 import pytest
 
+import metagraph_spark.graph as graph_mod
 from metagraph_spark.graph import build
 from metagraph_spark.operators import kernel, kernel_algos, routing
 from metagraph_spark.operators.centrality import katz_centrality
@@ -188,3 +191,151 @@ def test_benchmark_layer_hooks_resolve():
             assert hasattr(obj, part), f"{modname}.{attr}"
             obj = getattr(obj, part)
         assert callable(obj), f"{modname}.{attr}"
+
+
+# -------------------------------------------- the Graph's driver layout
+
+def _four_ops(g):
+    """pagerank, CC, LPA and triangles of one handle, all on the driver
+    routes."""
+    return {
+        "pagerank": _by_id(pagerank(g, tolerance=1e-8, maxiter=100), "rank"),
+        "cc": _by_id(connected_components(g), "label"),
+        "lpa": _by_id(label_propagation_community(g, fixed_rounds=3),
+                      "label"),
+        "triangles": triangle_count(g),
+    }
+
+
+def _same(a, b):
+    _close(a["pagerank"], b["pagerank"])
+    assert {k: a[k] for k in ("cc", "lpa", "triangles")} == {
+        k: b[k] for k in ("cc", "lpa", "triangles")}
+
+
+def test_views_sharing_metadata_match_fresh_handles(spark, two_partitions):
+    """A directed Graph and an undirected view over the same edges and
+    metadata dict (the stream refresh pattern) each give the results of a
+    fresh handle of its own kind, whichever of the two runs first."""
+    base = _graph(spark, True)
+    counts = {"num_nodes": base.num_nodes(), "num_edges": base.num_edges()}
+
+    def handle(directed, metadata=None):
+        return graph_mod.Graph(edges=base.edges, nodes=base.nodes,
+                               is_directed=directed,
+                               metadata=dict(counts) if metadata is None
+                               else metadata)
+
+    fresh = {d: _four_ops(handle(d)) for d in (True, False)}
+    assert fresh[False]["triangles"] == 2
+    for first in (True, False):
+        g = handle(True)
+        gu = handle(False, g.metadata)
+        got = {h.is_directed: _four_ops(h)
+               for h in ([g, gu] if first else [gu, g])}
+        for d in (True, False):
+            _same(got[d], fresh[d])
+
+
+def test_layout_follows_new_edges(spark, two_partitions):
+    """Reassigning ``edges``, or partitioning them, gives the results of
+    the new edges."""
+    g = _graph(spark, False)
+    assert triangle_count(g) == 2
+    # drop (3, 1): one triangle left, same node set
+    fewer = [e for e in EDGES if e != (3, 1)]
+    g.edges = build(df_from_edges(spark, fewer, weighted=False)).edges
+    g.metadata.pop("num_edges")
+    assert triangle_count(g) == 1
+    fresh = build(df_from_edges(spark, fewer, weighted=False),
+                  nodes=g.nodes, is_directed=False)
+    _same(_four_ops(g), _four_ops(fresh))
+    p = fresh.partition_by_src(2)
+    _same(_four_ops(p), _four_ops(fresh))
+    p.unpersist()
+
+
+def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
+                                           monkeypatch):
+    """pagerank, CC, LPA and triangles each collect the edges once on the
+    driver routes; calls routed above the driver caps collect nothing."""
+    builds = spy_calls(monkeypatch, graph_mod, "collect_driver_layout")
+    g = _graph(spark, False)
+    _four_ops(g)
+    assert len(builds) == 4
+
+    g = graph_mod.Graph(edges=g.edges, nodes=g.nodes, is_directed=False,
+                        metadata={"num_nodes": 8, "num_edges": len(EDGES)})
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    assert routing.plan("pagerank", g)[0] == "kernel-distributed"
+    assert routing.plan("triangles", g)[0] == "tri_kernel"
+    assert triangle_count(g) == 2
+    connected_components(g, fixed_rounds=1,
+                         kernel_spill_dir=str(tmp_path / "cc")).collect()
+    pagerank(g, fixed_iterations=1,
+             kernel_spill_dir=str(tmp_path / "pr")).collect()
+    assert len(builds) == 4
+
+
+# ------------------------------------------------- route gaps: weights, warm
+
+def test_weighted_katz_agrees_on_every_route(spark, tmp_path, two_partitions):
+    """Katz over weighted, symmetrized duplicate and self-loop edges."""
+    weighted = [(s, d, 0.5 + 0.25 * i) for i, (s, d) in enumerate(EDGES)]
+    nodes = spark.createDataFrame([(9,)], "id long").coalesce(1)
+    g = build(df_from_edges(spark, weighted).coalesce(1), nodes=nodes,
+              is_directed=False)
+    out = _run_routes(tmp_path, "katz", g, ROUTES, lambda d: _by_id(
+        katz_centrality(g, fixed_iterations=4, kernel_spill_dir=d), "katz"))
+    assert set(out["join"]) == IDS
+    for route in ROUTES[:-1]:
+        _close(out["join"], out[route])
+
+
+def test_warm_starts_agree_with_cold_driver_runs(spark, two_partitions):
+    """``incremental_pagerank`` seeded from the cold ranks and
+    ``incremental_connected_components`` seeded from the labels before an
+    append agree with cold kernel-driver runs on the full graph."""
+    from metagraph_spark.operators.components import (
+        incremental_connected_components,
+    )
+    from metagraph_spark.operators.pagerank import incremental_pagerank
+
+    g = _graph(spark, True)
+    assert routing.plan("pagerank", g)[0] == "kernel-driver"
+    cold = pagerank(g, tolerance=1e-10, maxiter=200)
+    warm = _by_id(incremental_pagerank(g, cold, tolerance=1e-8,
+                                       maxiter=100), "rank")
+    cold = _by_id(cold, "rank")
+    assert set(warm) == IDS
+    for k in cold:
+        assert math.isclose(warm[k], cold[k], rel_tol=0, abs_tol=1e-6), k
+
+    # before the append, (3, BIG) was missing: two components
+    before = build(df_from_edges(spark, [e for e in EDGES if e != (3, BIG)],
+                                 weighted=False).coalesce(1),
+                   nodes=g.nodes, is_directed=False)
+    prev = connected_components(before)
+    assert len({r["label"] for r in prev.collect()}) == 3
+    warm = _by_id(incremental_connected_components(g, prev), "label")
+    assert warm == _by_id(connected_components(g), "label")
+
+
+def test_triangles_plan_driver_route_without_shared_fs(spark, monkeypatch):
+    """Within the driver caps the triangle count needs no filesystem
+    shared with the executors, counted in the driver or, past the wedge
+    cap, by a Spark job over the broadcast keys; above the caps it still
+    does."""
+    from metagraph_spark.operators import tri_kernel
+
+    monkeypatch.setattr(kernel, "shared_fs_available", lambda *a: False)
+    g = _graph(spark, False)
+    assert routing.plan("triangles", g)[0] == "tri_kernel"
+    jobs = spy_calls(monkeypatch, tri_kernel, "_count_ranges")
+    assert triangle_count(g) == 2
+    assert not jobs
+    monkeypatch.setattr(routing, "DRIVER_MAX_WEDGES", 0)
+    assert triangle_count(g) == 2
+    assert jobs == [2]
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    assert routing.plan("triangles", g)[0] == "join"
