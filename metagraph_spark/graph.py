@@ -22,9 +22,11 @@ Spark-first design notes:
   ``plugins/scipy/translators.py:120-126``).
 - small graphs (within ``routing.fits_driver``) reach the driver routes
   as a positional layout, :meth:`Graph.driver_layout`: the stored edge
-  rows as int32 positions into the sorted ids, from one Arrow collect per
-  driver-route call (reference analog: the translation of an edge table
-  to a scipy CSR graph).
+  rows as int32 positions into the sorted ids, from one Arrow collect at
+  the first driver-route call on a handle, then kept in its ``metadata``
+  while ``edges`` and ``nodes`` stay the same objects (reference analogs:
+  the translation of an edge table to a scipy CSR graph, and the
+  typecache's once-computed properties).
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ from pyspark.sql import functions as F
 
 SRC, DST, WEIGHT = "src", "dst", "weight"
 ID, VALUE = "id", "value"
+# metadata key of the kept driver layout: (edges, nodes, DriverLayout)
+_LAYOUT = "driver_layout"
 
 class DriverLayout(NamedTuple):
     """The stored edge rows of one Graph, on the driver, in positions.
@@ -45,7 +49,8 @@ class DriverLayout(NamedTuple):
     ``ids`` are the sorted node ids (edge endpoints ∪ ``graph.nodes``);
     ``src``/``dst`` are int32 positions into ``ids``, one per stored edge
     row in collect order; ``weights`` is the float64 weight column or
-    ``None``. Each driver route derives its own edge view (directed,
+    ``None``. The arrays are read-only, as a Graph handle keeps them
+    across calls. Each driver route derives its own edge view (directed,
     symmetrized, canonical) from these base arrays."""
 
     ids: np.ndarray
@@ -71,7 +76,7 @@ class DriverLayout(NamedTuple):
 
 def collect_driver_layout(graph: "Graph") -> DriverLayout:
     """One Arrow ``toPandas`` of the edges (plus one of ``nodes`` when
-    set), relabelled to positions in numpy."""
+    set), relabelled to positions in numpy; the arrays are read-only."""
     cols = [SRC, DST] + ([WEIGHT] if graph.is_weighted else [])
     pdf = graph.edges.select(*cols).toPandas()
     s = pdf[SRC].to_numpy(dtype=np.int64)
@@ -85,12 +90,16 @@ def collect_driver_layout(graph: "Graph") -> DriverLayout:
     weights = (
         pdf[WEIGHT].to_numpy(dtype=np.float64) if graph.is_weighted else None
     )
-    return DriverLayout(
+    lay = DriverLayout(
         ids,
         np.searchsorted(ids, s).astype(np.int32),
         np.searchsorted(ids, d).astype(np.int32),
         weights,
     )
+    for a in lay:
+        if a is not None:
+            a.setflags(write=False)
+    return lay
 
 
 @dataclass
@@ -144,17 +153,33 @@ class Graph:
         return n
 
     def driver_layout(self) -> Optional[DriverLayout]:
-        """The :class:`DriverLayout` of the stored edge rows, collected by
-        this call (:func:`collect_driver_layout`); ``None`` above the
-        driver caps. Nothing is cached: a driver route calls this once and
-        derives its edge view from the result."""
+        """The :class:`DriverLayout` of the stored edge rows, or ``None``
+        above the driver caps (``routing.fits_driver``).
+
+        The first call on a handle collects it (:func:`collect_driver_layout`)
+        and keeps it in ``metadata``; later calls reuse it while ``edges``
+        and ``nodes`` are the objects it was collected from, so handles
+        sharing one metadata dict over the same DataFrames share one
+        collect. Like ``num_nodes``, it is a snapshot of those objects:
+        reassigning ``edges`` or ``nodes`` collects again, while a source
+        that changes under the same DataFrame is not re-read. Nothing is
+        collected or kept above the caps. The kept arrays take 8 B per
+        vertex and 8 B per edge (16 B when weighted): at most ~240 MB at
+        the caps. :meth:`unpersist` drops them."""
         from metagraph_spark.operators import routing
 
         m = self.num_edges()
         if not routing.fits_driver(m, self.metadata.get("num_nodes", 0)):
             return None
-        lay = collect_driver_layout(self)
-        return lay if routing.fits_driver(m, lay.n) else None
+        kept = self.metadata.get(_LAYOUT)
+        if (kept is None or kept[0] is not self.edges
+                or kept[1] is not self.nodes):
+            self.metadata.pop(_LAYOUT, None)
+            kept = (self.edges, self.nodes, collect_driver_layout(self))
+            if not routing.fits_driver(m, kept[2].n):
+                return None
+            self.metadata[_LAYOUT] = kept
+        return kept[2] if routing.fits_driver(m, kept[2].n) else None
 
     def has_negative_weights(self) -> bool:
         """Computed once and cached on the handle (reference computes
@@ -214,7 +239,9 @@ class Graph:
             "spark.sql.shuffle.partitions"
         )
         e = self.edges.repartition(int(n), SRC).persist()
-        meta = dict(self.metadata)
+        # the new edges never hit the kept layout: leave it out so the new
+        # handle does not keep the old arrays alive
+        meta = {k: v for k, v in self.metadata.items() if k != _LAYOUT}
         meta["partitioned_by_src"] = int(n)
         return Graph(
             edges=e,
@@ -224,6 +251,7 @@ class Graph:
         )
 
     def unpersist(self) -> None:
+        self.metadata.pop(_LAYOUT, None)
         self.edges.unpersist()
 
 

@@ -21,8 +21,9 @@
     crosses the driver. ONE Spark job, ZERO shuffles per superstep.
 
   A Graph within the driver caps builds no blocks: the driver loop runs
-  over one dst-sorted block derived from one collect of the stored edge
-  rows, :meth:`Graph.driver_layout` (``driver_block_arrays``). A Graph
+  over one dst-sorted block derived per call from the handle's kept
+  collect of the stored edge rows, :meth:`Graph.driver_layout`
+  (``driver_block_arrays``). A Graph
   above the caps is laid out file-backed (under ``spill_dir``, or a temp
   dir removed after the call). Which operator call reaches which loop is
   decided by ``operators/routing.py``. This mirrors the reference's
@@ -1131,7 +1132,8 @@ def pagerank_kernel(
 
     Accepts a Graph or a prebuilt EdgeBlocks (amortize the layout across
     runs). A Graph within the driver caps runs the driver loop over one
-    block derived from one collect, :meth:`Graph.driver_layout`
+    block derived from the handle's kept collect,
+    :meth:`Graph.driver_layout`
     (:func:`driver_block_arrays`); above the caps it is laid out
     file-backed (under ``spill_dir``, or a temp dir removed after the
     call). Blocks that fit ``routing.fits_driver`` run the driver loop;

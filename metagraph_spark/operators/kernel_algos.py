@@ -11,7 +11,8 @@ arithmetic, so their results are bit-identical:
   ``_driver_lpa_loop``) — the whole loop in numpy on the driver, no Spark
   job per superstep; taken when the graph or layout fits
   ``routing.fits_driver``. A Graph builds no block layout for them: each
-  call collects its stored edge rows once, :meth:`Graph.driver_layout`,
+  call reads its stored edge rows from :meth:`Graph.driver_layout`
+  (collected at the first driver-route call on the handle, then kept)
   and derives its one dst-sorted block in numpy (katz through
   ``kernel.driver_block_arrays``, CC and LPA through
   ``_driver_graph_arrays``);
@@ -818,7 +819,8 @@ def _segmented_mode(dsts: np.ndarray, labs: np.ndarray):
 
 def _driver_graph_arrays(graph: Graph, edge_mode: str):
     """(sorted_ids, src_pos, dst_pos) for a SMALL graph, derived in numpy
-    from one collect of its edges, :meth:`Graph.driver_layout`, or
+    per call from the handle's kept collect of its edges,
+    :meth:`Graph.driver_layout`, or
     ``None`` past the driver-loop caps. ``edge_mode``:
     ``"raw_sym"`` (both directions of the raw rows — cc_blocks' edge set)
     or ``"canonical_sym"`` (deduplicated canonical pairs, self-loops

@@ -34,8 +34,9 @@ hope          ``kernel-driver`` when ``m <= DRIVER_MAX_EDGES`` and
 ============  ====================================================
 
 Every driver route (``kernel-driver``, and ``tri_kernel`` within the
-driver caps) collects the stored edge rows once per call,
-``Graph.driver_layout``; :func:`plan` collects nothing. Every
+driver caps) reads the stored edge rows from ``Graph.driver_layout``,
+collected at the first such call on a handle and kept on it;
+:func:`plan` collects nothing. Every
 kernel route needs ``n <= POSITIONAL_MAX_VERTICES`` (int32 positions). An
 explicit ``strategy="kernel"`` skips the auto edge cap and raises
 ``ValueError`` where no kernel route exists.

@@ -33,7 +33,7 @@ Physical design (why this beats the three-way self-join at bench scale):
    task's chunk buffer.
 
 Within the driver caps (``routing.fits_driver``) steps 1-2 run in the
-driver process instead, over one collect of the edges
+driver process instead, over the handle's kept collect of the edges
 (:meth:`Graph.driver_layout`), and the key array stays in memory: up to
 ``routing.DRIVER_MAX_WEDGES`` wedges one :func:`_count_span` call counts
 every rank range there (no file, no Spark job); above it step 3 runs as
@@ -234,9 +234,10 @@ def triangle_count_kernel(
     kernel. Semantics identical to ``operators/triangles.py:triangle_count``
     (parity-asserted in tests); returns the scalar count.
 
-    Within the driver caps the keys are built in this process from one
-    collect of the edges (:meth:`Graph.driver_layout`): degree-rank keys
-    of its canonical pairs, with no key file. Up to
+    Within the driver caps the keys are built in this process from the
+    handle's kept collect of the edges (:meth:`Graph.driver_layout`),
+    derived per call: degree-rank keys of its canonical pairs, with no
+    key file. Up to
     ``routing.DRIVER_MAX_WEDGES`` wedges the same :func:`_count_span` the
     distributed tasks run counts them here, with no Spark job; more wedges
     go to :func:`_count_ranges` with the key array in memory. The count is

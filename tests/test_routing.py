@@ -237,9 +237,10 @@ def test_views_sharing_metadata_match_fresh_handles(spark, two_partitions):
             _same(got[d], fresh[d])
 
 
-def test_layout_follows_new_edges(spark, two_partitions):
-    """Reassigning ``edges``, or partitioning them, gives the results of
-    the new edges."""
+def test_layout_follows_new_edges(spark, two_partitions, monkeypatch):
+    """Reassigning ``edges`` or ``nodes``, or partitioning the edges,
+    collects again and gives the results of a fresh handle."""
+    builds = spy_calls(monkeypatch, graph_mod, "collect_driver_layout")
     g = _graph(spark, False)
     assert triangle_count(g) == 2
     # drop (3, 1): one triangle left, same node set
@@ -247,25 +248,56 @@ def test_layout_follows_new_edges(spark, two_partitions):
     g.edges = build(df_from_edges(spark, fewer, weighted=False)).edges
     g.metadata.pop("num_edges")
     assert triangle_count(g) == 1
+    assert len(builds) == 2
     fresh = build(df_from_edges(spark, fewer, weighted=False),
                   nodes=g.nodes, is_directed=False)
     _same(_four_ops(g), _four_ops(fresh))
+    assert len(builds) == 3
+    # one more isolated node, same edges
+    g.nodes = spark.createDataFrame([(9,), (11,)], "id long").coalesce(1)
+    g.metadata.pop("num_nodes", None)
+    fresh = build(fresh.edges, nodes=g.nodes, is_directed=False)
+    got = _four_ops(fresh)
+    assert got["cc"][11] == 11
+    _same(_four_ops(g), got)
+    assert len(builds) == 5
     p = fresh.partition_by_src(2)
-    _same(_four_ops(p), _four_ops(fresh))
+    assert graph_mod._LAYOUT in fresh.metadata
+    assert graph_mod._LAYOUT not in p.metadata
+    _same(_four_ops(p), got)
+    assert len(builds) == 6
     p.unpersist()
 
 
 def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
                                            monkeypatch):
-    """pagerank, CC, LPA and triangles each collect the edges once on the
-    driver routes; calls routed above the driver caps collect nothing."""
+    """pagerank, CC, LPA and triangles on one handle collect the edges
+    once, and so do a directed and an undirected handle sharing one
+    metadata dict; the kept arrays are read-only and ``unpersist`` drops
+    them; calls routed above the driver caps collect nothing."""
     builds = spy_calls(monkeypatch, graph_mod, "collect_driver_layout")
     g = _graph(spark, False)
     _four_ops(g)
-    assert len(builds) == 4
+    assert len(builds) == 1
+    lay = g.driver_layout()
+    assert lay is builds[0]
+    for a in (lay.ids, lay.src, lay.dst):
+        with pytest.raises(ValueError, match="read-only"):
+            a[0] = 0
+
+    counts = {"num_nodes": 8, "num_edges": len(EDGES)}
+    d = graph_mod.Graph(edges=g.edges, nodes=g.nodes, is_directed=True,
+                        metadata=dict(counts))
+    u = graph_mod.Graph(edges=g.edges, nodes=g.nodes, is_directed=False,
+                        metadata=d.metadata)
+    pagerank(d, fixed_iterations=2).collect()
+    assert triangle_count(u) == 2
+    assert len(builds) == 2
+    u.unpersist()
+    assert graph_mod._LAYOUT not in d.metadata
 
     g = graph_mod.Graph(edges=g.edges, nodes=g.nodes, is_directed=False,
-                        metadata={"num_nodes": 8, "num_edges": len(EDGES)})
+                        metadata=dict(counts))
     monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
     assert routing.plan("pagerank", g)[0] == "kernel-distributed"
     assert routing.plan("triangles", g)[0] == "tri_kernel"
@@ -274,7 +306,8 @@ def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
                          kernel_spill_dir=str(tmp_path / "cc")).collect()
     pagerank(g, fixed_iterations=1,
              kernel_spill_dir=str(tmp_path / "pr")).collect()
-    assert len(builds) == 4
+    assert len(builds) == 2
+    assert graph_mod._LAYOUT not in g.metadata
 
 
 # ------------------------------------------------- route gaps: weights, warm
@@ -339,3 +372,30 @@ def test_triangles_plan_driver_route_without_shared_fs(spark, monkeypatch):
     assert jobs == [2]
     monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
     assert routing.plan("triangles", g)[0] == "join"
+
+
+def test_incremental_triangles_agree_with_cold_routes(spark, tmp_path,
+                                                      two_partitions):
+    """``incremental_triangle_count`` over one split of the adversarial
+    graph: the batch closes both triangles, one of them with two new
+    edges, and carries a reversed duplicate and a self-loop. The updated
+    count equals the cold count on the ``tri_kernel`` and ``join``
+    routes."""
+    from metagraph_spark.operators.triangles import (
+        incremental_triangle_count,
+    )
+
+    batch = [(3, 1), (1, 3), (2, 3), (3, 3), (BIG, 4), (2, -5)]
+    old = [e for e in EDGES if e not in batch]
+    full = build(df_from_edges(spark, old + batch, weighted=False)
+                 .coalesce(1), nodes=_graph(spark, False).nodes,
+                 is_directed=False)
+    before = build(df_from_edges(spark, old, weighted=False).coalesce(1),
+                   nodes=full.nodes, is_directed=False)
+    prev = triangle_count(before)
+    assert prev == 0
+    cold = _run_routes(tmp_path, "triangles", full, ["tri_kernel", "join"],
+                       lambda d: triangle_count(full, kernel_spill_dir=d))
+    assert cold == {"tri_kernel": 2, "join": 2}
+    new = spark.createDataFrame(batch, "src long, dst long")
+    assert incremental_triangle_count(full, new, prev) == 2

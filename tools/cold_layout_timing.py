@@ -1,5 +1,6 @@
-"""Per-call timing of the four ``transcript_auto`` analytics, with the
-Graph handle's caches cold on every rep and with one handle reused.
+"""Per-call timing of the four ``transcript_auto`` analytics, with a
+fresh Graph handle on every rep and with one handle reused, and the share
+of driver-route calls that reuse the handle's kept driver layout.
 
     python3 tools/cold_layout_timing.py [--seed 0] [--reps 5]
 
@@ -7,17 +8,22 @@ Run it from the root of a checkout. It builds the ``transcript_auto``
 graph of ``perfbench`` for the seed, in a Spark session with the
 benchmark's settings (``local[<CPUs>]``, 1 GB driver, JIT at C1), and
 times pagerank, connected components, LPA (10 rounds) and triangles as the
-workload calls them, each result collected with ``toPandas()``. After one
-warm-up rep it runs ``--reps`` reps two ways:
+workload calls them, each result collected with ``toPandas()``. All four
+take driver routes, which read ``Graph.driver_layout()``: one Arrow collect
+of the edges at the first such call on a handle, kept in its metadata.
+After one warm-up rep it runs ``--reps`` reps two ways:
 
-- ``cold``: a fresh Graph handle per rep (counts computed untimed, as the
-  workload's set-up does), so whatever a handle caches is rebuilt inside
-  the timed calls;
-- ``reused``: one handle for every rep, as the benchmark's units do.
+- ``cold``: a fresh directed ``g`` and undirected ``gu`` per rep, each
+  with its own copy of the metadata (counts computed untimed, as the
+  workload's set-up does). Pagerank and LPA collect the layout of their
+  handle, and CC and triangles reuse it: 2 of 4 calls hit;
+- ``reused``: one pair of handles for every rep, as the benchmark's units
+  do: after the warm-up rep, 4 of 4 calls hit.
 
 Every rep's outputs must equal the first rep's (pagerank to 1e-12). It
-prints the median seconds of each call and of their sum per mode.
-Everything it writes stays under ``.bench_work/cold_layout/``.
+prints the median seconds of each call and of their sum per mode, and
+the layout cache hits per rep. Everything it writes stays under
+``.bench_work/cold_layout/``.
 """
 
 from __future__ import annotations
@@ -50,6 +56,21 @@ def handles(edges):
     gu = graph.Graph(edges=g.edges, is_directed=False,
                      metadata=dict(g.metadata))
     return g, gu
+
+
+def count_collects() -> list:
+    """Count the driver-layout collects from here on: one list entry per
+    ``graph.collect_driver_layout`` call."""
+    from metagraph_spark import graph
+
+    calls, collect = [], graph.collect_driver_layout
+
+    def counted(g):
+        calls.append(None)
+        return collect(g)
+
+    graph.collect_driver_layout = counted
+    return calls
 
 
 def run_calls(g, gu, lpa_rounds: int) -> tuple[dict, dict]:
@@ -108,13 +129,17 @@ def main(argv=None) -> None:
         edges = g0.edges.persist()
         print(f"seed {args.seed}: {edges.count()} edges")
         rounds = TranscriptAuto.LPA_ROUNDS
-        _, ref = run_calls(*handles(edges), rounds)  # warm-up
+        collects = count_collects()
         reused = handles(edges)
+        _, ref = run_calls(*reused, rounds)  # warm-up
         times = {"cold": [], "reused": []}
+        hits = {mode: 0 for mode in times}
         for _ in range(args.reps):
             for mode in times:
                 g, gu = handles(edges) if mode == "cold" else reused
+                before = len(collects)
                 secs, outs = run_calls(g, gu, rounds)
+                hits[mode] += len(CALLS) - (len(collects) - before)
                 assert_same(ref, outs)
                 times[mode].append(secs)
         for mode, reps in times.items():
@@ -122,7 +147,8 @@ def main(argv=None) -> None:
             total = median(sum(r.values()) for r in reps)
             cells = ", ".join(f"{c} {meds[c]:.3f}" for c in CALLS)
             print(f"{mode}: {cells}, sum {total:.3f} s "
-                  f"(median of {len(reps)} reps)")
+                  f"(median of {len(reps)} reps); layout cache hits "
+                  f"{hits[mode] / len(reps):g} of {len(CALLS)} calls per rep")
         print(f"outputs equal across handles: triangles={ref['triangles']}")
     finally:
         stop_spark(spark)
