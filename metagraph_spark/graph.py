@@ -51,7 +51,8 @@ class DriverLayout(NamedTuple):
     row in collect order; ``weights`` is the float64 weight column or
     ``None``. The arrays are read-only, as a Graph handle keeps them
     across calls. Each driver route derives its own edge view (directed,
-    symmetrized, canonical) from these base arrays."""
+    reversed, :meth:`symmetrized`, :meth:`canonical_pairs`) from these
+    base arrays."""
 
     ids: np.ndarray
     src: np.ndarray
@@ -61,6 +62,17 @@ class DriverLayout(NamedTuple):
     @property
     def n(self) -> int:
         return len(self.ids)
+
+    def symmetrized(self, is_directed: bool):
+        """``(src, dst, weights|None)`` of :meth:`Graph.symmetrized` in
+        positions, in its collect order: the stored rows, then (undirected)
+        the reverse of every non-self-loop row."""
+        s, d, w = self.src, self.dst, self.weights
+        if is_directed:
+            return s, d, w
+        keep = s != d
+        return (np.concatenate([s, d[keep]]), np.concatenate([d, s[keep]]),
+                None if w is None else np.concatenate([w, w[keep]]))
 
     def canonical_pairs(self) -> tuple[np.ndarray, np.ndarray]:
         """Sorted unique int64 position pairs ``(lo, hi)``, ``lo < hi``:

@@ -264,8 +264,11 @@ def eigenvector_centrality(
     (worst case one extra superstep past convergence, same fixpoint).
 
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block kernel
-    (``kernel_algos.py:eigenvector_kernel``, same superstep schedule;
-    ``"auto"`` capped by :func:`routing.plan`)."""
+    (``kernel_algos.py:eigenvector_kernel``, same superstep schedule) as
+    :func:`routing.plan` decides: ``kernel-driver``, a numpy loop over the
+    Graph's driver layout within the driver caps, or ``kernel-broadcast``,
+    one broadcast gather job per superstep over file-backed blocks in a
+    temp dir above them."""
     route, _ = routing.plan("eigenvector", graph, strategy)
     if route.startswith("kernel"):
         from metagraph_spark.operators.kernel_algos import eigenvector_kernel
@@ -377,9 +380,12 @@ def hits_centrality(
     expression as a literal) and the h-side L1 error vs the carried ``prev``
     column (both sides' norms known by then — no separate stats jobs).
 
-    ``strategy="kernel"``/``"auto"`` routes to the two-layout CSR kernel
-    (``kernel_algos.py:hits_kernel``; ``"auto"`` capped by
-    :func:`routing.plan`)."""
+    ``strategy="kernel"``/``"auto"`` routes to the CSR kernel
+    (``kernel_algos.py:hits_kernel``) as :func:`routing.plan` decides:
+    ``kernel-driver``, a numpy loop over a forward and a reversed view of
+    the Graph's driver layout within the driver caps, or
+    ``kernel-broadcast``, two broadcast gather jobs per superstep over
+    forward and reversed file-backed blocks in temp dirs above them."""
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
     route, _ = routing.plan("hits", graph, strategy)
@@ -1163,7 +1169,7 @@ def betweenness_centrality(
         tmask = np.ones(nv, dtype=bool)
     bc_adj = spark.sparkContext.broadcast((indptr, indices, weights, nv, tmask))
 
-    def brandes_batch(pdf: pd.DataFrame):
+    def brandes_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         import heapq
 
         iptr, idx, ws, nvv, tgts = bc_adj.value

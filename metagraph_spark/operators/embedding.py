@@ -142,8 +142,7 @@ def _gauss_np(ids: np.ndarray, col_idx: int, seed: int) -> np.ndarray:
 
 def _hope_driver(
     spark,
-    edges: DataFrame,
-    nodes: DataFrame | None,
+    graph: Graph,
     half: int,
     r: int,
     beta: float,
@@ -151,10 +150,13 @@ def _hope_driver(
     power_iters: int,
     seed: int,
 ) -> DataFrame:
-    """Driver kernel: the identical pipeline over one collected edge list.
+    """Driver kernel: the identical pipeline over the Graph's driver layout.
 
-    The node set is the collected endpoints ∪ the explicit node set (same
-    universe as ``graph.node_ids()``, no distinct job); omega comes from
+    The edge list is ``graph.symmetrized()`` in its collect order
+    (:meth:`DriverLayout.symmetrized` of :meth:`Graph.driver_layout`, the
+    handle's one kept collect), weight 1.0 when unweighted, and the node
+    set its sorted ids (the endpoints ∪ the explicit node set, the
+    universe of ``graph.node_ids()``, no distinct job); omega comes from
     the numpy mix31 twin (hash arithmetic exact; the Box–Muller log/cos
     may differ from the JVM's by an ulp — orders of magnitude inside the
     1e-8 numpy-twin tolerance, and hope_katz has no driver oracle row).
@@ -167,23 +169,14 @@ def _hope_driver(
     the same caveat the round-6 union-sum series merge documented."""
     import pandas as pd
 
-    epdf = edges.toPandas()
-    e_src = epdf[SRC].to_numpy(dtype=np.int64, na_value=0)
-    e_dst = epdf[DST].to_numpy(dtype=np.int64, na_value=0)
-    id_parts = [e_src, e_dst]
-    if nodes is not None:
-        id_parts.append(
-            nodes.select(ID).toPandas()[ID].to_numpy(dtype=np.int64, na_value=0)
-        )
-    ids_sorted = np.unique(np.concatenate(id_parts)) if id_parts else np.array(
-        [], dtype=np.int64
-    )
+    lay = graph.driver_layout()
+    ids_sorted = lay.ids
+    src, dst, w = lay.symmetrized(graph.is_directed)
+    if w is None:
+        w = np.ones(len(src))
     omega = np.column_stack(
         [_gauss_np(ids_sorted, j, seed) for j in range(r)]
     ) if len(ids_sorted) else np.zeros((0, r))
-    src = np.searchsorted(ids_sorted, e_src)
-    dst = np.searchsorted(ids_sorted, e_dst)
-    w = epdf[WEIGHT].to_numpy().astype(float)
 
     n = len(ids_sorted)
 
@@ -306,24 +299,23 @@ def hope_katz_train(
     half = embedding_size // 2
     r = half + oversample
     spark = graph.edges.sparkSession
+    # size-routed driver kernel: within the driver caps (counted on the
+    # edges the driver gathers over — both directions of an undirected
+    # graph) and the |V|·r broadcast budget, the superstep chain is
+    # job-floor-bound, not compute-bound — run the identical pipeline on
+    # the driver over the Graph's driver layout instead of
+    # ~(2q+2)*k_terms Spark jobs
+    route, _ = routing.plan("hope", graph, width=r)
+    if route == "kernel-driver":
+        return _hope_driver(
+            spark, graph, half, r, beta, k_terms, power_iters, seed,
+        )
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = graph.symmetrized() if not graph.is_directed else graph.edges
     if graph.is_weighted:
         edges = edges.select(SRC, DST, WEIGHT)
     else:
         edges = edges.select(SRC, DST, F.lit(1.0).alias(WEIGHT))
-    # size-routed driver kernel: within the driver caps (counted on the
-    # edges the driver collects — both directions of an undirected graph)
-    # and the |V|·r broadcast budget, the superstep chain is
-    # job-floor-bound, not compute-bound — run the identical pipeline on
-    # the driver over two Arrow collects instead of ~(2q+2)*k_terms Spark
-    # jobs
-    route, _ = routing.plan("hope", graph, width=r)
-    if route == "kernel-driver":
-        return _hope_driver(
-            spark, edges, graph.nodes, half, r, beta, k_terms,
-            power_iters, seed,
-        )
     # two cached layouts: the S pass joins on dst and aggregates by src,
     # the S^T pass the reverse. With a small |V|·r state each pass feeds
     # off the cache keyed by its GROUP column and BROADCASTS the state:

@@ -3,10 +3,9 @@
 - ``build_edge_blocks``: one-time layout. Node ids → dense positions
   (sorted-id order); edges → P blocks CONTIGUOUS IN dst (range-partitioned
   by destination), each block's ``srcs``/``dsts`` positional int arrays
-  sorted by local dst. In memory (no ``spill_dir``) each block is one
-  cached DataFrame row of Arrow list columns; file-backed (``spill_dir``)
-  each block is a raw ``.npy`` pair that tasks mmap, and the sorted ids and
-  degrees are files too.
+  sorted by local dst. Each block is a raw ``.npy`` pair under
+  ``spill_dir`` that tasks mmap, and the sorted ids and degrees are files
+  too; there is no in-memory block format.
 - ``pagerank_kernel`` runs one of two superstep loops over the blocks,
   both with the same per-block update (``np.bincount(dsts,
   weights=contrib[srcs])`` into the block's dst slice):
@@ -49,9 +48,6 @@ from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.operators import routing
 
-BLOCK_SCHEMA = "block int, dst_lo long, srcs array<int>, dsts array<int>"
-BLOCK_SCHEMA_W = BLOCK_SCHEMA + ", ws array<double>"
-
 # per-worker cache of the static inv-degree vector, keyed by run_dir
 _VEC_CACHE: dict = {}
 
@@ -73,25 +69,23 @@ def _open_block_weights(path: str):
     return np.load(path + ".ws.npy", mmap_mode="r")
 
 
-def _graph_block(graph: Graph):
+def _graph_block(graph: Graph, reverse: bool = False):
     """``(ids, [(0, srcs, dsts, ws|None)])``, the one-block driver view of
-    a Graph for pagerank and katz: the edges of ``graph.symmetrized()``
-    (its stored rows, plus the reverse of every non-self-loop row when
-    undirected) as positions from :meth:`Graph.driver_layout`, stably
-    sorted by dst so each dst's contributions sum in row order, as in a
-    packed block."""
+    a Graph for pagerank, katz, eigenvector and HITS: the edges of
+    ``graph.symmetrized()`` (:meth:`DriverLayout.symmetrized`) as positions
+    from :meth:`Graph.driver_layout`, each edge turned around when
+    ``reverse`` (HITS's hub gather), stably sorted by dst so each dst's
+    contributions sum in row order, as in a packed block. ``None`` above
+    the driver caps."""
     m = routing.layout_edges("pagerank", graph)
     if not routing.fits_driver(m):
         return None
     lay = graph.driver_layout()
     if lay is None or not routing.fits_driver(m, lay.n):
         return None
-    s, d, w = lay.src, lay.dst, lay.weights
-    if not graph.is_directed:
-        keep = s != d
-        s, d = np.concatenate([s, d[keep]]), np.concatenate([d, s[keep]])
-        if w is not None:
-            w = np.concatenate([w, w[keep]])
+    s, d, w = lay.symmetrized(graph.is_directed)
+    if reverse:
+        s, d = d, s
     order = np.argsort(d, kind="stable")
     return lay.ids, [(0, s[order], d[order], None if w is None else w[order])]
 
@@ -99,62 +93,40 @@ def _graph_block(graph: Graph):
 def driver_block_arrays(eb):
     """The driver loop's inputs ``(ids, [(dst_lo, srcs, dsts, ws|None)])``,
     blocks sorted by ``dst_lo``, or ``None`` when the layout does not fit
-    ``routing.fits_driver`` (checked from .npy headers / one tiny
-    aggregate before any bulk load) or is not driver-readable. A Graph
-    gives one block, :func:`_graph_block`, with ``ws`` its weights
-    (``None`` when unweighted)."""
+    ``routing.fits_driver`` (checked from the .npy headers before any
+    bulk load) or its block files are gone. A Graph gives one block,
+    :func:`_graph_block`, with ``ws`` its weights (``None`` when
+    unweighted)."""
     if isinstance(eb, Graph):
         return _graph_block(eb)
     if not routing.fits_driver(0, eb.n):
         return None
-    if eb.manifest is not None:
-        if not eb.spill_dir:
+    rows = sorted(
+        (int(r["dst_lo"]), r["path"]) for r in eb.manifest.collect()
+    )
+    total = 0
+    for _, path in rows:
+        try:
+            total += np.load(path + ".dsts.npy", mmap_mode="r").shape[0]
+        except FileNotFoundError:
             return None
-        rows = sorted(
-            (int(r["dst_lo"]), r["path"]) for r in eb.manifest.collect()
-        )
-        total = 0
-        for _, path in rows:
-            try:
-                total += np.load(path + ".dsts.npy", mmap_mode="r").shape[0]
-            except FileNotFoundError:
-                return None
-            if not routing.fits_driver(total):
-                return None
-        out = []
-        for lo, path in rows:
-            srcs, dsts = _open_block(path)
-            ws = np.asarray(_open_block_weights(path)) if eb.has_weights else None
-            out.append(
-                (lo, np.asarray(srcs, dtype=np.int64),
-                 np.asarray(dsts, dtype=np.int64), ws)
-            )
-        return eb.node_ids, out
-    total = eb.blocks.agg(
-        F.sum(F.size("srcs")).alias("e")
-    ).collect()[0]["e"]
-    if not routing.fits_driver(total or 0):
-        return None
+        if not routing.fits_driver(total):
+            return None
     out = []
-    for r in sorted(eb.blocks.collect(), key=lambda r: int(r["dst_lo"])):
+    for lo, path in rows:
+        srcs, dsts = _open_block(path)
+        ws = np.asarray(_open_block_weights(path)) if eb.has_weights else None
         out.append(
-            (
-                int(r["dst_lo"]),
-                np.asarray(r["srcs"], dtype=np.int64),
-                np.asarray(r["dsts"], dtype=np.int64),
-                np.asarray(r["ws"], dtype=np.float64)
-                if eb.has_weights
-                else None,
-            )
+            (lo, np.asarray(srcs, dtype=np.int64),
+             np.asarray(dsts, dtype=np.int64), ws)
         )
     return eb.node_ids, out
 
 
 def _driver_blocks(eb, slice_store=None, resume: bool = False):
     """:func:`driver_block_arrays` for the driver loop, or ``None`` when
-    the call takes the slice-store loop: file-backed blocks above the
-    driver caps, or any call with a ``slice_store``/``resume`` contract.
-    In-memory blocks have no slice-store loop, so those cases raise."""
+    the call takes the slice-store (or broadcast) loop: blocks above the
+    driver caps, or any call with a ``slice_store``/``resume`` contract."""
     if resume and slice_store is None:
         raise ValueError(
             "resume=True requires an injected slice_store (the default "
@@ -162,41 +134,24 @@ def _driver_blocks(eb, slice_store=None, resume: bool = False):
             "hold a prior run's vectors)"
         )
     if slice_store is not None:
-        if eb.manifest is None:
-            # never silently drop an explicitly requested store
-            raise ValueError(
-                "slice_store requires file-backed blocks "
-                "(build_edge_blocks(..., spill_dir=...)); in-memory blocks "
-                "run the driver loop, which keeps no slice vectors"
-            )
         return None
-    drv = driver_block_arrays(eb)
-    if drv is None and eb.manifest is None:
-        raise ValueError(
-            f"in-memory EdgeBlocks ({eb.n} vertices) exceed the driver-loop "
-            "caps; rebuild with spill_dir for the slice-store loop"
-        )
-    return drv
+    return driver_block_arrays(eb)
 
 
-def with_blocks(graph_or_blocks, build, run, spill_dir=None,
-                in_memory: bool = False):
+def with_blocks(graph_or_blocks, build, run, spill_dir=None):
     """``run(eb)`` over prebuilt EdgeBlocks, or over the blocks
-    ``build(graph, spill_dir)`` lays out for a Graph: in memory when
-    ``in_memory`` (eigenvector's broadcast gathers), else file-backed under
-    ``spill_dir`` — a temp dir removed after the call when none is given.
-    Blocks built here are unpersisted after ``run``; results are
-    materialized before that (driver DataFrames, or ``truncate_lineage``
-    in the slice-store loops)."""
+    ``build(graph, spill_dir)`` lays out for a Graph under ``spill_dir`` —
+    a temp dir removed after the call when none is given. Blocks built
+    here are unpersisted after ``run``; results are materialized before
+    that (driver DataFrames, or ``truncate_lineage`` in the slice-store
+    loops)."""
     import shutil
     import tempfile
 
     if isinstance(graph_or_blocks, EdgeBlocks):
         return run(graph_or_blocks)
     tmp = None
-    if in_memory:
-        spill_dir = None
-    elif spill_dir is None:
+    if spill_dir is None:
         tmp = spill_dir = tempfile.mkdtemp(prefix="mgspark_blocks_")
     try:
         eb = build(graph_or_blocks, spill_dir)
@@ -212,32 +167,27 @@ def with_blocks(graph_or_blocks, build, run, spill_dir=None,
 class EdgeBlocks:
     """Dense-positional edge blocks + node metadata for kernel supersteps.
 
-    ``spill_dir`` set → blocks live in per-block .npy files; supersteps run
-    over a tiny manifest DataFrame and each python worker mmaps its blocks
-    (no per-superstep JVM→Python Arrow streaming of edges). In that layout
-    the sorted-id and degree vectors are FILES too (written slice-wise by
+    The blocks live in per-block .npy files under ``spill_dir``; supersteps
+    run over a tiny manifest DataFrame and each python worker mmaps its
+    blocks (no per-superstep JVM→Python Arrow streaming of edges). The
+    sorted-id and degree vectors are FILES too (written slice-wise by
     tasks, never collected): driver-resident state is O(num_blocks) —
     ``node_ids``/``out_deg`` are lazy read-only mmaps opened only if a
     caller actually touches them."""
 
-    def __init__(self, blocks_df: DataFrame, node_ids: np.ndarray | None = None,
-                 out_deg: np.ndarray | None = None,
-                 manifest: DataFrame | None = None,
-                 spill_dir: str | None = None, n: int | None = None,
+    def __init__(self, manifest: DataFrame, spill_dir: str, n: int,
                  n_dangling: int | None = None, has_weights: bool = False):
-        self.blocks = blocks_df
-        self._node_ids = node_ids     # sorted original ids, position = index
-        self._out_deg = out_deg       # out-degree per position
-        self.n = n if n is not None else len(node_ids)
-        self.manifest = manifest      # (path, dst_lo) rows when file-backed
-        self.spill_dir = spill_dir    # set when file-backed
-        self.n_dangling = n_dangling  # zero-out-degree count (file layout)
+        self._node_ids = None         # sorted original ids, position = index
+        self._out_deg = None          # out-degree per position
+        self.n = n
+        self.manifest = manifest      # (path, dst_lo) rows, one per block
+        self.spill_dir = spill_dir
+        self.n_dangling = n_dangling  # zero-out-degree count
         self.has_weights = has_weights  # blocks carry a per-edge ws array
 
     @property
     def spark(self):
-        df = self.blocks if self.blocks is not None else self.manifest
-        return df.sparkSession
+        return self.manifest.sparkSession
 
     @property
     def node_ids(self) -> np.ndarray:
@@ -254,15 +204,10 @@ class EdgeBlocks:
         if self._out_deg is None:
             import os
 
-            deg_path = (
-                os.path.join(self.spill_dir, "out_deg.npy")
-                if self.spill_dir is not None
-                else None
-            )
-            # file-backed degree-free layouts (cc_blocks/label_blocks)
-            # must raise the same actionable message as in-memory ones,
-            # not a bare FileNotFoundError on the .npy
-            if deg_path is None or not os.path.exists(deg_path):
+            deg_path = os.path.join(self.spill_dir, "out_deg.npy")
+            # degree-free layouts (cc_blocks/label_blocks) raise an
+            # actionable message, not a bare FileNotFoundError on the .npy
+            if not os.path.exists(deg_path):
                 raise RuntimeError(
                     "EdgeBlocks built with_degrees=False carry no degree "
                     "vector (degree-free kernels: katz/cc/lpa); rebuild "
@@ -272,10 +217,7 @@ class EdgeBlocks:
         return self._out_deg
 
     def unpersist(self) -> None:
-        if self.blocks is not None:
-            self.blocks.unpersist()
-        if self.manifest is not None:
-            self.manifest.unpersist()
+        self.manifest.unpersist()
 
 
 _SHARED_FS_PROBED: dict = {}
@@ -404,7 +346,7 @@ def _write_degree_files(
             p, mode="w+", dtype=np.float64, shape=(n,)
         ).flush()
 
-    def write_slice(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_slice(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         blk = int(key[0])
         lo, hi = _blk_lo(blk, n, nb), _blk_lo(blk + 1, n, nb)
         width = hi - lo
@@ -443,15 +385,16 @@ def build_edge_blocks(
 ) -> EdgeBlocks:
     """One-time layout step (a few shuffles total, then cached).
 
-    ``spill_dir`` (the scale layout): EVERYTHING becomes files on the
-    shared filesystem — each edge block a mmap-able ``.npy`` pair, the
-    sorted-id and degree/inverse-degree vectors single memmap files written
-    slice-wise by tasks. NOTHING O(V) is collected to or held on the
-    driver (VERDICT r3 #5): the positional searchsorted runs against the
-    mmap'd id file in each task, and driver-resident state is the
-    O(num_blocks) manifest plus scalars. Without ``spill_dir``: in-memory
-    Arrow blocks with driver-resident id/degree arrays, read by the driver
-    loops (the small-graph layout; sized by ``routing.fits_driver``).
+    EVERYTHING becomes files under ``spill_dir``, which must be on a
+    filesystem shared with the executors — each edge block a mmap-able
+    ``.npy`` pair, the sorted-id and degree/inverse-degree vectors single
+    memmap files written slice-wise by tasks. NOTHING O(V) is collected to
+    or held on the driver (VERDICT r3 #5): the positional searchsorted runs
+    against the mmap'd id file in each task, and driver-resident state is
+    the O(num_blocks) manifest plus scalars. A call without ``spill_dir``
+    raises: a Graph within the driver caps needs no blocks (the kernels
+    read :meth:`Graph.driver_layout`), and the kernels lay a Graph above
+    them out under a temp dir themselves.
 
     ``edges`` overrides the edge set (must already carry the directions the
     algorithm gathers over — e.g. LPA's canonical-symmetrized set); node
@@ -466,6 +409,13 @@ def build_edge_blocks(
     position table; such blocks cannot feed ``pagerank_kernel``."""
     import os
 
+    if spill_dir is None:
+        raise ValueError(
+            "EdgeBlocks are file-backed: pass a spill_dir on a filesystem "
+            "shared with the executors, or pass the Graph to the kernel, "
+            "which reads its driver layout or lays the blocks out under a "
+            "temp dir"
+        )
     spark = graph.edges.sparkSession
     if num_blocks is None:
         num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -481,174 +431,109 @@ def build_edge_blocks(
     else:
         edges = edges.select(SRC, DST)
 
-    if spill_dir is not None:
-        os.makedirs(spill_dir, exist_ok=True)
-        if not shared_fs_available(spark, spill_dir):
-            # fail FAST at layout time: every later phase (task-side block
-            # mmaps, slice-store vectors) assumes this path is one shared
-            # filesystem; without it the run would die mid-loop or read
-            # stale same-named worker-local files
-            raise RuntimeError(
-                f"spill_dir {spill_dir!r} is not on a filesystem shared "
-                "between the driver and executors (probe token not "
-                "visible); file-backed layouts require a shared FS "
-                "(local mode, NFS/Lustre) — use in-memory blocks or a "
-                "custom slice store"
-            )
-        n = graph.node_ids().count()
-        # more blocks than vertices would produce empty/duplicate ranges
-        nb = max(1, min(nb, n))
-        ids_path = os.path.join(spill_dir, "node_ids.npy")
-        _write_sorted_ids(spark, graph.node_ids(), ids_path, n)
-
-        def to_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids = np.load(ids_path, mmap_mode="r")
-            for pdf in batches:
-                sp = np.searchsorted(ids, pdf[SRC].to_numpy()).astype(np.int64)
-                dp = np.searchsorted(ids, pdf[DST].to_numpy()).astype(np.int64)
-                out = {
-                    "block": (dp * nb // n).astype(np.int32),
-                    "src_blk": (sp * nb // n).astype(np.int32),
-                    "src_pos": sp.astype(np.int32),
-                    "dst_pos": dp.astype(np.int32),
-                }
-                if with_weights:
-                    out["w"] = pdf[WEIGHT].to_numpy(dtype=np.float64)
-                yield pd.DataFrame(out)
-
-        pos_schema = "block int, src_blk int, src_pos int, dst_pos int"
-        if with_weights:
-            pos_schema += ", w double"
-        pos = edges.mapInPandas(to_positions, schema=pos_schema)
-        if with_degrees:
-            # two consumers (block pack + degree files): persist, or the
-            # |E|-row symmetrize+searchsorted+shuffle runs TWICE (measured
-            # as the dominant layout cost at 100M edges)
-            pos = pos.persist()
-
-        def pack_to_file(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            blk = int(key[0])
-            lo = _blk_lo(blk, n, nb)
-            # raw uncompressed .npy pair: tasks mmap these, so the page cache
-            # keeps one host-wide copy instead of one per python worker
-            path = os.path.join(spill_dir, f"block_{blk:05d}")
-            dsts_local = (pdf["dst_pos"].to_numpy() - lo).astype(np.int32)
-            order = np.argsort(dsts_local, kind="stable")
-            np.save(path + ".srcs.npy", pdf["src_pos"].to_numpy()[order])
-            np.save(path + ".dsts.npy", dsts_local[order])
-            if with_weights:
-                np.save(
-                    path + ".ws.npy",
-                    pdf["w"].to_numpy(dtype=np.float64)[order],
-                )
-            return pd.DataFrame({"path": [path], "dst_lo": [lo]})
-
-        manifest = (
-            pos.groupBy("block")
-            .applyInPandas(pack_to_file, schema="path string, dst_lo long")
-            .persist()
+    os.makedirs(spill_dir, exist_ok=True)
+    if not shared_fs_available(spark, spill_dir):
+        # fail FAST at layout time: every later phase (task-side block
+        # mmaps, slice-store vectors) assumes this path is one shared
+        # filesystem; without it the run would die mid-loop or read
+        # stale same-named worker-local files
+        raise RuntimeError(
+            f"spill_dir {spill_dir!r} is not on a filesystem shared "
+            "between the driver and executors (probe token not "
+            "visible); file-backed layouts require a shared FS "
+            "(local mode, NFS/Lustre) — use strategy='join'"
         )
-        # dst ranges with no incoming edges produce no group: materialize
-        # an EMPTY block for each so coverage is always full — the
-        # distributed loop must still WRITE those slices every superstep
-        # (teleport + dangling mass), and refuses a partial manifest
-        present = {int(r["dst_lo"]) for r in manifest.collect()}  # O(nb)
-        missing = [
-            k for k in range(nb) if _blk_lo(k, n, nb) not in present
-        ]
-        if missing:
-            empty = np.array([], dtype=np.int32)
-            extra = []
-            for k in missing:
-                path = os.path.join(spill_dir, f"block_{k:05d}")
-                np.save(path + ".srcs.npy", empty)
-                np.save(path + ".dsts.npy", empty)
-                if with_weights:
-                    np.save(path + ".ws.npy", np.array([], dtype=np.float64))
-                extra.append((path, _blk_lo(k, n, nb)))
-            full = manifest.unionAll(
-                spark.createDataFrame(extra, "path string, dst_lo long")
-            )
-            manifest.unpersist()
-            manifest = full.repartition(nb).persist()
-            manifest.count()
-        if with_degrees:
-            n_dangling = _write_degree_files(pos, spill_dir, n, nb)
-            pos.unpersist()
-        else:
-            n_dangling = None
-        eb = EdgeBlocks(
-            None,
-            manifest=manifest,
-            spill_dir=spill_dir,
-            n=n,
-            n_dangling=n_dangling,
-            has_weights=with_weights,
-        )
-        _save_metadata(eb, spill_dir)
-        return eb
+    n = graph.node_ids().count()
+    # more blocks than vertices would produce empty/duplicate ranges
+    nb = max(1, min(nb, n))
+    ids_path = os.path.join(spill_dir, "node_ids.npy")
+    _write_sorted_ids(spark, graph.node_ids(), ids_path, n)
 
-    # in-memory layout: dense positional mapping via sorted ids (collected
-    # once, broadcast) — the small-graph fast path
-    ids_rows = graph.node_ids().orderBy(ID).collect()
-    node_ids = np.array([r[0] for r in ids_rows], dtype=np.int64)
-    n = len(node_ids)
-    bc_ids = spark.sparkContext.broadcast(node_ids)
-
-    def to_positions_mem(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = bc_ids.value
+    def to_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids = np.load(ids_path, mmap_mode="r")
         for pdf in batches:
-            sp = np.searchsorted(ids, pdf[SRC].to_numpy())
-            dp = np.searchsorted(ids, pdf[DST].to_numpy())
-            blk = (dp.astype(np.int64) * nb // len(ids)).astype(np.int32)
-            out = {"block": blk, "src_pos": sp.astype(np.int32),
-                   "dst_pos": dp.astype(np.int32)}
+            sp = np.searchsorted(ids, pdf[SRC].to_numpy()).astype(np.int64)
+            dp = np.searchsorted(ids, pdf[DST].to_numpy()).astype(np.int64)
+            out = {
+                "block": (dp * nb // n).astype(np.int32),
+                "src_blk": (sp * nb // n).astype(np.int32),
+                "src_pos": sp.astype(np.int32),
+                "dst_pos": dp.astype(np.int32),
+            }
             if with_weights:
                 out["w"] = pdf[WEIGHT].to_numpy(dtype=np.float64)
             yield pd.DataFrame(out)
 
-    pos_schema_mem = "block int, src_pos int, dst_pos int"
+    pos_schema = "block int, src_blk int, src_pos int, dst_pos int"
     if with_weights:
-        pos_schema_mem += ", w double"
-    pos = edges.mapInPandas(to_positions_mem, schema=pos_schema_mem)
+        pos_schema += ", w double"
+    pos = edges.mapInPandas(to_positions, schema=pos_schema)
+    if with_degrees:
+        # two consumers (block pack + degree files): persist, or the
+        # |E|-row symmetrize+searchsorted+shuffle runs TWICE (measured
+        # as the dominant layout cost at 100M edges)
+        pos = pos.persist()
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_to_file(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         blk = int(key[0])
         lo = _blk_lo(blk, n, nb)
-        dsts_local = pdf["dst_pos"].to_numpy() - lo
+        # raw uncompressed .npy pair: tasks mmap these, so the page cache
+        # keeps one host-wide copy instead of one per python worker
+        path = os.path.join(spill_dir, f"block_{blk:05d}")
+        dsts_local = (pdf["dst_pos"].to_numpy() - lo).astype(np.int32)
         order = np.argsort(dsts_local, kind="stable")
-        out = {
-            "block": [blk],
-            "dst_lo": [lo],
-            "srcs": [pdf["src_pos"].to_numpy()[order]],
-            "dsts": [dsts_local[order]],
-        }
+        np.save(path + ".srcs.npy", pdf["src_pos"].to_numpy()[order])
+        np.save(path + ".dsts.npy", dsts_local[order])
         if with_weights:
-            out["ws"] = [pdf["w"].to_numpy(dtype=np.float64)[order]]
-        return pd.DataFrame(out)
+            np.save(
+                path + ".ws.npy",
+                pdf["w"].to_numpy(dtype=np.float64)[order],
+            )
+        return pd.DataFrame({"path": [path], "dst_lo": [lo]})
 
-    blocks = (
+    manifest = (
         pos.groupBy("block")
-        .applyInPandas(pack, schema=BLOCK_SCHEMA_W if with_weights else BLOCK_SCHEMA)
+        .applyInPandas(pack_to_file, schema="path string, dst_lo long")
         .persist()
     )
-    blocks.count()
-
-    # out-degree per position (unweighted, matching pagerank semantics);
-    # degree-free layouts skip the |E|-row aggregation + O(V) collect
-    out_deg = None
-    if with_degrees:
-        deg_rows = (
-            edges.groupBy(SRC).agg(F.count(F.lit(1)).alias("d")).collect()
+    # dst ranges with no incoming edges produce no group: materialize
+    # an EMPTY block for each so coverage is always full — the
+    # distributed loop must still WRITE those slices every superstep
+    # (teleport + dangling mass), and refuses a partial manifest
+    present = {int(r["dst_lo"]) for r in manifest.collect()}  # O(nb)
+    missing = [
+        k for k in range(nb) if _blk_lo(k, n, nb) not in present
+    ]
+    if missing:
+        empty = np.array([], dtype=np.int32)
+        extra = []
+        for k in missing:
+            path = os.path.join(spill_dir, f"block_{k:05d}")
+            np.save(path + ".srcs.npy", empty)
+            np.save(path + ".dsts.npy", empty)
+            if with_weights:
+                np.save(path + ".ws.npy", np.array([], dtype=np.float64))
+            extra.append((path, _blk_lo(k, n, nb)))
+        full = manifest.unionAll(
+            spark.createDataFrame(extra, "path string, dst_lo long")
         )
-        out_deg = np.zeros(n, dtype=np.float64)
-        if deg_rows:
-            srcs = np.searchsorted(node_ids, np.array([r[0] for r in deg_rows]))
-            out_deg[srcs] = np.array([r[1] for r in deg_rows], dtype=np.float64)
-    # unpersist (not destroy): the cached blocks' lineage references the
-    # broadcast; a cache-miss recomputation must be able to re-fetch it
-    bc_ids.unpersist()
-    return EdgeBlocks(blocks, node_ids, out_deg, has_weights=with_weights)
+        manifest.unpersist()
+        manifest = full.repartition(nb).persist()
+        manifest.count()
+    if with_degrees:
+        n_dangling = _write_degree_files(pos, spill_dir, n, nb)
+        pos.unpersist()
+    else:
+        n_dangling = None
+    eb = EdgeBlocks(
+        manifest=manifest,
+        spill_dir=spill_dir,
+        n=n,
+        n_dangling=n_dangling,
+        has_weights=with_weights,
+    )
+    _save_metadata(eb, spill_dir)
+    return eb
 
 
 def _save_metadata(eb: EdgeBlocks, spill_dir: str) -> None:
@@ -687,7 +572,7 @@ def load_edge_blocks(spark, spill_dir: str) -> EdgeBlocks:
         max(1, len(rows))
     ).persist()
     manifest.count()
-    return EdgeBlocks(None, manifest=manifest, spill_dir=spill_dir,
+    return EdgeBlocks(manifest=manifest, spill_dir=spill_dir,
                       n=int(meta["n"]), n_dangling=meta["n_dangling"],
                       has_weights=bool(meta.get("has_weights", False)))
 

@@ -47,8 +47,15 @@ The update rules:
 All accept a prebuilt :class:`EdgeBlocks` (amortize the layout) or a
 Graph. Integer-label kernels (cc, lpa) are EXACTLY equal to the join path
 (asserted in tests/test_kernel_algos.py); katz agrees to float rounding.
-``eigenvector_kernel`` and ``hits_kernel`` broadcast a dense vector per
-superstep (``_gather_once``) over in-memory blocks.
+
+``eigenvector_kernel`` and ``hits_kernel`` keep the same split with a
+broadcast loop in place of the slice-store loop: within the driver caps
+their driver loops (``_driver_eigenvector_loop``/``_driver_hits_loop``)
+gather over blocks derived from :meth:`Graph.driver_layout` (HITS takes
+both its forward and its reversed view from that one collect); above the
+caps each superstep broadcasts the dense vector to one Spark job that
+gathers over the file-backed blocks of a temp dir (``_gather_once``).
+Katz, eigenvector and HITS driver loops share one gather, ``_gather``.
 """
 
 from __future__ import annotations
@@ -62,7 +69,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, SRC, Graph
+from metagraph_spark.graph import DST, SRC, WEIGHT, Graph
 from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
@@ -187,18 +194,6 @@ def _distributed_katz_loop(
     return result
 
 
-def _block_arrays(row, file_backed: bool, weighted: bool):
-    """(srcs, dsts_local, ws|None) for one manifest/blocks row."""
-    if file_backed:
-        srcs, dsts = _open_block(row["path"])
-        ws = _open_block_weights(row["path"]) if weighted else None
-    else:
-        srcs = np.asarray(row["srcs"], dtype=np.int64)
-        dsts = np.asarray(row["dsts"], dtype=np.int64)
-        ws = np.asarray(row["ws"], dtype=np.float64) if weighted else None
-    return srcs, dsts, ws
-
-
 def _weighted_build(graph_or_blocks):
     """Degree-free layout builder carrying the graph's weights."""
     weighted = (
@@ -209,27 +204,34 @@ def _weighted_build(graph_or_blocks):
     )
 
 
+def _gather(blks, vec, n):
+    """``Aᵀ·vec`` over driver-resident blocks ``[(dst_lo, srcs, dsts,
+    ws|None)]``: per block a bincount of ``vec[srcs]·ws`` into its dst
+    slice — the per-block arithmetic of the slice-store and broadcast
+    loops, so values are bit-exact with them over the same blocks."""
+    g_vec = np.zeros(n)
+    for lo, srcs, dsts, ws in blks:
+        if len(srcs) == 0:
+            continue
+        w = vec[srcs]
+        if ws is not None:
+            w = w * ws
+        g = np.bincount(dsts, weights=w)
+        g_vec[lo : lo + len(g)] += g
+    return g_vec
+
+
 def _driver_katz_loop(spark, ids, blks, alpha, beta, total, tolerance,
                       fixed_iterations, metrics_sink, maxiter):
-    """Katz supersteps over driver-resident block arrays: per-block
-    bincount + slice accumulation, the slice-store loop's arithmetic, so
-    values are bit-exact with it."""
+    """Katz supersteps over driver-resident block arrays (:func:`_gather`),
+    no Spark job per superstep."""
     n = len(ids)
     if n == 0:
         return spark.createDataFrame([], "id long, katz double")
     x = np.zeros(n)
     err = None
     for it in range(total):
-        g_vec = np.zeros(n)
-        for lo, srcs, dsts, ws in blks:
-            if len(srcs) == 0:
-                continue
-            w = x[srcs]
-            if ws is not None:
-                w = w * ws
-            g = np.bincount(dsts, weights=w)
-            g_vec[lo : lo + len(g)] += g
-        new_x = alpha * g_vec + beta
+        new_x = alpha * _gather(blks, x, n) + beta
         err = float(np.abs(new_x - x).sum())
         if metrics_sink is not None:
             metrics_sink.append({"iteration": it, "l1_error": err})
@@ -295,33 +297,71 @@ def katz_kernel(
     )
 
 
-def _gather_once(source_df, file_backed, weighted, vec, n):
-    """One dense ``Aᵀ·vec`` pass over the blocks (broadcast feed). Returns
-    the assembled length-``n`` gather vector."""
-    sc = source_df.sparkSession.sparkContext
-    bc = sc.broadcast(vec)
+def _gather_once(eb: EdgeBlocks, vec):
+    """One dense ``Aᵀ·vec`` pass over file-backed blocks: ``vec`` is
+    broadcast, each task gathers its blocks as :func:`_gather` does, and
+    the driver assembles the length-``n`` gather vector."""
+    bc = eb.spark.sparkContext.broadcast(vec)
+    weighted = eb.has_weights
 
     def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = np.asarray(bc.value)
         for pdf in batches:
             for _, row in pdf.iterrows():
-                srcs, dsts, ws = _block_arrays(row, file_backed, weighted)
+                srcs, dsts = _open_block(row["path"])
                 w = c[srcs]
-                if ws is not None:
-                    w = w * ws
+                if weighted:
+                    w = w * _open_block_weights(row["path"])
                 g = np.bincount(dsts, weights=w)
                 yield pd.DataFrame(
                     {"dst_lo": [np.int64(row["dst_lo"])], "g": [g]}
                 )
 
-    out = source_df.mapInPandas(
+    out = eb.manifest.mapInPandas(
         gather, schema="dst_lo long, g array<double>"
     ).toPandas()
     bc.unpersist()
-    g_vec = np.zeros(n)
+    g_vec = np.zeros(eb.n)
     for lo, g in zip(out["dst_lo"], out["g"]):
         g_vec[lo : lo + len(g)] += g
     return g_vec
+
+
+def _eigenvector_loop(spark, ids, gather, maxiter, tolerance,
+                      fixed_iterations) -> DataFrame:
+    """``(id, eigenvector)`` after eigenvector's superstep schedule over
+    ``gather`` (``v -> Aᵀv``): ``x' = x + Aᵀx`` then L2-normalize, the
+    error lagged one superstep over ``maxiter+1`` supersteps."""
+    n = len(ids)
+    if n == 0:
+        return spark.createDataFrame([], "id long, eigenvector double")
+    xn = np.full(n, 1.0 / n)  # current NORMALIZED iterate
+    total = fixed_iterations if fixed_iterations is not None else maxiter + 1
+    for it in range(total):
+        z = xn + gather(xn)
+        zn = math.sqrt(float((z * z).sum()))
+        new_xn = z / zn if zn > 0 else z
+        done = (fixed_iterations is None and it >= 1
+                and float(np.abs(xn - new_xn).sum()) < n * tolerance)
+        xn = new_xn
+        if done:
+            break
+    else:
+        if fixed_iterations is None:
+            raise ConvergenceError(
+                f"eigenvector failed to converge in {maxiter} iterations"
+            )
+    return spark.createDataFrame(
+        pd.DataFrame({"id": np.asarray(ids), "eigenvector": xn}),
+        schema="id long, eigenvector double",
+    )
+
+
+def _driver_eigenvector_loop(spark, ids, blks, *args) -> DataFrame:
+    """Eigenvector supersteps over driver-resident block arrays
+    (:func:`_gather`), no Spark job per superstep."""
+    return _eigenvector_loop(spark, ids, lambda v: _gather(blks, v, len(ids)),
+                             *args)
 
 
 def eigenvector_kernel(
@@ -336,44 +376,86 @@ def eigenvector_kernel(
     ``plugins/networkx/algorithms.py:192-199``): ``x' = x + Aᵀx`` then
     L2-normalize every iteration; same lagged convergence schedule as the
     join path (error checked from iteration 1 over ``maxiter+1`` total),
-    so converged runs take identical superstep counts."""
+    so converged runs take identical superstep counts.
+
+    Like :func:`katz_kernel`: a Graph within the driver caps runs
+    :func:`_driver_eigenvector_loop` over the weighted block
+    :func:`kernel.driver_block_arrays` derives from its driver layout;
+    above them it builds weighted blocks in a temp dir and broadcasts the
+    vector to one gather job per superstep (:func:`_gather_once`).
+    Prebuilt EdgeBlocks run the driver loop over their block files when
+    they fit the caps, the broadcast gather otherwise."""
+    args = (maxiter, tolerance, fixed_iterations)
+    g = graph_or_blocks
+    drv = kernel.driver_block_arrays(g) if isinstance(g, Graph) else None
+    if drv is not None:
+        return _driver_eigenvector_loop(g.edges.sparkSession, *drv, *args)
 
     def run(eb: EdgeBlocks) -> DataFrame:
-        spark, n = eb.spark, eb.n
-        if n == 0:
-            return spark.createDataFrame([], "id long, eigenvector double")
-        file_backed = eb.manifest is not None
-        source_df = eb.manifest if file_backed else eb.blocks
-        weighted = eb.has_weights
-        xn = np.full(n, 1.0 / n)  # current NORMALIZED iterate
-        total = (
-            fixed_iterations if fixed_iterations is not None else maxiter + 1
-        )
-        for it in range(total):
-            g = _gather_once(source_df, file_backed, weighted, xn, n)
-            z = xn + g
-            zn = math.sqrt(float((z * z).sum()))
-            new_xn = z / zn if zn > 0 else z
-            if fixed_iterations is None and it >= 1:
-                err = float(np.abs(xn - new_xn).sum())
-                if err < n * tolerance:
-                    xn = new_xn
-                    break
-            xn = new_xn
-        else:
-            if fixed_iterations is None:
-                raise ConvergenceError(
-                    f"eigenvector failed to converge in {maxiter} iterations"
-                )
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.asarray(eb.node_ids), "eigenvector": xn}),
-            schema="id long, eigenvector double",
-        )
+        drv = _driver_blocks(eb)
+        if drv is not None:
+            return _driver_eigenvector_loop(eb.spark, *drv, *args)
+        return _eigenvector_loop(eb.spark, np.array(eb.node_ids),
+                                 lambda v: _gather_once(eb, v), *args)
 
-    return with_blocks(
-        graph_or_blocks, _weighted_build(graph_or_blocks), run,
-        in_memory=True,
+    return with_blocks(g, _weighted_build(g), run)
+
+
+def _hits_loop(spark, ids, gather_a, gather_h, maxiter, tolerance,
+               normalize, fixed_iterations) -> tuple[DataFrame, DataFrame]:
+    """``(hubs, authorities)`` after HITS's superstep schedule over the two
+    gathers: ``a = Aᵀh`` (``gather_a``) then ``h = A·a`` (``gather_h``),
+    max-normalizing each half-step, convergence on ``Σ|h'-h| < tol``,
+    optional final sum-normalization."""
+    n = len(ids)
+    if n == 0:
+        return (spark.createDataFrame([], "id long, hubs double"),
+                spark.createDataFrame([], "id long, authority double"))
+    h = np.full(n, 1.0 / n)
+    h_norm = 1.0
+    a = np.zeros(n)
+    a_norm = 1.0
+    total = fixed_iterations if fixed_iterations is not None else maxiter
+    converged = fixed_iterations is not None
+    for _ in range(total):
+        a = gather_a(h / h_norm)
+        # join parity: Observation max(v) `or 1.0` — 0.0 falls back,
+        # a negative max (negative weights) is kept as the divisor
+        am = float(a.max())
+        a_norm = am if am != 0.0 else 1.0
+        h_prev_normed = h / h_norm
+        h = gather_h(a / a_norm)
+        hm = float(h.max())
+        h_norm = hm if hm != 0.0 else 1.0
+        if fixed_iterations is None:
+            if float(np.abs(h / h_norm - h_prev_normed).sum()) < tolerance:
+                converged = True
+                break
+    if not converged:
+        raise ConvergenceError(
+            f"hits failed to converge in {maxiter} iterations"
+        )
+    hv = h / h_norm
+    av = a / a_norm
+    if normalize:
+        hv = hv / (float(hv.sum()) or 1.0)
+        av = av / (float(av.sum()) or 1.0)
+    ids = np.asarray(ids)
+    return (
+        spark.createDataFrame(pd.DataFrame({"id": ids, "hubs": hv}),
+                              schema="id long, hubs double"),
+        spark.createDataFrame(pd.DataFrame({"id": ids, "authority": av}),
+                              schema="id long, authority double"),
     )
+
+
+def _driver_hits_loop(spark, ids, fwd, rev, *args):
+    """HITS supersteps over the driver-resident forward (authority
+    gather) and reversed (hub gather) blocks (:func:`_gather`), no Spark
+    job per superstep."""
+    n = len(ids)
+    return _hits_loop(spark, ids, lambda v: _gather(fwd, v, n),
+                      lambda v: _gather(rev, v, n), *args)
 
 
 def hits_kernel(
@@ -389,85 +471,45 @@ def hits_kernel(
     ``plugins/networkx/algorithms.py:201-206``): ``a = Aᵀh`` /
     ``h = A·a`` with max-normalization each half-step, convergence on
     ``Σ|h'-h| < tol`` (not N-scaled), optional final sum-normalization.
-    Builds TWO block layouts (forward for the authority gather, reversed
-    for the hub gather) — the two mat-vecs are data-dependent, so two
-    passes per superstep is the algorithmic minimum here too."""
+    The two mat-vecs are data-dependent, so two gathers per superstep is
+    the algorithmic minimum. Within the driver caps
+    :func:`_driver_hits_loop` gathers over a forward and a reversed block,
+    both derived from the one driver layout; above them it lays out two
+    file-backed block sets (forward, reversed) in temp dirs and runs two
+    broadcast gather jobs per superstep (:func:`_gather_once`)."""
     from metagraph_spark.exceptions import GraphPropertyError
 
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
-    from metagraph_spark.graph import WEIGHT
-
     spark = graph.edges.sparkSession
+    args = (maxiter, tolerance, normalize, fixed_iterations)
+    fwd = kernel.driver_block_arrays(graph)
+    if fwd is not None:
+        ids, blks = fwd
+        _, rev = kernel._graph_block(graph, reverse=True)
+        return _driver_hits_loop(spark, ids, blks, rev, *args)
+
     weighted = graph.is_weighted
-    e = graph.edges
     cols = [SRC, DST] + ([WEIGHT] if weighted else [])
-    fwd_edges = e.select(*cols)
-    rev_cols = [F.col(DST).alias(SRC), F.col(SRC).alias(DST)] + (
-        [F.col(WEIGHT)] if weighted else []
-    )
-    rev_edges = e.select(*rev_cols)
-    eb_f = build_edge_blocks(
-        graph, edges=fwd_edges, with_weights=weighted, with_degrees=False
-    )
-    eb_r = build_edge_blocks(
-        graph, edges=rev_edges, with_weights=weighted, with_degrees=False
-    )
-    try:
-        n = eb_f.n
-        if n == 0:
-            empty_h = spark.createDataFrame([], "id long, hubs double")
-            empty_a = spark.createDataFrame([], "id long, authority double")
-            return empty_h, empty_a
-        src_f = eb_f.blocks if eb_f.blocks is not None else eb_f.manifest
-        src_r = eb_r.blocks if eb_r.blocks is not None else eb_r.manifest
-        fb_f = eb_f.manifest is not None
-        fb_r = eb_r.manifest is not None
-        h = np.full(n, 1.0 / n)
-        h_norm = 1.0
-        a = np.zeros(n)
-        a_norm = 1.0
-        total = fixed_iterations if fixed_iterations is not None else maxiter
-        converged = fixed_iterations is not None
-        for _ in range(total):
-            a = _gather_once(src_f, fb_f, weighted, h / h_norm, n)
-            # join parity: Observation max(v) `or 1.0` — 0.0 falls back,
-            # a negative max (negative weights) is kept as the divisor
-            am = float(a.max())
-            a_norm = am if am != 0.0 else 1.0
-            h_prev_normed = h / h_norm
-            h = _gather_once(src_r, fb_r, weighted, a / a_norm, n)
-            hm = float(h.max())
-            hmax = hm if hm != 0.0 else 1.0
-            if fixed_iterations is None:
-                err = float(np.abs(h / hmax - h_prev_normed).sum())
-                h_norm = hmax
-                if err < tolerance:
-                    converged = True
-                    break
-            else:
-                h_norm = hmax
-        if not converged:
-            raise ConvergenceError(
-                f"hits failed to converge in {maxiter} iterations"
-            )
-        hv = h / h_norm
-        av = a / a_norm
-        if normalize:
-            hv = hv / (float(hv.sum()) or 1.0)
-            av = av / (float(av.sum()) or 1.0)
-        ids = np.asarray(eb_f.node_ids)
-        h_df = spark.createDataFrame(
-            pd.DataFrame({"id": ids, "hubs": hv}), schema="id long, hubs double"
+    rev_cols = [F.col(DST).alias(SRC), F.col(SRC).alias(DST)] + cols[2:]
+
+    def build(edges):
+        return lambda g, d: build_edge_blocks(
+            g, spill_dir=d, edges=edges, with_weights=weighted,
+            with_degrees=False,
         )
-        a_df = spark.createDataFrame(
-            pd.DataFrame({"id": ids, "authority": av}),
-            schema="id long, authority double",
-        )
-        return h_df, a_df
-    finally:
-        eb_f.unpersist()
-        eb_r.unpersist()
+
+    return with_blocks(
+        graph, build(graph.edges.select(*cols)),
+        lambda eb_f: with_blocks(
+            graph, build(graph.edges.select(*rev_cols)),
+            lambda eb_r: _hits_loop(
+                spark, np.array(eb_f.node_ids),
+                lambda v: _gather_once(eb_f, v),
+                lambda v: _gather_once(eb_r, v), *args,
+            ),
+        ),
+    )
 
 
 def _segmented_min(dsts: np.ndarray, vals: np.ndarray) -> np.ndarray:
@@ -493,8 +535,9 @@ def _segmented_min(dsts: np.ndarray, vals: np.ndarray) -> np.ndarray:
 def cc_blocks(graph: Graph, spill_dir: str | None = None,
               num_blocks: int | None = None) -> EdgeBlocks:
     """Prebuild :func:`cc_kernel` blocks (RAW both-directions union,
-    degree-free) — the layout is the dominant one-time cost at scale;
-    build once, run many."""
+    degree-free) under ``spill_dir`` (required, as for
+    :func:`kernel.build_edge_blocks`) — the layout is the dominant one-time
+    cost at scale; build once, run many."""
     e = graph.edges.select(SRC, DST)
     sym = e.unionAll(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
     return build_edge_blocks(
@@ -513,7 +556,9 @@ def label_blocks(graph: Graph, spill_dir: str | None = None,
     loops apply algebraically (``_mode_votes``) instead of materializing V
     extra edge rows in a second full layout — at 100M edges a separate
     vote layout cost ~190 s on top of the CC layout for nearly the same
-    symmetrized edge set (VERDICT r4 #5). Build once, feed both kernels."""
+    symmetrized edge set (VERDICT r4 #5). Build once under ``spill_dir``
+    (required, as for :func:`kernel.build_edge_blocks`), feed both
+    kernels."""
     sym = Graph(
         edges=graph.canonical_undirected_edges().select(SRC, DST),
         is_directed=False,

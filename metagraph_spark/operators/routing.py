@@ -27,19 +27,24 @@ triangles     ``tri_kernel`` when ``n <= DRIVER_MAX_VERTICES`` and
               ``DRIVER_MAX_WEDGES`` wedges, else by one Spark job over
               the broadcast keys); above the caps ``tri_kernel`` when
               the spill (or temp) dir is shared; else ``join``
-eigenvector,  ``kernel-broadcast`` when ``n <= KERNEL_MAX_VERTICES``
-hits          and ``m <= KERNEL_AUTO_MAX_EDGES``; else ``join``
-hope          ``kernel-driver`` when ``m <= DRIVER_MAX_EDGES`` and
+eigenvector,  ``join`` for ``strategy="join"``; ``kernel-driver`` when
+hits          ``n <= DRIVER_MAX_VERTICES`` and ``m <= DRIVER_MAX_EDGES``;
+              ``kernel-broadcast`` (one broadcast gather job per
+              superstep over file-backed blocks in a temp dir) when
+              ``n <= KERNEL_MAX_VERTICES``, ``m <= KERNEL_AUTO_MAX_EDGES``
+              and the temp dir is on a shared filesystem; else ``join``
+hope          ``kernel-driver`` when ``n <= DRIVER_MAX_VERTICES``,
+              ``m <= DRIVER_MAX_EDGES`` and
               ``n·r <= HOPE_BROADCAST_MAX_VALUES``; else ``join``
 ============  ====================================================
 
-Every driver route (``kernel-driver``, and ``tri_kernel`` within the
-driver caps) reads the stored edge rows from ``Graph.driver_layout``,
-collected at the first such call on a handle and kept on it;
-:func:`plan` collects nothing. Every
-kernel route needs ``n <= POSITIONAL_MAX_VERTICES`` (int32 positions). An
-explicit ``strategy="kernel"`` skips the auto edge cap and raises
-``ValueError`` where no kernel route exists.
+Every driver route (``kernel-driver`` of pagerank, katz, CC, LPA,
+eigenvector, HITS and HOPE, and ``tri_kernel`` within the driver caps)
+reads the stored edge rows from ``Graph.driver_layout``, collected at the
+first such call on a handle and kept on it; :func:`plan` collects
+nothing. Every kernel route needs ``n <= POSITIONAL_MAX_VERTICES`` (int32
+positions). An explicit ``strategy="kernel"`` skips the auto edge cap and
+raises ``ValueError`` where no kernel route exists.
 """
 
 from __future__ import annotations
@@ -75,8 +80,9 @@ KERNEL_AUTO_MAX_EDGES = 20_000_000
 # ``ra*n + rb`` fit int64 under the same bound.
 POSITIONAL_MAX_VERTICES = 2**31 - 1
 
-# Eigenvector and HITS kernels broadcast a dense driver vector every
-# superstep (``kernel_algos._gather_once``); above this the join plan runs.
+# Above the driver caps, eigenvector and HITS kernels broadcast a dense
+# driver vector every superstep (``kernel_algos._gather_once``); above this
+# the join plan runs.
 KERNEL_MAX_VERTICES = 50_000_000
 
 # Join plans broadcast the |V|-row vertex state into the superstep join
@@ -99,7 +105,7 @@ TWO_PHASE_MIN_EDGES = 5_000_000
 
 # ops whose layout gathers over ``graph.symmetrized()``: both directions of
 # an undirected graph's edges
-_SYMMETRIZED = ("pagerank", "katz", "hope")
+_SYMMETRIZED = ("pagerank", "katz", "hope", "eigenvector")
 _NAMES = {"cc": "connected_components", "triangles": "triangle_count"}
 
 
@@ -201,18 +207,14 @@ def plan(
 
     n, m = graph.num_nodes(), layout_edges(op, graph)
     sizes = f"n={_fmt(n)}, m={_fmt(m)}"
-    if op in ("eigenvector", "hits"):
-        if strategy == "kernel" or (
-            n <= KERNEL_MAX_VERTICES and m <= KERNEL_AUTO_MAX_EDGES
-        ):
-            return "kernel-broadcast", f"{sizes} <= KERNEL_MAX_VERTICES"
-        return "join", f"{sizes} > KERNEL_MAX_VERTICES/KERNEL_AUTO_MAX_EDGES"
     if op == "hope":
-        if fits_driver(m) and fits_broadcast_values(n * width):
+        if fits_driver(m, n) and fits_broadcast_values(n * width):
             return "kernel-driver", f"{sizes} <= DRIVER_MAX_EDGES"
         return "join", f"{sizes} > DRIVER_MAX_EDGES/HOPE_BROADCAST_MAX_VALUES"
     if fits_driver(m, n):
         return "kernel-driver", f"{sizes} <= DRIVER_MAX_EDGES"
+    if op in ("eigenvector", "hits"):
+        return _broadcast_route(op, graph, strategy, n, m, sizes)
     if not fits_positions(n):
         if strategy == "kernel":
             raise ValueError(
@@ -237,6 +239,26 @@ def plan(
         )
     return _join_route(op, graph, fixed, None, None,
                        f"{sizes} > DRIVER_MAX_EDGES, no shared FS")
+
+
+def _broadcast_route(op, graph, strategy, n, m, sizes):
+    """Eigenvector/HITS above the driver caps: the broadcast gather over
+    file-backed blocks, or ``join``."""
+    if n > KERNEL_MAX_VERTICES:
+        why = f"{sizes} > KERNEL_MAX_VERTICES"
+    elif strategy == "auto" and m > KERNEL_AUTO_MAX_EDGES:
+        return "join", f"{sizes} > KERNEL_AUTO_MAX_EDGES"
+    elif _shared_fs(graph):
+        return "kernel-broadcast", f"{sizes} > DRIVER_MAX_EDGES, shared FS"
+    else:
+        why = f"{sizes} > DRIVER_MAX_EDGES, no shared FS"
+    if strategy == "kernel":
+        raise ValueError(
+            f"{op} above the driver caps ({why}) has no kernel route: its "
+            "broadcast gather needs n <= KERNEL_MAX_VERTICES and a temp dir "
+            "on a filesystem shared with the executors; use strategy='join'"
+        )
+    return "join", why
 
 
 def _join_route(op, graph, fixed, checkpointer, warm_start, why):

@@ -67,14 +67,14 @@ def test_pagerank_auto_strategy_threshold(spark, monkeypatch):
 def test_kernel_file_backed_distributed_golden(spark, tmp_path, monkeypatch):
     """File-backed blocks above the driver caps take the slice-store loop
     (rank vector never on the driver) — must still produce the golden
-    values and agree with the in-memory driver loop. A 4-node graph fits
-    the driver loop, so the cap is lowered below its edge count."""
+    values and agree with the driver loop over the same block files. A
+    4-node graph fits the driver loop, so the cap is lowered below its
+    edge count."""
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
-    # fixed-iteration reference from the in-memory driver loop
-    mem = build_edge_blocks(g, num_blocks=2)
+    # fixed-iteration reference: the driver loop over the block files
     b = {r["id"]: r["rank"] for r in
-         pagerank_kernel(mem, fixed_iterations=7).collect()}
+         pagerank_kernel(eb, fixed_iterations=7).collect()}
     monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
     ran = spy_calls(monkeypatch, K, "_distributed_superstep_loop")
     got = {r["id"]: r["rank"] for r in
@@ -87,13 +87,12 @@ def test_kernel_file_backed_distributed_golden(spark, tmp_path, monkeypatch):
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
     eb.unpersist()
-    mem.unpersist()
 
 
 @pytest.mark.slow
-def test_kernel_blocks_reuse(spark):
+def test_kernel_blocks_reuse(spark, tmp_path):
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2)
+    eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
     r1 = {r["id"]: r["rank"] for r in
           pagerank_kernel(eb, maxiter=50, tolerance=1e-7).collect()}
     r2 = {r["id"]: r["rank"] for r in
@@ -102,25 +101,15 @@ def test_kernel_blocks_reuse(spark):
     eb.unpersist()
 
 
-def test_in_memory_blocks_never_enter_slice_store_loop(spark, monkeypatch):
-    """In-memory blocks (no spill_dir, no injected slice store) run the
-    driver loop — the slice-store loop assumes a shared slice store and
-    must not be entered; above the driver caps they refuse with an
-    actionable error instead."""
-    def boom(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("distributed loop entered without a slice store")
+def test_block_layouts_need_spill_dir(spark):
+    """Block layouts are file-backed only: a call without ``spill_dir``
+    fails at once and says what to pass instead."""
+    from metagraph_spark.operators.kernel_algos import cc_blocks, label_blocks
 
-    monkeypatch.setattr(K, "_distributed_superstep_loop", boom)
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2)  # in-memory, no spill_dir
-    got = {r["id"]: r["rank"] for r in
-           pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
-    for node, expected in GOLDEN_EXPECTED.items():
-        assert math.isclose(got[node], expected, rel_tol=1e-5)
-    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2)
-    with pytest.raises(ValueError, match="rebuild with spill_dir"):
-        pagerank_kernel(eb, fixed_iterations=2)
-    eb.unpersist()
+    for layout in (build_edge_blocks, cc_blocks, label_blocks):
+        with pytest.raises(ValueError, match="pass a spill_dir.*or pass the Graph"):
+            layout(g)
 
 
 def test_kernel_size_route_small_file_backed(spark, tmp_path, monkeypatch):
@@ -145,7 +134,8 @@ def test_kernel_size_route_small_file_backed(spark, tmp_path, monkeypatch):
 @pytest.mark.slow
 def test_kernel_injected_slice_store_parity(spark, tmp_path):
     """A slice store supplied by the caller drives the distributed loop and
-    matches the in-memory driver loop bit-for-bit at fixed iterations."""
+    matches the driver loop over the same block files at fixed
+    iterations."""
     from metagraph_spark.operators.kernel import LocalSliceStore
 
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
@@ -153,15 +143,13 @@ def test_kernel_injected_slice_store_parity(spark, tmp_path):
     store = LocalSliceStore(str(tmp_path / "custom_store"))
     a = {r["id"]: r["rank"] for r in
          pagerank_kernel(eb, fixed_iterations=7, slice_store=store).collect()}
-    mem = build_edge_blocks(g, num_blocks=2)
     b = {r["id"]: r["rank"] for r in
-         pagerank_kernel(mem, fixed_iterations=7).collect()}
+         pagerank_kernel(eb, fixed_iterations=7).collect()}
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
     import os
     assert not os.path.exists(str(tmp_path / "custom_store"))  # cleaned up
     eb.unpersist()
-    mem.unpersist()
 
 
 @pytest.mark.slow
@@ -182,25 +170,11 @@ def test_slice_store_dir_reuse_no_stale_cache(spark, tmp_path):
            pagerank_kernel(eb2, fixed_iterations=5,
                            slice_store=LocalSliceStore(d)).collect()}
     ref = {r["id"]: r["rank"] for r in
-           pagerank_kernel(build_edge_blocks(g2, num_blocks=2),
-                           fixed_iterations=5).collect()}
+           pagerank_kernel(eb2, fixed_iterations=5).collect()}
     for k in ref:
         assert math.isclose(got[k], ref[k], rel_tol=1e-12, abs_tol=1e-15), k
     eb1.unpersist()
     eb2.unpersist()
-
-
-def test_slice_store_rejected_for_in_memory_blocks(spark, tmp_path):
-    import pytest
-
-    from metagraph_spark.operators.kernel import LocalSliceStore
-
-    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2)  # in-memory
-    with pytest.raises(ValueError, match="file-backed"):
-        pagerank_kernel(eb, fixed_iterations=2,
-                        slice_store=LocalSliceStore(str(tmp_path / "s")))
-    eb.unpersist()
 
 
 def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
@@ -249,18 +223,17 @@ def test_scale_layout_dangling_and_isolates(spark, tmp_path, monkeypatch):
     """Dangling vertices (no out-edges) and ranges with no sources must
     land as zero degree / zero inverse in the task-written files, and the
     metadata dangling count must drive the slice-store loop to the same
-    teleport mass as the in-memory driver loop."""
+    teleport mass as the driver loop over the same block files."""
     edges = [(0, 1), (1, 2), (3, 2)]  # 2 is dangling; node 4 isolated
     nodes = spark.createDataFrame([(i,) for i in range(5)], "id long")
     from metagraph_spark.graph import build as gbuild
 
     g = gbuild(df_from_edges(spark, edges, weighted=False), nodes=nodes)
-    mem = build_edge_blocks(g, num_blocks=3)
-    b = {r["id"]: r["rank"] for r in
-         pagerank_kernel(mem, fixed_iterations=6).collect()}
     sd = str(tmp_path / "blocks2")
     eb = build_edge_blocks(g, num_blocks=3, spill_dir=sd)
     assert eb.n == 5 and eb.n_dangling == 2  # nodes 2 and 4
+    b = {r["id"]: r["rank"] for r in
+         pagerank_kernel(eb, fixed_iterations=6).collect()}
     monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
     ran = spy_calls(monkeypatch, K, "_distributed_superstep_loop")
     a = {r["id"]: r["rank"] for r in
@@ -270,7 +243,6 @@ def test_scale_layout_dangling_and_isolates(spark, tmp_path, monkeypatch):
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15), (k, a[k], b[k])
     eb.unpersist()
-    mem.unpersist()
 
 
 def test_kernel_slice_store_resume(spark, tmp_path, monkeypatch):

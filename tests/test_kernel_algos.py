@@ -78,20 +78,22 @@ def test_katz_kernel_matches_join_weighted(spark):
 
 
 @pytest.mark.slow
-def test_katz_kernel_file_backed_weighted(spark, tmp_path):
-    """File-backed weighted blocks (.ws.npy) agree with in-memory blocks."""
+def test_katz_kernel_file_backed_weighted(spark, tmp_path, monkeypatch):
+    """File-backed weighted blocks (.ws.npy): the slice-store loop agrees
+    with the driver loop over the same block files."""
     edges = _random_edges(30, 120, seed=11)
     g = build(df_from_edges(spark, edges), is_directed=True)
-    eb_mem = build_edge_blocks(g, num_blocks=3, with_weights=True)
     eb_file = build_edge_blocks(
         g, num_blocks=3, spill_dir=str(tmp_path / "wblocks"), with_weights=True
     )
-    mem = _map(katz_kernel(eb_mem, fixed_iterations=5), "katz")
+    drv = _map(katz_kernel(eb_file, fixed_iterations=5), "katz")
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ran = spy_calls(monkeypatch, KA, "_distributed_katz_loop")
     fil = _map(katz_kernel(eb_file, fixed_iterations=5), "katz")
-    assert set(mem) == set(fil)
-    for k in mem:
-        assert math.isclose(mem[k], fil[k], rel_tol=1e-12, abs_tol=1e-15)
-    eb_mem.unpersist()
+    assert len(ran) == 1
+    assert set(drv) == set(fil)
+    for k in drv:
+        assert math.isclose(drv[k], fil[k], rel_tol=1e-12, abs_tol=1e-15)
     eb_file.unpersist()
 
 
@@ -164,7 +166,7 @@ def test_hits_kernel_matches_join(spark):
                 col, k,
             )
     # strategy routing smoke: auto below cap = kernel result
-    assert routing.plan("hits", g)[0] == "kernel-broadcast"
+    assert routing.plan("hits", g)[0] == "kernel-driver"
     vh, _va = hits_centrality(g, tolerance=1e-7, strategy="auto")
     vm = _map(vh, "hubs")
     km = _map(kh, "hubs")
@@ -300,7 +302,8 @@ def test_lpa_distributed_loop_parity(spark, tmp_path, monkeypatch):
 
 def test_cc_lpa_kernel_file_backed_parity(spark, tmp_path):
     """spill_dir (file-backed blocks read back by the driver loop)
-    produces exactly the in-memory kernel's labels for both CC and LPA."""
+    produces exactly the driver-layout kernel's labels for both CC and
+    LPA."""
     edges = _random_edges(40, 120, seed=17, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
     cc_mem = _map(cc_kernel(g), "label")
@@ -345,11 +348,7 @@ def test_degree_free_blocks_guard_and_weight_metadata(spark, tmp_path):
 
     edges = _random_edges(20, 60, seed=41)
     g = build(df_from_edges(spark, edges), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2, with_degrees=False)
-    with pytest.raises(RuntimeError, match="with_degrees=False"):
-        _ = eb.out_deg
-    eb.unpersist()
-    # FILE-BACKED degree-free layouts raise the same message (not a bare
+    # degree-free layouts raise an actionable message (not a bare
     # FileNotFoundError for out_deg.npy)
     ebdf = build_edge_blocks(
         g, num_blocks=2, spill_dir=str(tmp_path / "degfree"),
@@ -428,7 +427,7 @@ def test_object_slice_store_runs_all_distributed_loops(spark, tmp_path):
 def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
     """ONE label_blocks layout (canonical symmetrized, self-votes applied
     by the LPA loops) feeds both cc_kernel and lpa_kernel with exact
-    join-path parity — file-backed and in-memory."""
+    join-path parity."""
     from metagraph_spark.operators.kernel_algos import label_blocks
 
     # include duplicate input edges: CC ignores multiplicity, LPA must
@@ -441,15 +440,10 @@ def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
         label_propagation_community(g, fixed_rounds=3, strategy="join"),
         "label",
     )
-    for name, shared in (
-        ("mem", label_blocks(g)),
-        ("file", label_blocks(g, spill_dir=str(tmp_path / "shared"))),
-    ):
-        got_cc = _map(cc_kernel(shared), "label")
-        got_lpa = _map(lpa_kernel(shared, fixed_rounds=3), "label")
-        assert want_cc == got_cc, name
-        assert want_lpa == got_lpa, name
-        shared.unpersist()
+    shared = label_blocks(g, spill_dir=str(tmp_path / "shared"))
+    assert want_cc == _map(cc_kernel(shared), "label")
+    assert want_lpa == _map(lpa_kernel(shared, fixed_rounds=3), "label")
+    shared.unpersist()
     # a reopened file-backed layout feeds the kernels the same way
     from metagraph_spark.operators.kernel import load_edge_blocks
 

@@ -15,7 +15,11 @@ import pytest
 import metagraph_spark.graph as graph_mod
 from metagraph_spark.graph import build
 from metagraph_spark.operators import kernel, kernel_algos, routing
-from metagraph_spark.operators.centrality import katz_centrality
+from metagraph_spark.operators.centrality import (
+    eigenvector_centrality,
+    hits_centrality,
+    katz_centrality,
+)
 from metagraph_spark.operators.components import connected_components
 from metagraph_spark.operators.lpa import label_propagation_community
 from metagraph_spark.operators.pagerank import pagerank
@@ -38,6 +42,10 @@ LOOPS = {
            "_distributed_cc_loop"),
     "lpa": (kernel_algos, "_driver_lpa_loop", kernel_algos,
             "_distributed_lpa_loop"),
+    "eigenvector": (kernel_algos, "_driver_eigenvector_loop", kernel_algos,
+                    "_gather_once"),
+    "hits": (kernel_algos, "_driver_hits_loop", kernel_algos,
+             "_gather_once"),
 }
 
 
@@ -89,17 +97,32 @@ def _temp_layouts():
 
 
 def _close(a, b):
+    """Values (or tuples of values, as HITS's ``(hub, authority)``) agree
+    at rel 1e-9."""
     assert set(a) == set(b)
     for k in a:
-        assert math.isclose(a[k], b[k], rel_tol=1e-9, abs_tol=1e-12), k
+        xs, ys = a[k], b[k]
+        if not isinstance(xs, tuple):
+            xs, ys = (xs,), (ys,)
+        for x, y in zip(xs, ys, strict=True):
+            assert math.isclose(x, y, rel_tol=1e-9, abs_tol=1e-12), k
 
 
 ROUTES = ["kernel-driver", "kernel-distributed", "join"]
+# eigenvector and HITS: above the driver caps, a broadcast gather over
+# file-backed blocks in a temp dir
+BROADCAST_ROUTES = ["kernel-driver", "kernel-broadcast", "join"]
 IDS = {-5, 1, 2, 3, 4, 5, 9, BIG}
 
 
 def _by_id(df, col):
     return {r["id"]: r[col] for r in df.collect()}
+
+
+def _hits(g, d):
+    hubs, auth = hits_centrality(g, fixed_iterations=4)
+    a = _by_id(auth, "authority")
+    return {k: (v, a[k]) for k, v in _by_id(hubs, "hubs").items()}
 
 
 def _pagerank(fixed):
@@ -110,7 +133,8 @@ def _pagerank(fixed):
 
 # op -> (planner op, directed graph?, routes, call(graph, spill_dir),
 #        temp layout?) — katz and LPA take the "auto" slice-store route
-#        without a spill dir, the others with one
+#        without a spill dir, the others with one; eigenvector and HITS
+#        have no spill dir option
 CASES = {
     "pagerank_fixed": ("pagerank", True, ROUTES, _pagerank(4), False),
     "pagerank_converged": ("pagerank", True, ROUTES, _pagerank(None), False),
@@ -124,6 +148,10 @@ CASES = {
         "label"), True),
     "triangles": ("triangles", False, ["tri_kernel", "join"],
                   lambda g, d: triangle_count(g, kernel_spill_dir=d), False),
+    "eigenvector": ("eigenvector", False, BROADCAST_ROUTES,
+                    lambda g, d: _by_id(eigenvector_centrality(
+                        g, fixed_iterations=4), "eigenvector"), True),
+    "hits": ("hits", True, BROADCAST_ROUTES, _hits, True),
 }
 
 
@@ -140,14 +168,14 @@ def two_partitions(spark):
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_every_route_agrees_on_adversarial_graph(spark, tmp_path,
                                                   two_partitions, case):
-    """Exact agreement for CC, LPA and triangles; 1e-9 for pagerank and
-    katz."""
+    """Exact agreement for CC, LPA and triangles; 1e-9 for pagerank,
+    katz, eigenvector and HITS."""
     op, directed, routes, call, temp_layout = CASES[case]
     g = _graph(spark, directed)
     out = _run_routes(tmp_path, op, g, routes, lambda d: call(g, d),
                       temp_layout)
     ref = out[routes[-1]]  # the join plan
-    if op in ("pagerank", "katz"):
+    if op in ("pagerank", "katz", "eigenvector", "hits"):
         assert set(ref) == IDS
         for route in routes[:-1]:
             _close(ref, out[route])
@@ -177,6 +205,27 @@ def test_planner_keeps_checkpoint_and_warm_start_routes(spark, tmp_path):
         routing.plan("lpa", g, "kernel", checkpointer=ck)
     with pytest.raises(ValueError, match="unknown connected_components"):
         routing.plan("cc", g, "fast")
+
+
+def test_eigenvector_hits_plan_counts_gathered_edges(spark, monkeypatch):
+    """Eigenvector gathers over both directions of an undirected graph,
+    so its driver cap is compared against 2m (HITS, directed, against m);
+    above the caps the broadcast route needs a shared temp dir, and an
+    explicit "kernel" without one raises."""
+    g = _graph(spark, False)
+    m = g.num_edges()
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2 * m)
+    assert routing.plan("eigenvector", g)[0] == "kernel-driver"
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", 2 * m - 1)
+    assert routing.plan("eigenvector", g)[0] == "kernel-broadcast"
+    gd = _graph(spark, True)
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", m)
+    assert routing.plan("hits", gd)[0] == "kernel-driver"
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", m - 1)
+    monkeypatch.setattr(kernel, "shared_fs_available", lambda *a: False)
+    assert routing.plan("hits", gd)[0] == "join"
+    with pytest.raises(ValueError, match="no kernel route"):
+        routing.plan("hits", gd, "kernel")
 
 
 def test_benchmark_layer_hooks_resolve():
