@@ -27,14 +27,22 @@ Spark-first design notes:
   while ``edges`` and ``nodes`` stay the same objects (reference analogs:
   the translation of an edge table to a scipy CSR graph, and the
   typecache's once-computed properties).
+- the driver routes have one way in and one way out. In:
+  :meth:`Graph.driver_layout`, the only edge collect of a driver route.
+  Out: :func:`driver_frame`, the only way a numpy result becomes a Spark
+  DataFrame, always as an RDD of Arrow batches rather than a driver-side
+  ``LocalRelation`` (reference analog: the translators where metagraph
+  pays its representation cost).
 """
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import NamedTuple, Optional
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +50,10 @@ SRC, DST, WEIGHT = "src", "dst", "weight"
 ID, VALUE = "id", "value"
 # metadata key of the kept driver layout: (edges, nodes, DriverLayout)
 _LAYOUT = "driver_layout"
+_LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+# one driver_frame at a time per process: concurrent calls would each
+# restore what another had set, and could leave the threshold at 0
+_FRAME_LOCK = threading.Lock()
 
 class DriverLayout(NamedTuple):
     """The stored edge rows of one Graph, on the driver, in positions.
@@ -112,6 +124,35 @@ def collect_driver_layout(graph: "Graph") -> DriverLayout:
         if a is not None:
             a.setflags(write=False)
     return lay
+
+
+def driver_frame(spark, columns: dict, schema: str) -> DataFrame:
+    """``columns`` (name -> numpy array, in ``schema`` order) as a
+    DataFrame of an RDD of Arrow batches, rows in array order: never a
+    driver-side ``LocalRelation``, which below
+    ``spark.sql.execution.arrow.localRelationThreshold`` copies every row
+    into the plan (``tools/result_path_timing.py``). The threshold is 0
+    for this call only (other threads' ``createDataFrame`` calls on the
+    session may see it meanwhile); the caller's setting is restored,
+    also on error.
+    The result has no exact size statistics: wrap it in ``F.broadcast``
+    to broadcast it in a join. A 2-D column becomes ``array<double>``
+    rows of plain floats, which the non-Arrow path also accepts."""
+    pdf = pd.DataFrame({
+        k: v.tolist() if np.ndim(v) == 2 else np.asarray(v)
+        for k, v in columns.items()
+    })
+    conf = spark.conf
+    with _FRAME_LOCK:
+        prev = conf.get(_LOCAL_RELATION_THRESHOLD, None)
+        conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+        try:
+            return spark.createDataFrame(pdf, schema=schema)
+        finally:
+            if prev is None:
+                conf.unset(_LOCAL_RELATION_THRESHOLD)
+            else:
+                conf.set(_LOCAL_RELATION_THRESHOLD, prev)
 
 
 @dataclass

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import GraphPropertyError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
 from metagraph_spark.operators import routing
 from metagraph_spark.operators.subgraph import _P31, mix31
 from metagraph_spark.state import truncate_lineage
@@ -167,8 +167,6 @@ def _hope_driver(
     already runs on its aggregated r x r matrices. Float sums reorder vs
     the distributed partial aggs within the numpy-twin test tolerance —
     the same caveat the round-6 union-sum series merge documented."""
-    import pandas as pd
-
     lay = graph.driver_layout()
     ids_sorted = lay.ids
     src, dst, w = lay.symmetrized(graph.is_directed)
@@ -223,13 +221,8 @@ def _hope_driver(
     sig[dead] = 1.0
 
     emb = np.hstack([q @ (u_b * np.sqrt(sig)), z @ (u_b / np.sqrt(sig))])
-    # plain python floats: the non-Arrow createDataFrame fallback (sessions
-    # without spark.sql.execution.arrow.pyspark.enabled) rejects
-    # numpy.float64 elements inside array<double>
-    out_pdf = pd.DataFrame({ID: ids_sorted, "emb": emb.tolist()})
-    return spark.createDataFrame(
-        out_pdf, schema=f"{ID} long, emb array<double>"
-    )
+    return driver_frame(spark, {ID: ids_sorted, "emb": emb},
+                        f"{ID} long, emb array<double>")
 
 
 def _gram(df: DataFrame, cols: list) -> np.ndarray:

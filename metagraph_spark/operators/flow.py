@@ -27,7 +27,7 @@ from collections import deque
 import numpy as np
 
 from metagraph_spark.exceptions import GraphPropertyError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
 
 MAXFLOW_MAX_EDGES = 10_000_000
 
@@ -146,17 +146,11 @@ def max_flow(
     s, t = _resolve_st(node_arr, source_node, target_node)
     value, flow, _ = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = flow > 0
-    import pandas as pd
-
-    flow_edges = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                SRC: node_arr[src_pos[keep]],
-                DST: node_arr[dst_pos[keep]],
-                WEIGHT: flow[keep],
-            }
-        ),
-        schema="src long, dst long, weight double",
+    flow_edges = driver_frame(
+        spark,
+        {SRC: node_arr[src_pos[keep]], DST: node_arr[dst_pos[keep]],
+         WEIGHT: flow[keep]},
+        "src long, dst long, weight double",
     )
     fg = Graph(edges=flow_edges, nodes=graph.node_ids(), is_directed=True)
     return float(value), fg
@@ -174,17 +168,11 @@ def min_cut(
     s, t = _resolve_st(node_arr, source_node, target_node)
     value, _, reach = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = reach[src_pos] & ~reach[dst_pos]
-    import pandas as pd
-
-    cut_edges = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                SRC: node_arr[src_pos[keep]],
-                DST: node_arr[dst_pos[keep]],
-                WEIGHT: cap[keep],
-            }
-        ),
-        schema="src long, dst long, weight double",
+    cut_edges = driver_frame(
+        spark,
+        {SRC: node_arr[src_pos[keep]], DST: node_arr[dst_pos[keep]],
+         WEIGHT: cap[keep]},
+        "src long, dst long, weight double",
     )
     cg = Graph(edges=cut_edges, nodes=graph.node_ids(), is_directed=True)
     return float(value), cg

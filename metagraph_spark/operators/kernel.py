@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
 from metagraph_spark.operators import routing
 
 # per-worker cache of the static inv-degree vector, keyed by run_dir
@@ -996,10 +996,7 @@ def _driver_pagerank_loop(spark, ids, blks, out_deg, damping, total,
                 f"pagerank_kernel failed to converge in {maxiter} "
                 f"iterations (err={err!r})"
             )
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.asarray(ids), "rank": r}),
-        schema="id long, rank double",
-    )
+    return driver_frame(spark, {"id": ids, "rank": r}, "id long, rank double")
 
 
 def pagerank_kernel(

@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, SRC, WEIGHT, Graph
+from metagraph_spark.graph import DST, SRC, WEIGHT, Graph, driver_frame
 from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
@@ -246,10 +246,8 @@ def _driver_katz_loop(spark, ids, blks, alpha, beta, total, tolerance,
             )
     sumsq = float((x * x).sum())
     norm = 1.0 / math.sqrt(sumsq) if sumsq > 0 else 1.0
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.asarray(ids), "katz": x * norm}),
-        schema="id long, katz double",
-    )
+    return driver_frame(spark, {"id": ids, "katz": x * norm},
+                        "id long, katz double")
 
 
 def katz_kernel(
@@ -351,10 +349,8 @@ def _eigenvector_loop(spark, ids, gather, maxiter, tolerance,
             raise ConvergenceError(
                 f"eigenvector failed to converge in {maxiter} iterations"
             )
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.asarray(ids), "eigenvector": xn}),
-        schema="id long, eigenvector double",
-    )
+    return driver_frame(spark, {"id": ids, "eigenvector": xn},
+                        "id long, eigenvector double")
 
 
 def _driver_eigenvector_loop(spark, ids, blks, *args) -> DataFrame:
@@ -440,13 +436,10 @@ def _hits_loop(spark, ids, gather_a, gather_h, maxiter, tolerance,
     if normalize:
         hv = hv / (float(hv.sum()) or 1.0)
         av = av / (float(av.sum()) or 1.0)
-    ids = np.asarray(ids)
-    return (
-        spark.createDataFrame(pd.DataFrame({"id": ids, "hubs": hv}),
-                              schema="id long, hubs double"),
-        spark.createDataFrame(pd.DataFrame({"id": ids, "authority": av}),
-                              schema="id long, authority double"),
-    )
+    return (driver_frame(spark, {"id": ids, "hubs": hv},
+                         "id long, hubs double"),
+            driver_frame(spark, {"id": ids, "authority": av},
+                         "id long, authority double"))
 
 
 def _driver_hits_loop(spark, ids, fwd, rev, *args):
@@ -804,10 +797,6 @@ def cc_kernel(
         arrs = _driver_graph_arrays(g, "raw_sym")
         if arrs is not None:
             ids, srcs, dsts = arrs
-            if len(ids) == 0:
-                return g.edges.sparkSession.createDataFrame(
-                    [], "id long, label long"
-                )
             return _driver_cc_loop(
                 g.edges.sparkSession, len(ids), [(0, srcs, dsts, None)], ids,
                 max_rounds, fixed_rounds,
@@ -922,11 +911,8 @@ def _driver_cc_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
                 f"connected_components kernel did not stabilize in "
                 f"{max_rounds} rounds"
             )
-    ids = np.asarray(ids)
-    return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "label": ids[lab]}),
-        schema="id long, label long",
-    )
+    return driver_frame(spark, {"id": ids, "label": np.asarray(ids)[lab]},
+                        "id long, label long")
 
 
 def _driver_lpa_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
@@ -945,11 +931,8 @@ def _driver_lpa_loop(spark, n, blks, ids, max_rounds, fixed_rounds):
         lab = new_lab
         if fixed_rounds is None and changed == 0:
             break
-    ids = np.asarray(ids)
-    return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "label": ids[lab]}),
-        schema="id long, label long",
-    )
+    return driver_frame(spark, {"id": ids, "label": np.asarray(ids)[lab]},
+                        "id long, label long")
 
 
 # Segments at least this long take the dense-bincount mode path inside
@@ -1178,10 +1161,6 @@ def lpa_kernel(
         arrs = _driver_graph_arrays(g, "canonical_sym")
         if arrs is not None:
             ids, srcs, dsts = arrs
-            if len(ids) == 0:
-                return g.edges.sparkSession.createDataFrame(
-                    [], "id long, label long"
-                )
             return _driver_lpa_loop(
                 g.edges.sparkSession, len(ids), [(0, srcs, dsts, None)], ids,
                 max_rounds, fixed_rounds,

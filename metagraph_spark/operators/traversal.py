@@ -29,11 +29,12 @@ row functions anywhere.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
 from metagraph_spark.state import truncate_lineage
 
 
@@ -247,8 +248,6 @@ def _driver_csr(graph: Graph, max_edges: int, op: str, weights: bool):
     driver-kernel traversal documents). Directed graphs keep out-edges
     only (nx semantics on DiGraph); undirected graphs are symmetrized.
     """
-    import numpy as np
-
     m = graph.num_edges() * (1 if graph.is_directed else 2)
     if m > max_edges:
         raise GraphPropertyError(
@@ -273,8 +272,6 @@ def _driver_csr(graph: Graph, max_edges: int, op: str, weights: bool):
 
 
 def _resolve_node(node_arr, node_id: int, what: str) -> int:
-    import numpy as np
-
     p = int(np.searchsorted(node_arr, node_id))
     if not (0 <= p < len(node_arr) and node_arr[p] == node_id):
         raise ValueError(f"{what} node {node_id} not in graph")
@@ -284,8 +281,6 @@ def _resolve_node(node_arr, node_id: int, what: str) -> int:
 def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
     """Iterative preorder DFS with ascending-id neighbor preference.
     Returns (node_arr, order_positions, parent_positions)."""
-    import numpy as np
-
     node_arr, indptr, nbr, _ = _driver_csr(graph, max_edges, "dfs", False)
     s = _resolve_node(node_arr, source_node, "source")
     n = len(node_arr)
@@ -310,6 +305,16 @@ def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
     return node_arr, order, parent
 
 
+def _visit_frame(graph: Graph, node_arr, positions: list) -> DataFrame:
+    """``(pos, id)`` rows of the node positions in visit order."""
+    pos = np.asarray(positions, dtype=np.int64)
+    return driver_frame(
+        graph.edges.sparkSession,
+        {"pos": np.arange(len(pos), dtype=np.int32), "id": node_arr[pos]},
+        "pos int, id long",
+    )
+
+
 def dfs_iter(
     graph: Graph, source_node: int, max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES
 ) -> DataFrame:
@@ -318,10 +323,7 @@ def dfs_iter(
     preorder from ``source_node`` as ``(pos, id)`` rows — same output shape
     as ``bfs_iter``. Golden: ``tests/algorithms/test_traversal.py:188-226``."""
     node_arr, order, _ = _dfs_kernel(graph, source_node, max_edges)
-    spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(i, int(node_arr[p])) for i, p in enumerate(order)], "pos int, id long"
-    )
+    return _visit_frame(graph, node_arr, order)
 
 
 def dfs_tree(
@@ -332,9 +334,10 @@ def dfs_tree(
     reachable from ``source_node``; the source's parent is itself. Golden:
     ``tests/algorithms/test_traversal.py:228-275``."""
     node_arr, order, parent = _dfs_kernel(graph, source_node, max_edges)
-    spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(int(node_arr[p]), int(node_arr[parent[p]])) for p in order],
+    order = np.asarray(order, dtype=np.int64)
+    return driver_frame(
+        graph.edges.sparkSession,
+        {"id": node_arr[order], "parent": node_arr[parent[order]]},
         "id long, parent long",
     )
 
@@ -356,8 +359,6 @@ def astar_search(
     (``tests/algorithms/test_traversal.py:434-493``) exactly.
     """
     import heapq
-
-    import numpy as np
 
     node_arr, indptr, nbr, w = _driver_csr(
         graph, max_edges, "astar_search", graph.is_weighted
@@ -402,7 +403,4 @@ def astar_search(
         raise ValueError(
             f"no path from {source_node} to {target_node}"
         )
-    spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(i, int(node_arr[p])) for i, p in enumerate(path)], "pos int, id long"
-    )
+    return _visit_frame(graph, node_arr, path)

@@ -1,26 +1,41 @@
 """The route planner (``operators/routing.py``): every remaining route of
 each iterative operator agrees on one adversarial graph (weighted katz and
 the warm starts included), the driver routes read the edges they are
-given through ``Graph.driver_layout``, and the benchmark's layer hooks
-still resolve."""
+given through ``Graph.driver_layout``, their results leave through
+``graph.driver_frame`` as RDD-backed Arrow relations, and the
+benchmark's layer hooks still resolve."""
 
+import ast
 import glob
 import importlib
 import math
 import os
+import pathlib
+import sys
 import tempfile
+import threading
 
+import numpy as np
+import pandas as pd
 import pytest
 
 import metagraph_spark.graph as graph_mod
 from metagraph_spark.graph import build
-from metagraph_spark.operators import kernel, kernel_algos, routing
+from metagraph_spark.operators import (
+    embedding,
+    flow,
+    kernel,
+    kernel_algos,
+    routing,
+    traversal,
+)
 from metagraph_spark.operators.centrality import (
     eigenvector_centrality,
     hits_centrality,
     katz_centrality,
 )
 from metagraph_spark.operators.components import connected_components
+from metagraph_spark.operators.embedding import hope_katz_train
 from metagraph_spark.operators.lpa import label_propagation_community
 from metagraph_spark.operators.pagerank import pagerank
 from metagraph_spark.operators.triangles import triangle_count
@@ -242,6 +257,55 @@ def test_benchmark_layer_hooks_resolve():
         assert callable(obj), f"{modname}.{attr}"
 
 
+def _pandas_to_spark_calls(root) -> list:
+    """``file:line`` of every ``createDataFrame`` call under ``root`` whose
+    data is a pandas frame: a ``pd.DataFrame(...)``/``pd.concat(...)``
+    call, or a name assigned from one in the same module."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        pandas = {a.asname or a.name for n in ast.walk(tree)
+                  if isinstance(n, ast.Import)
+                  for a in n.names if a.name == "pandas"}
+        bare = {a.asname or a.name for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom) and n.module == "pandas"
+                for a in n.names if a.name in ("DataFrame", "concat")}
+
+        def is_frame(node):
+            if not isinstance(node, ast.Call):
+                return False
+            f = node.func
+            return ((isinstance(f, ast.Name) and f.id in bare)
+                    or (isinstance(f, ast.Attribute)
+                        and f.attr in ("DataFrame", "concat")
+                        and isinstance(f.value, ast.Name)
+                        and f.value.id in pandas))
+
+        frames = {t.id for n in ast.walk(tree)
+                  if isinstance(n, ast.Assign) and is_frame(n.value)
+                  for t in n.targets if isinstance(t, ast.Name)}
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "createDataFrame"):
+                continue
+            data = n.args[:1] + [k.value for k in n.keywords
+                                 if k.arg == "data"]
+            if any(is_frame(d) or (isinstance(d, ast.Name) and d.id in frames)
+                   for d in data):
+                found.append(f"{path.relative_to(root)}:{n.lineno}")
+    return found
+
+
+def test_one_way_out_of_the_driver():
+    """No engine module but ``graph.py`` (``driver_frame``) turns a pandas
+    frame into a Spark DataFrame."""
+    root = pathlib.Path(graph_mod.__file__).parent
+    found = _pandas_to_spark_calls(root)
+    assert [f for f in found if not f.startswith("graph.py:")] == []
+    assert found  # the scan sees driver_frame's own call
+
+
 # -------------------------------------------- the Graph's driver layout
 
 def _four_ops(g):
@@ -448,3 +512,174 @@ def test_incremental_triangles_agree_with_cold_routes(spark, tmp_path,
     assert cold == {"tri_kernel": 2, "join": 2}
     new = spark.createDataFrame(batch, "src long, dst long")
     assert incremental_triangle_count(full, new, prev) == 2
+
+
+# --------------------------------------------- the one way out: driver_frame
+
+THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+ARROW = "spark.sql.execution.arrow.pyspark.enabled"
+
+# op -> (directed graph?, call(graph) -> list of result DataFrames), each
+# on its kernel-driver route
+DRIVER_OPS = {
+    "pagerank": (True, lambda g: [pagerank(g, tolerance=1e-8, maxiter=100)]),
+    "katz": (False, lambda g: [katz_centrality(g, fixed_iterations=4)]),
+    "eigenvector": (False, lambda g: [eigenvector_centrality(
+        g, fixed_iterations=4)]),
+    "hits": (True, lambda g: list(hits_centrality(g, fixed_iterations=4))),
+    "cc": (False, lambda g: [connected_components(g)]),
+    "lpa": (False, lambda g: [label_propagation_community(
+        g, fixed_rounds=3)]),
+    "hope": (True, lambda g: [hope_katz_train(
+        g, embedding_size=4, k_terms=3, power_iters=1)]),
+}
+FRAME_MODULES = (kernel, kernel_algos, embedding, flow, traversal)
+
+
+def _spy_driver_frames(monkeypatch):
+    """Record ``(columns, schema)`` of every :func:`driver_frame` call
+    made by the operator modules."""
+    calls = []
+
+    def spy(spark, columns, schema):
+        calls.append((columns, schema))
+        return graph_mod.driver_frame(spark, columns, schema)
+
+    for mod in FRAME_MODULES:
+        monkeypatch.setattr(mod, "driver_frame", spy)
+    return calls
+
+
+def _old_frame(spark, columns, schema):
+    """The result as the driver routes built it before ``driver_frame``:
+    ``createDataFrame`` of a pandas frame, a 2-D column as float lists."""
+    return spark.createDataFrame(pd.DataFrame({
+        k: v.tolist() if np.ndim(v) == 2 else np.asarray(v)
+        for k, v in columns.items()
+    }), schema=schema)
+
+
+def _leaves(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("op", sorted(DRIVER_OPS))
+def test_driver_results_are_rdd_backed_arrow(spark, two_partitions,
+                                             monkeypatch, op):
+    """Each driver route's result is an RDD of Arrow batches, not a
+    LocalRelation, with the rows, row order and schema of the old pandas
+    ``createDataFrame``; the session's ``localRelationThreshold`` is as
+    the caller left it, unset or set; without Arrow the rows are equal;
+    the empty graph gives an empty result of the same schema."""
+    directed, call = DRIVER_OPS[op]
+    g = _graph(spark, directed)
+    width = {"width": 4} if op == "hope" else {}
+    assert routing.plan(op, g, **width)[0] == "kernel-driver"
+    frames = _spy_driver_frames(monkeypatch)
+    assert spark.conf.get(THRESHOLD, None) is None
+    outs = call(g)
+    assert spark.conf.get(THRESHOLD, None) is None
+    assert len(frames) == len(outs)
+    rows = []
+    for (columns, schema), out in zip(frames, outs):
+        assert "LocalRelation" not in _leaves(out), _leaves(out)
+        assert "LogicalRDD" in _leaves(out)
+        old = _old_frame(spark, columns, schema)
+        assert "LocalRelation" in _leaves(old)
+        assert out.schema == old.schema
+        rows.append(out.collect())
+        assert rows[-1] == old.collect()
+        assert {r["id"] for r in rows[-1]} == IDS
+
+    spark.conf.set(THRESHOLD, "1048576")
+    try:
+        assert [o.collect() for o in call(g)] == rows
+        assert spark.conf.get(THRESHOLD) == "1048576"
+    finally:
+        spark.conf.unset(THRESHOLD)
+
+    spark.conf.set(ARROW, "false")
+    try:
+        assert [o.collect() for o in call(g)] == rows
+    finally:
+        spark.conf.set(ARROW, "true")
+
+    empty = build(spark.createDataFrame([], "src long, dst long"),
+                  is_directed=directed)
+    for got, out in zip(call(empty), outs, strict=True):
+        assert got.schema == out.schema
+        assert got.count() == 0
+    assert spark.conf.get(THRESHOLD, None) is None
+
+
+@pytest.mark.filterwarnings("ignore:createDataFrame attempted Arrow")
+def test_driver_frame_restores_threshold_when_it_raises(spark):
+    """A failing conversion leaves the session's threshold as it was."""
+    bad = {"id": np.array(["a", "b"])}
+    for prev in (None, "2048"):
+        if prev is not None:
+            spark.conf.set(THRESHOLD, prev)
+        try:
+            with pytest.raises(TypeError):
+                graph_mod.driver_frame(spark, bad, "id long")
+            assert spark.conf.get(THRESHOLD, None) == prev
+        finally:
+            spark.conf.unset(THRESHOLD)
+
+
+def test_concurrent_driver_frames_restore_threshold(spark):
+    """Threads calling ``driver_frame`` at once each get their own rows,
+    and the threshold the caller set is what is left."""
+    spark.conf.set(THRESHOLD, "4096")
+    got, errors = {}, []
+
+    def run(k):
+        try:
+            for r in range(3):
+                ids = np.arange(k * 100 + r, k * 100 + r + 5, dtype=np.int64)
+                df = graph_mod.driver_frame(spark, {"id": ids}, "id long")
+                got[(k, r)] = ([x["id"] for x in df.collect()], ids.tolist())
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert len(got) == 24 and all(a == b for a, b in got.values())
+        assert spark.conf.get(THRESHOLD) == "4096"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.unset(THRESHOLD)
+
+
+def test_traversal_and_flow_results_keep_their_rows(spark):
+    """``dfs_iter``, ``dfs_tree``, ``astar_search`` and the flow and cut
+    graphs of ``max_flow``/``min_cut`` leave through ``driver_frame``
+    with the rows and schema they always had."""
+    g = build(df_from_edges(spark, [(1, 2, 3.0), (1, 3, 1.0), (3, 2, 1.0),
+                                    (2, BIG, 2.0)]))
+    assert [tuple(r) for r in traversal.dfs_iter(g, 1).collect()] == [
+        (0, 1), (1, 2), (2, BIG), (3, 3)]
+    assert traversal.dfs_iter(g, 1).schema.simpleString() == (
+        "struct<pos:int,id:bigint>")
+    assert sorted(tuple(r) for r in traversal.dfs_tree(g, 1).collect()) == [
+        (1, 1), (2, 1), (3, 1), (BIG, 2)]
+    path = traversal.astar_search(g, 1, BIG, lambda v: 0.0)
+    assert [tuple(r) for r in path.collect()] == [(0, 1), (1, 3), (2, 2),
+                                                  (3, BIG)]
+    value, fg = flow.max_flow(g, 1, BIG)
+    assert value == 2.0
+    assert sorted(tuple(r) for r in fg.edges.collect()) == [
+        (1, 2, 2.0), (2, BIG, 2.0)]
+    value, cg = flow.min_cut(g, 1, BIG)
+    assert value == 2.0
+    assert [tuple(r) for r in cg.edges.collect()] == [(2, BIG, 2.0)]
+    for df in (path, fg.edges, cg.edges):
+        assert "LocalRelation" not in _leaves(df)
