@@ -28,7 +28,8 @@ Spark-first design notes:
   the translation of an edge table to a scipy CSR graph, and the
   typecache's once-computed properties).
 - the driver routes have one way in and one way out. In:
-  :meth:`Graph.driver_layout`, the only edge collect of a driver route.
+  :meth:`Graph.driver_layout` (or :meth:`Graph.sequential_layout`), the
+  only collect of a graph's edges or node ids.
   Out: :func:`driver_frame`, the only way a numpy result becomes a Spark
   DataFrame, always as an RDD of Arrow batches rather than a driver-side
   ``LocalRelation`` (reference analog: the translators where metagraph
@@ -74,6 +75,15 @@ class DriverLayout(NamedTuple):
     @property
     def n(self) -> int:
         return len(self.ids)
+
+    def position(self, node_id: int, what: str) -> int:
+        """The position of ``node_id`` in ``ids``; ``ValueError`` naming it
+        the ``what`` node when absent (``searchsorted`` alone would give
+        the insertion point, a wrong node)."""
+        p = int(np.searchsorted(self.ids, node_id))
+        if not (p < self.n and self.ids[p] == node_id):
+            raise ValueError(f"{what} node {node_id} not in graph")
+        return p
 
     def symmetrized(self, is_directed: bool):
         """``(src, dst, weights|None)`` of :meth:`Graph.symmetrized` in
@@ -233,6 +243,14 @@ class Graph:
                 return None
             self.metadata[_LAYOUT] = kept
         return kept[2] if routing.fits_driver(m, kept[2].n) else None
+
+    def sequential_layout(self) -> DriverLayout:
+        """:meth:`driver_layout` for the sequential kernels (flow, DFS/A*,
+        betweenness, the subisomorphic pattern), whose own ``routing``
+        caps lie above the driver caps: there, one collect that is not
+        kept."""
+        lay = self.driver_layout()
+        return collect_driver_layout(self) if lay is None else lay
 
     def has_negative_weights(self) -> bool:
         """Computed once and cached on the handle (reference computes

@@ -26,12 +26,13 @@ pagerank):
   at scale (guarded).
 - ``betweenness(Graph(edge_type=map), Optional[NodeSet], normalize=False)
   -> NodeMap`` (:7-12; nx :158-173 = Brandes subset): parallelized OVER
-  SOURCES — the adjacency is assembled in ONE Arrow pass into positional
-  numpy CSR arrays, broadcast to every task, and an Arrow-batched grouped
-  kernel (applyInPandas over source batches) runs weighted Brandes per
-  source, summing dependency scores. Scales in #sources, requires the
-  adjacency to fit per-task (guarded; exact betweenness at 10^12 edges is
-  out of scope for any engine — the reference's is single-threaded nx).
+  SOURCES — the adjacency comes from the handle's positional layout
+  (``Graph.sequential_layout``) as numpy CSR arrays, broadcast to every
+  task, and an Arrow-batched grouped kernel (applyInPandas over source
+  batches) runs weighted Brandes per source, summing dependency scores.
+  Scales in #sources, requires the adjacency to fit per-task (guarded;
+  exact betweenness at 10^12 edges is out of scope for any engine — the
+  reference's is single-threaded nx).
 
 Superstep discipline (matches operators/pagerank.py): vertex state carries
 ``prev``; L1 error AND the normalization scalar ride the materialization
@@ -56,10 +57,6 @@ from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.operators import routing
 from metagraph_spark.state import LineageManager, truncate_lineage
-
-# full closeness/betweenness are all-pairs; refuse silent O(V^2)/driver blowup
-CLOSENESS_ALL_NODES_LIMIT = 100_000
-BETWEENNESS_MAX_EDGES = 50_000_000
 
 
 def _weighted_edges(graph: Graph) -> DataFrame:
@@ -568,11 +565,11 @@ def closeness_centrality(
     if graph.has_negative_weights():
         raise GraphPropertyError("closeness requires non-negative weights")
     n = graph.num_nodes()
-    if nodes is None and n > CLOSENESS_ALL_NODES_LIMIT:
+    if nodes is None and n > routing.CLOSENESS_ALL_NODES_LIMIT:
         raise GraphPropertyError(
             f"closeness over all {n} nodes needs O(V^2) relaxation state; "
             f"pass an explicit NodeSet subset (limit "
-            f"{CLOSENESS_ALL_NODES_LIMIT})"
+            f"{routing.CLOSENESS_ALL_NODES_LIMIT})"
         )
     targets = nodes.select(ID) if nodes is not None else graph.node_ids()
     # distances of paths u -> v for target v: relax on REVERSED edges from v
@@ -626,7 +623,7 @@ def _betweenness_distributed(
     ``betweenness_centrality_subset`` with sources == targets == ``nodes``,
     reference ``plugins/networkx/algorithms.py:158-173``) with no broadcast
     adjacency and no O(V) driver state — the scale path past the kernel's
-    ``max_edges`` guard.
+    ``routing.BETWEENNESS_MAX_EDGES`` guard.
 
     Shape: sources are processed in batches of ``batch_size``. Per batch,
     a multi-source BFS carries ``(root, id, dist, sigma)`` vertex state
@@ -1083,22 +1080,23 @@ def betweenness_centrality(
     nodes: Optional[DataFrame] = None,
     normalize: bool = False,
     sources_per_batch: int = 16,
-    max_edges: int = BETWEENNESS_MAX_EDGES,
     strategy: str = "auto",
 ) -> DataFrame:
     """Brandes betweenness, parallelized over sources.
 
-    The positional CSR is assembled from ONE Arrow pass (``toArrow`` —
-    columnar transfer, no Row objects) into four numpy arrays which are
-    broadcast; sources are distributed ``sources_per_batch`` per Arrow batch
-    through ``applyInPandas``; each task runs weighted Brandes (Dijkstra +
+    The positional CSR comes from the handle's layout
+    (``Graph.sequential_layout``: the kept ``Graph.driver_layout`` within
+    the driver caps) as three numpy arrays which are broadcast; sources
+    are distributed ``sources_per_batch`` per Arrow batch through
+    ``applyInPandas``; each task runs weighted Brandes (Dijkstra +
     dependency accumulation on the broadcast CSR) for its sources and emits
     partial (id, score) rows which a final groupBy sums. Matches nx
     ``betweenness_centrality_subset`` with sources == targets == nodes
     (``plugins/networkx/algorithms.py:158-173``).
 
     ``strategy``: ``"kernel"`` is the broadcast-CSR path above (weighted,
-    refuses graphs beyond ``max_edges``); ``"distributed"`` is
+    refuses graphs beyond ``routing.BETWEENNESS_MAX_EDGES`` layout edges);
+    ``"distributed"`` is
     ``_betweenness_distributed`` (batched multi-source BFS) for
     unweighted graphs and ``_betweenness_distributed_weighted`` (implicit
     shortest-path DAG over Bellman-Ford distances, level-layered
@@ -1116,9 +1114,8 @@ def betweenness_centrality(
             return _betweenness_distributed_weighted(graph, nodes, normalize)
         return _betweenness_distributed(graph, nodes, normalize)
     spark = graph.edges.sparkSession
-    wedges = _weighted_edges(graph)
-    m = wedges.count()
-    if m > max_edges:
+    m = routing.layout_edges("betweenness", graph)
+    if m > routing.BETWEENNESS_MAX_EDGES:
         if strategy == "auto":
             if graph.is_weighted:
                 return _betweenness_distributed_weighted(
@@ -1127,19 +1124,18 @@ def betweenness_centrality(
             return _betweenness_distributed(graph, nodes, normalize)
         raise GraphPropertyError(
             f"betweenness needs the adjacency broadcast per task; graph has "
-            f"{m} (symmetrized) edges > max_edges={max_edges}. Exact "
+            f"{m} (symmetrized) edges > BETWEENNESS_MAX_EDGES="
+            f"{routing.BETWEENNESS_MAX_EDGES}. Exact "
             f"betweenness is all-pairs — sample sources at this scale "
             f"(strategy='auto' takes the distributed BFS/Bellman-Ford "
             f"strategies automatically)."
         )
-    # single Arrow pass each: columnar to numpy, no Python Row objects
-    nodes_tbl = graph.node_ids().toArrow()
-    node_arr = np.sort(nodes_tbl.column(ID).to_numpy())
-    nv = int(node_arr.shape[0])
-    e_tbl = wedges.toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    w_arr = e_tbl.column(WEIGHT).to_numpy().astype(np.float64)
+    lay = graph.sequential_layout()
+    node_arr = lay.ids
+    nv = lay.n
+    src_pos, dst_pos, w_arr = lay.symmetrized(graph.is_directed)
+    if w_arr is None:
+        w_arr = np.ones(len(src_pos))
     order = np.argsort(src_pos, kind="stable")
     indices = dst_pos[order]
     weights = w_arr[order]

@@ -12,12 +12,15 @@ Reference contracts (abstract defs ``plugins/core/algorithms/flow.py:7-30``):
 
 Physical scope: augmenting-path max-flow is inherently sequential (every
 augmentation depends on the previous residual), so — like betweenness —
-this is a DRIVER KERNEL: one Arrow pass assembles the positional CSR with
-paired residual arcs, Edmonds–Karp (BFS shortest augmenting paths) runs in
-numpy/python on the driver, and only the resulting flow/cut EDGE TABLES go
-back to Spark. An explicit ``max_edges`` guard refuses graphs that do not
-fit this scope instead of OOMing; at 10^12 edges no engine runs exact
-max-flow — the reference's own impls are single-threaded scipy/networkx.
+this is a DRIVER KERNEL: it reads the handle's positional layout
+(``Graph.sequential_layout``: the kept ``Graph.driver_layout`` within the
+driver caps, so ``max_flow`` then ``min_cut`` collect once), pairs each
+edge with a residual arc, runs Edmonds–Karp (BFS shortest augmenting
+paths) in numpy/python on the driver, and only the resulting flow/cut
+EDGE TABLES go back to Spark. ``routing.SEQUENTIAL_MAX_EDGES`` refuses
+graphs that do not fit this scope instead of OOMing; at 10^12 edges no
+engine runs exact max-flow — the reference's own impls are
+single-threaded scipy/networkx.
 """
 
 from __future__ import annotations
@@ -27,46 +30,30 @@ from collections import deque
 import numpy as np
 
 from metagraph_spark.exceptions import GraphPropertyError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
+from metagraph_spark.graph import DST, SRC, WEIGHT, Graph, driver_frame
+from metagraph_spark.operators import routing
 
-MAXFLOW_MAX_EDGES = 10_000_000
 
-
-def _arrow_csr(graph: Graph):
-    """One Arrow pass → (node_arr, src_pos, dst_pos, cap) positional arrays."""
+def _flow_layout(graph: Graph, source_node: int, target_node: int):
+    """``(node_arr, src_pos, dst_pos, cap, s, t)``: the stored edge rows
+    in positions, from the handle's layout, and the validated source and
+    target positions."""
     if not graph.is_weighted:
         raise GraphPropertyError("max_flow requires an EdgeMap (weights=capacities)")
     if not graph.is_directed:
         raise GraphPropertyError("max_flow requires a directed graph")
-    m = graph.num_edges()
-    if m > MAXFLOW_MAX_EDGES:
+    m = routing.layout_edges("max_flow", graph)
+    if m > routing.SEQUENTIAL_MAX_EDGES:
         raise GraphPropertyError(
             f"max_flow is a driver kernel (sequential augmenting paths); "
-            f"graph has {m} edges > max {MAXFLOW_MAX_EDGES}"
+            f"graph has {m} edges > max {routing.SEQUENTIAL_MAX_EDGES}"
         )
-    nodes_tbl = graph.node_ids().toArrow()
-    node_arr = np.sort(nodes_tbl.column(ID).to_numpy())
-    e_tbl = graph.edges.select(SRC, DST, WEIGHT).toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    cap = e_tbl.column(WEIGHT).to_numpy().astype(np.float64)
-    if (cap < 0).any():
+    lay = graph.sequential_layout()
+    if (lay.weights < 0).any():
         raise GraphPropertyError("max_flow requires non-negative capacities")
-    return node_arr, src_pos, dst_pos, cap
-
-
-def _resolve_st(node_arr, source_node: int, target_node: int) -> tuple[int, int]:
-    """Map source/target ids to positions, validating membership —
-    np.searchsorted on a missing id would otherwise silently return the
-    insertion position and compute the flow/cut from the wrong node."""
-    n = len(node_arr)
-    s = int(np.searchsorted(node_arr, source_node))
-    t = int(np.searchsorted(node_arr, target_node))
-    if not (0 <= s < n and node_arr[s] == source_node):
-        raise ValueError(f"source node {source_node} not in graph")
-    if not (0 <= t < n and node_arr[t] == target_node):
-        raise ValueError(f"target node {target_node} not in graph")
-    return s, t
+    return (lay.ids, lay.src, lay.dst, lay.weights,
+            lay.position(source_node, "source"),
+            lay.position(target_node, "target"))
 
 
 def _edmonds_karp(n, src_pos, dst_pos, cap, s, t):
@@ -142,8 +129,8 @@ def max_flow(
     the flow routed on each original edge (zero-flow edges dropped, all
     input nodes kept), matching the nx flow_dict semantics."""
     spark = graph.edges.sparkSession
-    node_arr, src_pos, dst_pos, cap = _arrow_csr(graph)
-    s, t = _resolve_st(node_arr, source_node, target_node)
+    node_arr, src_pos, dst_pos, cap, s, t = _flow_layout(
+        graph, source_node, target_node)
     value, flow, _ = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = flow > 0
     flow_edges = driver_frame(
@@ -164,8 +151,8 @@ def min_cut(
     complement (the canonical minimum cut), with their original capacities;
     all input nodes kept. cut_value == max_flow value (duality)."""
     spark = graph.edges.sparkSession
-    node_arr, src_pos, dst_pos, cap = _arrow_csr(graph)
-    s, t = _resolve_st(node_arr, source_node, target_node)
+    node_arr, src_pos, dst_pos, cap, s, t = _flow_layout(
+        graph, source_node, target_node)
     value, _, reach = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = reach[src_pos] & ~reach[dst_pos]
     cut_edges = driver_frame(

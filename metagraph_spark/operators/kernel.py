@@ -443,7 +443,7 @@ def build_edge_blocks(
             "visible); file-backed layouts require a shared FS "
             "(local mode, NFS/Lustre) — use strategy='join'"
         )
-    n = graph.node_ids().count()
+    n = graph.num_nodes()
     # more blocks than vertices would produce empty/duplicate ranges
     nb = max(1, min(nb, n))
     ids_path = os.path.join(spill_dir, "node_ids.npy")

@@ -36,13 +36,24 @@ hits          ``n <= DRIVER_MAX_VERTICES`` and ``m <= DRIVER_MAX_EDGES``;
 hope          ``kernel-driver`` when ``n <= DRIVER_MAX_VERTICES``,
               ``m <= DRIVER_MAX_EDGES`` and
               ``n·r <= HOPE_BROADCAST_MAX_VALUES``; else ``join``
+max_flow,     the sequential driver kernel when
+min_cut, dfs, ``m <= SEQUENTIAL_MAX_EDGES``; else ``GraphPropertyError``
+astar
+betweenness   the broadcast-CSR kernel when ``m <= BETWEENNESS_MAX_EDGES``;
+              else ``"auto"`` runs the distributed strategy
+subiso        the driver search when the pattern has
+              ``<= SUBISO_MAX_PATTERN_NODES`` nodes and the degree screen
+              keeps ``<= SUBISO_MAX_EDGES`` edges; else raises
+closeness     all nodes only when ``n <= CLOSENESS_ALL_NODES_LIMIT``
 ============  ====================================================
 
 Every driver route (``kernel-driver`` of pagerank, katz, CC, LPA,
-eigenvector, HITS and HOPE, and ``tri_kernel`` within the driver caps)
-reads the stored edge rows from ``Graph.driver_layout``, collected at the
-first such call on a handle and kept on it; :func:`plan` collects
-nothing. Every kernel route needs ``n <= POSITIONAL_MAX_VERTICES`` (int32
+eigenvector, HITS and HOPE, ``tri_kernel`` within the driver caps, and
+the sequential kernels) reads the stored edge rows from
+``Graph.driver_layout``, collected at the first such call on a handle and
+kept on it (the sequential kernels above the driver caps: collected per
+call, ``Graph.sequential_layout``); :func:`plan` collects nothing. Every
+kernel route needs ``n <= POSITIONAL_MAX_VERTICES`` (int32
 positions). An explicit ``strategy="kernel"`` skips the auto edge cap and
 raises ``ValueError`` where no kernel route exists.
 """
@@ -103,9 +114,22 @@ HOPE_BROADCAST_MAX_VALUES = 25_000_000
 # while winning 4x at 100M edges — BENCH r3 vs r4).
 TWO_PHASE_MIN_EDGES = 5_000_000
 
+# Sequential driver kernels (max-flow/min-cut, DFS, A*): each step
+# depends on the last, so the whole CSR is held on the driver.
+SEQUENTIAL_MAX_EDGES = 10_000_000
+# The betweenness kernel broadcasts its CSR to every task.
+BETWEENNESS_MAX_EDGES = 50_000_000
+# subisomorphic's driver search: exponential in the pattern's nodes, and
+# it collects the edges the distributed degree screen keeps.
+SUBISO_MAX_PATTERN_NODES = 16
+SUBISO_MAX_EDGES = 1_000_000
+# Closeness over all nodes keeps S·V relaxation state rows.
+CLOSENESS_ALL_NODES_LIMIT = 100_000
+
 # ops whose layout gathers over ``graph.symmetrized()``: both directions of
 # an undirected graph's edges
-_SYMMETRIZED = ("pagerank", "katz", "hope", "eigenvector")
+_SYMMETRIZED = ("pagerank", "katz", "hope", "eigenvector", "dfs",
+                "astar_search", "betweenness")
 _NAMES = {"cc": "connected_components", "triangles": "triangle_count"}
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.operators import routing
 from metagraph_spark.state import truncate_lineage
 
 # --- cross-engine deterministic hash ("mix31") ---------------------------
@@ -395,12 +396,10 @@ def random_walk_sampling(
 # the candidate screen is distributed (degree-dominance semi-joins shrink
 # the target to nodes that could match the pattern's weakest node), then a
 # VF2-style backtracking search runs on the driver over the screened
-# region, guarded by ``max_edges``. Semantics: INDUCED subgraph
-# isomorphism (the fixtures are relabeled induced subgraphs; nx's
-# DiGraphMatcher.subgraph_is_isomorphic analog).
-
-SUBISO_MAX_PATTERN_NODES = 16
-SUBISO_MAX_EDGES = 1_000_000
+# region, guarded by ``routing.SUBISO_MAX_EDGES``. The pattern is read
+# from its handle's positional layout (``Graph.sequential_layout``).
+# Semantics: INDUCED subgraph isomorphism (the fixtures are relabeled
+# induced subgraphs; nx's DiGraphMatcher.subgraph_is_isomorphic analog).
 
 
 def _neighbor_sets(edges, directed: bool):
@@ -417,12 +416,7 @@ def _neighbor_sets(edges, directed: bool):
     return nodes, succ, pred
 
 
-def subisomorphic(
-    graph: Graph,
-    pattern: Graph,
-    max_edges: int = SUBISO_MAX_EDGES,
-    max_pattern_nodes: int = SUBISO_MAX_PATTERN_NODES,
-) -> bool:
+def subisomorphic(graph: Graph, pattern: Graph) -> bool:
     """True iff ``pattern`` is (induced-)subgraph-isomorphic to ``graph``.
 
     Distributed screen: target nodes below the pattern's weakest
@@ -432,16 +426,17 @@ def subisomorphic(
     part that runs on the cluster, and it alone resolves most negative
     queries (empty screen => False with no driver work). The exact
     backtracking then runs on the driver over the screened region, refusing
-    loudly past ``max_edges``."""
+    loudly past ``routing.SUBISO_MAX_EDGES`` screened edges and past
+    ``routing.SUBISO_MAX_PATTERN_NODES`` pattern nodes."""
     if graph.is_directed != pattern.is_directed:
         raise GraphPropertyError(
             "subisomorphic requires both graphs to have the same directedness"
         )
     n_pat = pattern.num_nodes()
-    if n_pat > max_pattern_nodes:
+    if n_pat > routing.SUBISO_MAX_PATTERN_NODES:
         raise GraphPropertyError(
             f"subisomorphic backtracking is exponential in pattern size; "
-            f"pattern has {n_pat} nodes > max {max_pattern_nodes}"
+            f"pattern has {n_pat} nodes > max {routing.SUBISO_MAX_PATTERN_NODES}"
         )
     # the node pre-check is safe on raw counts; the EDGE pre-check must
     # compare like with like — the search dedups edge rows (and the engine
@@ -451,17 +446,14 @@ def subisomorphic(
     # raw comparison would reject.
     if n_pat > graph.num_nodes():
         return False
+    lay = pattern.sequential_layout()
+    p_edges = set(zip(lay.ids[lay.src].tolist(), lay.ids[lay.dst].tolist()))
     if pattern.num_edges() > graph.num_edges():
-        p_distinct = pattern.edges.select(SRC, DST).distinct().count()
-        if p_distinct > graph.edges.select(SRC, DST).distinct().count():
+        if len(p_edges) > graph.edges.select(SRC, DST).distinct().count():
             return False
     directed = graph.is_directed
-    p_edges = [
-        (r[SRC], r[DST])
-        for r in pattern.edges.select(SRC, DST).distinct().collect()
-    ]
     p_nodes, p_succ, p_pred = _neighbor_sets(p_edges, directed)
-    p_nodes |= {r[ID] for r in pattern.node_ids().collect()}
+    p_nodes |= set(lay.ids.tolist())
     min_out = min(len(p_succ.get(u, ())) for u in p_nodes)
     min_in = min(len(p_pred.get(u, ())) for u in p_nodes)
 
@@ -482,10 +474,10 @@ def subisomorphic(
         .join(keep.select(F.col(ID).alias(DST)), DST, "left_semi")
     )
     m = screened.count()
-    if m > max_edges:
+    if m > routing.SUBISO_MAX_EDGES:
         raise GraphPropertyError(
             f"subisomorphic driver search refuses {m} screened edges > max "
-            f"{max_edges} (raise max_edges or tighten the pattern)"
+            f"{routing.SUBISO_MAX_EDGES} (tighten the pattern)"
         )
     t_edges = [(r[SRC], r[DST]) for r in screened.collect()]
     t_nodes, t_succ, t_pred = _neighbor_sets(t_edges, True)
@@ -565,20 +557,16 @@ def subisomorphic(
     return _bt(0)
 
 
-def graph_isomorphic(
-    g1: Graph, g2: Graph, max_edges: int = SUBISO_MAX_EDGES
-) -> bool:
+def graph_isomorphic(g1: Graph, g2: Graph) -> bool:
     """``util.graph.isomorphic`` (``plugins/core/algorithms/utility.py:120-
     122``, no concrete impl in the reference) — EXACT for graphs whose
     screened size fits the driver kernel: equal |V|/|E|/degree-histogram
     invariants (distributed, cheap, resolves most negatives), then induced
     sub-isomorphism of g2 in g1 — with equal node and edge counts an
     induced embedding IS an isomorphism. Pattern-size guard: |V| must fit
-    ``SUBISO_MAX_PATTERN_NODES`` for the exact phase."""
+    ``routing.SUBISO_MAX_PATTERN_NODES`` for the exact phase."""
     from metagraph_spark.operators.utility import graph_isomorphic_quick_reject
 
     if not graph_isomorphic_quick_reject(g1, g2):
         return False
-    return subisomorphic(
-        g1, g2, max_edges=max_edges, max_pattern_nodes=SUBISO_MAX_PATTERN_NODES
-    )
+    return subisomorphic(g1, g2)

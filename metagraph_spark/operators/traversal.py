@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph, driver_frame
+from metagraph_spark.operators import routing
 from metagraph_spark.state import truncate_lineage
 
 
@@ -232,58 +233,46 @@ def minimum_spanning_tree(graph: Graph, max_rounds: int = 64) -> Graph:
 # Sequential traversals — DRIVER KERNELS (same scope decision as flow.py:
 # the visit order of DFS / the expansion order of A* depends on every prior
 # step, so no frontier-parallel plan exists; the reference's own concrete
-# impls are single-threaded networkx/scipy). One Arrow pass assembles a
-# positional CSR sorted by (src, dst) — ascending-id neighbor preference is
-# the documented deterministic tie-break — the walk runs in numpy/python on
-# the driver, and only the O(V) result table goes back to Spark. A hard
-# ``max_edges`` guard refuses graphs outside this scope instead of OOMing.
+# impls are single-threaded networkx/scipy). The handle's positional layout
+# (``Graph.sequential_layout``: the kept ``Graph.driver_layout`` within the
+# driver caps) becomes a CSR sorted by (src, dst) — ascending-id neighbor
+# preference is the documented deterministic tie-break — the walk runs in
+# numpy/python on the driver, and only the O(V) result table goes back to
+# Spark. ``routing.SEQUENTIAL_MAX_EDGES`` refuses graphs outside this scope
+# instead of OOMing.
 
-DRIVER_TRAVERSAL_MAX_EDGES = 10_000_000
 
-
-def _driver_csr(graph: Graph, max_edges: int, op: str, weights: bool):
-    """One Arrow pass -> (node_arr, indptr, nbr_pos, w or None).
+def _driver_csr(graph: Graph, op: str, weights: bool):
+    """``(layout, indptr, nbr_pos, w or None)`` from the handle's layout.
 
     Adjacency is ascending-dst within each source (the tie-break every
     driver-kernel traversal documents). Directed graphs keep out-edges
     only (nx semantics on DiGraph); undirected graphs are symmetrized.
     """
-    m = graph.num_edges() * (1 if graph.is_directed else 2)
-    if m > max_edges:
+    m = routing.layout_edges(op, graph)
+    if m > routing.SEQUENTIAL_MAX_EDGES:
         raise GraphPropertyError(
             f"{op} is a driver kernel (inherently sequential visit order); "
-            f"graph has {m} (symmetrized) edges > max {max_edges}"
+            f"graph has {m} (symmetrized) edges > max "
+            f"{routing.SEQUENTIAL_MAX_EDGES}"
         )
-    node_arr = np.sort(graph.node_ids().toArrow().column(ID).to_numpy())
-    cols = [SRC, DST] + ([WEIGHT] if weights else [])
-    e_tbl = graph.symmetrized().select(*cols).toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    w = e_tbl.column(WEIGHT).to_numpy().astype("float64") if weights else None
+    lay = graph.sequential_layout()
+    src_pos, dst_pos, w = lay.symmetrized(graph.is_directed)
     order = np.lexsort((dst_pos, src_pos))
     src_pos, dst_pos = src_pos[order], dst_pos[order]
-    if w is not None:
-        w = w[order]
-    n = len(node_arr)
-    indptr = np.zeros(n + 1, dtype=np.int64)
+    w = w[order] if weights else None
+    indptr = np.zeros(lay.n + 1, dtype=np.int64)
     np.add.at(indptr, src_pos + 1, 1)
     np.cumsum(indptr, out=indptr)
-    return node_arr, indptr, dst_pos, w
+    return lay, indptr, dst_pos, w
 
 
-def _resolve_node(node_arr, node_id: int, what: str) -> int:
-    p = int(np.searchsorted(node_arr, node_id))
-    if not (0 <= p < len(node_arr) and node_arr[p] == node_id):
-        raise ValueError(f"{what} node {node_id} not in graph")
-    return p
-
-
-def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
+def _dfs_kernel(graph: Graph, source_node: int):
     """Iterative preorder DFS with ascending-id neighbor preference.
     Returns (node_arr, order_positions, parent_positions)."""
-    node_arr, indptr, nbr, _ = _driver_csr(graph, max_edges, "dfs", False)
-    s = _resolve_node(node_arr, source_node, "source")
-    n = len(node_arr)
+    lay, indptr, nbr, _ = _driver_csr(graph, "dfs", False)
+    s = lay.position(source_node, "source")
+    n = lay.n
     seen = np.zeros(n, dtype=bool)
     parent = np.full(n, -1, dtype=np.int64)
     order = []
@@ -302,7 +291,7 @@ def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
             nb = nbr[j]
             if not seen[nb]:
                 stack.append((int(nb), node))
-    return node_arr, order, parent
+    return lay.ids, order, parent
 
 
 def _visit_frame(graph: Graph, node_arr, positions: list) -> DataFrame:
@@ -315,25 +304,21 @@ def _visit_frame(graph: Graph, node_arr, positions: list) -> DataFrame:
     )
 
 
-def dfs_iter(
-    graph: Graph, source_node: int, max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES
-) -> DataFrame:
+def dfs_iter(graph: Graph, source_node: int) -> DataFrame:
     """``traversal.dfs_iter`` (``plugins/core/algorithms/traversal.py:41-44``;
     nx impl ``plugins/networkx/algorithms.py:267-274``): node ids in DFS
     preorder from ``source_node`` as ``(pos, id)`` rows — same output shape
     as ``bfs_iter``. Golden: ``tests/algorithms/test_traversal.py:188-226``."""
-    node_arr, order, _ = _dfs_kernel(graph, source_node, max_edges)
+    node_arr, order, _ = _dfs_kernel(graph, source_node)
     return _visit_frame(graph, node_arr, order)
 
 
-def dfs_tree(
-    graph: Graph, source_node: int, max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES
-) -> DataFrame:
+def dfs_tree(graph: Graph, source_node: int) -> DataFrame:
     """``traversal.dfs_tree`` (``traversal.py:47-51``; nx impl
     ``networkx/algorithms.py:276-282``): NodeMap ``(id, parent)`` over nodes
     reachable from ``source_node``; the source's parent is itself. Golden:
     ``tests/algorithms/test_traversal.py:228-275``."""
-    node_arr, order, parent = _dfs_kernel(graph, source_node, max_edges)
+    node_arr, order, parent = _dfs_kernel(graph, source_node)
     order = np.asarray(order, dtype=np.int64)
     return driver_frame(
         graph.edges.sparkSession,
@@ -347,7 +332,6 @@ def astar_search(
     source_node: int,
     target_node: int,
     heuristic_func,
-    max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES,
 ) -> DataFrame:
     """``traversal.astar_search`` (``traversal.py:75-87``; nx impl
     ``networkx/algorithms.py:583-600``): A* path from source to target as
@@ -360,12 +344,11 @@ def astar_search(
     """
     import heapq
 
-    node_arr, indptr, nbr, w = _driver_csr(
-        graph, max_edges, "astar_search", graph.is_weighted
-    )
-    s = _resolve_node(node_arr, source_node, "source")
-    t = _resolve_node(node_arr, target_node, "target")
-    n = len(node_arr)
+    lay, indptr, nbr, w = _driver_csr(graph, "astar_search", graph.is_weighted)
+    node_arr = lay.ids
+    s = lay.position(source_node, "source")
+    t = lay.position(target_node, "target")
+    n = lay.n
     g = np.full(n, np.inf, dtype=np.float64)
     parent = np.full(n, -1, dtype=np.int64)
     g[s] = 0.0

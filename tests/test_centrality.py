@@ -9,6 +9,7 @@ import networkx as nx
 import pytest
 
 from metagraph_spark.graph import build
+from metagraph_spark.operators import routing
 from metagraph_spark.operators.centrality import (
     betweenness_centrality,
     closeness_centrality,
@@ -117,17 +118,20 @@ def test_betweenness_golden_multiple_hubs(spark):
     assert_close_map(got, expected, rel_tol=1e-9)
 
 
-def test_betweenness_distributed_weighted_goldens(spark):
+def test_betweenness_distributed_weighted_goldens(spark, monkeypatch):
     """The weighted distributed strategy (implicit shortest-path DAG +
     level-layered sweeps — the scale path past the broadcast-CSR guard
     for weighted graphs) reproduces BOTH reference goldens, forced via
-    max_edges=1 auto fall-through AND via strategy='distributed'."""
+    the auto fall-through past BETWEENNESS_MAX_EDGES=1 AND via
+    strategy='distributed'."""
     expected = {0: 1.0, 1: 1.0, 2: 9.0, 3: 6.0, 4: 12.0, 5: 13.0, 6: 11.0, 7: 0.0}
     g = build(df_from_edges(spark, STD_EDGES), is_directed=True)
-    got = to_map(
-        betweenness_centrality(g, normalize=False, max_edges=1, strategy="auto"),
-        "betweenness",
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(routing, "BETWEENNESS_MAX_EDGES", 1)
+        got = to_map(
+            betweenness_centrality(g, normalize=False, strategy="auto"),
+            "betweenness",
+        )
     assert_close_map(got, expected, rel_tol=1e-9)
     edges = [
         (0, 1, 2), (0, 3, 0.1), (1, 5, 1), (2, 5, 5), (2, 7, 6), (3, 1, 7),
@@ -226,7 +230,7 @@ def test_closeness_all_nodes_guard(spark, monkeypatch):
     import metagraph_spark.operators.centrality as C
     from metagraph_spark.exceptions import GraphPropertyError
 
-    monkeypatch.setattr(C, "CLOSENESS_ALL_NODES_LIMIT", 3)
+    monkeypatch.setattr(routing, "CLOSENESS_ALL_NODES_LIMIT", 3)
     g = build(
         df_from_edges(
             spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)], weighted=True
@@ -239,7 +243,7 @@ def test_closeness_all_nodes_guard(spark, monkeypatch):
     assert out.count() == 2
 
 
-def test_betweenness_edge_guard(spark):
+def test_betweenness_edge_guard(spark, monkeypatch):
     # strategy='kernel' past the broadcast guard still refuses loudly;
     # 'auto' now falls through to the weighted distributed strategy
     # instead (covered by the weighted-goldens test)
@@ -248,8 +252,9 @@ def test_betweenness_edge_guard(spark):
     g = build(
         df_from_edges(spark, STD_EDGES, weighted=True), is_directed=True
     )
+    monkeypatch.setattr(routing, "BETWEENNESS_MAX_EDGES", 2)
     with pytest.raises(GraphPropertyError):
-        betweenness_centrality(g, max_edges=2, strategy="kernel")
+        betweenness_centrality(g, strategy="kernel")
 
 
 def test_betweenness_validates_sources(spark):
@@ -279,11 +284,11 @@ def test_betweenness_dedups_duplicate_sources(spark):
 
 
 @pytest.mark.slow
-def test_betweenness_distributed_matches_kernel_and_nx(spark):
+def test_betweenness_distributed_matches_kernel_and_nx(spark, monkeypatch):
     """The distributed BFS strategy (scale path past the broadcast-CSR
     guard) must agree with the kernel strategy AND networkx subset-Brandes
-    on an unweighted graph. `max_edges=1` forces auto past the guard, so
-    this also exercises the auto fall-through."""
+    on an unweighted graph. `BETWEENNESS_MAX_EDGES=1` forces auto past the
+    guard, so this also exercises the auto fall-through."""
     import networkx as nx
 
     rng = __import__("random").Random(7)
@@ -300,8 +305,9 @@ def test_betweenness_distributed_matches_kernel_and_nx(spark):
         betweenness_centrality(g, nodes=src_df, strategy="kernel"),
         "betweenness",
     )
+    monkeypatch.setattr(routing, "BETWEENNESS_MAX_EDGES", 1)
     dist = to_map(
-        betweenness_centrality(g, nodes=src_df, max_edges=1, strategy="auto"),
+        betweenness_centrality(g, nodes=src_df, strategy="auto"),
         "betweenness",
     )
     for v in range(n):

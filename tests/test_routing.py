@@ -11,6 +11,7 @@ import importlib
 import math
 import os
 import pathlib
+import re
 import sys
 import tempfile
 import threading
@@ -27,9 +28,11 @@ from metagraph_spark.operators import (
     kernel,
     kernel_algos,
     routing,
+    subgraph,
     traversal,
 )
 from metagraph_spark.operators.centrality import (
+    betweenness_centrality,
     eigenvector_centrality,
     hits_centrality,
     katz_centrality,
@@ -306,6 +309,65 @@ def test_one_way_out_of_the_driver():
     assert found  # the scan sees driver_frame's own call
 
 
+def _int_valued(node) -> bool:
+    if isinstance(node, ast.Constant):
+        return type(node.value) is int
+    if isinstance(node, ast.UnaryOp):
+        return _int_valued(node.operand)
+    if isinstance(node, ast.BinOp):
+        return _int_valued(node.left) and _int_valued(node.right)
+    return False
+
+
+def _size_caps(root) -> list:
+    """``file:NAME`` of every module-level int constant named like a size
+    cap (``*_MAX_*``, ``MAX_*``, ``*_MAX``, ``*_LIMIT``) under ``root``."""
+    cap = re.compile(r"(^|_)MAX(_|$)|_LIMIT$")
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for n in ast.parse(path.read_text()).body:
+            if isinstance(n, ast.Assign) and _int_valued(n.value):
+                found += [f"{path.relative_to(root)}:{t.id}" for t in n.targets
+                          if isinstance(t, ast.Name) and cap.search(t.id)]
+    return found
+
+
+def _graph_collects(root) -> list:
+    """``file:line`` of every ``.toArrow()``/``.toPandas()``/``.collect()``
+    whose receiver chain reaches ``.edges``, ``.symmetrized()`` or
+    ``.node_ids()``; a chain through ``.agg(...)`` reads aggregate rows,
+    not the graph, and is not counted."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("toArrow", "toPandas", "collect")):
+                continue
+            parts, node = set(), n.func.value
+            while isinstance(node, (ast.Call, ast.Attribute, ast.Subscript)):
+                if isinstance(node, ast.Attribute):
+                    parts.add(node.attr)
+                node = node.func if isinstance(node, ast.Call) else node.value
+            if "agg" not in parts and parts & {"edges", "symmetrized",
+                                               "node_ids"}:
+                found.append(f"{path.relative_to(root)}:{n.lineno}")
+    return found
+
+
+def test_one_way_in_and_one_cap_table():
+    """``routing.py`` is the only operator module that defines a size cap,
+    and no engine module but ``graph.py`` (``collect_driver_layout``)
+    collects a graph's edges or node ids."""
+    root = pathlib.Path(graph_mod.__file__).parent
+    caps = _size_caps(root / "operators")
+    assert [c for c in caps if not c.startswith("routing.py:")] == []
+    assert "routing.py:SEQUENTIAL_MAX_EDGES" in caps
+    found = _graph_collects(root)
+    assert [f for f in found if not f.startswith("graph.py:")] == []
+    assert found  # the scan sees collect_driver_layout's own collect
+
+
 # -------------------------------------------- the Graph's driver layout
 
 def _four_ops(g):
@@ -384,10 +446,12 @@ def test_layout_follows_new_edges(spark, two_partitions, monkeypatch):
 
 def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
                                            monkeypatch):
-    """pagerank, CC, LPA and triangles on one handle collect the edges
-    once, and so do a directed and an undirected handle sharing one
-    metadata dict; the kept arrays are read-only and ``unpersist`` drops
-    them; calls routed above the driver caps collect nothing."""
+    """pagerank, CC, LPA, triangles and the sequential kernels (DFS, A*,
+    the betweenness kernel, the subisomorphic pattern) on one handle
+    collect the edges once, and so do max_flow then min_cut, and a
+    directed and an undirected handle sharing one metadata dict; the kept
+    arrays are read-only and ``unpersist`` drops them; calls routed above
+    the driver caps collect nothing."""
     builds = spy_calls(monkeypatch, graph_mod, "collect_driver_layout")
     g = _graph(spark, False)
     _four_ops(g)
@@ -397,6 +461,15 @@ def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
     for a in (lay.ids, lay.src, lay.dst):
         with pytest.raises(ValueError, match="read-only"):
             a[0] = 0
+    traversal.dfs_iter(g, 1).collect()
+    traversal.dfs_tree(g, 1).collect()
+    traversal.astar_search(g, 1, 5, lambda v: 0.0).collect()
+    betweenness_centrality(g, strategy="kernel").collect()
+    assert subgraph.subisomorphic(g, g)
+    assert len(builds) == 1
+    w = _flow_graph(spark)
+    assert flow.max_flow(w, 1, BIG)[0] == flow.min_cut(w, 1, BIG)[0] == 2.0
+    assert len(builds) == 2
 
     counts = {"num_nodes": 8, "num_edges": len(EDGES)}
     d = graph_mod.Graph(edges=g.edges, nodes=g.nodes, is_directed=True,
@@ -405,7 +478,7 @@ def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
                         metadata=d.metadata)
     pagerank(d, fixed_iterations=2).collect()
     assert triangle_count(u) == 2
-    assert len(builds) == 2
+    assert len(builds) == 3
     u.unpersist()
     assert graph_mod._LAYOUT not in d.metadata
 
@@ -419,8 +492,44 @@ def test_one_collect_per_driver_route_call(spark, tmp_path, two_partitions,
                          kernel_spill_dir=str(tmp_path / "cc")).collect()
     pagerank(g, fixed_iterations=1,
              kernel_spill_dir=str(tmp_path / "pr")).collect()
-    assert len(builds) == 2
+    assert len(builds) == 3
     assert graph_mod._LAYOUT not in g.metadata
+
+
+def _flow_graph(spark):
+    return build(df_from_edges(spark, [(1, 2, 3.0), (1, 3, 1.0), (3, 2, 1.0),
+                                       (2, BIG, 2.0)]).coalesce(1))
+
+
+def _sequential_ops(g, w):
+    """DFS, A*, the betweenness kernel on ``g`` and max-flow on ``w``."""
+    return {
+        "dfs": [tuple(r) for r in traversal.dfs_iter(g, 1).collect()],
+        "astar": [tuple(r) for r in traversal.astar_search(
+            g, 1, 5, lambda v: 0.0).collect()],
+        "betweenness": _by_id(betweenness_centrality(g, strategy="kernel"),
+                              "betweenness"),
+        "flow": sorted(tuple(r)
+                       for r in flow.max_flow(w, 1, BIG)[1].edges.collect()),
+    }
+
+
+def test_sequential_kernels_accept_graphs_above_the_driver_caps(
+        spark, two_partitions, monkeypatch):
+    """Above the driver caps but within ``SEQUENTIAL_MAX_EDGES`` and
+    ``BETWEENNESS_MAX_EDGES``, DFS, A*, max-flow and the betweenness
+    kernel still run on the driver and return the rows they return within
+    the caps; the handles keep no layout."""
+    within = _sequential_ops(_graph(spark, False), _flow_graph(spark))
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    g, w = _graph(spark, False), _flow_graph(spark)
+    above = _sequential_ops(g, w)
+    _close(above.pop("betweenness"), within.pop("betweenness"))
+    assert above == within
+    assert within["flow"] == [(1, 2, 2.0), (2, BIG, 2.0)]
+    for h in (g, w):
+        assert h.driver_layout() is None
+        assert graph_mod._LAYOUT not in h.metadata
 
 
 # ------------------------------------------------- route gaps: weights, warm

@@ -273,18 +273,23 @@ def test_subisomorphic_isolated_pattern_nodes(spark):
     assert subisomorphic(path3, edgeless2) is True
 
 
-def test_subisomorphic_guards(spark):
+def test_subisomorphic_guards(spark, monkeypatch):
     from metagraph_spark.exceptions import GraphPropertyError
+    from metagraph_spark.operators import routing
     from metagraph_spark.operators.subgraph import subisomorphic
 
     big = _g(spark, SUBISO_BIG)
     pat = _g(spark, SUBISO_G1)
     with pytest.raises(GraphPropertyError, match="directedness"):
         subisomorphic(big, _g(spark, SUBISO_G1, directed=False))
-    with pytest.raises(GraphPropertyError, match="exponential"):
-        subisomorphic(big, pat, max_pattern_nodes=2)
-    with pytest.raises(GraphPropertyError, match="refuses"):
-        subisomorphic(big, pat, max_edges=3)
+    with monkeypatch.context() as mp:
+        mp.setattr(routing, "SUBISO_MAX_PATTERN_NODES", 2)
+        with pytest.raises(GraphPropertyError, match="exponential"):
+            subisomorphic(big, pat)
+    with monkeypatch.context() as mp:
+        mp.setattr(routing, "SUBISO_MAX_EDGES", 3)
+        with pytest.raises(GraphPropertyError, match="refuses"):
+            subisomorphic(big, pat)
 
 
 @pytest.mark.slow

@@ -177,12 +177,15 @@ def test_dfs_tree_golden(spark):
     assert got[1] in (0, 7) and got[3] in (0, 7) and got[4] in (1, 3)
 
 
-def test_dfs_guard_and_missing_source(spark):
+def test_dfs_guard_and_missing_source(spark, monkeypatch):
+    from metagraph_spark.operators import routing
     from metagraph_spark.operators.traversal import dfs_iter
 
     g = build(df_from_edges(spark, DFS_EDGES), is_directed=True)
-    with pytest.raises(GraphPropertyError, match="driver kernel"):
-        dfs_iter(g, 0, max_edges=2)
+    with monkeypatch.context() as mp:
+        mp.setattr(routing, "SEQUENTIAL_MAX_EDGES", 2)
+        with pytest.raises(GraphPropertyError, match="driver kernel"):
+            dfs_iter(g, 0)
     with pytest.raises(ValueError, match="not in graph"):
         dfs_iter(g, 99)
 
