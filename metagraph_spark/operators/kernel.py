@@ -11,13 +11,10 @@
   weights=contrib[srcs])`` into the block's dst slice):
 
   * the driver loop — the whole loop in numpy on the driver over
-    once-collected block arrays, no Spark job per superstep; taken when
-    the layout fits ``routing.fits_driver``;
+    once-collected block arrays (:func:`_gather`), no Spark job per
+    superstep; taken when the layout fits ``routing.fits_driver``;
   * the slice-store loop (``_distributed_superstep_loop``) — for
-    file-backed blocks above the driver caps or with a ``slice_store``:
-    each task reads the previous rank vector from the slice store, writes
-    its new dst slice and returns two scalars, so the rank vector never
-    crosses the driver. ONE Spark job, ZERO shuffles per superstep.
+    file-backed blocks above the driver caps or with a ``slice_store``.
 
   A Graph within the driver caps builds no blocks: the driver loop runs
   over one dst-sorted block derived per call from the handle's kept
@@ -29,6 +26,29 @@
   physical split: scipy CSR kernels for in-memory speed
   (``plugins/scipy/types.py:191-225``), chunked loaders for
   bigger-than-memory (``core/dask/loader.py:15-74``).
+
+The slice-store protocol, shared by the above-cap pagerank, katz, CC and
+LPA loops (one chunk protocol for every algorithm, as metagraph's loader,
+``core/dask/loader.py:153-240``). Each vector lives in a slice store (the
+contract is in ``operators/slice_stores.py``), so it never crosses the
+driver and driver state stays O(num_blocks):
+
+1. :func:`_open_run` — the caller's ``slice_store``, or a
+   :class:`LocalSliceStore` under ``<spill_dir>/<prefix>_<uuid>``;
+2. :func:`_resume_or_start` — with ``resume``, the newest committed
+   vector of a run whose stored meta matches; otherwise write the meta
+   and commit the initial vector;
+3. :func:`_slice_superstep` — ONE Spark job, ZERO shuffles per
+   superstep: each task reads the previous vector, writes its blocks' new
+   dst slices and returns partial scalars; the driver checks every dst
+   range reported, then stamps the completion marker that resume trusts;
+4. :func:`_emit_slices` — one task per dst range emits ``(id, value)``,
+   ``truncate_lineage`` pins it, and the run is removed.
+
+A run that loses a slice or does not converge is removed
+(:func:`_give_up`); any other failure leaves it for ``resume``. Each loop
+keeps only its update rule, its reduction of the partials and its control
+flow.
 
 Semantics are EXACTLY operators/pagerank.py (networkx dangling handling,
 N-scaled L1 convergence, ConvergenceError) — asserted by shared golden
@@ -580,18 +600,17 @@ def load_edge_blocks(spark, spill_dir: str) -> EdgeBlocks:
 class LocalSliceStore:
     """Slice store backed by memmap files on a SHARED filesystem.
 
-    The distributed superstep loop reads/writes per-iteration rank vectors
+    The slice-store loops read and write their per-iteration vectors
     through this interface; this implementation holds one ``.npy`` file per
     iteration under ``run_dir`` and relies on every worker seeing the same
     filesystem (local mode, NFS/Lustre on a cluster). Tasks write disjoint
     dst ranges of the single file in place (safe) and readers mmap it, so
     the OS page cache is shared host-wide. A cluster WITHOUT a shared
-    filesystem plugs a different implementation into
-    ``pagerank_kernel(slice_store=...)`` — anything satisfying this duck
-    type (put/get aux array, create/open/delete iteration vectors) works,
-    e.g. per-slice objects on an object store reassembled per worker. The
-    instance must be picklable (workers receive it inside the task
-    closure); this one carries only the ``run_dir`` string."""
+    filesystem passes another implementation of the contract in
+    ``operators/slice_stores.py`` as ``slice_store=`` (e.g.
+    :class:`~metagraph_spark.operators.slice_stores.ObjectSliceStore`).
+    The instance is picklable (workers receive it inside the task
+    closure); it carries only the ``run_dir`` string and a cache token."""
 
     def __init__(self, run_dir: str):
         import uuid
@@ -627,8 +646,7 @@ class LocalSliceStore:
     def put_aux_file(self, name: str, src_path: str) -> None:
         """Register an EXISTING .npy file as this run's aux vector without
         copying it (the scale layout writes inv_deg.npy once at
-        build_edge_blocks time; every run links it). Stores without this
-        method get the array streamed through ``put_aux`` instead."""
+        build_edge_blocks time; every run links it)."""
         import os
 
         dst = self._aux_path(name)
@@ -693,9 +711,6 @@ class LocalSliceStore:
 
     def flush(self, handle: np.ndarray) -> None:
         handle.flush()
-
-    def read_result(self, iteration: int) -> np.ndarray:
-        return np.array(np.load(self._vec_path(iteration), mmap_mode="r"))
 
     def delete_vector(self, iteration: int) -> None:
         import os
@@ -767,6 +782,138 @@ def slice_ranges(eb: EdgeBlocks) -> dict:
     return {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
 
 
+# -- the slice-store protocol (see the module docstring): the only code
+# that opens, commits, resumes or removes a slice-store run
+
+
+def _block_rows(batches: Iterator[pd.DataFrame]):
+    """``(path, dst_lo)`` of every manifest row a task receives."""
+    for pdf in batches:
+        for path, lo in zip(pdf["path"], pdf["dst_lo"]):
+            yield path, int(lo)
+
+
+def _open_run(eb: EdgeBlocks, slice_store, prefix: str):
+    """``(store, {dst_lo: dst_hi})`` of a new slice-store run over ``eb``:
+    the caller's ``slice_store``, or a :class:`LocalSliceStore` under
+    ``<spill_dir>/<prefix>_<uuid>``, with ``init_run`` done."""
+    import os
+    import uuid
+
+    hi_of = slice_ranges(eb)
+    store = slice_store
+    if store is None:
+        store = LocalSliceStore(
+            os.path.join(eb.spill_dir, f"{prefix}_{uuid.uuid4().hex[:12]}")
+        )
+    store.init_run()
+    return store, hi_of
+
+
+def _resume_or_start(store, resume: bool, meta: dict, match, init_idx: int,
+                     init: np.ndarray):
+    """``(index, meta)`` of the committed vector the run continues from.
+
+    With ``resume`` and a committed vector in the store: the store's
+    ``latest_complete()`` and stored meta, once that meta agrees with
+    ``meta`` on every key in ``match`` — a stale directory from a
+    DIFFERENT run raises instead of converging to garbage. Otherwise the
+    run starts: ``meta`` is written and ``init`` committed as vector
+    ``init_idx``."""
+    if resume:
+        prior = store.get_meta()
+        latest = store.latest_complete()
+        if prior is not None and latest is not None:
+            want = {k: meta[k] for k in match}
+            if any(prior.get(k) != v for k, v in want.items()):
+                raise ValueError(
+                    "resume requested but the slice store holds a different "
+                    f"run (stored {prior}, this run {want})"
+                )
+            return latest, prior
+    store.put_meta(meta)
+    store.write_full(init_idx, init)
+    store.mark_complete(init_idx)
+    return init_idx, meta
+
+
+def _give_up(store, err: Exception):
+    """Remove the run's store, then raise ``err``: a run that lost a slice
+    or did not converge leaves nothing to resume from."""
+    store.cleanup()
+    raise err
+
+
+def _slice_superstep(eb: EdgeBlocks, store, hi_of: dict, prev_idx: int,
+                     out_idx: int, update, partials: str, what: str,
+                     dtype=np.float64, meta: dict | None = None):
+    """One superstep job, vector ``prev_idx`` → vector ``out_idx``;
+    returns the partial-scalar rows as pandas.
+
+    Each task opens the previous vector and a writable view of the new
+    one. Per block, ``update(prev, path, lo, hi)`` gives the new dst slice
+    and a dict of partial scalars (Spark schema ``partials``); the task
+    writes the slice and returns one ``(dst_lo, *partials)`` row. The
+    driver then checks that every range of ``hi_of`` reported (else the
+    run is removed and "lost a slice" raised) and only then commits
+    ``out_idx``: a crash before the marker re-runs this superstep, and a
+    half-written vector is never resumed from. ``meta``, when given, is
+    written after the commit."""
+    store.create_vector(out_idx, eb.n, dtype=dtype)
+
+    def job(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prev = store.open_read(prev_idx)
+        out_vec = store.open_write(out_idx)
+        for path, lo in _block_rows(batches):
+            hi = hi_of[lo]
+            new_slice, parts = update(prev, path, lo, hi)
+            out_vec[lo:hi] = new_slice
+            yield pd.DataFrame(
+                {"dst_lo": [np.int64(lo)], **{k: [v] for k, v in parts.items()}}
+            )
+        store.flush(out_vec)
+
+    schema = ", ".join(["dst_lo long"] + ([partials] if partials else []))
+    out = eb.manifest.mapInPandas(job, schema=schema).toPandas()
+    if set(out["dst_lo"]) != set(hi_of):
+        _give_up(store, RuntimeError(f"distributed {what} lost a slice"))
+    store.mark_complete(out_idx)
+    if meta is not None:
+        store.put_meta(meta)
+    return out
+
+
+def _emit_slices(eb: EdgeBlocks, store, hi_of: dict, idx: int, col: str,
+                 value) -> DataFrame:
+    """The run's ``(id, <col>)`` result: one task per dst range emits the
+    range's ids from the mmap'd id file and ``value(ids, vec[lo:hi])`` of
+    vector ``idx`` (``col`` is the column's schema, e.g. ``"rank
+    double"``), so neither vector crosses the driver. ``truncate_lineage``
+    pins the result, then the run is removed."""
+    import os
+
+    from metagraph_spark.state import truncate_lineage
+
+    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
+    name = col.split()[0]
+
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids = np.load(ids_path, mmap_mode="r")
+        vec = store.open_read(idx)
+        for _, lo in _block_rows(batches):
+            hi = hi_of[lo]
+            yield pd.DataFrame({
+                "id": np.asarray(ids[lo:hi]),
+                name: value(ids, np.asarray(vec[lo:hi])),
+            })
+
+    result = truncate_lineage(
+        eb.manifest.mapInPandas(emit, schema=f"id long, {col}")
+    )
+    store.cleanup()
+    return result
+
+
 def _distributed_superstep_loop(
     spark,
     eb: EdgeBlocks,
@@ -778,146 +925,67 @@ def _distributed_superstep_loop(
     slice_store=None,
     resume: bool = False,
 ):
-    """Fully distributed supersteps for file-backed blocks with FULL block
-    coverage: the rank vector NEVER crosses the driver during iteration.
+    """PageRank on the slice-store protocol. Each task gathers its dst
+    slice (bincount of ``prev[srcs]·invdeg[srcs]``), applies the rank
+    update with the dangling mass and teleport folded into one constant,
+    and returns ``(err, dangling-mass)`` partials. The inverse-degree
+    vector is the layout's ``inv_deg.npy``, linked into the run as its
+    aux vector; the dangling count comes from the layout metadata.
 
-    ``resume=True`` (requires an injected ``slice_store`` whose location
-    survived the crash): restart from the newest COMMITTED iteration
-    vector — the driver stamps a completion marker only after every slice
-    reported back, so a vector half-written by a dying run is never
-    resumed from. The dangling mass of the restored vector is recomputed
-    by one O(num_blocks)-row recovery job; run metadata (n, damping) is
-    verified against the store so a stale directory from a DIFFERENT run
-    fails loudly instead of converging to garbage. This is the kernel
-    path's counterpart to the join path's CheckpointManager mid-iteration
-    resume (north rule: supersteps survive executor/driver loss).
-
-    Each task gathers its dst-slice (bincount over its CSR block, weights
-    read from the previous iteration's vector), applies the rank update
-    with the two driver scalars (dangling mass, base) folded in as
-    constants, WRITES its new slice, and returns only (err, dangling-mass)
-    partial scalars. The driver per superstep schedules one job and sums
-    ~num_blocks scalar rows — no O(V) serialization, no per-worker
-    broadcast fetch.
-
-    Returns the final ``(id, rank)`` DataFrame, assembled DISTRIBUTEDLY
-    (each task emits its dst-range slice from the mmap'd id + rank files,
-    so neither vector ever crosses the driver). All vector I/O goes
-    through the slice store (default :class:`LocalSliceStore` under the
-    blocks' spill_dir). The inverse-degree vector is the layout's
-    ``inv_deg.npy``, linked into the run as the aux vector, and the
-    dangling count comes from the layout metadata, keeping driver state
-    O(num_blocks) end to end."""
+    ``resume=True`` restarts from the newest committed vector (meta keys
+    ``n``, ``damping``); one recovery job recomputes its dangling mass,
+    one scalar per dst range, never the vector itself."""
     import os
-    import uuid
 
     n = eb.n
-    hi_of = slice_ranges(eb)
     inv_path = os.path.join(eb.spill_dir, "inv_deg.npy")
     if not os.path.exists(inv_path):
         eb.out_deg  # raises the degree-free layout's actionable error
-    store = slice_store
-    if store is None:
-        store = LocalSliceStore(
-            os.path.join(eb.spill_dir, f"run_{uuid.uuid4().hex[:12]}")
-        )
-    store.init_run()
-    if hasattr(store, "put_aux_file"):
-        store.put_aux_file("invdeg", inv_path)
-    else:  # custom store: stream the file through, never resident
-        store.put_aux("invdeg", np.load(inv_path, mmap_mode="r"))
-    n_dangling = int(eb.n_dangling)
-    danglesum = float(n_dangling) / n  # of the uniform r0
-    base = (1.0 - damping) / n
-    err = None
-
-    durable = hasattr(store, "mark_complete") and hasattr(
-        store, "latest_complete"
+    store, hi_of = _open_run(eb, slice_store, "run")
+    store.put_aux_file("invdeg", inv_path)
+    last, _ = _resume_or_start(
+        store, resume, {"n": n, "damping": damping}, ("n", "damping"), -1,
+        np.full(n, 1.0 / n),
     )
-    start_it = 0
-    if resume and durable:
-        prior = store.get_meta() if hasattr(store, "get_meta") else None
-        latest = store.latest_complete()
-        if prior is not None and latest is not None:
-            if prior.get("n") != n or prior.get("damping") != damping:
-                raise ValueError(
-                    "resume requested but the slice store holds a different "
-                    f"run (stored n={prior.get('n')} damping="
-                    f"{prior.get('damping')}, this run n={n} damping="
-                    f"{damping})"
-                )
-            start_it = latest + 1
-    if start_it == 0:
-        if hasattr(store, "put_meta"):
-            store.put_meta({"n": n, "damping": damping})
-        store.write_full(-1, np.full(n, 1.0 / n))
-        if durable:
-            store.mark_complete(-1)
+    if last == -1:
+        danglesum = float(int(eb.n_dangling)) / n  # of the uniform r0
     else:
-        # recover the restored vector's dangling mass: one slice-scalar
-        # per dst-range, never the vector itself
-        rv = start_it - 1
-
         def recover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vec = store.open_read(rv)
+            vec = store.open_read(last)
             inv = store.get_aux("invdeg")
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]
-                    vs = np.asarray(vec[lo:hi])
-                    yield pd.DataFrame(
-                        {"dangle": [float(vs[np.asarray(inv[lo:hi]) == 0.0].sum())]}
-                    )
+            for _, lo in _block_rows(batches):
+                hi = hi_of[lo]
+                vs = np.asarray(vec[lo:hi])
+                yield pd.DataFrame(
+                    {"dangle": [float(vs[np.asarray(inv[lo:hi]) == 0.0].sum())]}
+                )
 
         danglesum = float(
             eb.manifest.mapInPandas(recover, schema="dangle double")
             .toPandas()["dangle"]
             .sum()
         )
-
-    for it in range(start_it, total):
+    base = (1.0 - damping) / n
+    err = None
+    for it in range(last + 1, total):
         const_term = damping * danglesum / n + base
-        cur = it
-        store.create_vector(cur, n)
 
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            prev = store.open_read(cur - 1)
-            out_vec = store.open_write(cur)
+        def update(prev, path, lo, hi):
             inv = store.get_aux("invdeg")
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    srcs, dsts = _open_block(row["path"])
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]  # static evenly-spaced ranges
-                    width = hi - lo
-                    w = prev[srcs] * inv[srcs]
-                    g = np.bincount(dsts, weights=w, minlength=width)[:width]
-                    new_slice = damping * g + const_term
-                    out_vec[lo:hi] = new_slice
-                    prev_slice = prev[lo:hi]
-                    inv_slice = inv[lo:hi]
-                    yield pd.DataFrame(
-                        {
-                            "dst_lo": [np.int64(lo)],
-                            "err": [float(np.abs(new_slice - prev_slice).sum())],
-                            "dangle": [float(new_slice[inv_slice == 0.0].sum())],
-                        }
-                    )
-            store.flush(out_vec)
+            srcs, dsts = _open_block(path)
+            width = hi - lo
+            w = prev[srcs] * inv[srcs]
+            g = np.bincount(dsts, weights=w, minlength=width)[:width]
+            new_slice = damping * g + const_term
+            return new_slice, {
+                "err": float(np.abs(new_slice - prev[lo:hi]).sum()),
+                "dangle": float(new_slice[inv[lo:hi] == 0.0].sum()),
+            }
 
-        out = eb.manifest.mapInPandas(
-            step, schema="dst_lo long, err double, dangle double"
-        ).toPandas()
-        if set(out["dst_lo"]) != set(hi_of):
-            store.cleanup()
-            raise RuntimeError("distributed superstep lost a slice")
+        out = _slice_superstep(eb, store, hi_of, it - 1, it, update,
+                               "err double, dangle double", "superstep")
         err = float(out["err"].sum())
         danglesum = float(out["dangle"].sum())
-        if durable:
-            # commit point: every slice validated above — a crash from
-            # here on resumes at it+1; a crash before it re-runs it
-            store.mark_complete(cur)
         if metrics_sink is not None:
             metrics_sink.append({"iteration": it, "l1_error": err})
         if it >= 1:
@@ -927,61 +995,46 @@ def _distributed_superstep_loop(
             break
     else:
         if fixed_iterations is None:
-            store.cleanup()
-            raise ConvergenceError(
+            _give_up(store, ConvergenceError(
                 f"pagerank_kernel failed to converge (err={err!r})"
-            )
-    # distributed result assembly: one task per dst-range emits (id, rank)
-    # from the mmap'd id file + final slice vector; localCheckpoint pins the
-    # result before the run dir is deleted. Neither vector touches the
-    # driver.
-    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    final_it = total - 1
+            ))
+    return _emit_slices(eb, store, hi_of, total - 1, "rank double",
+                        lambda ids, r: r)
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = np.load(ids_path, mmap_mode="r")
-        r = store.open_read(final_it)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lo = int(row["dst_lo"])
-                hi = hi_of[lo]
-                yield pd.DataFrame(
-                    {
-                        "id": np.asarray(ids[lo:hi]),
-                        "rank": np.asarray(r[lo:hi]),
-                    }
-                )
 
-    from metagraph_spark.state import truncate_lineage
-
-    result = truncate_lineage(
-        eb.manifest.mapInPandas(emit, schema="id long, rank double")
-    )
-    store.cleanup()
-    return result
+def _gather(blks, vec, n):
+    """``Aᵀ·vec`` over driver-resident blocks ``[(dst_lo, srcs, dsts,
+    ws|None)]``: per block a bincount of ``vec[srcs]·ws`` into its dst
+    slice — the per-block arithmetic of the slice-store and broadcast
+    loops, so values are bit-exact with them over the same blocks."""
+    g_vec = np.zeros(n)
+    for lo, srcs, dsts, ws in blks:
+        if len(srcs) == 0:
+            continue
+        w = vec[srcs]
+        if ws is not None:
+            w = w * ws
+        g = np.bincount(dsts, weights=w)
+        g_vec[lo : lo + len(g)] += g
+    return g_vec
 
 
 def _driver_pagerank_loop(spark, ids, blks, out_deg, damping, total,
                           tolerance, fixed_iterations, metrics_sink, maxiter):
-    """The driver superstep loop over driver-resident block arrays: per
-    block ``np.bincount(dsts, weights=contrib[srcs])`` into its dst slice,
-    no Spark job per superstep."""
+    """The driver superstep loop over driver-resident block arrays:
+    :func:`_gather` of ``rank/out_deg`` over the blocks, their weights
+    dropped (pagerank is unweighted), no Spark job per superstep."""
     n = len(out_deg)
     if n == 0:
         return spark.createDataFrame([], "id long, rank double")
+    blks = [(lo, srcs, dsts, None) for lo, srcs, dsts, _ in blks]
     dangling = out_deg == 0
     inv = np.where(dangling, 0.0, 1.0 / np.maximum(out_deg, 1.0))
     r = np.full(n, 1.0 / n)
     base = (1.0 - damping) / n
     err = None
     for it in range(total):
-        contrib = r * inv
-        g_vec = np.zeros(n)
-        for lo, srcs, dsts, _ws in blks:
-            if len(srcs) == 0:
-                continue
-            g = np.bincount(dsts, weights=contrib[srcs])
-            g_vec[lo : lo + len(g)] += g
+        g_vec = _gather(blks, r * inv, n)
         danglesum = r[dangling].sum()
         new_r = damping * g_vec + damping * danglesum / n + base
         err = np.abs(new_r - r).sum()

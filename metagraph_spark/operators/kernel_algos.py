@@ -17,11 +17,12 @@ arithmetic, so their results are bit-identical:
   ``kernel.driver_block_arrays``, CC and LPA through
   ``_driver_graph_arrays``);
 - the slice-store loop (``_distributed_*_loop``) — file-backed blocks
-  above the driver caps, or any call with a ``slice_store``: tasks read
-  the previous vector from the slice store and write their dst slice, so
-  the vector never crosses the driver (driver state O(num_blocks), no
-  vertex cap below int32 positions). A Graph above the caps is laid out
-  file-backed under ``spill_dir``, or a temp dir removed after the call.
+  above the driver caps, or any call with a ``slice_store``. Each is a
+  thin schedule on the slice-store protocol of ``operators/kernel.py``
+  (store lifecycle, resume, commit and result emit live there once): it
+  holds only its per-block update, its reduction of the partial scalars
+  and its control flow. A Graph above the caps is laid out file-backed
+  under ``spill_dir``, or a temp dir removed after the call.
 
 The update rules:
 
@@ -55,7 +56,8 @@ gather over blocks derived from :meth:`Graph.driver_layout` (HITS takes
 both its forward and its reversed view from that one collect); above the
 caps each superstep broadcasts the dense vector to one Spark job that
 gathers over the file-backed blocks of a temp dir (``_gather_once``).
-Katz, eigenvector and HITS driver loops share one gather, ``_gather``.
+The pagerank, katz, eigenvector and HITS driver loops share one gather,
+``kernel._gather``.
 """
 
 from __future__ import annotations
@@ -73,12 +75,17 @@ from metagraph_spark.graph import DST, SRC, WEIGHT, Graph, driver_frame
 from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
-    LocalSliceStore,
+    _block_rows,
     _driver_blocks,
+    _emit_slices,
+    _gather,
+    _give_up,
     _open_block,
     _open_block_weights,
+    _open_run,
+    _resume_or_start,
+    _slice_superstep,
     build_edge_blocks,
-    slice_ranges,
     with_blocks,
 )
 
@@ -94,64 +101,33 @@ def _distributed_katz_loop(
     fixed_iterations: int | None,
     metrics_sink: list | None,
 ) -> DataFrame:
-    """Fully distributed katz supersteps for file-backed blocks — the
-    vector never crosses the driver (same slice-store protocol as
-    ``kernel._distributed_superstep_loop``). Each task writes its dst slice
-    ``α·gather + β`` and returns (err, Σnew²) partials; the L2 norm for the
-    final normalization is the last superstep's Σnew² — no extra pass."""
-    import os
-    import uuid
-
+    """Katz on the slice-store protocol (``operators/kernel.py``). Each
+    task writes its dst slice ``α·gather + β`` and returns (err, Σnew²)
+    partials; the L2 norm for the final normalization is the last
+    superstep's Σnew² — no extra pass."""
     n = eb.n
-    hi_of = slice_ranges(eb)
     weighted = eb.has_weights
-    store = LocalSliceStore(
-        os.path.join(eb.spill_dir, f"katz_{uuid.uuid4().hex[:12]}")
-    )
-    store.init_run()
-    store.write_full(-1, np.zeros(n))
+    store, hi_of = _open_run(eb, None, "katz")
+    _resume_or_start(store, False, {"algo": "katz", "n": n}, (), -1,
+                     np.zeros(n))
+
+    def update(prev, path, lo, hi):
+        srcs, dsts = _open_block(path)
+        width = hi - lo
+        w = np.asarray(prev)[srcs]
+        if weighted:
+            w = w * np.asarray(_open_block_weights(path))
+        g = np.bincount(dsts, weights=w, minlength=width)[:width]
+        new_slice = alpha * g + beta
+        return new_slice, {
+            "err": float(np.abs(new_slice - np.asarray(prev[lo:hi])).sum()),
+            "sumsq": float((new_slice * new_slice).sum()),
+        }
+
     err = sumsq = None
     for it in range(total):
-        cur = it
-        store.create_vector(cur, n)
-
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            prev = store.open_read(cur - 1)
-            out_vec = store.open_write(cur)
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    path = row["path"]
-                    srcs, dsts = _open_block(path)
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]
-                    width = hi - lo
-                    w = np.asarray(prev)[srcs]
-                    if weighted:
-                        w = w * np.asarray(_open_block_weights(path))
-                    g = np.bincount(dsts, weights=w, minlength=width)[:width]
-                    new_slice = alpha * g + beta
-                    out_vec[lo:hi] = new_slice
-                    yield pd.DataFrame(
-                        {
-                            "dst_lo": [np.int64(lo)],
-                            "err": [
-                                float(
-                                    np.abs(
-                                        new_slice - np.asarray(prev[lo:hi])
-                                    ).sum()
-                                )
-                            ],
-                            "sumsq": [float((new_slice * new_slice).sum())],
-                        }
-                    )
-            store.flush(out_vec)
-
-        out = eb.manifest.mapInPandas(
-            step, schema="dst_lo long, err double, sumsq double"
-        ).toPandas()
-        if set(out["dst_lo"]) != set(hi_of):
-            store.cleanup()
-            raise RuntimeError("distributed katz superstep lost a slice")
+        out = _slice_superstep(eb, store, hi_of, it - 1, it, update,
+                               "err double, sumsq double", "katz superstep")
         err = float(out["err"].sum())
         sumsq = float(out["sumsq"].sum())
         if metrics_sink is not None:
@@ -163,35 +139,12 @@ def _distributed_katz_loop(
             break
     else:
         if fixed_iterations is None:
-            store.cleanup()
-            raise ConvergenceError(
+            _give_up(store, ConvergenceError(
                 f"katz failed to converge (err={err!r})"
-            )
+            ))
     norm = 1.0 / math.sqrt(sumsq) if sumsq and sumsq > 0 else 1.0
-    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    final_it = total - 1
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = np.load(ids_path, mmap_mode="r")
-        r = store.open_read(final_it)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lo = int(row["dst_lo"])
-                hi = hi_of[lo]
-                yield pd.DataFrame(
-                    {
-                        "id": np.asarray(ids[lo:hi]),
-                        "katz": np.asarray(r[lo:hi]) * norm,
-                    }
-                )
-
-    from metagraph_spark.state import truncate_lineage
-
-    result = truncate_lineage(
-        eb.manifest.mapInPandas(emit, schema="id long, katz double")
-    )
-    store.cleanup()
-    return result
+    return _emit_slices(eb, store, hi_of, total - 1, "katz double",
+                        lambda ids, x: x * norm)
 
 
 def _weighted_build(graph_or_blocks):
@@ -202,23 +155,6 @@ def _weighted_build(graph_or_blocks):
     return lambda g, d: build_edge_blocks(
         g, spill_dir=d, with_weights=weighted, with_degrees=False
     )
-
-
-def _gather(blks, vec, n):
-    """``Aᵀ·vec`` over driver-resident blocks ``[(dst_lo, srcs, dsts,
-    ws|None)]``: per block a bincount of ``vec[srcs]·ws`` into its dst
-    slice — the per-block arithmetic of the slice-store and broadcast
-    loops, so values are bit-exact with them over the same blocks."""
-    g_vec = np.zeros(n)
-    for lo, srcs, dsts, ws in blks:
-        if len(srcs) == 0:
-            continue
-        w = vec[srcs]
-        if ws is not None:
-            w = w * ws
-        g = np.bincount(dsts, weights=w)
-        g_vec[lo : lo + len(g)] += g
-    return g_vec
 
 
 def _driver_katz_loop(spark, ids, blks, alpha, beta, total, tolerance,
@@ -304,16 +240,13 @@ def _gather_once(eb: EdgeBlocks, vec):
 
     def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = np.asarray(bc.value)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                srcs, dsts = _open_block(row["path"])
-                w = c[srcs]
-                if weighted:
-                    w = w * _open_block_weights(row["path"])
-                g = np.bincount(dsts, weights=w)
-                yield pd.DataFrame(
-                    {"dst_lo": [np.int64(row["dst_lo"])], "g": [g]}
-                )
+        for path, lo in _block_rows(batches):
+            srcs, dsts = _open_block(path)
+            w = c[srcs]
+            if weighted:
+                w = w * _open_block_weights(path)
+            g = np.bincount(dsts, weights=w)
+            yield pd.DataFrame({"dst_lo": [np.int64(lo)], "g": [g]})
 
     out = eb.manifest.mapInPandas(
         gather, schema="dst_lo long, g array<double>"
@@ -566,190 +499,80 @@ def _distributed_cc_loop(
     eb: EdgeBlocks, max_rounds: int, fixed_rounds: int | None,
     slice_store=None, resume: bool = False,
 ) -> DataFrame:
-    """Hash-min label exchange where the label vector NEVER crosses the
-    driver: int64 label vectors live in the slice store (same protocol as
-    the pagerank/katz distributed loops), each gather task writes its
-    dst-slice minimum and returns a changed-count partial, and converged
-    rounds append ONE pointer-doubling job (``J[lo:hi] = L[L[lo:hi]]`` over
-    the mmap'd global vector) — O(log V) rounds, driver state
-    O(num_blocks). No dense driver label array, so the cc kernel is
-    capped only by int32 positions, like the file-backed pagerank route."""
-    import os
-    import uuid
+    """Hash-min on the slice-store protocol (``operators/kernel.py``):
+    int64 label vectors, each gather task writes its dst-slice minimum
+    and returns a changed-count partial, and converged rounds append ONE
+    pointer-doubling job (``J[lo:hi] = L[L[lo:hi]]`` over the global
+    vector) — O(log V) rounds, driver state O(num_blocks), capped only by
+    int32 positions.
 
+    Every committed label vector is a valid min-label state (hash-min is
+    monotone), so ``resume`` restarts from the newest one. Fixed-round
+    runs never jump, so vector index == round and the count is EXACT
+    (oracle comparisons unroll a specific k); converged runs take the
+    round counter written with each gather commit — a crash between the
+    two replays one gather, which is idempotent under min."""
     n = eb.n
-    hi_of = slice_ranges(eb)
-    store = slice_store
-    if store is None:
-        store = LocalSliceStore(
-            os.path.join(eb.spill_dir, f"cc_{uuid.uuid4().hex[:12]}")
-        )
-    store.init_run()
-    # durability: every committed label vector is a valid min-label state
-    # (hash-min is monotone), so resume restarts from the NEWEST committed
-    # vector — same marker protocol as the pagerank loop. Crashing between
-    # a gather commit and its jump commit just loses the jump (an
-    # optimization, not state); the round counter persists via put_meta
-    # and at worst replays one gather, which is idempotent under min.
-    durable = hasattr(store, "mark_complete") and hasattr(
-        store, "latest_complete"
-    )
+    store, hi_of = _open_run(eb, slice_store, "cc")
     mode = "fixed" if fixed_rounds is not None else "converged"
-    cur, rnd = 0, 0
-    resumed = False
-    if resume and durable:
-        prior = store.get_meta() if hasattr(store, "get_meta") else None
-        latest = store.latest_complete()
-        if prior is not None and latest is not None:
-            if prior.get("algo") != "cc" or prior.get("n") != n:
-                raise ValueError(
-                    "resume requested but the slice store holds a "
-                    f"different run (stored {prior}, this run algo=cc "
-                    f"n={n})"
-                )
-            if prior.get("mode", mode) != mode:
-                # converged-mode vectors include pointer-jump commits, so
-                # "vector index == round" does NOT hold across modes: a
-                # fixed-round resume from a converged store would
-                # overstate the completed rounds and unroll a different k
-                # (ADVICE r5)
-                raise ValueError(
-                    "resume requested with "
-                    f"{mode} rounds but the slice store holds a "
-                    f"{prior.get('mode')!r}-mode run; finish it with the "
-                    "same mode or start a fresh store"
-                )
-            # fixed-round runs never jump, so vector index == round and
-            # the count is EXACT (oracle comparisons unroll a specific k);
-            # converged runs take the persisted round counter, which can
-            # lag one commit behind — replaying one gather is idempotent
-            # under min and only consumes max_rounds slack
-            cur = latest
-            rnd = cur if fixed_rounds is not None else int(
-                prior.get("round", 0)
-            )
-            resumed = True
-    if not resumed:
-        if hasattr(store, "put_meta"):
-            store.put_meta({"algo": "cc", "n": n, "round": 0, "mode": mode})
-        store.write_full(0, np.arange(n, dtype=np.int64))
-        if durable:
-            store.mark_complete(0)
+    meta = {"algo": "cc", "n": n, "round": 0, "mode": mode}
+    cur, prior = _resume_or_start(store, resume, meta, ("algo", "n"), 0,
+                                  np.arange(n, dtype=np.int64))
+    if prior.get("mode", mode) != mode:
+        # converged-mode vectors include pointer-jump commits, so "vector
+        # index == round" does NOT hold across modes: a fixed-round
+        # resume from a converged store would overstate the completed
+        # rounds and unroll a different k
+        raise ValueError(
+            "resume requested with "
+            f"{mode} rounds but the slice store holds a "
+            f"{prior.get('mode')!r}-mode run; finish it with the "
+            "same mode or start a fresh store"
+        )
+    rnd = cur if fixed_rounds is not None else int(prior.get("round", 0))
+
+    def gather(prev, path, lo, hi):
+        srcs, dsts = _open_block(path)
+        prev_slice = np.asarray(prev[lo:hi])
+        if len(srcs):
+            m = _segmented_min(np.asarray(dsts), np.asarray(prev)[srcs])
+            new_slice = prev_slice.copy()
+            np.minimum(new_slice[: len(m)], m, out=new_slice[: len(m)])
+        else:
+            new_slice = prev_slice
+        return new_slice, {"changed": int((new_slice != prev_slice).sum())}
+
+    def jump(full, path, lo, hi):
+        # valid min-label state; fixpoint unchanged
+        # (components.py:96-118 argument)
+        return np.asarray(full)[np.asarray(full[lo:hi])], {}
+
     total = fixed_rounds if fixed_rounds is not None else max_rounds
     converged = fixed_rounds is not None
     while rnd < total:
-        prev_idx, out_idx = cur, cur + 1
-        store.create_vector(out_idx, n, dtype=np.int64)
-
-        def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            prev = store.open_read(prev_idx)
-            out_vec = store.open_write(out_idx)
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    srcs, dsts = _open_block(row["path"])
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]
-                    prev_slice = np.asarray(prev[lo:hi])
-                    if len(srcs):
-                        m = _segmented_min(
-                            np.asarray(dsts), np.asarray(prev)[srcs]
-                        )
-                        new_slice = prev_slice.copy()
-                        np.minimum(
-                            new_slice[: len(m)], m, out=new_slice[: len(m)]
-                        )
-                    else:
-                        new_slice = prev_slice
-                    out_vec[lo:hi] = new_slice
-                    yield pd.DataFrame(
-                        {
-                            "dst_lo": [np.int64(lo)],
-                            "changed": [
-                                int((new_slice != prev_slice).sum())
-                            ],
-                        }
-                    )
-            store.flush(out_vec)
-
-        out = eb.manifest.mapInPandas(
-            gather, schema="dst_lo long, changed long"
-        ).toPandas()
-        if set(out["dst_lo"]) != set(hi_of):
-            store.cleanup()
-            raise RuntimeError("distributed cc round lost a slice")
-        changed = int(out["changed"].sum())
-        if durable:
-            store.mark_complete(out_idx)
-        cur = out_idx
         rnd += 1
+        out = _slice_superstep(eb, store, hi_of, cur, cur + 1, gather,
+                               "changed long", "cc round", np.int64,
+                               meta={**meta, "round": rnd})
+        cur += 1
+        changed = int(out["changed"].sum())
         if fixed_rounds is None and changed:
-            # one pointer-doubling job per round: J = L[L] slice-wise over
-            # the mmap'd global vector (valid min-label state; fixpoint
-            # unchanged — components.py:96-118 argument)
-            jmp_idx = cur + 1
-            store.create_vector(jmp_idx, n, dtype=np.int64)
-            src_idx = cur
-
-            def jump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                full = store.open_read(src_idx)
-                out_vec = store.open_write(jmp_idx)
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        lo = int(row["dst_lo"])
-                        hi = hi_of[lo]
-                        sl = np.asarray(full[lo:hi])
-                        out_vec[lo:hi] = np.asarray(full)[sl]
-                        yield pd.DataFrame({"dst_lo": [np.int64(lo)]})
-                store.flush(out_vec)
-
-            jout = eb.manifest.mapInPandas(
-                jump, schema="dst_lo long"
-            ).toPandas()
-            if set(jout["dst_lo"]) != set(hi_of):
-                store.cleanup()
-                raise RuntimeError("distributed cc jump lost a slice")
-            if durable:
-                store.mark_complete(jmp_idx)
-            cur = jmp_idx
+            _slice_superstep(eb, store, hi_of, cur, cur + 1, jump, "",
+                             "cc jump", np.int64)
+            cur += 1
         # drop everything older than the newest vector
         for old in range(max(0, cur - 3), cur):
             store.delete_vector(old)
-        if durable and hasattr(store, "put_meta"):
-            store.put_meta({"algo": "cc", "n": n, "round": rnd, "mode": mode})
         if fixed_rounds is None and changed == 0:
             converged = True
             break
     if fixed_rounds is None and not converged:
-        store.cleanup()
-        raise ConvergenceError(
+        _give_up(store, ConvergenceError(
             f"connected_components kernel did not stabilize in "
             f"{max_rounds} rounds"
-        )
-    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    final_idx = cur
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = np.load(ids_path, mmap_mode="r")
-        lab = store.open_read(final_idx)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lo = int(row["dst_lo"])
-                hi = hi_of[lo]
-                sl = np.asarray(lab[lo:hi])
-                yield pd.DataFrame(
-                    {
-                        "id": np.asarray(ids[lo:hi]),
-                        "label": np.asarray(ids)[sl],
-                    }
-                )
-
-    from metagraph_spark.state import truncate_lineage
-
-    result = truncate_lineage(
-        eb.manifest.mapInPandas(emit, schema="id long, label long")
-    )
-    store.cleanup()
-    return result
+        ))
+    return _emit_slices(eb, store, hi_of, cur, "label long",
+                        lambda ids, lab: np.asarray(ids)[lab])
 
 
 def cc_kernel(
@@ -1003,116 +826,41 @@ def _distributed_lpa_loop(
     eb: EdgeBlocks, max_rounds: int, fixed_rounds: int | None,
     slice_store=None, resume: bool = False,
 ) -> DataFrame:
-    """LPA rounds with the label vector in the slice store (never on the
-    driver): each task computes its dst-range's modal votes and writes the
-    slice directly — positions without a neighbor vote (isolated nodes)
-    keep their previous label. One job per round, driver state
-    O(num_blocks)."""
-    import os
-    import uuid
+    """LPA on the slice-store protocol (``operators/kernel.py``): each
+    task computes its dst range's modal votes and writes the slice —
+    positions without a neighbor vote (isolated nodes) keep their previous
+    label. One job per round, driver state O(num_blocks).
 
+    The vector index IS the round number (one vector per round, the
+    previous one deleted after the commit), so ``resume`` restarts at
+    round ``latest_complete()`` and runs exactly the REMAINING rounds —
+    deterministic sync LPA replays bit-identically from any committed
+    round."""
     n = eb.n
-    hi_of = slice_ranges(eb)
-    store = slice_store
-    if store is None:
-        store = LocalSliceStore(
-            os.path.join(eb.spill_dir, f"lpa_{uuid.uuid4().hex[:12]}")
-        )
-    store.init_run()
-    # durability (same marker protocol as the pagerank/CC loops): the LPA
-    # vector index IS the round number (one vector per round, previous
-    # deleted after commit), so resume restarts at round latest_complete()
-    # and runs exactly the REMAINING rounds — deterministic sync LPA
-    # replays bit-identically from any committed round
-    durable = hasattr(store, "mark_complete") and hasattr(
-        store, "latest_complete"
-    )
-    cur = 0
-    resumed = False
-    if resume and durable:
-        prior = store.get_meta() if hasattr(store, "get_meta") else None
-        latest = store.latest_complete()
-        if prior is not None and latest is not None:
-            if prior.get("algo") != "lpa" or prior.get("n") != n:
-                raise ValueError(
-                    "resume requested but the slice store holds a "
-                    f"different run (stored {prior}, this run algo=lpa "
-                    f"n={n})"
-                )
-            cur = latest
-            resumed = True
-    if not resumed:
-        if hasattr(store, "put_meta"):
-            store.put_meta({"algo": "lpa", "n": n})
-        store.write_full(0, np.arange(n, dtype=np.int64))
-        if durable:
-            store.mark_complete(0)
+    store, hi_of = _open_run(eb, slice_store, "lpa")
+    cur, _ = _resume_or_start(store, resume, {"algo": "lpa", "n": n},
+                              ("algo", "n"), 0, np.arange(n, dtype=np.int64))
+
+    def step(prev, path, lo, hi):
+        srcs, dsts = _open_block(path)
+        prev_slice = np.asarray(prev[lo:hi])
+        new_slice = prev_slice.copy()
+        if len(srcs):
+            labs = np.asarray(prev)[srcs]
+            uniq, win = _mode_votes(dsts, labs, prev_slice)
+            new_slice[uniq] = win
+        return new_slice, {"changed": int((new_slice != prev_slice).sum())}
+
     total = fixed_rounds if fixed_rounds is not None else max_rounds
-    for rnd in range(cur, total):
-        prev_idx, out_idx = cur, cur + 1
-        store.create_vector(out_idx, n, dtype=np.int64)
-
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            prev = store.open_read(prev_idx)
-            out_vec = store.open_write(out_idx)
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    srcs, dsts = _open_block(row["path"])
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]
-                    prev_slice = np.asarray(prev[lo:hi])
-                    new_slice = prev_slice.copy()
-                    if len(srcs):
-                        labs = np.asarray(prev)[srcs]
-                        uniq, win = _mode_votes(dsts, labs, prev_slice)
-                        new_slice[uniq] = win
-                    changed = int(
-                        (new_slice != prev_slice).sum()
-                    )
-                    out_vec[lo:hi] = new_slice
-                    yield pd.DataFrame(
-                        {"dst_lo": [np.int64(lo)], "changed": [changed]}
-                    )
-            store.flush(out_vec)
-
-        out = eb.manifest.mapInPandas(
-            step, schema="dst_lo long, changed long"
-        ).toPandas()
-        if set(out["dst_lo"]) != set(hi_of):
-            store.cleanup()
-            raise RuntimeError("distributed lpa round lost a slice")
-        changed = int(out["changed"].sum())
-        if durable:
-            store.mark_complete(out_idx)
-        cur = out_idx
-        store.delete_vector(prev_idx)
-        if fixed_rounds is None and changed == 0:
+    for _ in range(cur, total):
+        out = _slice_superstep(eb, store, hi_of, cur, cur + 1, step,
+                               "changed long", "lpa round", np.int64)
+        cur += 1
+        store.delete_vector(cur - 1)
+        if fixed_rounds is None and int(out["changed"].sum()) == 0:
             break
-    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    final_idx = cur
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = np.load(ids_path, mmap_mode="r")
-        lab = store.open_read(final_idx)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lo = int(row["dst_lo"])
-                hi = hi_of[lo]
-                sl = np.asarray(lab[lo:hi])
-                yield pd.DataFrame(
-                    {
-                        "id": np.asarray(ids[lo:hi]),
-                        "label": np.asarray(ids)[sl],
-                    }
-                )
-
-    from metagraph_spark.state import truncate_lineage
-
-    result = truncate_lineage(
-        eb.manifest.mapInPandas(emit, schema="id long, label long")
-    )
-    store.cleanup()
-    return result
+    return _emit_slices(eb, store, hi_of, cur, "label long",
+                        lambda ids, lab: np.asarray(ids)[lab])
 
 
 def lpa_kernel(

@@ -290,6 +290,47 @@ def test_kernel_slice_store_resume(spark, tmp_path, monkeypatch):
     eb.unpersist()
 
 
+@pytest.mark.parametrize("op", ["pagerank", "katz", "cc", "lpa"])
+def test_slice_store_lost_slice_removes_run(spark, tmp_path, monkeypatch, op):
+    """A superstep whose tasks do not report every dst range raises "lost a
+    slice", and the run's store is removed first, on each slice-store
+    loop. The lost range is a phantom one added to ``slice_ranges``."""
+    from metagraph_spark.operators.kernel import LocalSliceStore
+    from metagraph_spark.operators.kernel_algos import (
+        cc_kernel,
+        katz_kernel,
+        lpa_kernel,
+    )
+
+    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
+    spill = tmp_path / "blocks"
+    eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(spill))
+    run = {
+        "pagerank": lambda: pagerank_kernel(eb, fixed_iterations=3),
+        "katz": lambda: katz_kernel(eb, fixed_iterations=3),
+        "cc": lambda: cc_kernel(eb, fixed_rounds=3),
+        "lpa": lambda: lpa_kernel(eb, fixed_rounds=3),
+    }[op]
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    ranges = K.slice_ranges
+    monkeypatch.setattr(K, "slice_ranges",
+                        lambda blocks: {**ranges(blocks), blocks.n: blocks.n + 1})
+    removed = []
+    cleanup = LocalSliceStore.cleanup
+
+    def record(store):
+        removed.append(store.run_dir)
+        cleanup(store)
+
+    monkeypatch.setattr(LocalSliceStore, "cleanup", record)
+    with pytest.raises(RuntimeError, match="lost a slice"):
+        run()
+    assert len(removed) == 1
+    assert removed[0].startswith(str(spill))
+    assert [p.name for p in spill.iterdir() if p.is_dir()] == []
+    eb.unpersist()
+
+
 def test_object_slice_store_resume(spark, tmp_path, monkeypatch):
     """The same resume protocol over PURE object-store semantics: the
     commit marker is an atomic whole-object PUT outside the vec/ prefix."""

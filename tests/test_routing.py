@@ -368,6 +368,49 @@ def test_one_way_in_and_one_cap_table():
     assert found  # the scan sees collect_driver_layout's own collect
 
 
+# the slice-store protocol's calls, and the kernel.py helpers that alone
+# may make them
+STORE_CALLS = {"init_run", "mark_complete", "latest_complete", "put_meta",
+               "get_meta", "cleanup"}
+STORE_HELPERS = {"_open_run", "_resume_or_start", "_slice_superstep",
+                 "_emit_slices", "_give_up"}
+
+
+def _slice_store_sites(root) -> list:
+    """``file:function:line`` of every ``.init_run()``/``.mark_complete()``/
+    ``.latest_complete()``/``.put_meta()``/``.get_meta()``/``.cleanup()``
+    call and every ``LocalSliceStore(...)`` under ``root``, outside the
+    slice-store classes themselves; ``function`` is the top-level def."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, ast.ClassDef) and top.name.endswith("SliceStore"):
+                continue
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                if ((isinstance(f, ast.Attribute) and f.attr in STORE_CALLS)
+                        or (isinstance(f, ast.Name)
+                            and f.id == "LocalSliceStore")):
+                    found.append(f"{path.relative_to(root)}:"
+                                 f"{getattr(top, 'name', '-')}:{n.lineno}")
+    return found
+
+
+def test_one_slice_store_protocol():
+    """Only the shared helpers in ``kernel.py`` open, resume, commit or
+    remove a slice-store run; the pagerank, katz, CC and LPA loops call
+    them."""
+    root = pathlib.Path(graph_mod.__file__).parent
+    found = _slice_store_sites(root)
+    outside = [f for f in found
+               if not (f.startswith("operators/kernel.py:")
+                       and f.split(":")[1] in STORE_HELPERS)]
+    assert outside == []
+    assert {f.split(":")[1] for f in found} == STORE_HELPERS
+
+
 # -------------------------------------------- the Graph's driver layout
 
 def _four_ops(g):
