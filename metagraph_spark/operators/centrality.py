@@ -263,9 +263,10 @@ def eigenvector_centrality(
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block kernel
     (``kernel_algos.py:eigenvector_kernel``, same superstep schedule) as
     :func:`routing.plan` decides: ``kernel-driver``, a numpy loop over the
-    Graph's driver layout within the driver caps, or ``kernel-broadcast``,
-    one broadcast gather job per superstep over file-backed blocks in a
-    temp dir above them."""
+    Graph's driver layout within the driver caps, or
+    ``kernel-distributed``, one slice-store job per superstep over
+    file-backed blocks in a temp dir above them (the vector never crosses
+    the driver)."""
     route, _ = routing.plan("eigenvector", graph, strategy)
     if route.startswith("kernel"):
         from metagraph_spark.operators.kernel_algos import eigenvector_kernel
@@ -381,8 +382,9 @@ def hits_centrality(
     (``kernel_algos.py:hits_kernel``) as :func:`routing.plan` decides:
     ``kernel-driver``, a numpy loop over a forward and a reversed view of
     the Graph's driver layout within the driver caps, or
-    ``kernel-broadcast``, two broadcast gather jobs per superstep over
-    forward and reversed file-backed blocks in temp dirs above them."""
+    ``kernel-distributed``, two slice-store jobs per superstep over
+    forward and reversed file-backed blocks in one temp dir above them
+    (neither vector crosses the driver)."""
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
     route, _ = routing.plan("hits", graph, strategy)

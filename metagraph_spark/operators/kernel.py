@@ -27,11 +27,12 @@
   (``plugins/scipy/types.py:191-225``), chunked loaders for
   bigger-than-memory (``core/dask/loader.py:15-74``).
 
-The slice-store protocol, shared by the above-cap pagerank, katz, CC and
-LPA loops (one chunk protocol for every algorithm, as metagraph's loader,
-``core/dask/loader.py:153-240``). Each vector lives in a slice store (the
-contract is in ``operators/slice_stores.py``), so it never crosses the
-driver and driver state stays O(num_blocks):
+The slice-store protocol, shared by the above-cap pagerank, katz, CC,
+LPA, eigenvector and HITS loops — the one above-cap route of every
+iterative kernel (one chunk protocol for every algorithm, as metagraph's
+loader, ``core/dask/loader.py:153-240``). Each vector lives in a slice
+store (the contract is in ``operators/slice_stores.py``), so it never
+crosses the driver and driver state stays O(num_blocks):
 
 1. :func:`_open_run` — the caller's ``slice_store``, or a
    :class:`LocalSliceStore` under ``<spill_dir>/<prefix>_<uuid>``;
@@ -145,8 +146,8 @@ def driver_block_arrays(eb):
 
 def _driver_blocks(eb, slice_store=None, resume: bool = False):
     """:func:`driver_block_arrays` for the driver loop, or ``None`` when
-    the call takes the slice-store (or broadcast) loop: blocks above the
-    driver caps, or any call with a ``slice_store``/``resume`` contract."""
+    the call takes the slice-store loop: blocks above the driver caps, or
+    any call with a ``slice_store``/``resume`` contract."""
     if resume and slice_store is None:
         raise ValueError(
             "resume=True requires an injected slice_store (the default "
@@ -162,9 +163,9 @@ def with_blocks(graph_or_blocks, build, run, spill_dir=None):
     """``run(eb)`` over prebuilt EdgeBlocks, or over the blocks
     ``build(graph, spill_dir)`` lays out for a Graph under ``spill_dir`` —
     a temp dir removed after the call when none is given. Blocks built
-    here are unpersisted after ``run``; results are materialized before
-    that (driver DataFrames, or ``truncate_lineage`` in the slice-store
-    loops)."""
+    here (one EdgeBlocks, or a tuple of them) are unpersisted after
+    ``run``; results are materialized before that (driver DataFrames, or
+    ``truncate_lineage`` in the slice-store loops)."""
     import shutil
     import tempfile
 
@@ -178,7 +179,8 @@ def with_blocks(graph_or_blocks, build, run, spill_dir=None):
         try:
             return run(eb)
         finally:
-            eb.unpersist()
+            for b in eb if isinstance(eb, tuple) else (eb,):
+                b.unpersist()
     finally:
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -303,14 +305,18 @@ def _blk_lo(k: int, n: int, nb: int) -> int:
     return -(-k * n // nb)
 
 
-def _write_sorted_ids(spark, node_df: DataFrame, path: str, n: int) -> None:
-    """Distributed sorted-id file: global range sort, per-partition counts
-    (one O(P) driver collect), then every task writes its contiguous slice
-    of the single memmap file — the V-row id array never crosses the
-    driver."""
+def _write_sorted(spark, df: DataFrame, col: str, path: str,
+                  n: int | None = None) -> int:
+    """Distributed sorted file of ``df``'s int64 column ``col``: global
+    range sort, per-partition counts (one O(P) driver collect), then every
+    task writes its contiguous slice of the single memmap file at
+    ``path`` — the rows never cross the driver. Returns the row count;
+    ``n``, when given, is the count the caller expects (a mismatch
+    raises). The block layouts' sorted-id file and the triangle kernel's
+    key file are written here."""
     sorted_df = (
-        node_df.select(ID)
-        .orderBy(ID)
+        df.select(col)
+        .orderBy(col)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
@@ -325,9 +331,13 @@ def _write_sorted_ids(spark, node_df: DataFrame, path: str, n: int) -> None:
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    if acc != n:
-        raise RuntimeError(f"sorted-id layout lost rows: {acc} != {n}")
-    np.lib.format.open_memmap(path, mode="w+", dtype=np.int64, shape=(n,)).flush()
+    if n is not None and acc != n:
+        sorted_df.unpersist()
+        raise RuntimeError(f"sorted layout lost rows: {acc} != {n}")
+    np.lib.format.open_memmap(path, mode="w+", dtype=np.int64, shape=(acc,)).flush()
+    if acc == 0:
+        sorted_df.unpersist()
+        return 0
     bc_off = spark.sparkContext.broadcast(offsets)
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -338,7 +348,7 @@ def _write_sorted_ids(spark, node_df: DataFrame, path: str, n: int) -> None:
             if cursor is None:
                 cursor = bc_off.value[int(pdf["_pid"].iloc[0])]
                 m = np.load(path, mmap_mode="r+")
-            arr = pdf[ID].to_numpy(dtype=np.int64)
+            arr = pdf[col].to_numpy(dtype=np.int64)
             m[cursor : cursor + len(arr)] = arr
             cursor += len(arr)
         if m is not None:
@@ -348,6 +358,7 @@ def _write_sorted_ids(spark, node_df: DataFrame, path: str, n: int) -> None:
     sorted_df.mapInPandas(write, schema="written int").count()
     sorted_df.unpersist()
     bc_off.unpersist()
+    return acc
 
 
 def _write_degree_files(
@@ -427,6 +438,39 @@ def build_edge_blocks(
     out-degree/inverse-degree computation entirely — the degree-free
     kernels (katz/cc/lpa) save a full second pass over the |E|-row
     position table; such blocks cannot feed ``pagerank_kernel``."""
+    if edges is None:
+        edges = graph.symmetrized()
+    n, nb = _layout_ids(graph, num_blocks, spill_dir)
+    pos = _edge_positions(edges, with_weights, spill_dir, n, nb)
+    if with_degrees:
+        # two consumers (block pack + degree files): persist, or the
+        # |E|-row symmetrize+searchsorted+shuffle runs TWICE (measured
+        # as the dominant layout cost at 100M edges)
+        pos = pos.persist()
+    manifest = _pack_blocks(pos, spill_dir, "block", n, nb, with_weights)
+    if with_degrees:
+        n_dangling = _write_degree_files(pos, spill_dir, n, nb)
+        pos.unpersist()
+    else:
+        n_dangling = None
+    eb = EdgeBlocks(
+        manifest=manifest,
+        spill_dir=spill_dir,
+        n=n,
+        n_dangling=n_dangling,
+        has_weights=with_weights,
+    )
+    _save_metadata(eb, spill_dir)
+    return eb
+
+
+def _layout_ids(graph: Graph, num_blocks: int | None,
+                spill_dir: str | None) -> tuple[int, int]:
+    """``(n, nb)`` of a new file-backed layout under ``spill_dir``, once
+    the directory is checked to be shared with the executors and the
+    sorted-id file ``node_ids.npy`` is written: ``n`` vertices, ``nb``
+    blocks (``num_blocks``, default the shuffle partitions, at most
+    ``n``)."""
     import os
 
     if spill_dir is None:
@@ -439,18 +483,6 @@ def build_edge_blocks(
     spark = graph.edges.sparkSession
     if num_blocks is None:
         num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nb = int(num_blocks)
-    if edges is None:
-        edges = graph.symmetrized()
-    if with_weights:
-        if WEIGHT not in edges.columns:
-            edges = edges.withColumn(WEIGHT, F.lit(1.0))
-        edges = edges.select(
-            SRC, DST, F.col(WEIGHT).cast("double").alias(WEIGHT)
-        )
-    else:
-        edges = edges.select(SRC, DST)
-
     os.makedirs(spill_dir, exist_ok=True)
     if not shared_fs_available(spark, spill_dir):
         # fail FAST at layout time: every later phase (task-side block
@@ -464,10 +496,28 @@ def build_edge_blocks(
             "(local mode, NFS/Lustre) — use strategy='join'"
         )
     n = graph.num_nodes()
+    _write_sorted(spark, graph.node_ids(), ID, os.path.join(
+        spill_dir, "node_ids.npy"), n)
     # more blocks than vertices would produce empty/duplicate ranges
-    nb = max(1, min(nb, n))
+    return n, max(1, min(int(num_blocks), n))
+
+
+def _edge_positions(edges: DataFrame, with_weights: bool, spill_dir: str,
+                    n: int, nb: int) -> DataFrame:
+    """``edges`` as positions against the layout's sorted-id file: rows of
+    ``(block, src_blk, src_pos, dst_pos[, w])``, ``block``/``src_blk`` the
+    dst/src range of ``nb`` (``w``: the weight column, absent → 1.0)."""
+    import os
+
+    if with_weights:
+        if WEIGHT not in edges.columns:
+            edges = edges.withColumn(WEIGHT, F.lit(1.0))
+        edges = edges.select(
+            SRC, DST, F.col(WEIGHT).cast("double").alias(WEIGHT)
+        )
+    else:
+        edges = edges.select(SRC, DST)
     ids_path = os.path.join(spill_dir, "node_ids.npy")
-    _write_sorted_ids(spark, graph.node_ids(), ids_path, n)
 
     def to_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids = np.load(ids_path, mmap_mode="r")
@@ -487,19 +537,23 @@ def build_edge_blocks(
     pos_schema = "block int, src_blk int, src_pos int, dst_pos int"
     if with_weights:
         pos_schema += ", w double"
-    pos = edges.mapInPandas(to_positions, schema=pos_schema)
-    if with_degrees:
-        # two consumers (block pack + degree files): persist, or the
-        # |E|-row symmetrize+searchsorted+shuffle runs TWICE (measured
-        # as the dominant layout cost at 100M edges)
-        pos = pos.persist()
+    return edges.mapInPandas(to_positions, schema=pos_schema)
+
+
+def _pack_blocks(pos: DataFrame, spill_dir: str, prefix: str, n: int,
+                 nb: int, with_weights: bool) -> DataFrame:
+    """The persisted ``(path, dst_lo)`` manifest of ``pos`` packed into one
+    ``<prefix>_<k>`` block per dst range ``k``, every range present."""
+    import os
+
+    spark = pos.sparkSession
 
     def pack_to_file(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         blk = int(key[0])
         lo = _blk_lo(blk, n, nb)
         # raw uncompressed .npy pair: tasks mmap these, so the page cache
         # keeps one host-wide copy instead of one per python worker
-        path = os.path.join(spill_dir, f"block_{blk:05d}")
+        path = os.path.join(spill_dir, f"{prefix}_{blk:05d}")
         dsts_local = (pdf["dst_pos"].to_numpy() - lo).astype(np.int32)
         order = np.argsort(dsts_local, kind="stable")
         np.save(path + ".srcs.npy", pdf["src_pos"].to_numpy()[order])
@@ -528,7 +582,7 @@ def build_edge_blocks(
         empty = np.array([], dtype=np.int32)
         extra = []
         for k in missing:
-            path = os.path.join(spill_dir, f"block_{k:05d}")
+            path = os.path.join(spill_dir, f"{prefix}_{k:05d}")
             np.save(path + ".srcs.npy", empty)
             np.save(path + ".dsts.npy", empty)
             if with_weights:
@@ -540,20 +594,7 @@ def build_edge_blocks(
         manifest.unpersist()
         manifest = full.repartition(nb).persist()
         manifest.count()
-    if with_degrees:
-        n_dangling = _write_degree_files(pos, spill_dir, n, nb)
-        pos.unpersist()
-    else:
-        n_dangling = None
-    eb = EdgeBlocks(
-        manifest=manifest,
-        spill_dir=spill_dir,
-        n=n,
-        n_dangling=n_dangling,
-        has_weights=with_weights,
-    )
-    _save_metadata(eb, spill_dir)
-    return eb
+    return manifest
 
 
 def _save_metadata(eb: EdgeBlocks, spill_dir: str) -> None:
@@ -883,28 +924,34 @@ def _slice_superstep(eb: EdgeBlocks, store, hi_of: dict, prev_idx: int,
     return out
 
 
-def _emit_slices(eb: EdgeBlocks, store, hi_of: dict, idx: int, col: str,
+def _emit_slices(eb: EdgeBlocks, store, hi_of: dict, idx, col: str,
                  value) -> DataFrame:
     """The run's ``(id, <col>)`` result: one task per dst range emits the
     range's ids from the mmap'd id file and ``value(ids, vec[lo:hi])`` of
     vector ``idx`` (``col`` is the column's schema, e.g. ``"rank
-    double"``), so neither vector crosses the driver. ``truncate_lineage``
-    pins the result, then the run is removed."""
+    double"``), so neither vector crosses the driver. With a tuple of
+    vector indices, ``value`` takes one slice of each and returns one
+    array per column of ``col`` (e.g. ``"hubs double, authority
+    double"``). ``truncate_lineage`` pins the result, then the run is
+    removed."""
     import os
 
     from metagraph_spark.state import truncate_lineage
 
     ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    name = col.split()[0]
+    idxs = idx if isinstance(idx, tuple) else (idx,)
+    names = [c.split()[0] for c in col.split(",")]
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids = np.load(ids_path, mmap_mode="r")
-        vec = store.open_read(idx)
+        vecs = [store.open_read(i) for i in idxs]
         for _, lo in _block_rows(batches):
             hi = hi_of[lo]
+            out = value(ids, *(np.asarray(v[lo:hi]) for v in vecs))
             yield pd.DataFrame({
                 "id": np.asarray(ids[lo:hi]),
-                name: value(ids, np.asarray(vec[lo:hi])),
+                **dict(zip(names, out if len(names) > 1 else (out,),
+                           strict=True)),
             })
 
     result = truncate_lineage(
@@ -1005,8 +1052,9 @@ def _distributed_superstep_loop(
 def _gather(blks, vec, n):
     """``Aᵀ·vec`` over driver-resident blocks ``[(dst_lo, srcs, dsts,
     ws|None)]``: per block a bincount of ``vec[srcs]·ws`` into its dst
-    slice — the per-block arithmetic of the slice-store and broadcast
-    loops, so values are bit-exact with them over the same blocks."""
+    slice — the per-block arithmetic of the slice-store loops
+    (``kernel_algos._gather_slice``), so values are bit-exact with them
+    over the same blocks."""
     g_vec = np.zeros(n)
     for lo, srcs, dsts, ws in blks:
         if len(srcs) == 0:

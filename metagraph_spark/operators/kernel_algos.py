@@ -1,28 +1,34 @@
-"""CSR/Arrow kernels for katz / connected components / LPA supersteps.
+"""CSR/Arrow kernels for katz / connected components / LPA / eigenvector /
+HITS supersteps.
 
 Same physical strategy as ``operators/kernel.py``'s PageRank kernel (the
 north-star design: per-partition CSR blocks, vectorized numpy
 gather-scatter, ZERO shuffles per superstep) applied to the other
-iterative operators. Each of ``katz_kernel``, ``cc_kernel`` and
-``lpa_kernel`` has exactly two superstep loops with the same per-block
-arithmetic, so their results are bit-identical:
+iterative operators. Each of ``katz_kernel``, ``cc_kernel``,
+``lpa_kernel``, ``eigenvector_kernel`` and ``hits_kernel`` has exactly
+two superstep loops with the same per-block arithmetic, so their results
+are bit-identical over the same blocks:
 
 - the driver loop (``_driver_katz_loop``/``_driver_cc_loop``/
-  ``_driver_lpa_loop``) — the whole loop in numpy on the driver, no Spark
-  job per superstep; taken when the graph or layout fits
-  ``routing.fits_driver``. A Graph builds no block layout for them: each
-  call reads its stored edge rows from :meth:`Graph.driver_layout`
-  (collected at the first driver-route call on the handle, then kept)
-  and derives its one dst-sorted block in numpy (katz through
-  ``kernel.driver_block_arrays``, CC and LPA through
-  ``_driver_graph_arrays``);
+  ``_driver_lpa_loop``/``_driver_eigenvector_loop``/``_driver_hits_loop``)
+  — the whole loop in numpy on the driver, no Spark job per superstep;
+  taken when the graph or layout fits ``routing.fits_driver``. A Graph
+  builds no block layout for them: each call reads its stored edge rows
+  from :meth:`Graph.driver_layout` (collected at the first driver-route
+  call on the handle, then kept) and derives its one dst-sorted block in
+  numpy (katz and eigenvector through ``kernel.driver_block_arrays``,
+  HITS a forward and a reversed block through ``kernel._graph_block``,
+  CC and LPA through ``_driver_graph_arrays``);
 - the slice-store loop (``_distributed_*_loop``) — file-backed blocks
   above the driver caps, or any call with a ``slice_store``. Each is a
   thin schedule on the slice-store protocol of ``operators/kernel.py``
   (store lifecycle, resume, commit and result emit live there once): it
   holds only its per-block update, its reduction of the partial scalars
-  and its control flow. A Graph above the caps is laid out file-backed
-  under ``spill_dir``, or a temp dir removed after the call.
+  and its control flow. The katz, eigenvector and HITS updates share one
+  weighted gather, ``_gather_slice`` (the slice-side twin of the driver
+  loops' ``kernel._gather``). A Graph above the caps is laid out
+  file-backed under ``spill_dir`` (katz, CC, LPA), or a temp dir removed
+  after the call.
 
 The update rules:
 
@@ -44,38 +50,32 @@ The update rules:
   ``operators/lpa.py`` semantics (most frequent neighbor label + one
   self-vote, ties to the smallest label), via run-length vote counting
   and segmented ``reduceat`` winners (``_mode_votes``).
+- ``eigenvector_kernel`` — ``x' = x + Aᵀx`` then L2-normalize, the error
+  lagged one superstep (``operators/centrality.py``'s schedule).
+- ``hits_kernel`` — ``a = Aᵀh`` over forward blocks, ``h = A·a`` over
+  reversed blocks, max-normalizing each half-step; above the caps both
+  block sets come from one id sort and one positions pass
+  (:func:`hits_blocks`) and one slice store holds both vectors.
 
-All accept a prebuilt :class:`EdgeBlocks` (amortize the layout) or a
-Graph. Integer-label kernels (cc, lpa) are EXACTLY equal to the join path
-(asserted in tests/test_kernel_algos.py); katz agrees to float rounding.
-
-``eigenvector_kernel`` and ``hits_kernel`` keep the same split with a
-broadcast loop in place of the slice-store loop: within the driver caps
-their driver loops (``_driver_eigenvector_loop``/``_driver_hits_loop``)
-gather over blocks derived from :meth:`Graph.driver_layout` (HITS takes
-both its forward and its reversed view from that one collect); above the
-caps each superstep broadcasts the dense vector to one Spark job that
-gathers over the file-backed blocks of a temp dir (``_gather_once``).
-The pagerank, katz, eigenvector and HITS driver loops share one gather,
-``kernel._gather``.
+All but HITS accept a prebuilt :class:`EdgeBlocks` (amortize the layout)
+or a Graph. Integer-label kernels (cc, lpa) are EXACTLY equal to the join
+path (asserted in tests/test_kernel_algos.py); the float kernels agree to
+float rounding.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, SRC, WEIGHT, Graph, driver_frame
+from metagraph_spark.graph import DST, SRC, Graph, driver_frame
 from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import (
     EdgeBlocks,
-    _block_rows,
     _driver_blocks,
     _emit_slices,
     _gather,
@@ -90,6 +90,20 @@ from metagraph_spark.operators.kernel import (
 )
 
 _IMAX = np.iinfo(np.int64).max
+
+
+def _gather_slice(vec, path: str, width: int, weighted: bool,
+                  scale: float = 1.0) -> np.ndarray:
+    """``Aᵀ·(vec/scale)`` on the ``width``-position dst slice of one
+    file-backed block: a bincount of ``vec[srcs]/scale·ws`` (``ws`` only
+    when ``weighted``) — the slice-side twin of :func:`kernel._gather`,
+    the same arithmetic per block. ``scale`` is the carried norm of a
+    stored un-normalized vector (eigenvector, HITS)."""
+    srcs, dsts = _open_block(path)
+    w = np.asarray(vec)[srcs] / scale
+    if weighted:
+        w = w * np.asarray(_open_block_weights(path))
+    return np.bincount(dsts, weights=w, minlength=width)[:width]
 
 
 def _distributed_katz_loop(
@@ -112,13 +126,7 @@ def _distributed_katz_loop(
                      np.zeros(n))
 
     def update(prev, path, lo, hi):
-        srcs, dsts = _open_block(path)
-        width = hi - lo
-        w = np.asarray(prev)[srcs]
-        if weighted:
-            w = w * np.asarray(_open_block_weights(path))
-        g = np.bincount(dsts, weights=w, minlength=width)[:width]
-        new_slice = alpha * g + beta
+        new_slice = alpha * _gather_slice(prev, path, hi - lo, weighted) + beta
         return new_slice, {
             "err": float(np.abs(new_slice - np.asarray(prev[lo:hi])).sum()),
             "sumsq": float((new_slice * new_slice).sum()),
@@ -231,45 +239,78 @@ def katz_kernel(
     )
 
 
-def _gather_once(eb: EdgeBlocks, vec):
-    """One dense ``Aᵀ·vec`` pass over file-backed blocks: ``vec`` is
-    broadcast, each task gathers its blocks as :func:`_gather` does, and
-    the driver assembles the length-``n`` gather vector."""
-    bc = eb.spark.sparkContext.broadcast(vec)
+def _empty(spark, *cols: str):
+    """Empty ``(id, <col>)`` results of a graph without vertices."""
+    out = tuple(spark.createDataFrame([], f"id long, {c} double")
+                for c in cols)
+    return out if len(out) > 1 else out[0]
+
+
+def _distributed_eigenvector_loop(eb: EdgeBlocks, maxiter: int,
+                                  tolerance: float,
+                                  fixed_iterations: int | None) -> DataFrame:
+    """Eigenvector on the slice-store protocol (``operators/kernel.py``).
+    Vector ``t`` is the UN-normalized ``z = x + Aᵀx`` of superstep ``t``
+    and the driver carries its L2 norm ``c``, a scalar: each task writes
+    ``z/c + Aᵀ(z/c)`` of the previous vector for its dst slice and returns
+    a Σz'² partial. Superstep ``t``'s L1 error needs the norm its own job
+    produces, so it rides job ``t+1``, over the kept vector ``t-1``; a
+    converged run returns vector ``t``, the one the driver and join routes
+    stop at, after one job more than they run."""
+    n = eb.n
     weighted = eb.has_weights
+    store, hi_of = _open_run(eb, None, "eig")
+    _resume_or_start(store, False, {"algo": "eigenvector", "n": n}, (), -1,
+                     np.full(n, 1.0 / n))
+    norm = {-1: 1.0}
+    fixed = fixed_iterations is not None
+    total = fixed_iterations if fixed else maxiter + 1
+    for it in range(total if fixed else total + 1):
+        c = norm[it - 1]
+        lag = not fixed and it >= 2  # superstep it-1's error, checked from 1
 
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = np.asarray(bc.value)
-        for path, lo in _block_rows(batches):
-            srcs, dsts = _open_block(path)
-            w = c[srcs]
-            if weighted:
-                w = w * _open_block_weights(path)
-            g = np.bincount(dsts, weights=w)
-            yield pd.DataFrame({"dst_lo": [np.int64(lo)], "g": [g]})
+        def update(prev, path, lo, hi):
+            cur = np.asarray(prev[lo:hi])
+            z = cur / c + _gather_slice(prev, path, hi - lo, weighted, c)
+            err = 0.0
+            if lag:
+                old = np.asarray(store.open_read(it - 2)[lo:hi])
+                err = float(np.abs(old / norm[it - 2] - cur / c).sum())
+            return z, {"sumsq": float((z * z).sum()), "err": err}
 
-    out = eb.manifest.mapInPandas(
-        gather, schema="dst_lo long, g array<double>"
-    ).toPandas()
-    bc.unpersist()
-    g_vec = np.zeros(eb.n)
-    for lo, g in zip(out["dst_lo"], out["g"]):
-        g_vec[lo : lo + len(g)] += g
-    return g_vec
+        out = _slice_superstep(eb, store, hi_of, it - 1, it, update,
+                               "sumsq double, err double",
+                               "eigenvector superstep")
+        sumsq = float(out["sumsq"].sum())
+        norm[it] = math.sqrt(sumsq) if sumsq > 0 else 1.0
+        if it >= 1:
+            store.delete_vector(it - 2)
+        if lag and float(out["err"].sum()) < n * tolerance:
+            total = it
+            break
+    else:
+        if not fixed:
+            _give_up(store, ConvergenceError(
+                f"eigenvector failed to converge in {maxiter} iterations"
+            ))
+    c = norm[total - 1]
+    return _emit_slices(eb, store, hi_of, total - 1, "eigenvector double",
+                        lambda ids, z: z / c)
 
 
-def _eigenvector_loop(spark, ids, gather, maxiter, tolerance,
-                      fixed_iterations) -> DataFrame:
-    """``(id, eigenvector)`` after eigenvector's superstep schedule over
-    ``gather`` (``v -> Aᵀv``): ``x' = x + Aᵀx`` then L2-normalize, the
-    error lagged one superstep over ``maxiter+1`` supersteps."""
+def _driver_eigenvector_loop(spark, ids, blks, maxiter, tolerance,
+                             fixed_iterations) -> DataFrame:
+    """Eigenvector supersteps over driver-resident block arrays
+    (:func:`_gather`), no Spark job per superstep: ``x' = x + Aᵀx`` then
+    L2-normalize, the error lagged one superstep over ``maxiter+1``
+    supersteps."""
     n = len(ids)
     if n == 0:
-        return spark.createDataFrame([], "id long, eigenvector double")
+        return _empty(spark, "eigenvector")
     xn = np.full(n, 1.0 / n)  # current NORMALIZED iterate
     total = fixed_iterations if fixed_iterations is not None else maxiter + 1
     for it in range(total):
-        z = xn + gather(xn)
+        z = xn + _gather(blks, xn, n)
         zn = math.sqrt(float((z * z).sum()))
         new_xn = z / zn if zn > 0 else z
         done = (fixed_iterations is None and it >= 1
@@ -286,13 +327,6 @@ def _eigenvector_loop(spark, ids, gather, maxiter, tolerance,
                         "id long, eigenvector double")
 
 
-def _driver_eigenvector_loop(spark, ids, blks, *args) -> DataFrame:
-    """Eigenvector supersteps over driver-resident block arrays
-    (:func:`_gather`), no Spark job per superstep."""
-    return _eigenvector_loop(spark, ids, lambda v: _gather(blks, v, len(ids)),
-                             *args)
-
-
 def eigenvector_kernel(
     graph_or_blocks,
     maxiter: int = 50,
@@ -305,15 +339,15 @@ def eigenvector_kernel(
     ``plugins/networkx/algorithms.py:192-199``): ``x' = x + Aᵀx`` then
     L2-normalize every iteration; same lagged convergence schedule as the
     join path (error checked from iteration 1 over ``maxiter+1`` total),
-    so converged runs take identical superstep counts.
+    so converged runs stop at the same superstep.
 
     Like :func:`katz_kernel`: a Graph within the driver caps runs
     :func:`_driver_eigenvector_loop` over the weighted block
     :func:`kernel.driver_block_arrays` derives from its driver layout;
-    above them it builds weighted blocks in a temp dir and broadcasts the
-    vector to one gather job per superstep (:func:`_gather_once`).
-    Prebuilt EdgeBlocks run the driver loop over their block files when
-    they fit the caps, the broadcast gather otherwise."""
+    above them it builds weighted blocks in a temp dir for the slice-store
+    loop (:func:`_distributed_eigenvector_loop`). Prebuilt EdgeBlocks run
+    the driver loop over their block files when they fit the caps, the
+    slice-store loop otherwise."""
     args = (maxiter, tolerance, fixed_iterations)
     g = graph_or_blocks
     drv = kernel.driver_block_arrays(g) if isinstance(g, Graph) else None
@@ -321,25 +355,130 @@ def eigenvector_kernel(
         return _driver_eigenvector_loop(g.edges.sparkSession, *drv, *args)
 
     def run(eb: EdgeBlocks) -> DataFrame:
+        if eb.n == 0:
+            return _empty(eb.spark, "eigenvector")
         drv = _driver_blocks(eb)
         if drv is not None:
             return _driver_eigenvector_loop(eb.spark, *drv, *args)
-        return _eigenvector_loop(eb.spark, np.array(eb.node_ids),
-                                 lambda v: _gather_once(eb, v), *args)
+        return _distributed_eigenvector_loop(eb, *args)
 
     return with_blocks(g, _weighted_build(g), run)
 
 
-def _hits_loop(spark, ids, gather_a, gather_h, maxiter, tolerance,
-               normalize, fixed_iterations) -> tuple[DataFrame, DataFrame]:
-    """``(hubs, authorities)`` after HITS's superstep schedule over the two
-    gathers: ``a = Aᵀh`` (``gather_a``) then ``h = A·a`` (``gather_h``),
-    max-normalizing each half-step, convergence on ``Σ|h'-h| < tol``,
-    optional final sum-normalization."""
+def hits_blocks(graph: Graph, spill_dir: str | None = None,
+                num_blocks: int | None = None) -> tuple[EdgeBlocks,
+                                                        EdgeBlocks]:
+    """:func:`hits_kernel`'s two layouts of a directed graph under
+    ``spill_dir`` (required, as for :func:`kernel.build_edge_blocks`),
+    weighted when the graph is: forward blocks (authority gather ``Aᵀh``,
+    by dst) and reversed blocks (hub gather ``A·a``, by src), laid out
+    from one id sort and one positions pass. Both cover the same dst
+    ranges, so one slice store serves both."""
+    weighted = graph.is_weighted
+    n, nb = kernel._layout_ids(graph, num_blocks, spill_dir)
+    pos = kernel._edge_positions(graph.edges, weighted, spill_dir, n,
+                                 nb).persist()
+    rev = pos.select(
+        F.col("src_blk").alias("block"), F.col("block").alias("src_blk"),
+        F.col("dst_pos").alias("src_pos"), F.col("src_pos").alias("dst_pos"),
+        *(["w"] if weighted else []),
+    )
+    out = tuple(
+        EdgeBlocks(manifest=kernel._pack_blocks(p, spill_dir, prefix, n, nb,
+                                                weighted),
+                   spill_dir=spill_dir, n=n, has_weights=weighted)
+        for p, prefix in ((pos, "block"), (rev, "rblock"))
+    )
+    pos.unpersist()
+    return out
+
+
+def _distributed_hits_loop(fwd: EdgeBlocks, rev: EdgeBlocks, maxiter: int,
+                           tolerance: float, normalize: bool,
+                           fixed_iterations: int | None):
+    """HITS on the slice-store protocol (``operators/kernel.py``), one
+    store for both UN-normalized vectors: ``h_t`` at vector ``2t``, ``a_t``
+    at ``2t+1``, the driver carrying each one's max (its norm) and sum.
+    Superstep ``t`` runs two jobs, ``a_t = Aᵀ(h_t/‖h_t‖)`` over ``fwd``
+    and ``h_{t+1} = A·(a_t/‖a_t‖)`` over ``rev``, each returning max and
+    sum partials. Superstep ``t``'s h-side L1 error needs ``h_{t+1}``'s
+    max, so it rides superstep ``t+1``'s authority job, over the kept
+    ``h_t``; a converged run returns ``h_{t+1}`` and ``a_t``, as the driver
+    and join routes do, after one job more than they run."""
+    n = fwd.n
+    weighted = fwd.has_weights
+    store, hi_of = _open_run(fwd, None, "hits")
+    if kernel.slice_ranges(rev) != hi_of:
+        _give_up(store, ValueError("hits layouts cover different dst ranges"))
+    _resume_or_start(store, False, {"algo": "hits", "n": n}, (), 0,
+                     np.full(n, 1.0 / n))
+    norm, total_of = {0: 1.0}, {}
+
+    def half_step(eb: EdgeBlocks, src: int, lag: bool) -> float:
+        """Vector ``src`` → ``src+1`` over ``eb``; returns the lagged
+        error of vector ``src`` against ``src-2`` when ``lag``."""
+        c = norm[src]
+
+        def update(prev, path, lo, hi):
+            v = _gather_slice(prev, path, hi - lo, weighted, c)
+            err = 0.0
+            if lag:
+                old = np.asarray(store.open_read(src - 2)[lo:hi])
+                err = float(np.abs(np.asarray(prev[lo:hi]) / c
+                                   - old / norm[src - 2]).sum())
+            return v, {"max": float(v.max()), "sum": float(v.sum()),
+                       "err": err}
+
+        out = _slice_superstep(eb, store, hi_of, src, src + 1, update,
+                               "max double, sum double, err double",
+                               "hits superstep")
+        # join parity: Observation max(v) `or 1.0` — 0.0 falls back, a
+        # negative max (negative weights) is kept as the divisor
+        m = float(out["max"].max())
+        norm[src + 1] = m if m != 0.0 else 1.0
+        total_of[src + 1] = float(out["sum"].sum())
+        if src >= 2:
+            store.delete_vector(src - 2)
+        return float(out["err"].sum())
+
+    fixed = fixed_iterations is not None
+    total = fixed_iterations if fixed else maxiter
+    converged = fixed
+    for t in range(total if fixed else total + 1):
+        lag = not fixed and t >= 1  # superstep t-1's error
+        err = half_step(fwd, 2 * t, lag)
+        if lag and err < tolerance:
+            converged, total = True, t
+            break
+        if t < total:
+            half_step(rev, 2 * t + 1, False)
+    if not converged:
+        _give_up(store, ConvergenceError(
+            f"hits failed to converge in {maxiter} iterations"
+        ))
+
+    def divisors(k):
+        """Vector ``k``'s max norm, then its sum once normalized."""
+        s = total_of[k] / norm[k] if normalize else 1.0
+        return norm[k], s or 1.0
+
+    (hn, hs), (an, asum) = divisors(2 * total), divisors(2 * total - 1)
+    both = _emit_slices(fwd, store, hi_of, (2 * total, 2 * total - 1),
+                        "hubs double, authority double",
+                        lambda ids, h, a: (h / hn / hs, a / an / asum))
+    return both.select("id", "hubs"), both.select("id", "authority")
+
+
+def _driver_hits_loop(spark, ids, fwd, rev, maxiter, tolerance, normalize,
+                      fixed_iterations):
+    """HITS supersteps over the driver-resident forward (authority
+    gather) and reversed (hub gather) blocks (:func:`_gather`), no Spark
+    job per superstep: ``a = Aᵀh`` then ``h = A·a``, max-normalizing each
+    half-step, convergence on ``Σ|h'-h| < tol``, optional final
+    sum-normalization."""
     n = len(ids)
     if n == 0:
-        return (spark.createDataFrame([], "id long, hubs double"),
-                spark.createDataFrame([], "id long, authority double"))
+        return _empty(spark, "hubs", "authority")
     h = np.full(n, 1.0 / n)
     h_norm = 1.0
     a = np.zeros(n)
@@ -347,13 +486,13 @@ def _hits_loop(spark, ids, gather_a, gather_h, maxiter, tolerance,
     total = fixed_iterations if fixed_iterations is not None else maxiter
     converged = fixed_iterations is not None
     for _ in range(total):
-        a = gather_a(h / h_norm)
+        a = _gather(fwd, h / h_norm, n)
         # join parity: Observation max(v) `or 1.0` — 0.0 falls back,
         # a negative max (negative weights) is kept as the divisor
         am = float(a.max())
         a_norm = am if am != 0.0 else 1.0
         h_prev_normed = h / h_norm
-        h = gather_h(a / a_norm)
+        h = _gather(rev, a / a_norm, n)
         hm = float(h.max())
         h_norm = hm if hm != 0.0 else 1.0
         if fixed_iterations is None:
@@ -375,15 +514,6 @@ def _hits_loop(spark, ids, gather_a, gather_h, maxiter, tolerance,
                          "id long, authority double"))
 
 
-def _driver_hits_loop(spark, ids, fwd, rev, *args):
-    """HITS supersteps over the driver-resident forward (authority
-    gather) and reversed (hub gather) blocks (:func:`_gather`), no Spark
-    job per superstep."""
-    n = len(ids)
-    return _hits_loop(spark, ids, lambda v: _gather(fwd, v, n),
-                      lambda v: _gather(rev, v, n), *args)
-
-
 def hits_kernel(
     graph: Graph,
     maxiter: int = 50,
@@ -400,42 +530,28 @@ def hits_kernel(
     The two mat-vecs are data-dependent, so two gathers per superstep is
     the algorithmic minimum. Within the driver caps
     :func:`_driver_hits_loop` gathers over a forward and a reversed block,
-    both derived from the one driver layout; above them it lays out two
-    file-backed block sets (forward, reversed) in temp dirs and runs two
-    broadcast gather jobs per superstep (:func:`_gather_once`)."""
+    both derived from the one driver layout; above them
+    :func:`hits_blocks` lays out forward and reversed blocks in a temp dir
+    and :func:`_distributed_hits_loop` runs two slice-store jobs per
+    superstep."""
     from metagraph_spark.exceptions import GraphPropertyError
 
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
-    spark = graph.edges.sparkSession
     args = (maxiter, tolerance, normalize, fixed_iterations)
     fwd = kernel.driver_block_arrays(graph)
     if fwd is not None:
         ids, blks = fwd
         _, rev = kernel._graph_block(graph, reverse=True)
-        return _driver_hits_loop(spark, ids, blks, rev, *args)
+        return _driver_hits_loop(graph.edges.sparkSession, ids, blks, rev,
+                                 *args)
 
-    weighted = graph.is_weighted
-    cols = [SRC, DST] + ([WEIGHT] if weighted else [])
-    rev_cols = [F.col(DST).alias(SRC), F.col(SRC).alias(DST)] + cols[2:]
+    def run(ebs: tuple[EdgeBlocks, EdgeBlocks]):
+        if ebs[0].n == 0:
+            return _empty(ebs[0].spark, "hubs", "authority")
+        return _distributed_hits_loop(*ebs, *args)
 
-    def build(edges):
-        return lambda g, d: build_edge_blocks(
-            g, spill_dir=d, edges=edges, with_weights=weighted,
-            with_degrees=False,
-        )
-
-    return with_blocks(
-        graph, build(graph.edges.select(*cols)),
-        lambda eb_f: with_blocks(
-            graph, build(graph.edges.select(*rev_cols)),
-            lambda eb_r: _hits_loop(
-                spark, np.array(eb_f.node_ids),
-                lambda v: _gather_once(eb_f, v),
-                lambda v: _gather_once(eb_r, v), *args,
-            ),
-        ),
-    )
+    return with_blocks(graph, hits_blocks, run)
 
 
 def _segmented_min(dsts: np.ndarray, vals: np.ndarray) -> np.ndarray:

@@ -15,11 +15,12 @@ op            routes, first match wins
 ============  ====================================================
 pagerank      ``join`` for ``strategy="join"``, a warm start or a
 katz, cc,     checkpointer (cc: ``hash-min``, or ``two-phase`` for a
-lpa           converged run with ``m >= TWO_PHASE_MIN_EDGES``);
-              ``kernel-driver`` when ``n <= DRIVER_MAX_VERTICES`` and
-              ``m <= DRIVER_MAX_EDGES``; ``kernel-distributed`` (the
+lpa,          converged run with ``m >= TWO_PHASE_MIN_EDGES``);
+eigenvector,  ``kernel-driver`` when ``n <= DRIVER_MAX_VERTICES`` and
+hits          ``m <= DRIVER_MAX_EDGES``; ``kernel-distributed`` (the
               file-backed slice-store loop) when ``kernel_spill_dir``
-              is given, or ``m <= KERNEL_AUTO_MAX_EDGES`` and the
+              is given (eigenvector and HITS take none: a temp
+              layout), or ``m <= KERNEL_AUTO_MAX_EDGES`` and the
               temp dir is on a shared filesystem; else ``join``
 triangles     ``tri_kernel`` when ``n <= DRIVER_MAX_VERTICES`` and
               ``m <= DRIVER_MAX_EDGES`` (keys built in the driver process,
@@ -27,12 +28,6 @@ triangles     ``tri_kernel`` when ``n <= DRIVER_MAX_VERTICES`` and
               ``DRIVER_MAX_WEDGES`` wedges, else by one Spark job over
               the broadcast keys); above the caps ``tri_kernel`` when
               the spill (or temp) dir is shared; else ``join``
-eigenvector,  ``join`` for ``strategy="join"``; ``kernel-driver`` when
-hits          ``n <= DRIVER_MAX_VERTICES`` and ``m <= DRIVER_MAX_EDGES``;
-              ``kernel-broadcast`` (one broadcast gather job per
-              superstep over file-backed blocks in a temp dir) when
-              ``n <= KERNEL_MAX_VERTICES``, ``m <= KERNEL_AUTO_MAX_EDGES``
-              and the temp dir is on a shared filesystem; else ``join``
 hope          ``kernel-driver`` when ``n <= DRIVER_MAX_VERTICES``,
               ``m <= DRIVER_MAX_EDGES`` and
               ``n·r <= HOPE_BROADCAST_MAX_VALUES``; else ``join``
@@ -90,11 +85,6 @@ KERNEL_AUTO_MAX_EDGES = 20_000_000
 # Positional layouts store int32 positions; the triangle kernel's rank keys
 # ``ra*n + rb`` fit int64 under the same bound.
 POSITIONAL_MAX_VERTICES = 2**31 - 1
-
-# Above the driver caps, eigenvector and HITS kernels broadcast a dense
-# driver vector every superstep (``kernel_algos._gather_once``); above this
-# the join plan runs.
-KERNEL_MAX_VERTICES = 50_000_000
 
 # Join plans broadcast the |V|-row vertex state into the superstep join
 # (one shuffle-free stage per superstep, guide §2.4/§3.1) up to this vertex
@@ -237,8 +227,6 @@ def plan(
         return "join", f"{sizes} > DRIVER_MAX_EDGES/HOPE_BROADCAST_MAX_VALUES"
     if fits_driver(m, n):
         return "kernel-driver", f"{sizes} <= DRIVER_MAX_EDGES"
-    if op in ("eigenvector", "hits"):
-        return _broadcast_route(op, graph, strategy, n, m, sizes)
     if not fits_positions(n):
         if strategy == "kernel":
             raise ValueError(
@@ -263,26 +251,6 @@ def plan(
         )
     return _join_route(op, graph, fixed, None, None,
                        f"{sizes} > DRIVER_MAX_EDGES, no shared FS")
-
-
-def _broadcast_route(op, graph, strategy, n, m, sizes):
-    """Eigenvector/HITS above the driver caps: the broadcast gather over
-    file-backed blocks, or ``join``."""
-    if n > KERNEL_MAX_VERTICES:
-        why = f"{sizes} > KERNEL_MAX_VERTICES"
-    elif strategy == "auto" and m > KERNEL_AUTO_MAX_EDGES:
-        return "join", f"{sizes} > KERNEL_AUTO_MAX_EDGES"
-    elif _shared_fs(graph):
-        return "kernel-broadcast", f"{sizes} > DRIVER_MAX_EDGES, shared FS"
-    else:
-        why = f"{sizes} > DRIVER_MAX_EDGES, no shared FS"
-    if strategy == "kernel":
-        raise ValueError(
-            f"{op} above the driver caps ({why}) has no kernel route: its "
-            "broadcast gather needs n <= KERNEL_MAX_VERTICES and a temp dir "
-            "on a filesystem shared with the executors; use strategy='join'"
-        )
-    return "join", why
 
 
 def _join_route(op, graph, fixed, checkpointer, warm_start, why):

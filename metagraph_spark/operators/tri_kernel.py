@@ -19,7 +19,7 @@ Physical design (why this beats the three-way self-join at bench scale):
    simply "smaller rank first", so a wedge's closing edge has a unique key.
 2. **One sorted key file.** Edge keys ``ra·n + rb`` are globally sorted
    and written slice-wise by tasks into a single int64 memmap (same
-   protocol as ``kernel._write_sorted_ids``). That ONE array is
+   protocol as ``kernel._write_sorted``). That ONE array is
    simultaneously the CSR adjacency (the span for src ``a`` is the
    contiguous key range ``[a·n, (a+1)·n)``, found by binary search — no
    separate indptr file) and the O(log E) membership index.
@@ -56,55 +56,17 @@ from pyspark.sql import functions as F
 
 from metagraph_spark.graph import DST, SRC, Graph
 from metagraph_spark.operators import routing
+from metagraph_spark.operators.kernel import _write_sorted
 
 
 def _write_sorted_keys(spark, keys_df, path: str) -> int:
-    """Globally sorted int64 key file written slice-wise by tasks (the
-    ``kernel._write_sorted_ids`` protocol): one O(P) driver collect of
-    per-partition counts, then each task writes its contiguous slice.
-    Returns the key count (derived from the same per-partition counts —
-    no separate |E| counting pass over the upstream joins)."""
-    sorted_df = (
-        keys_df.orderBy("k")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        int(r["_pid"]): int(r["c"])
-        for r in sorted_df.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    m = acc
-    if m == 0:
-        sorted_df.unpersist()
-        return 0
-    np.lib.format.open_memmap(path, mode="w+", dtype=np.int64, shape=(m,)).flush()
-    bc_off = spark.sparkContext.broadcast(offsets)
-
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cursor, mm = None, None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if cursor is None:
-                cursor = bc_off.value[int(pdf["_pid"].iloc[0])]
-                mm = np.load(path, mmap_mode="r+")
-            arr = pdf["k"].to_numpy(dtype=np.int64)
-            mm[cursor : cursor + len(arr)] = arr
-            cursor += len(arr)
-        if mm is not None:
-            mm.flush()
-        yield pd.DataFrame({"written": [0]})
-
-    sorted_df.mapInPandas(write, schema="written int").count()
-    sorted_df.unpersist()
-    bc_off.unpersist()
-    return m
+    """The globally sorted int64 key file, written slice-wise by tasks
+    (:func:`kernel._write_sorted`); returns the key count, derived from
+    the per-partition counts of the sort, so no separate |E| counting
+    pass runs over the upstream joins. Its own name keeps the key sort
+    apart from a block layout's id sort in the benchmark's layer
+    trace."""
+    return _write_sorted(spark, keys_df, "k", path)
 
 
 def _count_span(keys: np.ndarray, n: int, lo: int, hi: int,
@@ -286,7 +248,7 @@ def triangle_count_kernel(
     # rank = position in the (degree, id) total order; isolated nodes have
     # no edges and cannot join a triangle, so ranking edge endpoints only
     # is sufficient. DISTRIBUTED rank assignment (global range sort +
-    # per-partition offsets, the _write_sorted_ids protocol) — a
+    # per-partition offsets, the _write_sorted protocol) — a
     # row_number window without partitionBy would collapse the |V| sort
     # into ONE partition
     sorted_deg = (

@@ -290,14 +290,20 @@ def test_kernel_slice_store_resume(spark, tmp_path, monkeypatch):
     eb.unpersist()
 
 
-@pytest.mark.parametrize("op", ["pagerank", "katz", "cc", "lpa"])
+@pytest.mark.parametrize("op", ["pagerank", "katz", "cc", "lpa",
+                                "eigenvector", "hits"])
 def test_slice_store_lost_slice_removes_run(spark, tmp_path, monkeypatch, op):
     """A superstep whose tasks do not report every dst range raises "lost a
     slice", and the run's store is removed first, on each slice-store
-    loop. The lost range is a phantom one added to ``slice_ranges``."""
+    loop. The lost range is a phantom one added to ``slice_ranges``. HITS
+    lays a Graph out under a temp dir, which is removed too."""
+    import os
+
     from metagraph_spark.operators.kernel import LocalSliceStore
     from metagraph_spark.operators.kernel_algos import (
         cc_kernel,
+        eigenvector_kernel,
+        hits_kernel,
         katz_kernel,
         lpa_kernel,
     )
@@ -310,6 +316,8 @@ def test_slice_store_lost_slice_removes_run(spark, tmp_path, monkeypatch, op):
         "katz": lambda: katz_kernel(eb, fixed_iterations=3),
         "cc": lambda: cc_kernel(eb, fixed_rounds=3),
         "lpa": lambda: lpa_kernel(eb, fixed_rounds=3),
+        "eigenvector": lambda: eigenvector_kernel(eb, fixed_iterations=3),
+        "hits": lambda: hits_kernel(g, fixed_iterations=3),
     }[op]
     monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
     ranges = K.slice_ranges
@@ -326,7 +334,12 @@ def test_slice_store_lost_slice_removes_run(spark, tmp_path, monkeypatch, op):
     with pytest.raises(RuntimeError, match="lost a slice"):
         run()
     assert len(removed) == 1
-    assert removed[0].startswith(str(spill))
+    if op == "hits":
+        layout = os.path.dirname(removed[0])
+        assert os.path.basename(layout).startswith("mgspark_blocks_")
+        assert not os.path.exists(layout)
+    else:
+        assert removed[0].startswith(str(spill))
     assert [p.name for p in spill.iterdir() if p.is_dir()] == []
     eb.unpersist()
 

@@ -174,6 +174,29 @@ def test_hits_kernel_matches_join(spark):
         assert math.isclose(vm[k], km[k], rel_tol=1e-9, abs_tol=1e-12)
 
 
+def test_hits_above_caps_sorts_ids_once(spark, monkeypatch):
+    """Above the driver caps, HITS lays its forward and reversed blocks
+    out from one sorted-id file, written once per call, and gives the
+    driver route's hubs and authorities."""
+    from metagraph_spark.operators import kernel as K
+    from metagraph_spark.operators.centrality import hits_centrality
+
+    g = build(df_from_edges(spark, _random_edges(25, 100, seed=9)),
+              is_directed=True)
+    want = [_map(df, col) for df, col in zip(
+        hits_centrality(g, fixed_iterations=5), ("hubs", "authority"))]
+    monkeypatch.setattr(routing, "DRIVER_MAX_EDGES", -1)
+    assert routing.plan("hits", g)[0] == "kernel-distributed"
+    sorts = spy_calls(monkeypatch, K, "_write_sorted")
+    got = [_map(df, col) for df, col in zip(
+        hits_centrality(g, fixed_iterations=5), ("hubs", "authority"))]
+    assert sorts == [g.num_nodes()]
+    for w, o in zip(want, got):
+        assert set(w) == set(o)
+        for k in w:
+            assert math.isclose(w[k], o[k], rel_tol=1e-9, abs_tol=1e-12), k
+
+
 def test_cc_kernel_matches_join_converged(spark):
     # three components incl a self-loop node and a 2-cycle
     edges = [(0, 1), (1, 2), (2, 0), (3, 4), (5, 5), (6, 7), (7, 6), (8, 1)]
