@@ -263,10 +263,9 @@ def eigenvector_centrality(
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block kernel
     (``kernel_algos.py:eigenvector_kernel``, same superstep schedule) as
     :func:`routing.plan` decides: ``kernel-driver``, a numpy loop over the
-    Graph's driver layout within the driver caps, or
-    ``kernel-distributed``, one slice-store job per superstep over
-    file-backed blocks in a temp dir above them (the vector never crosses
-    the driver)."""
+    Graph's driver layout within the driver caps, or ``kernel-distributed``,
+    one slice-store job per superstep over file-backed blocks in a temp
+    dir above them."""
     route, _ = routing.plan("eigenvector", graph, strategy)
     if route.startswith("kernel"):
         from metagraph_spark.operators.kernel_algos import eigenvector_kernel
@@ -383,10 +382,12 @@ def hits_centrality(
     ``kernel-driver``, a numpy loop over a forward and a reversed view of
     the Graph's driver layout within the driver caps, or
     ``kernel-distributed``, two slice-store jobs per superstep over
-    forward and reversed file-backed blocks in one temp dir above them
-    (neither vector crosses the driver)."""
+    forward and reversed file-backed blocks in a temp dir above them."""
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
+    if fixed_iterations is not None and fixed_iterations < 1:
+        raise ValueError("hits needs fixed_iterations >= 1: the first "
+                         "superstep computes the authorities")
     route, _ = routing.plan("hits", graph, strategy)
     if route.startswith("kernel"):
         from metagraph_spark.operators.kernel_algos import hits_kernel

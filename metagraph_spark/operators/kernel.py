@@ -27,12 +27,11 @@
   (``plugins/scipy/types.py:191-225``), chunked loaders for
   bigger-than-memory (``core/dask/loader.py:15-74``).
 
-The slice-store protocol, shared by the above-cap pagerank, katz, CC,
-LPA, eigenvector and HITS loops — the one above-cap route of every
-iterative kernel (one chunk protocol for every algorithm, as metagraph's
-loader, ``core/dask/loader.py:153-240``). Each vector lives in a slice
-store (the contract is in ``operators/slice_stores.py``), so it never
-crosses the driver and driver state stays O(num_blocks):
+The slice-store protocol, the above-cap loop of every iterative kernel
+(one chunk protocol for every algorithm, as metagraph's loader,
+``core/dask/loader.py:153-240``). Each vector lives in a slice store (the
+contract is in ``operators/slice_stores.py``), so it never crosses the
+driver and driver state stays O(num_blocks):
 
 1. :func:`_open_run` — the caller's ``slice_store``, or a
    :class:`LocalSliceStore` under ``<spill_dir>/<prefix>_<uuid>``;
@@ -163,8 +162,8 @@ def with_blocks(graph_or_blocks, build, run, spill_dir=None):
     """``run(eb)`` over prebuilt EdgeBlocks, or over the blocks
     ``build(graph, spill_dir)`` lays out for a Graph under ``spill_dir`` —
     a temp dir removed after the call when none is given. Blocks built
-    here (one EdgeBlocks, or a tuple of them) are unpersisted after
-    ``run``; results are materialized before that (driver DataFrames, or
+    here (one EdgeBlocks or a tuple) are unpersisted after ``run``;
+    results are materialized before that (driver DataFrames, or
     ``truncate_lineage`` in the slice-store loops)."""
     import shutil
     import tempfile
@@ -307,13 +306,11 @@ def _blk_lo(k: int, n: int, nb: int) -> int:
 
 def _write_sorted(spark, df: DataFrame, col: str, path: str,
                   n: int | None = None) -> int:
-    """Distributed sorted file of ``df``'s int64 column ``col``: global
+    """Distributed sorted int64 file of ``df[col]`` at ``path``: global
     range sort, per-partition counts (one O(P) driver collect), then every
-    task writes its contiguous slice of the single memmap file at
-    ``path`` — the rows never cross the driver. Returns the row count;
-    ``n``, when given, is the count the caller expects (a mismatch
-    raises). The block layouts' sorted-id file and the triangle kernel's
-    key file are written here."""
+    task writes its contiguous slice of the single memmap file — the rows
+    never cross the driver. Returns the row count, which must be ``n``
+    when given."""
     sorted_df = (
         df.select(col)
         .orderBy(col)
@@ -332,7 +329,6 @@ def _write_sorted(spark, df: DataFrame, col: str, path: str,
         offsets[pid] = acc
         acc += counts[pid]
     if n is not None and acc != n:
-        sorted_df.unpersist()
         raise RuntimeError(f"sorted layout lost rows: {acc} != {n}")
     np.lib.format.open_memmap(path, mode="w+", dtype=np.int64, shape=(acc,)).flush()
     if acc == 0:
@@ -438,10 +434,8 @@ def build_edge_blocks(
     out-degree/inverse-degree computation entirely — the degree-free
     kernels (katz/cc/lpa) save a full second pass over the |E|-row
     position table; such blocks cannot feed ``pagerank_kernel``."""
-    if edges is None:
-        edges = graph.symmetrized()
-    n, nb = _layout_ids(graph, num_blocks, spill_dir)
-    pos = _edge_positions(edges, with_weights, spill_dir, n, nb)
+    pos, n, nb = _positions(graph, graph.symmetrized() if edges is None
+                            else edges, num_blocks, spill_dir, with_weights)
     if with_degrees:
         # two consumers (block pack + degree files): persist, or the
         # |E|-row symmetrize+searchsorted+shuffle runs TWICE (measured
@@ -464,13 +458,12 @@ def build_edge_blocks(
     return eb
 
 
-def _layout_ids(graph: Graph, num_blocks: int | None,
-                spill_dir: str | None) -> tuple[int, int]:
-    """``(n, nb)`` of a new file-backed layout under ``spill_dir``, once
-    the directory is checked to be shared with the executors and the
-    sorted-id file ``node_ids.npy`` is written: ``n`` vertices, ``nb``
-    blocks (``num_blocks``, default the shuffle partitions, at most
-    ``n``)."""
+def _positions(graph: Graph, edges: DataFrame, num_blocks: int | None,
+               spill_dir: str | None, with_weights: bool):
+    """``(pos, n, nb)``: the sorted-id file written under ``spill_dir``
+    (checked shared first), then ``edges`` as rows of ``(block, src_blk,
+    src_pos, dst_pos[, w])`` against it, ``block``/``src_blk`` the dst/src
+    range of ``nb``."""
     import os
 
     if spill_dir is None:
@@ -483,6 +476,15 @@ def _layout_ids(graph: Graph, num_blocks: int | None,
     spark = graph.edges.sparkSession
     if num_blocks is None:
         num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if with_weights:
+        if WEIGHT not in edges.columns:
+            edges = edges.withColumn(WEIGHT, F.lit(1.0))
+        edges = edges.select(
+            SRC, DST, F.col(WEIGHT).cast("double").alias(WEIGHT)
+        )
+    else:
+        edges = edges.select(SRC, DST)
+
     os.makedirs(spill_dir, exist_ok=True)
     if not shared_fs_available(spark, spill_dir):
         # fail FAST at layout time: every later phase (task-side block
@@ -496,28 +498,10 @@ def _layout_ids(graph: Graph, num_blocks: int | None,
             "(local mode, NFS/Lustre) — use strategy='join'"
         )
     n = graph.num_nodes()
-    _write_sorted(spark, graph.node_ids(), ID, os.path.join(
-        spill_dir, "node_ids.npy"), n)
     # more blocks than vertices would produce empty/duplicate ranges
-    return n, max(1, min(int(num_blocks), n))
-
-
-def _edge_positions(edges: DataFrame, with_weights: bool, spill_dir: str,
-                    n: int, nb: int) -> DataFrame:
-    """``edges`` as positions against the layout's sorted-id file: rows of
-    ``(block, src_blk, src_pos, dst_pos[, w])``, ``block``/``src_blk`` the
-    dst/src range of ``nb`` (``w``: the weight column, absent → 1.0)."""
-    import os
-
-    if with_weights:
-        if WEIGHT not in edges.columns:
-            edges = edges.withColumn(WEIGHT, F.lit(1.0))
-        edges = edges.select(
-            SRC, DST, F.col(WEIGHT).cast("double").alias(WEIGHT)
-        )
-    else:
-        edges = edges.select(SRC, DST)
+    nb = max(1, min(int(num_blocks), n))
     ids_path = os.path.join(spill_dir, "node_ids.npy")
+    _write_sorted(spark, graph.node_ids(), ID, ids_path, n)
 
     def to_positions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids = np.load(ids_path, mmap_mode="r")
@@ -537,7 +521,7 @@ def _edge_positions(edges: DataFrame, with_weights: bool, spill_dir: str,
     pos_schema = "block int, src_blk int, src_pos int, dst_pos int"
     if with_weights:
         pos_schema += ", w double"
-    return edges.mapInPandas(to_positions, schema=pos_schema)
+    return edges.mapInPandas(to_positions, schema=pos_schema), n, nb
 
 
 def _pack_blocks(pos: DataFrame, spill_dir: str, prefix: str, n: int,

@@ -1,34 +1,28 @@
-"""CSR/Arrow kernels for katz / connected components / LPA / eigenvector /
-HITS supersteps.
+"""CSR/Arrow kernels for katz / CC / LPA / eigenvector / HITS supersteps.
 
 Same physical strategy as ``operators/kernel.py``'s PageRank kernel (the
 north-star design: per-partition CSR blocks, vectorized numpy
 gather-scatter, ZERO shuffles per superstep) applied to the other
-iterative operators. Each of ``katz_kernel``, ``cc_kernel``,
-``lpa_kernel``, ``eigenvector_kernel`` and ``hits_kernel`` has exactly
-two superstep loops with the same per-block arithmetic, so their results
-are bit-identical over the same blocks:
+iterative operators. Each kernel has exactly two superstep loops with the
+same per-block arithmetic, so their results are bit-identical over the
+same blocks:
 
-- the driver loop (``_driver_katz_loop``/``_driver_cc_loop``/
-  ``_driver_lpa_loop``/``_driver_eigenvector_loop``/``_driver_hits_loop``)
-  — the whole loop in numpy on the driver, no Spark job per superstep;
-  taken when the graph or layout fits ``routing.fits_driver``. A Graph
-  builds no block layout for them: each call reads its stored edge rows
-  from :meth:`Graph.driver_layout` (collected at the first driver-route
-  call on the handle, then kept) and derives its one dst-sorted block in
-  numpy (katz and eigenvector through ``kernel.driver_block_arrays``,
-  HITS a forward and a reversed block through ``kernel._graph_block``,
-  CC and LPA through ``_driver_graph_arrays``);
+- the driver loop (``_driver_*_loop``) — the whole loop in numpy on the
+  driver, no Spark job per superstep; taken when the graph or layout fits
+  ``routing.fits_driver``. A Graph builds no block layout for them: each
+  call reads its stored edge rows from :meth:`Graph.driver_layout`
+  (collected at the first driver-route call on the handle, then kept)
+  and derives its dst-sorted block in numpy (katz, eigenvector and HITS
+  through ``kernel.driver_block_arrays``, HITS's reversed block through
+  ``kernel._graph_block``, CC and LPA through ``_driver_graph_arrays``);
 - the slice-store loop (``_distributed_*_loop``) — file-backed blocks
   above the driver caps, or any call with a ``slice_store``. Each is a
   thin schedule on the slice-store protocol of ``operators/kernel.py``
   (store lifecycle, resume, commit and result emit live there once): it
   holds only its per-block update, its reduction of the partial scalars
-  and its control flow. The katz, eigenvector and HITS updates share one
-  weighted gather, ``_gather_slice`` (the slice-side twin of the driver
-  loops' ``kernel._gather``). A Graph above the caps is laid out
-  file-backed under ``spill_dir`` (katz, CC, LPA), or a temp dir removed
-  after the call.
+  and its control flow (katz, eigenvector and HITS share one weighted
+  gather, ``_gather_slice``). A Graph above the caps is laid out
+  file-backed under ``spill_dir``, or a temp dir removed after the call.
 
 The update rules:
 
@@ -50,12 +44,9 @@ The update rules:
   ``operators/lpa.py`` semantics (most frequent neighbor label + one
   self-vote, ties to the smallest label), via run-length vote counting
   and segmented ``reduceat`` winners (``_mode_votes``).
-- ``eigenvector_kernel`` — ``x' = x + Aᵀx`` then L2-normalize, the error
-  lagged one superstep (``operators/centrality.py``'s schedule).
+- ``eigenvector_kernel`` — ``x' = x + Aᵀx`` then L2-normalize.
 - ``hits_kernel`` — ``a = Aᵀh`` over forward blocks, ``h = A·a`` over
-  reversed blocks, max-normalizing each half-step; above the caps both
-  block sets come from one id sort and one positions pass
-  (:func:`hits_blocks`) and one slice store holds both vectors.
+  reversed blocks (:func:`hits_blocks`), max-normalizing each half-step.
 
 All but HITS accept a prebuilt :class:`EdgeBlocks` (amortize the layout)
 or a Graph. Integer-label kernels (cc, lpa) are EXACTLY equal to the join
@@ -95,12 +86,11 @@ _IMAX = np.iinfo(np.int64).max
 def _gather_slice(vec, path: str, width: int, weighted: bool,
                   scale: float = 1.0) -> np.ndarray:
     """``Aᵀ·(vec/scale)`` on the ``width``-position dst slice of one
-    file-backed block: a bincount of ``vec[srcs]/scale·ws`` (``ws`` only
-    when ``weighted``) — the slice-side twin of :func:`kernel._gather`,
-    the same arithmetic per block. ``scale`` is the carried norm of a
-    stored un-normalized vector (eigenvector, HITS)."""
+    file-backed block — the slice-side twin of :func:`kernel._gather`."""
     srcs, dsts = _open_block(path)
-    w = np.asarray(vec)[srcs] / scale
+    w = np.asarray(vec)[srcs]
+    if scale != 1.0:
+        w = w / scale
     if weighted:
         w = w * np.asarray(_open_block_weights(path))
     return np.bincount(dsts, weights=w, minlength=width)[:width]
@@ -239,43 +229,31 @@ def katz_kernel(
     )
 
 
-def _empty(spark, *cols: str):
-    """Empty ``(id, <col>)`` results of a graph without vertices."""
-    out = tuple(spark.createDataFrame([], f"id long, {c} double")
-                for c in cols)
-    return out if len(out) > 1 else out[0]
-
-
 def _distributed_eigenvector_loop(eb: EdgeBlocks, maxiter: int,
                                   tolerance: float,
                                   fixed_iterations: int | None) -> DataFrame:
-    """Eigenvector on the slice-store protocol (``operators/kernel.py``).
-    Vector ``t`` is the UN-normalized ``z = x + Aᵀx`` of superstep ``t``
-    and the driver carries its L2 norm ``c``, a scalar: each task writes
-    ``z/c + Aᵀ(z/c)`` of the previous vector for its dst slice and returns
-    a Σz'² partial. Superstep ``t``'s L1 error needs the norm its own job
-    produces, so it rides job ``t+1``, over the kept vector ``t-1``; a
-    converged run returns vector ``t``, the one the driver and join routes
-    stop at, after one job more than they run."""
-    n = eb.n
-    weighted = eb.has_weights
+    """Eigenvector on the slice-store protocol (``operators/kernel.py``):
+    vector ``t`` is superstep ``t``'s un-normalized ``z``, its L2 norm a
+    driver scalar. Superstep ``t``'s lagged error needs that norm, so it
+    rides job ``t+1``, over the kept vector ``t-1``: a converged run takes
+    one job more than the driver and join routes."""
+    n, weighted = eb.n, eb.has_weights
     store, hi_of = _open_run(eb, None, "eig")
     _resume_or_start(store, False, {"algo": "eigenvector", "n": n}, (), -1,
                      np.full(n, 1.0 / n))
     norm = {-1: 1.0}
     fixed = fixed_iterations is not None
-    total = fixed_iterations if fixed else maxiter + 1
-    for it in range(total if fixed else total + 1):
-        c = norm[it - 1]
-        lag = not fixed and it >= 2  # superstep it-1's error, checked from 1
+    total = fixed_iterations if fixed else maxiter + 2
+    for it in range(total):
+        c, c_old, lag = norm[it - 1], norm.get(it - 2), not fixed and it >= 2
 
         def update(prev, path, lo, hi):
-            cur = np.asarray(prev[lo:hi])
-            z = cur / c + _gather_slice(prev, path, hi - lo, weighted, c)
+            x = np.asarray(prev[lo:hi]) / c
+            z = x + _gather_slice(prev, path, hi - lo, weighted, c)
             err = 0.0
             if lag:
                 old = np.asarray(store.open_read(it - 2)[lo:hi])
-                err = float(np.abs(old / norm[it - 2] - cur / c).sum())
+                err = float(np.abs(old / c_old - x).sum())
             return z, {"sumsq": float((z * z).sum()), "err": err}
 
         out = _slice_superstep(eb, store, hi_of, it - 1, it, update,
@@ -306,7 +284,7 @@ def _driver_eigenvector_loop(spark, ids, blks, maxiter, tolerance,
     supersteps."""
     n = len(ids)
     if n == 0:
-        return _empty(spark, "eigenvector")
+        return spark.createDataFrame([], "id long, eigenvector double")
     xn = np.full(n, 1.0 / n)  # current NORMALIZED iterate
     total = fixed_iterations if fixed_iterations is not None else maxiter + 1
     for it in range(total):
@@ -339,15 +317,8 @@ def eigenvector_kernel(
     ``plugins/networkx/algorithms.py:192-199``): ``x' = x + Aᵀx`` then
     L2-normalize every iteration; same lagged convergence schedule as the
     join path (error checked from iteration 1 over ``maxiter+1`` total),
-    so converged runs stop at the same superstep.
-
-    Like :func:`katz_kernel`: a Graph within the driver caps runs
-    :func:`_driver_eigenvector_loop` over the weighted block
-    :func:`kernel.driver_block_arrays` derives from its driver layout;
-    above them it builds weighted blocks in a temp dir for the slice-store
-    loop (:func:`_distributed_eigenvector_loop`). Prebuilt EdgeBlocks run
-    the driver loop over their block files when they fit the caps, the
-    slice-store loop otherwise."""
+    so converged runs stop at the same superstep. Routes as
+    :func:`katz_kernel` does, without a ``spill_dir``."""
     args = (maxiter, tolerance, fixed_iterations)
     g = graph_or_blocks
     drv = kernel.driver_block_arrays(g) if isinstance(g, Graph) else None
@@ -356,7 +327,7 @@ def eigenvector_kernel(
 
     def run(eb: EdgeBlocks) -> DataFrame:
         if eb.n == 0:
-            return _empty(eb.spark, "eigenvector")
+            return eb.spark.createDataFrame([], "id long, eigenvector double")
         drv = _driver_blocks(eb)
         if drv is not None:
             return _driver_eigenvector_loop(eb.spark, *drv, *args)
@@ -365,23 +336,18 @@ def eigenvector_kernel(
     return with_blocks(g, _weighted_build(g), run)
 
 
-def hits_blocks(graph: Graph, spill_dir: str | None = None,
-                num_blocks: int | None = None) -> tuple[EdgeBlocks,
-                                                        EdgeBlocks]:
-    """:func:`hits_kernel`'s two layouts of a directed graph under
-    ``spill_dir`` (required, as for :func:`kernel.build_edge_blocks`),
-    weighted when the graph is: forward blocks (authority gather ``Aᵀh``,
-    by dst) and reversed blocks (hub gather ``A·a``, by src), laid out
-    from one id sort and one positions pass. Both cover the same dst
-    ranges, so one slice store serves both."""
+def hits_blocks(graph: Graph, spill_dir: str | None = None):
+    """:func:`hits_kernel`'s forward (by dst) and reversed (by src) blocks
+    of a directed graph under ``spill_dir`` (required), weighted when the
+    graph is, from one id sort and one positions pass. Both cover the same
+    dst ranges, so one slice store serves both."""
     weighted = graph.is_weighted
-    n, nb = kernel._layout_ids(graph, num_blocks, spill_dir)
-    pos = kernel._edge_positions(graph.edges, weighted, spill_dir, n,
-                                 nb).persist()
+    pos, n, nb = kernel._positions(graph, graph.edges, None, spill_dir,
+                                   weighted)
+    pos = pos.persist()
     rev = pos.select(
-        F.col("src_blk").alias("block"), F.col("block").alias("src_blk"),
-        F.col("dst_pos").alias("src_pos"), F.col("src_pos").alias("dst_pos"),
-        *(["w"] if weighted else []),
+        F.col("src_blk").alias("block"), F.col("dst_pos").alias("src_pos"),
+        F.col("src_pos").alias("dst_pos"), *(["w"] if weighted else []),
     )
     out = tuple(
         EdgeBlocks(manifest=kernel._pack_blocks(p, spill_dir, prefix, n, nb,
@@ -397,27 +363,19 @@ def _distributed_hits_loop(fwd: EdgeBlocks, rev: EdgeBlocks, maxiter: int,
                            tolerance: float, normalize: bool,
                            fixed_iterations: int | None):
     """HITS on the slice-store protocol (``operators/kernel.py``), one
-    store for both UN-normalized vectors: ``h_t`` at vector ``2t``, ``a_t``
-    at ``2t+1``, the driver carrying each one's max (its norm) and sum.
-    Superstep ``t`` runs two jobs, ``a_t = Aᵀ(h_t/‖h_t‖)`` over ``fwd``
-    and ``h_{t+1} = A·(a_t/‖a_t‖)`` over ``rev``, each returning max and
-    sum partials. Superstep ``t``'s h-side L1 error needs ``h_{t+1}``'s
-    max, so it rides superstep ``t+1``'s authority job, over the kept
-    ``h_t``; a converged run returns ``h_{t+1}`` and ``a_t``, as the driver
-    and join routes do, after one job more than they run."""
-    n = fwd.n
-    weighted = fwd.has_weights
+    store for both un-normalized vectors: ``h_t`` at index ``2t``, ``a_t``
+    at ``2t+1``, each one's max and sum driver scalars. Superstep ``t``'s
+    hub error needs ``h_{t+1}``'s max, so it rides superstep ``t+1``'s
+    authority job, over the kept ``h_t`` (one job more than the driver and
+    join routes in a converged run)."""
+    n, weighted = fwd.n, fwd.has_weights
     store, hi_of = _open_run(fwd, None, "hits")
-    if kernel.slice_ranges(rev) != hi_of:
-        _give_up(store, ValueError("hits layouts cover different dst ranges"))
-    _resume_or_start(store, False, {"algo": "hits", "n": n}, (), 0,
-                     np.full(n, 1.0 / n))
-    norm, total_of = {0: 1.0}, {}
+    h0 = np.full(n, 1.0 / n)
+    _resume_or_start(store, False, {"algo": "hits", "n": n}, (), 0, h0)
+    norm, sums = {0: 1.0}, {0: float(h0.sum())}
 
     def half_step(eb: EdgeBlocks, src: int, lag: bool) -> float:
-        """Vector ``src`` → ``src+1`` over ``eb``; returns the lagged
-        error of vector ``src`` against ``src-2`` when ``lag``."""
-        c = norm[src]
+        c, c_old = norm[src], norm.get(src - 2)
 
         def update(prev, path, lo, hi):
             v = _gather_slice(prev, path, hi - lo, weighted, c)
@@ -425,7 +383,7 @@ def _distributed_hits_loop(fwd: EdgeBlocks, rev: EdgeBlocks, maxiter: int,
             if lag:
                 old = np.asarray(store.open_read(src - 2)[lo:hi])
                 err = float(np.abs(np.asarray(prev[lo:hi]) / c
-                                   - old / norm[src - 2]).sum())
+                                   - old / c_old).sum())
             return v, {"max": float(v.max()), "sum": float(v.sum()),
                        "err": err}
 
@@ -436,33 +394,28 @@ def _distributed_hits_loop(fwd: EdgeBlocks, rev: EdgeBlocks, maxiter: int,
         # negative max (negative weights) is kept as the divisor
         m = float(out["max"].max())
         norm[src + 1] = m if m != 0.0 else 1.0
-        total_of[src + 1] = float(out["sum"].sum())
+        sums[src + 1] = float(out["sum"].sum())
         if src >= 2:
             store.delete_vector(src - 2)
         return float(out["err"].sum())
 
     fixed = fixed_iterations is not None
     total = fixed_iterations if fixed else maxiter
-    converged = fixed
     for t in range(total if fixed else total + 1):
-        lag = not fixed and t >= 1  # superstep t-1's error
-        err = half_step(fwd, 2 * t, lag)
-        if lag and err < tolerance:
-            converged, total = True, t
+        lag = not fixed and t >= 1  # superstep t-1's hub error
+        if half_step(fwd, 2 * t, lag) < tolerance and lag:
+            total = t
             break
         if t < total:
             half_step(rev, 2 * t + 1, False)
-    if not converged:
-        _give_up(store, ConvergenceError(
-            f"hits failed to converge in {maxiter} iterations"
-        ))
-
-    def divisors(k):
-        """Vector ``k``'s max norm, then its sum once normalized."""
-        s = total_of[k] / norm[k] if normalize else 1.0
-        return norm[k], s or 1.0
-
-    (hn, hs), (an, asum) = divisors(2 * total), divisors(2 * total - 1)
+    else:
+        if not fixed:
+            _give_up(store, ConvergenceError(
+                f"hits failed to converge in {maxiter} iterations"
+            ))
+    (hn, hs), (an, asum) = (
+        (norm[k], (sums[k] / norm[k] if normalize else 1.0) or 1.0)
+        for k in (2 * total, 2 * total - 1))
     both = _emit_slices(fwd, store, hi_of, (2 * total, 2 * total - 1),
                         "hubs double, authority double",
                         lambda ids, h, a: (h / hn / hs, a / an / asum))
@@ -478,7 +431,8 @@ def _driver_hits_loop(spark, ids, fwd, rev, maxiter, tolerance, normalize,
     sum-normalization."""
     n = len(ids)
     if n == 0:
-        return _empty(spark, "hubs", "authority")
+        return (spark.createDataFrame([], "id long, hubs double"),
+                spark.createDataFrame([], "id long, authority double"))
     h = np.full(n, 1.0 / n)
     h_norm = 1.0
     a = np.zeros(n)
@@ -528,16 +482,16 @@ def hits_kernel(
     ``h = A·a`` with max-normalization each half-step, convergence on
     ``Σ|h'-h| < tol`` (not N-scaled), optional final sum-normalization.
     The two mat-vecs are data-dependent, so two gathers per superstep is
-    the algorithmic minimum. Within the driver caps
-    :func:`_driver_hits_loop` gathers over a forward and a reversed block,
-    both derived from the one driver layout; above them
-    :func:`hits_blocks` lays out forward and reversed blocks in a temp dir
-    and :func:`_distributed_hits_loop` runs two slice-store jobs per
-    superstep."""
+    the algorithmic minimum: over a forward and a reversed view of the
+    driver layout within the driver caps, over :func:`hits_blocks` in a
+    temp dir above them. ``fixed_iterations`` must be at least 1."""
     from metagraph_spark.exceptions import GraphPropertyError
 
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
+    if fixed_iterations is not None and fixed_iterations < 1:
+        raise ValueError("hits needs fixed_iterations >= 1: the first "
+                         "superstep computes the authorities")
     args = (maxiter, tolerance, normalize, fixed_iterations)
     fwd = kernel.driver_block_arrays(graph)
     if fwd is not None:
@@ -548,7 +502,9 @@ def hits_kernel(
 
     def run(ebs: tuple[EdgeBlocks, EdgeBlocks]):
         if ebs[0].n == 0:
-            return _empty(ebs[0].spark, "hubs", "authority")
+            return (ebs[0].spark.createDataFrame([], "id long, hubs double"),
+                    ebs[0].spark.createDataFrame([],
+                                                 "id long, authority double"))
         return _distributed_hits_loop(*ebs, *args)
 
     return with_blocks(graph, hits_blocks, run)

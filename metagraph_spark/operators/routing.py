@@ -243,11 +243,12 @@ def plan(
     if _shared_fs(graph):
         return "kernel-distributed", f"{sizes} > DRIVER_MAX_EDGES, shared FS"
     if strategy == "kernel":
+        spill = ("" if op in ("eigenvector", "hits") else
+                 "pass kernel_spill_dir on a shared filesystem or ")
         raise ValueError(
             f"{op} above the driver caps ({sizes}) needs the file-backed "
             "layout, and the temp dir is not on a filesystem shared with "
-            "the executors; pass kernel_spill_dir on a shared filesystem "
-            "or use strategy='join'"
+            f"the executors; {spill}use strategy='join'"
         )
     return _join_route(op, graph, fixed, None, None,
                        f"{sizes} > DRIVER_MAX_EDGES, no shared FS")

@@ -60,12 +60,9 @@ from metagraph_spark.operators.kernel import _write_sorted
 
 
 def _write_sorted_keys(spark, keys_df, path: str) -> int:
-    """The globally sorted int64 key file, written slice-wise by tasks
-    (:func:`kernel._write_sorted`); returns the key count, derived from
-    the per-partition counts of the sort, so no separate |E| counting
-    pass runs over the upstream joins. Its own name keeps the key sort
-    apart from a block layout's id sort in the benchmark's layer
-    trace."""
+    """The globally sorted key file and its key count
+    (:func:`kernel._write_sorted`), under its own name so the benchmark's
+    layer trace tells the key sort from a layout's id sort."""
     return _write_sorted(spark, keys_df, "k", path)
 
 

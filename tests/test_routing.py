@@ -256,8 +256,23 @@ def test_eigenvector_hits_plan_counts_gathered_edges(spark, monkeypatch):
     assert routing.plan("hits", gd)[0] == "kernel-distributed"
     monkeypatch.setattr(kernel, "shared_fs_available", lambda *a: False)
     assert routing.plan("hits", gd)[0] == "join"
-    with pytest.raises(ValueError, match="needs the file-backed layout"):
+    with pytest.raises(ValueError, match="needs the file-backed layout") as e:
         routing.plan("hits", gd, "kernel")
+    assert "kernel_spill_dir" not in str(e.value)  # hits takes none
+
+
+@pytest.mark.parametrize("route", ROUTES)
+def test_hits_rejects_zero_iterations_on_every_route(spark, monkeypatch,
+                                                      route):
+    """With no superstep no authority vector exists: every route raises
+    the same error instead of returning a route-dependent answer."""
+    g = _graph(spark, True)
+    _force(monkeypatch, route)
+    assert routing.plan("hits", g)[0] == route
+    with pytest.raises(ValueError, match="fixed_iterations >= 1"):
+        hits_centrality(g, fixed_iterations=0)
+    with pytest.raises(ValueError, match="fixed_iterations >= 1"):
+        kernel_algos.hits_kernel(g, fixed_iterations=0)
 
 
 def test_benchmark_layer_hooks_resolve():
